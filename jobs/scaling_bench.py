@@ -50,9 +50,13 @@ def materialize(n_docs: int) -> str:
     if not (Path(corpus) / "_SUCCESS").exists():
         from pyspark.sql import SparkSession
 
-        from two_tier_document_parser_spark.pipeline import session_tuning
+        from two_tier_document_parser_spark.pipeline import (
+            enable_worker_preload,
+            session_tuning,
+        )
         from two_tier_document_parser_spark.synth import synth_spark
 
+        enable_worker_preload()
         spark = session_tuning(
             SparkSession.builder.master("local[32]")
             .config("spark.ui.enabled", "false")

@@ -47,9 +47,13 @@ def materialize(n_docs: int) -> str:
     if not (Path(corpus) / "_SUCCESS").exists():
         from pyspark.sql import SparkSession
 
-        from two_tier_document_parser_spark.pipeline import session_tuning
+        from two_tier_document_parser_spark.pipeline import (
+            enable_worker_preload,
+            session_tuning,
+        )
         from two_tier_document_parser_spark.synth import synth_spark
 
+        enable_worker_preload()
         spark = session_tuning(
             SparkSession.builder.master("local[32]")
             .config("spark.ui.enabled", "false")
@@ -155,11 +159,13 @@ def child(corpus: str, out_dir: str, cores: int, driver_mem: str) -> int:
     from two_tier_document_parser_spark.curation import curate
     from two_tier_document_parser_spark.multimodal import media_text_pairs
     from two_tier_document_parser_spark.pipeline import (
+        enable_worker_preload,
         extract,
         session_tuning,
         ship_package,
     )
 
+    enable_worker_preload()
     os.makedirs(EVENTLOG_DIR, exist_ok=True)
     spark = session_tuning(
         SparkSession.builder.master(f"local[{cores}]")

@@ -155,6 +155,34 @@ def test_subbyte_palette():
     assert np.array_equal(out, _luma(pal[idx]))
 
 
+@pytest.mark.parametrize("depth", [2, 8, 16])
+def test_gray_trns_sample_is_white(depth):
+    """Colour type 0: tRNS holds one 16-bit gray sample; pixels with
+    exactly that value are transparent, the rest keep their gray."""
+    rng = np.random.default_rng(depth)
+    g = rng.integers(0, 1 << depth, (9, 12), np.int32)
+    key = int(g[4, 5])
+    g[0, 0] = key ^ 1  # differs from the key in the low bit only
+    out = decode_png_gray(_enc(g, 0, depth, trns=struct.pack(">H", key)))
+    exp = decode_png_gray(_enc(g, 0, depth))
+    assert (g == key).sum() < g.size
+    assert np.array_equal(out, np.where(g == key, 255, exp))
+
+
+@pytest.mark.parametrize("depth", [8, 16])
+def test_rgb_trns_sample_is_white(depth):
+    """Colour type 2: tRNS holds a 16-bit R, G, B triple; only pixels
+    matching all three are transparent."""
+    rng = np.random.default_rng(depth + 1)
+    rgb = rng.integers(0, 4, (10, 7, 3), np.int32) * ((1 << depth) // 4)
+    key = rgb[2, 3].copy()
+    out = decode_png_gray(_enc(rgb, 2, depth, trns=struct.pack(">3H", *key)))
+    hit = (rgb == key).all(axis=-1)
+    assert 0 < hit.sum() < hit.size
+    exp = _luma(rgb >> (depth - 8))
+    assert np.array_equal(out, np.where(hit, 255, exp))
+
+
 def test_16bit():
     rng = np.random.default_rng(9)
     g16 = rng.integers(0, 65536, (8, 8), np.int32)

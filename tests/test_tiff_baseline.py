@@ -21,8 +21,9 @@ from two_tier_document_parser_spark.ccitt import (
 
 def _lzw_encode(data: bytes) -> bytes:
     """Independent TIFF-LZW compressor: dict keyed by byte strings,
-    MSB-first packing, EARLY change (width grows when the next code
-    to assign is (1 << width) - 1)."""
+    MSB-first packing, width grows once code (1 << width) - 1 has been
+    assigned, as libtiff's encoder does (the decoder, one entry behind,
+    widens a code earlier: TIFF's "early change")."""
     CLEAR, EOI = 256, 257
     table = {bytes([v]): v for v in range(256)}
     next_code, width = 258, 9
@@ -37,7 +38,7 @@ def _lzw_encode(data: bytes) -> bytes:
         outbits.append((table[run], width))
         table[cand] = next_code
         next_code += 1
-        if next_code == (1 << width) - 1 and width < 12:
+        if next_code == (1 << width) and width < 12:
             width += 1
         if next_code >= 4094:
             outbits.append((CLEAR, width))
@@ -201,6 +202,50 @@ def test_gray8_low_entropy_lzw():
     img[:, ::7] = 170
     out = decode_tiff_gray(_write_tiff(img, comp=5))
     assert np.array_equal(out, img)
+
+
+def _pack_codes(codes: list[tuple[int, int]]) -> bytes:
+    acc = nbits = 0
+    out = bytearray()
+    for code, wd in codes:
+        acc = (acc << wd) | code
+        nbits += wd
+        while nbits >= 8:
+            out.append((acc >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+    return bytes(out + (bytes([(acc << (8 - nbits)) & 0xFF]) if nbits else b""))
+
+
+def test_lzw_width_change_at_511_pinned():
+    """Bytes 0..255 share no pair, so the stream is all literals: the
+    entry made after literal 253 is 511, which fills 9 bits, so
+    literals 254, 255 and EOI go out at 10 bits (TIFF 6.0 §13)."""
+    vector = _pack_codes(
+        [(256, 9)] + [(v, 9) for v in range(254)]
+        + [(254, 10), (255, 10), (257, 10)]
+    )
+    assert _lzw_encode(bytes(range(256))) == vector
+    img = np.arange(256, dtype=np.uint8).reshape(1, 256)
+    assert np.array_equal(decode_tiff_gray(_write_tiff(img, comp=5)), img)
+
+
+def test_lzw_crosses_every_width_and_clear():
+    # ~6k random bytes grow the table past 1023 and 2047 and refill it
+    img = np.random.default_rng(5).integers(0, 256, (80, 80), np.uint8)
+    assert np.array_equal(decode_tiff_gray(_write_tiff(img, comp=5)), img)
+
+
+def test_lzw_strip_contract():
+    """A strip decodes to exactly the bytes it is expected to hold:
+    longer output is cut, a short or corrupt strip is None."""
+    from two_tier_document_parser_spark.ccitt import _tiff_decompress
+
+    raw = np.random.default_rng(6).integers(0, 256, 900, np.uint8).tobytes()
+    strip = _lzw_encode(raw)
+    assert _tiff_decompress(strip, 900, 5) == raw
+    assert _tiff_decompress(strip, 600, 5) == raw[:600]
+    assert _tiff_decompress(strip[: len(strip) // 2], 900, 5) is None
+    assert _tiff_decompress(_pack_codes([(256, 9), (300, 9)]), 1, 5) is None
 
 
 def test_multi_strip():

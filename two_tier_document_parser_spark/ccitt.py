@@ -839,66 +839,6 @@ def _tiff_tag_arrays(data: bytes) -> dict[int, list[int]] | None:
     return out
 
 
-def _tiff_lzw(data: bytes, expect: int) -> bytes | None:
-    """TIFF 6.0 §13 LZW: MSB-first bit packing, 8-bit roots,
-    Clear=256, EOI=257, EARLY code-width change (one code before the
-    table fills — the opposite convention from GIF)."""
-    out = bytearray()
-    prefix = [0] * 4096
-    suffix = bytearray(4096)
-    CLEAR, EOI = 256, 257
-    next_code, width = 258, 9
-    acc = nbits = 0
-    prev = -1
-    i, n = 0, len(data)
-    while len(out) < expect:
-        while nbits < width:
-            if i >= n:
-                return bytes(out[:expect]) if len(out) >= expect else None
-            acc = (acc << 8) | data[i]
-            nbits += 8
-            i += 1
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == CLEAR:
-            next_code, width = 258, 9
-            prev = -1
-            continue
-        if code == EOI:
-            if len(out) < expect:
-                return None
-            break
-        if prev < 0:
-            if code > 255:
-                return None
-            out.append(code)
-            prev = code
-            continue
-        if code > next_code:
-            return None
-        probe = prev if code == next_code else code
-        stack = bytearray()
-        while probe >= 258:
-            stack.append(suffix[probe])
-            probe = prefix[probe]
-        stack.append(probe)
-        first = probe
-        if code == next_code:
-            stack.insert(0, first)
-        out.extend(reversed(stack))
-        if next_code < 4096:
-            prefix[next_code] = prev
-            suffix[next_code] = first
-            next_code += 1
-            # EARLY change, decoder side: the decoder's table lags the
-            # encoder's by one entry, so it must widen one entry
-            # earlier than the encoder's (1<<width)-1 threshold
-            if next_code == (1 << width) - 2 and width < 12:
-                width += 1
-        prev = code
-    return bytes(out[:expect])
-
-
 def _packbits(data: bytes, expect: int) -> bytes | None:
     out = bytearray()
     i, n = 0, len(data)
@@ -924,7 +864,13 @@ def _tiff_decompress(strip: bytes, expect: int, comp: int) -> bytes | None:
     if comp == 1:
         return strip[:expect] if len(strip) >= expect else None
     if comp == 5:
-        return _tiff_lzw(strip, expect)
+        from .pdf_io import _lzw_decode
+
+        try:
+            out = _lzw_decode(strip, limit=expect)
+        except ValueError:
+            return None
+        return out[:expect] if len(out) >= expect else None
     if comp == 32773:
         return _packbits(strip, expect)
     try:  # 8 / 32946: zlib

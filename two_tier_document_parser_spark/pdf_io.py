@@ -695,9 +695,14 @@ def _tiff_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes:
-    """LZWDecode (§7.4.4.2): 9-bit start, Clear=256, EOD=257, code
-    width grows at 511/1023/2047 (minus `early`)."""
+def _lzw_decode(
+    data: bytes, early: int = 1, limit: int | None = None
+) -> bytes:
+    """LZWDecode (§7.4.4.2), also TIFF 6.0 Compression=5: MSB-first
+    codes, 9-bit start, Clear=256, EOD=257, code width grows at
+    511/1023/2047 (minus `early`), table capped at 4096 entries.
+    Decoding stops once `limit` bytes are out; a code past the table
+    raises ValueError."""
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -716,14 +721,21 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
             if code == 257:
                 return bytes(out)
             if prev is None:
+                if code > 255:
+                    raise ValueError(f"LZW code {code} after Clear")
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
-                table.append(prev + entry[:1])
-            else:
+                if len(table) < 4096:
+                    table.append(prev + entry[:1])
+            elif code == len(table):
                 entry = prev + prev[:1]
                 table.append(entry)
+            else:
+                raise ValueError(f"LZW code {code} out of range")
             out += entry
+            if limit is not None and len(out) >= limit:
+                return bytes(out)
             prev = entry
             if len(table) + early >= (1 << width) and width < 12:
                 width += 1

@@ -320,10 +320,12 @@ def extract(
 
 
 def enable_worker_preload() -> None:
-    """Put the preload dir (sitecustomize.py importing numpy/pandas/
-    pyarrow) on PYTHONPATH so the pyspark worker daemon pre-imports
-    them once and forked workers inherit. Must be called BEFORE the
-    SparkSession (JVM) is created."""
+    """Put the preload dir on PYTHONPATH so the pyspark worker daemon
+    runs its sitecustomize.py once and forked workers inherit it: the
+    numpy/pandas/pyarrow imports, and (Python < 3.12) a zipimport that
+    re-reads Spark's jar and pyspark.zip only when they changed instead
+    of on every task. Must be called BEFORE the SparkSession (JVM) is
+    created: the JVM hands its launch PYTHONPATH to the daemon."""
     import os
 
     pre = os.path.join(os.path.dirname(os.path.abspath(__file__)), "preload")

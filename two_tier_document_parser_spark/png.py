@@ -141,8 +141,9 @@ def _samples_to_gray(
     trns: bytes | None,
 ) -> np.ndarray | None:
     """(h, w[, channels]) raw samples -> (h, w) uint8 luma. RGB via
-    integer BT.601; alpha composites over white; palette + tRNS per
-    spec §11.3.2; 16-bit uses the high byte."""
+    integer BT.601; alpha composites over white; tRNS per spec
+    §11.3.2 (palette alpha; for gray/RGB, pixels equal to the 16-bit
+    transparent sample turn white); 16-bit uses the high byte."""
     if ctype == 3:
         if palette is None or not len(palette):
             return None
@@ -154,12 +155,17 @@ def _samples_to_gray(
             alpha = np.where(px < len(a), np.take(a, np.minimum(px, len(a) - 1)), 255)
             g = (alpha * g + (255 - alpha) * 255 + 127) // 255
         return g.astype(np.uint8)
+    clear = None
+    nkey = 1 if ctype == 0 else 3
+    if ctype in (0, 2) and trns and len(trns) >= 2 * nkey:
+        key = np.frombuffer(trns[: 2 * nkey], ">u2").astype(np.int32)
+        clear = px == key[0] if ctype == 0 else (px == key).all(axis=-1)
+    if depth == 16:
+        px = px >> 8
     # grayscale sample scaling to 8-bit
     if ctype in (0, 4):
         g = px[..., 0] if px.ndim == 3 else px
-        if depth == 16:
-            pass  # already the high byte
-        elif depth < 8:
+        if depth < 8:
             g = g * (255 // ((1 << depth) - 1))
     else:  # 2 / 6: RGB(A)
         r, gg, b = px[..., 0], px[..., 1], px[..., 2]
@@ -167,6 +173,8 @@ def _samples_to_gray(
     if ctype in (4, 6):
         a = px[..., -1]
         g = (a * g + (255 - a) * 255 + 127) // 255
+    if clear is not None:
+        g = np.where(clear, 255, g)
     return g.astype(np.uint8)
 
 
@@ -174,10 +182,10 @@ def decode_png_gray(data: bytes) -> np.ndarray | None:
     """PNG bytes -> (h, w) uint8 grayscale, or None when the payload
     is not a decodable PNG. Full spec coverage for still images:
     color types 0/2/3/4/6, bit depths 1/2/4/8/16 (16-bit reads the
-    high byte), Adam7 interlace, PLTE + tRNS (alpha and transparent
-    palette entries composite over white — the engine's document
-    convention), scanline filters 0-4. Color converts to integer
-    BT.601 luma, same as gif.py, so foreign web rasters decode — not
+    high byte), Adam7 interlace, PLTE + tRNS (alpha, transparent
+    palette entries and the gray/RGB transparent sample composite over
+    white — the engine's document convention), scanline filters 0-4.
+    Color converts to integer BT.601 luma, same as gif.py, so foreign web rasters decode — not
     just this module's own grayscale filter-0 output."""
     if not isinstance(data, (bytes, bytearray)) or data[:8] != PNG_SIG:
         return None
@@ -229,7 +237,9 @@ def decode_png_gray(data: bytes) -> np.ndarray | None:
             rows = _unfilter(raw, pw, ph, ch * sampbytes)
             if rows is None:
                 return None
-            px = rows.reshape(ph, pw, ch, sampbytes)[..., 0].astype(np.int32)
+            px = rows.reshape(ph, pw, ch, sampbytes).astype(np.int32)
+            # 16-bit samples stay whole until tRNS has been matched
+            px = (px[..., 0] << 8) | px[..., 1] if depth == 16 else px[..., 0]
             return px if ch > 1 else px[..., 0]
         rb = (pw * depth + 7) // 8
         rows = _unfilter(raw, rb, ph, 1)
