@@ -713,7 +713,7 @@ def q_pipeline_documents(spark, sf_dir):
 
     ship_package(spark)
     raw = documents_to_raw(_docs(spark, sf_dir))
-    out = extract(spark, raw, persist=False)
+    out = extract(spark, raw)
     return out.select(
         "doc_id",
         "tier",
@@ -2303,7 +2303,7 @@ def entry(spark: SparkSession) -> DataFrame:
     raw = documents_to_raw(_docs(spark, "/root/testdata/sf0.001")).unionByName(
         synth
     )
-    out = extract(spark, raw, persist=False)
+    out = extract(spark, raw)
     s = F.explode("spans").alias("s")
     return (
         out.select("tier", s)

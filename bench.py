@@ -172,7 +172,7 @@ def main() -> int:
     n_docs = BENCH_DOCS
     agg = timed(
         "extract_fused",
-        lambda: extract(spark, raw, mode="fused")
+        lambda: extract(spark, raw)
         .select(F.count(F.lit(1)).alias("n"), F.sum(F.size("spans")).alias("s"))
         .collect()[0],
         reps=3,
@@ -186,23 +186,22 @@ def main() -> int:
     # 2. skew path: giant docs pre-split by page + reassembled
     timed(
         "extract_presplit",
-        lambda: extract_with_presplit(spark, raw, mode="fused")
+        lambda: extract_with_presplit(spark, raw)
         .select(F.count(F.lit(1)))
         .collect(),
         reps=2,
     )
 
-    # 3. classify-then-split (north-rule shape) with salting
-    # the salted shuffle path cold-starts expensively (shuffle-file
-    # creation + first-write page cache); measured 45s/15s/6.4s over
-    # three reps in one window — min over 5 reps is the engine cost,
-    # rep_median alongside exposes the noise floor (r2 verdict #9:
-    # rep spread was 4.4x, so this entry gets the deepest rep count)
+    # 3. the fused cascade behind a salted repartition (skew defeat):
+    # the difference to extract_fused is the salt shuffle. The salted
+    # shuffle path cold-starts expensively (shuffle-file creation +
+    # first-write page cache); measured 45s/15s/6.4s over three reps in
+    # one window — min over 5 reps is the engine cost, rep_median
+    # alongside exposes the noise floor (rep spread was 4.4x, so this
+    # entry gets the deepest rep count)
     timed(
-        "extract_split_salted",
-        lambda: extract(
-            spark, raw, mode="split", salt=2 * cpus, n_partitions=2 * cpus
-        )
+        "extract_fused_salted",
+        lambda: extract(spark, raw, salt=2 * cpus, n_partitions=2 * cpus)
         .select(F.count(F.lit(1)))
         .collect(),
         reps=5,
@@ -216,7 +215,7 @@ def main() -> int:
 
     timed(
         "binary_roundtrip_extract",
-        lambda: extract(spark, decode_table(encode_table(raw)), mode="fused")
+        lambda: extract(spark, decode_table(encode_table(raw)))
         .select(F.count(F.lit(1)))
         .collect(),
         reps=2,
@@ -237,8 +236,7 @@ def main() -> int:
         timed(
             nm,
             lambda m=mod: extract(
-                spark, m.parse_table(m.render_table(ingest_slice)),
-                mode="fused",
+                spark, m.parse_table(m.render_table(ingest_slice))
             )
             .select(F.count(F.lit(1)))
             .collect(),

@@ -27,7 +27,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--master", required=True)
-    ap.add_argument("--mode", default="fused")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=64)
@@ -58,7 +57,7 @@ def main() -> int:
     raw = spark.read.parquet(args.input)
     raw.count()  # warm the scan metadata; excluded from timing
 
-    kw = dict(mode=args.mode, salt=args.salt or None, n_partitions=args.partitions)
+    kw = dict(salt=args.salt or None, n_partitions=args.partitions)
     for _ in range(args.warm):
         extract(spark, raw, **kw).select(F.count(F.lit(1))).collect()
     spark._jvm.System.gc()

@@ -60,7 +60,6 @@ def main() -> int:
     )
     ap.add_argument("--output", required=True, help="documents_out parquet path")
     ap.add_argument("--master", default=None, help="spark master (default: env)")
-    ap.add_argument("--mode", default="fused", choices=["fused", "split"])
     ap.add_argument("--salt", type=int, default=0, help="doc_id salt buckets (0=off)")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument(
@@ -131,9 +130,7 @@ def main() -> int:
     else:
         raw = synth_spark(spark, args.synth, args.seed, partitions=args.partitions)
 
-    kw = dict(
-        mode=args.mode, salt=args.salt or None, n_partitions=args.partitions
-    )
+    kw = dict(salt=args.salt or None, n_partitions=args.partitions)
     extra = {}
     if args.checkpoint:
         from pyspark.sql import functions as F

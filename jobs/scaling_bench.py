@@ -80,8 +80,6 @@ def run_once(corpus: str, cores: int) -> dict:
             corpus,
             "--master",
             f"local[{cores}]",
-            "--mode",
-            "fused",
         ],
         capture_output=True,
         text=True,

@@ -198,7 +198,7 @@ def child(corpus: str, out_dir: str, cores: int, driver_mem: str) -> int:
     docs_out = f"{out_dir}/documents_out"
     timed(
         "extract",
-        lambda: extract(spark, spark.read.parquet(corpus), mode="fused")
+        lambda: extract(spark, spark.read.parquet(corpus))
         .write.mode("overwrite")
         .parquet(docs_out),
     )

@@ -16,7 +16,7 @@ from .tier2 import tier2_extract
 
 def extract_doc(doc: dict) -> dict:
     """Full per-document cascade: route, then extract with the routed
-    tier — the oracle equivalent of the engine's classify-then-split
+    tier — the oracle equivalent of the engine's route-then-extract
     (reference usage pattern: examples/demo_client.py:23-47). Invalid
     or oversize documents come back as quarantine rows (tier='error'),
     matching the engine's error channel."""

@@ -65,19 +65,18 @@ def test_engine_salted_repartition_same_output(spark):
     )
 
 
-def test_routing_matches_expected(spark):
-    from pyspark.sql import functions as F
-    from two_tier_document_parser_spark.routing import with_tier
-    from two_tier_document_parser_spark.synth import synth_spark
+def test_routing_matches_expected():
+    """The shared routing rule (routing.route_batch, which every
+    extract path runs) reproduces the pinned per-document tiers."""
+    import pyarrow as pa
+
+    from two_tier_document_parser_spark.routing import route_batch
+    from two_tier_document_parser_spark.synth import synth_docs
 
     expected = json.loads((FIXTURES / "routing_expected.json").read_text())
-    got = {
-        r.doc_id: r.tier
-        for r in with_tier(synth_spark(spark, N_DOCS, SEED, partitions=8), spark)
-        .select("doc_id", "tier")
-        .collect()
-    }
-    assert got == expected
+    batch = pa.RecordBatch.from_pylist(synth_docs(0, N_DOCS, SEED))
+    tier, _ = route_batch(batch)
+    assert dict(zip(batch.column("doc_id").to_pylist(), tier.tolist())) == expected
 
 
 def test_quarantine_channel(spark):
@@ -96,7 +95,7 @@ def test_quarantine_channel(spark):
         "doc_id string, doc_class string, n_pages int, "
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    out = {r.doc_id: r for r in extract(spark, raw, persist=False).collect()}
+    out = {r.doc_id: r for r in extract(spark, raw).collect()}
     assert out["ok1"].tier == "fast"
     assert out["bad_empty"].tier == "error"
     assert out["bad_empty"].error != ""

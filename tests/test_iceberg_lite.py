@@ -339,18 +339,18 @@ def test_checkpointed_extract_resumes_from_iceberg_snapshot(
     assert isinstance(ck.data, IcebergLiteIO)
 
     half = synth_spark(spark, 60, 42, partitions=4)
-    run1 = ck.run(half, mode="fused")
+    run1 = ck.run(half)
     assert ck.result().count() == 60
     assert ck.data.read_run(run1).count() == 60
 
     full = synth_spark(spark, 120, 42, partitions=4)
-    run2 = ck.run(full, mode="fused")
+    run2 = ck.run(full)
     res = ck.result()
     assert res.count() == 120
     assert res.select("doc_id").distinct().count() == 120
     assert ck.data.read_run(run2).count() == 60  # only the remainder
 
-    run3 = ck.run(full, mode="fused")
+    run3 = ck.run(full)
     assert ck.result().count() == 120
     assert ck.data.read_run(run3).count() == 0
 
@@ -522,7 +522,7 @@ def test_stream_to_iceberg_exactly_once(spark, tmp_path):
         }
 
     batch = canon(
-        extract(spark, spark.read.parquet(raw_dir), mode="fused")
+        extract(spark, spark.read.parquet(raw_dir))
     )
     assert canon(res) == batch
 
@@ -657,7 +657,7 @@ def test_iceberg_to_iceberg_extraction(spark, tmp_path):
 
     src = open_table(spark, f"iceberg-lite:{tmp_path}/in").read()
     ck = CheckpointedExtract(spark, f"iceberg-lite:{tmp_path}/out")
-    ck.run(src, mode="fused")
+    ck.run(src)
 
     def canon(df):
         return {
@@ -672,7 +672,7 @@ def test_iceberg_to_iceberg_extraction(spark, tmp_path):
         }
 
     assert canon(ck.result()) == canon(
-        extract(spark, raw, mode="fused")
+        extract(spark, raw)
     )
 
 

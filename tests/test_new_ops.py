@@ -288,7 +288,7 @@ def test_stream_extract_equals_batch(spark, tmp_path):
             for r in df.collect()
         }
 
-    batch = canon(extract(spark, spark.read.parquet(raw_dir), mode="fused"))
+    batch = canon(extract(spark, spark.read.parquet(raw_dir)))
     stream = canon(spark.read.parquet(out_dir))
     assert stream == batch
 
@@ -334,7 +334,7 @@ def test_stream_binary_ingest_equals_batch(spark, tmp_path):
         }
 
     batch = canon(
-        extract(spark, decode_table(spark.read.parquet(bin_dir)), mode="fused")
+        extract(spark, decode_table(spark.read.parquet(bin_dir)))
     )
     assert canon(spark.read.parquet(out_dir)) == batch
     assert len(batch) == 200
@@ -393,11 +393,7 @@ def test_stream_mixed_bytes_ingest_equals_batch(spark, tmp_path):
         }
 
     batch = canon(
-        extract(
-            spark,
-            sniff_decode_table(spark.read.parquet(bin_dir)),
-            mode="fused",
-        )
+        extract(spark, sniff_decode_table(spark.read.parquet(bin_dir)))
     )
     got = canon(spark.read.parquet(out_dir))
     assert got == batch

@@ -115,7 +115,7 @@ def test_spark_roundtrip_and_cascade(spark):
     a = {r["doc_id"]: r.asDict(recursive=True) for r in raw.collect()}
     b = {r["doc_id"]: r.asDict(recursive=True) for r in back.collect()}
     assert a == b
-    out = extract(spark, back, persist=False)
+    out = extract(spark, back)
     tiers = {
         r["tier"]: r["n"]
         for r in out.groupBy("tier").agg(F.count(F.lit(1)).alias("n")).collect()

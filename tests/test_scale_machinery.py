@@ -36,22 +36,8 @@ def test_presplit_matches_golden(spark):
     from two_tier_document_parser_spark.synth import synth_spark
 
     raw = synth_spark(spark, 300, SEED, partitions=6)
-    out = extract_with_presplit(spark, raw, threshold=300, mode="fused").collect()
+    out = extract_with_presplit(spark, raw, threshold=300).collect()
     _assert_golden(out, 300)
-
-
-def test_fused_equals_split(spark):
-    from two_tier_document_parser_spark.pipeline import extract
-    from two_tier_document_parser_spark.synth import synth_spark
-
-    raw = synth_spark(spark, 200, SEED, partitions=4)
-    a = {r.doc_id: r for r in extract(spark, raw, mode="split").collect()}
-    b = {r.doc_id: r for r in extract(spark, raw, mode="fused").collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k].spans == b[k].spans
-        assert a[k].markdown == b[k].markdown
-        assert a[k].tier == b[k].tier
 
 
 def test_checkpoint_kill_and_resume(spark, tmp_path):
@@ -65,19 +51,19 @@ def test_checkpoint_kill_and_resume(spark, tmp_path):
 
     # "crashed" first run: only half the corpus was committed
     half = synth_spark(spark, 100, SEED, partitions=4)
-    run1 = ck.run(half, mode="fused")
+    run1 = ck.run(half)
     assert ck.result().count() == 100
 
     # resume over the full corpus: only the remainder is processed
     full = synth_spark(spark, 200, SEED, partitions=4)
-    run2 = ck.run(full, mode="fused")
+    run2 = ck.run(full)
     res = ck.result()
     assert res.count() == 200
     assert res.select("doc_id").distinct().count() == 200
     _assert_golden(res.collect(), 200)
 
     # re-run is a no-op (no new docs)
-    run3 = ck.run(full, mode="fused")
+    run3 = ck.run(full)
     assert ck.result().count() == 200
 
     # lineage metrics exist for every run
@@ -113,7 +99,7 @@ def test_resume_is_range_pruned(spark, tmp_path):
 
     ck = CheckpointedExtract(spark, str(tmp_path / "out"))
     first = synth_spark(spark, 100, SEED, partitions=4)
-    ck.run(first, mode="fused")
+    ck.run(first)
     ranges = ck.committed_ranges()
     assert ranges, "lineage must yield committed ranges"
 
@@ -200,7 +186,7 @@ def test_media_features_stub(spark):
     from two_tier_document_parser_spark.pipeline import extract
     from two_tier_document_parser_spark.synth import synth_spark
 
-    out = extract(spark, synth_spark(spark, 100, SEED, partitions=4), mode="fused")
+    out = extract(spark, synth_spark(spark, 100, SEED, partitions=4))
     media = media_side_table(out)
     feats = extract_media_features(media).collect()
     assert len(feats) > 0
@@ -238,7 +224,7 @@ def test_pixel_true_crop_from_page_raster(spark):
     from two_tier_document_parser_spark.synth import synth_spark
 
     ship_package(spark)
-    out = extract(spark, synth_spark(spark, 60, 42, partitions=2), mode="fused")
+    out = extract(spark, synth_spark(spark, 60, 42, partitions=2))
 
     # one deterministic gradient page raster per (doc, page 0)
     pw, ph = 306, 396  # half-scale page
@@ -518,30 +504,71 @@ def test_empty_text_doc_oracle_parity(spark, tmp_path):
         assert diff is None, f"{name}: {diff}"
 
 
-def test_fused_split_agree_on_bad_n_pages(spark):
-    """n_pages < 1 quarantines in BOTH extract modes (review finding:
-    fused previously skipped the check)."""
+def test_entry_paths_agree_on_quarantine(spark):
+    """Every entry path runs the one routing rule (routing.route):
+    extract(), extract_with_presplit at a threshold that makes every
+    non-empty document a giant, and the facade's tier="auto" route the
+    same documents to the same tier and quarantine the rest with the
+    same reason (a null doc_id comes out as '')."""
+    from two_tier_document_parser_spark.api import parse_document
     from two_tier_document_parser_spark.pipeline import extract, ship_package
+    from two_tier_document_parser_spark.presplit import extract_with_presplit
+    from two_tier_document_parser_spark.spec import (
+        REASON_INVALID,
+        T1_MAX_SPANS,
+        too_large_reason,
+    )
+
+    def span(kind, text):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": 0}
+
+    text = [span("text", "hello world of the engine")] * 3
+    boxed = [span("box", "60,40,940,400,text"), span("text", "hello world")] * 2
+    # (doc_id, doc_class, n_pages, spans) -> (tier, error)
+    table = [
+        (("fast", "html", 1, text), ("fast", "")),
+        (("deep", "pdfish", 1, boxed), ("deep", "")),
+        ((None, "html", 1, text), ("error", REASON_INVALID)),
+        (("empty", "html", 1, []), ("error", REASON_INVALID)),
+        (("null_spans", "html", 1, None), ("error", REASON_INVALID)),
+        (("zero_pages", "html", 0, text), ("error", REASON_INVALID)),
+        (("null_pages", "html", None, text), ("fast", "")),
+        (
+            ("oversize", "html", 1, text[:1] * (T1_MAX_SPANS + 1)),
+            ("error", too_large_reason("fast")),
+        ),
+    ]
+    expected = {(d[0] or ""): want for d, want in table}
 
     ship_package(spark)
-    rows = [
-        ("good", "html", 1,
-         [{"kind": "text", "text": "hello world", "media_ref": "", "offset": 0}]),
-        ("badpages", "html", 0,
-         [{"kind": "text", "text": "hello world", "media_ref": "", "offset": 0}]),
-    ]
     raw = spark.createDataFrame(
-        rows,
+        [d for d, _ in table],
         "doc_id string, doc_class string, n_pages int, spans "
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    for mode in ("fused", "split"):
-        tiers = {
-            r["doc_id"]: r["tier"]
-            for r in extract(spark, raw, mode=mode, persist=False).collect()
-        }
-        assert tiers["badpages"] == "error", mode
-        assert tiers["good"] != "error", mode
+
+    def batch_rows(df):
+        return {r["doc_id"]: (r["tier"], r["error"]) for r in df.collect()}
+
+    def facade_row(doc):
+        out = parse_document(dict(zip(("doc_id", "doc_class", "n_pages",
+                                       "spans"), doc)))
+        if "error" in out:
+            return ("error", out["error"])
+        return ("deep" if "images" in out else "fast", "")
+
+    assert batch_rows(extract(spark, raw)) == expected
+    assert batch_rows(extract_with_presplit(spark, raw, threshold=2)) == expected
+    assert {(d[0] or ""): facade_row(d) for d, _ in table} == expected
+
+
+def test_extract_has_one_mode():
+    """"fused" is the only extract path; any other mode is refused
+    before a plan is built."""
+    from two_tier_document_parser_spark.pipeline import extract
+
+    with pytest.raises(ValueError, match="fused"):
+        extract(None, None, mode="split")
 
 
 def test_checkpoint_range_pruning_survives_noop_rerun(spark, tmp_path):

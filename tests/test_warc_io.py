@@ -300,7 +300,7 @@ def test_binaryfile_warc_to_cascade(spark, tmp_path):
             F.col("content").alias("data"),
         )
     )
-    out = extract(spark, parse_table(unpack_table(files)), mode="fused")
+    out = extract(spark, parse_table(unpack_table(files)))
     got = {
         r["doc_id"]: r["spans"][0]["text"] for r in out.collect()
     }

@@ -30,7 +30,8 @@ from __future__ import annotations
 import re
 import time
 
-from .spec import ENGINE_VERSION, MEDIA_KINDS, ROUTING_DEFAULT, ROUTING_MODEL
+from .routing import route_doc
+from .spec import ENGINE_VERSION
 
 _REF_RE = re.compile(r"page_(\d+)_(img|table|formula)_(\d+)")
 
@@ -90,30 +91,11 @@ def _artifacts(spans: list[dict]) -> tuple[list[dict], list[dict], list[dict]]:
 
 
 def _route_one(doc: dict) -> str:
-    """The engine's routing rule (spec.ROUTING_MODEL thresholds — the
-    same pure function the Arrow fused kernel computes batch-side).
-    Validation mirrors the batch router (routing.with_tier /
-    pipeline.fused_batches) in full — null doc_id, empty spans,
-    n_pages < 1 — so the facade quarantines exactly the documents the
-    batch engine emits as tier='error'."""
-    from .spec import T1_MAX_SPANS, T2_MAX_SPANS
-
-    spans = doc.get("spans") or []
-    n = len(spans)
-    n_pages = doc.get("n_pages")
-    # None/absent n_pages is valid, mirroring the batch predicate
-    # `n_pages < 1` (false on SQL null)
-    if n == 0 or doc.get("doc_id") is None or (
-        n_pages is not None and n_pages < 1
-    ):
-        return "error"
-    n_box = sum(1 for s in spans if s["kind"] == "box")
-    n_media = sum(1 for s in spans if s["kind"] in MEDIA_KINDS)
-    box_t, media_t = ROUTING_MODEL.get(doc.get("doc_class"), ROUTING_DEFAULT)
-    if n_box / n > box_t or n_media >= media_t:
-        # reference 413 semantics: oversize -> quarantined, never parsed
-        return "error" if n > T2_MAX_SPANS else "deep"
-    return "error" if n > T1_MAX_SPANS else "fast"
+    """The engine's routing rule (routing.route, the one copy the
+    batch kernel also runs) on one document: 'fast', 'deep' or
+    'error'. The facade quarantines exactly the documents the batch
+    engine emits as tier='error'."""
+    return route_doc(doc)[0]
 
 
 def _run_kernel_one(doc: dict, routed: str) -> dict:
@@ -137,7 +119,7 @@ def _run_kernel_one(doc: dict, routed: str) -> dict:
 def parse_document(doc: dict, tier: str = "auto") -> dict:
     """One documents_raw row -> a reference-shaped ParseResponse dict.
 
-    tier="auto" routes like the engine (broadcast-model thresholds);
+    tier="auto" routes like the engine (routing.route, the batch rule);
     "fast"/"accurate" force a tier like calling the respective service
     directly (anything else raises ValueError, mirroring the services'
     request validation). Parse errors come back as {"error": ...}
@@ -151,7 +133,8 @@ def parse_document(doc: dict, tier: str = "auto") -> dict:
         "fast" if tier == "fast" else "deep"
     )
     if routed == "error":
-        return {"error": "invalid document"}
+        # the batch engine's quarantine reason (routing.route)
+        return {"error": route_doc(doc)[1]}
     out = _run_kernel_one(doc, routed)
     if out.get("error"):
         return {"error": out["error"]}

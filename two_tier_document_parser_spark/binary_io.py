@@ -116,7 +116,7 @@ def decode_batches(
 ) -> Iterator[pa.RecordBatch]:
     """(doc_id, payload binary) -> documents_raw rows. Malformed
     payloads produce a quarantine-shaped row (doc_class='', n_pages=0,
-    no spans) instead of raising — the router (with_tier /
+    no spans) instead of raising — the router (routing.route, run by
     fused_batches) then sends them to the error channel."""
     kind_dict = pa.array(IN_KINDS, type=pa.string())
     for batch in batches:

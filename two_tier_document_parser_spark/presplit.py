@@ -14,14 +14,17 @@ accurate/service.py:160) — because both tiers are page-decomposable:
   cross-page state is the artifact id counter (`len(images)` global
   per doc, accurate/service.py:180), which reassembly renumbers.
 
-Flow: docs with > threshold spans are exploded into one row per page
-(vectorized Arrow slicing), extracted as independent single-page docs
-keyed `doc_id\\x00page`, then regrouped with applyInPandas: pages
-sorted, artifact ids renumbered to global first-seen order (media_ref
-and the markdown image refs), skipped-page placeholders rewritten to
-the global 1-indexed page number, span `order` re-densified, page
-markdowns joined with "\\n\\n" — bit-identical to the unsplit result
-(tested against the golden fixtures with a tiny threshold).
+Flow: docs with > threshold spans are routed whole by the engine's one
+rule (routing.route); the ones it quarantines get the same error row
+extract() emits (pipeline.quarantine_rows), the rest are exploded into
+one row per page (vectorized Arrow slicing), extracted as independent
+single-page docs keyed `doc_id\\x00page`, then regrouped with
+applyInPandas: pages sorted, artifact ids renumbered to global
+first-seen order (media_ref and the markdown image refs), skipped-page
+placeholders rewritten to the global 1-indexed page number, span
+`order` re-densified, page markdowns joined with "\\n\\n" —
+bit-identical to the unsplit result (tested against the golden
+fixtures with a tiny threshold).
 
 Only giant docs' pages ever shuffle (the reassembly groupBy); the
 normal path stays map-only.
@@ -40,8 +43,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import extract, quarantine_rows
+from .routing import route_batch
 from .schemas import OUT_SCHEMA
-from .spec import MEDIA_KINDS, ROUTING_DEFAULT, ROUTING_MODEL
 
 SPLIT_THRESHOLD = 4000
 KEY_SEP = "\x00"
@@ -59,6 +63,12 @@ def split_pages_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
     """documents_raw (giants) -> one row per page:
     (key=doc_id\\x00page, tier, spans-without-page-breaks)."""
     for batch in batches:
+        # routing on the WHOLE doc (routing.route, as extract() does);
+        # quarantined giants are left to giant_error_batches
+        tier, _ = route_batch(batch)
+        routed = tier != "error"
+        if not routed.all():
+            batch, tier = batch.filter(pa.array(routed)), tier[routed]
         n = batch.num_rows
         if n == 0:
             continue
@@ -70,20 +80,6 @@ def split_pages_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
         kind = flat.field("kind")
         doc_of = np.repeat(np.arange(n), counts)
         total = len(doc_of)
-
-        # routing on the WHOLE doc (must match fused_batches/with_tier)
-        is_box = pc.equal(kind, "box").to_numpy(zero_copy_only=False)
-        is_media = pc.is_in(
-            kind, value_set=pa.array(sorted(MEDIA_KINDS))
-        ).to_numpy(zero_copy_only=False)
-        n_box = np.zeros(n, np.int64)
-        n_media = np.zeros(n, np.int64)
-        np.add.at(n_box, doc_of, is_box)
-        np.add.at(n_media, doc_of, is_media)
-        classes = batch.column("doc_class").to_pylist()
-        bt = np.array([ROUTING_MODEL.get(c, ROUTING_DEFAULT)[0] for c in classes])
-        mt = np.array([ROUTING_MODEL.get(c, ROUTING_DEFAULT)[1] for c in classes])
-        deep = (n_box / np.maximum(counts, 1) > bt) | (n_media >= mt)
 
         # page index per span; drop page_break rows
         pb = pc.equal(kind, "page_break").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -121,7 +117,7 @@ def split_pages_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
             f"{doc_ids[d]}{KEY_SEP}{p:06d}"
             for d, p in zip(row_doc, row_page)
         ]
-        tiers = ["deep" if deep[d] else "fast" for d in row_doc]
+        tiers = tier[row_doc].tolist()
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(keys, type=pa.string()),
@@ -130,6 +126,15 @@ def split_pages_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
             ],
             names=["key", "tier", "spans"],
         )
+
+
+def giant_error_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """documents_raw (giants) -> the quarantine rows extract() would
+    emit for the giants the routing rule quarantines."""
+    for batch in batches:
+        yield from quarantine_rows(batch, *route_batch(batch))
 
 
 def _reassemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -201,13 +206,12 @@ def _reassemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def extract_giants(spark: SparkSession, giants: DataFrame) -> DataFrame:
     """Pre-split giants by page, extract pages independently, then
-    reassemble in page order."""
+    reassemble in page order; quarantined giants become error rows."""
     from .tier1 import tier1_batches
     from .tier2 import tier2_batches
 
-    pages = giants.select("doc_id", "doc_class", "spans").mapInArrow(
-        split_pages_batches, PAGE_SCHEMA
-    )
+    giants = giants.select("doc_id", "doc_class", "n_pages", "spans")
+    pages = giants.mapInArrow(split_pages_batches, PAGE_SCHEMA)
 
     def run_pages(batches):
         for batch in batches:
@@ -235,7 +239,7 @@ def extract_giants(spark: SparkSession, giants: DataFrame) -> DataFrame:
     )
     return enriched.groupBy("true_doc_id").applyInPandas(
         _reassemble_group, OUT_SCHEMA
-    )
+    ).unionByName(giants.mapInArrow(giant_error_batches, OUT_SCHEMA))
 
 
 def extract_with_presplit(
@@ -244,10 +248,10 @@ def extract_with_presplit(
     threshold: int = SPLIT_THRESHOLD,
     **extract_kw,
 ) -> DataFrame:
-    from .pipeline import extract
-
-    normal = raw.filter(F.size("spans") <= threshold)
-    giants = raw.filter(F.size("spans") > threshold)
+    # a NULL spans list counts as empty (size() is NULL under ANSI)
+    n_spans = F.coalesce(F.size("spans"), F.lit(0))
+    normal = raw.filter(n_spans <= threshold)
+    giants = raw.filter(n_spans > threshold)
     out_normal = extract(spark, normal, **extract_kw)
     out_giants = extract_giants(spark, giants)
     return out_normal.unionByName(out_giants)

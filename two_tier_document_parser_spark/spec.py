@@ -81,7 +81,7 @@ PAGE_JOIN = "\n\n"   # reference fast/service.py:71 joins page parts
 BLOCK_JOIN = "\n\n"  # blocks within a page join the same way
 
 # ---------------------------------------------------------------------------
-# Tier routing (classify-then-split with a broadcast model, SURVEY §2.1 O3)
+# Tier routing (routing.route, SURVEY §2.1 O3)
 # Keyed by doc_class; a doc goes to the deep tier when its box-span
 # fraction exceeds the threshold OR its media-span count reaches the
 # media threshold. Pure function of row content (SURVEY §7.7.2).

@@ -478,7 +478,7 @@ def run_stream_to_iceberg(
     stream = read_document_stream(spark, input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract(batch_df.sparkSession, batch_df, mode="fused")
+        out = extract(batch_df.sparkSession, batch_df)
         iceberg_sink_batch(out, batch_id, table)
 
     q = (

@@ -78,8 +78,8 @@ def rebatch_by_spans(
         if batch.num_rows == 0:
             continue
         counts = (
-            pc.list_value_length(batch.column("spans"))
-            .to_numpy(zero_copy_only=False)
+            pc.fill_null(pc.list_value_length(batch.column("spans")), 0)
+            .to_numpy()
             .astype(np.int64)
         )
         if counts.sum() <= max_spans:
@@ -335,8 +335,3 @@ def tier1_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
             ],
             names=[f.name for f in OUT_SCHEMA.fields],
         )
-
-
-def tier1_map(df):
-    """documents_raw (fast-routed) -> documents_out rows."""
-    return df.select("doc_id", "spans").mapInArrow(tier1_batches, OUT_SCHEMA)

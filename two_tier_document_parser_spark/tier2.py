@@ -312,8 +312,3 @@ def tier2_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
             ],
             names=[f.name for f in OUT_SCHEMA.fields],
         )
-
-
-def tier2_map(df):
-    """documents_raw (deep-routed) -> documents_out rows."""
-    return df.select("doc_id", "spans").mapInArrow(tier2_batches, OUT_SCHEMA)
