@@ -18,8 +18,8 @@ Layout:
   schemas.py      canonical Spark StructTypes
   adapter.py      driver `documents` table -> documents_raw adapter
   routing.py      feature projection + broadcast routing model
-  tier1.py        vectorized fast extractor (mapInPandas)
-  tier2.py        vectorized deep extractor (mapInPandas)
+  tier1.py        fast extractor: per-document core + Arrow adapter
+  tier2.py        deep extractor: per-document core + Arrow adapter
   presplit.py     giant-doc page pre-split + order-preserving reassembly
   pipeline.py     end-to-end job graph
   checkpoint.py   lineage + resume

@@ -19,10 +19,12 @@ each with its layout-region `bbox` and — for images — a real base64
 PNG (from-scratch stdlib encoder, png.py; deterministic raster since
 page pixels don't exist in the span model).
 
-Single-document calls run the engine's OWN Arrow kernels on a one-row
-batch (tier1_batches / tier2_batches — no Spark session, no external
-packages), so `parse_document` is bit-identical to the engine's batch
-output by construction and the facade deploys with engine.zip alone.
+Single-document calls run the engine's OWN tier cores
+(tier1.extract_fast / tier2.extract_deep, the functions the Arrow
+batch kernels call per document) on the document's span lists: no
+Spark session, no Arrow round trip, no external packages. So
+`parse_document` is bit-identical to the engine's batch output by
+construction and the facade deploys with engine.zip alone.
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ import time
 
 from .routing import route_doc
 from .spec import ENGINE_VERSION
+from .tier1 import extract_fast
+from .tier2 import extract_deep
 
 _REF_RE = re.compile(r"page_(\d+)_(img|table|formula)_(\d+)")
 
@@ -99,21 +103,19 @@ def _route_one(doc: dict) -> str:
 
 
 def _run_kernel_one(doc: dict, routed: str) -> dict:
-    """One-row Arrow batch through the engine's own tier kernel."""
-    import pyarrow as pa
-
-    from .tier1 import tier1_batches
-    from .tier2 import tier2_batches
-
-    batch = pa.RecordBatch.from_pylist(
-        [{"doc_id": str(doc.get("doc_id", "")), "spans": doc["spans"]}]
-    )
-    fn = tier1_batches if routed == "fast" else tier2_batches
-    for ob in fn(iter([batch])):
-        rows = ob.to_pylist()
-        if rows:
-            return rows[0]
-    raise RuntimeError("kernel produced no output row")
+    """The engine's tier core on one document's span lists -> its
+    documents_out row as a dict: the same function the Arrow adapters
+    run per document (tier1.extract_fast / tier2.extract_deep, no Arrow
+    here), stamped with its own wall time."""
+    t0 = time.time()
+    spans = doc.get("spans") or []
+    kinds = [s["kind"] for s in spans]
+    texts = [s["text"] for s in spans]
+    if routed == "fast":
+        out = extract_fast(kinds, texts)
+    else:
+        out = extract_deep(kinds, texts, [s.get("media_ref") for s in spans])
+    return out.row(str(doc.get("doc_id", "")), int((time.time() - t0) * 1000))
 
 
 def parse_document(doc: dict, tier: str = "auto") -> dict:

@@ -18,12 +18,14 @@ vector speed:
             n_spans * u16  media_ref byte lengths, then the
                            concatenated utf-8 ref bytes
 
-Because the layout is columnar, DECODE is not a per-span parse loop:
-each section is one `np.frombuffer` view, string columns are
-assembled zero-copy via `pa.Array.from_buffers` from (cumsum(lens),
-concatenated bytes) — the per-document Python loop touches only the
-fixed-size headers, never spans (input_hint mandate). A malformed
-payload quarantines the document (error channel O19), it never throws.
+One parser (`_parse`) reads and validates the header and sections of
+a payload; two decoders share it. `decode_batches` (a table of
+payloads) is not a per-span loop: each section is one `np.frombuffer`
+view and string columns are assembled zero-copy via
+`pa.Array.from_buffers` from (cumsum(lens), concatenated bytes).
+`decode_doc` (one payload, the per-request and sniffing path) builds
+the row dict in plain Python with no Arrow batch. A malformed payload
+quarantines the document (error channel O19), it never throws.
 
 Scale notes: the decode stage is map-only (no shuffle); payload bytes
 stream through Arrow buffers without per-row Python objects; the
@@ -111,6 +113,78 @@ def _utf8_array(lens: np.ndarray, data: bytes) -> pa.Array:
     )
 
 
+def _parse(buf: bytes):
+    """The one TTDP1 header/section parser and validator: payload ->
+    (class code, n_pages, kinds, offsets, text lengths, text bytes, ref
+    lengths, ref bytes), the fixed-width sections as numpy views.
+    Raises ValueError on a malformed payload: bad magic, truncated
+    sections, a kind or class code out of range, an n_pages that does
+    not fit the int32 output column, or a text/media_ref field that is
+    not valid UTF-8."""
+    if buf[: len(MAGIC)] != MAGIC or len(buf) < _HDR:
+        raise ValueError("bad magic")
+    cls = buf[len(MAGIC)]
+    np_d = int.from_bytes(buf[6:10], "little")
+    n = int.from_bytes(buf[10:14], "little")
+    pos = _HDR
+    kinds = np.frombuffer(buf, np.uint8, n, pos)
+    pos += n
+    offs = np.frombuffer(buf, "<i4", n, pos)
+    pos += 4 * n
+    tlen = np.frombuffer(buf, "<u4", n, pos)
+    pos += 4 * n
+    t_total = int(tlen.sum())
+    text_data = buf[pos : pos + t_total]
+    pos += t_total
+    rlen = np.frombuffer(buf, "<u2", n, pos)
+    pos += 2 * n
+    r_total = int(rlen.sum())
+    ref_data = buf[pos : pos + r_total]
+    if (
+        len(text_data) != t_total
+        or len(ref_data) != r_total
+        or kinds.size and kinds.max() >= len(IN_KINDS)
+        or cls >= len(IN_DOC_CLASSES)
+        or not 0 <= np_d <= 0x7FFFFFFF
+    ):
+        raise ValueError("truncated or corrupt container")
+    _check_utf8(tlen, text_data)
+    _check_utf8(rlen, ref_data)
+    return cls, np_d, kinds, offs, tlen, text_data, rlen, ref_data
+
+
+def _check_utf8(lens: np.ndarray, data: bytes) -> None:
+    """Every field slice of `data` must be valid UTF-8: the whole
+    section decodes (UnicodeDecodeError is a ValueError) and no field
+    starts inside a multi-byte character."""
+    data.decode("utf-8")
+    if not data.isascii():
+        starts = np.cumsum(lens[:-1], dtype=np.int64)
+        starts = starts[starts < len(data)]
+        b = np.frombuffer(data, np.uint8)
+        if ((b[starts] & 0xC0) == 0x80).any():
+            raise ValueError("field splits a UTF-8 character")
+
+
+def decode_doc(buf: bytes) -> dict | None:
+    """One TTDP1 payload -> documents_raw row dict (without doc_id), or
+    None when `_parse` rejects it. Plain Python per span; the row
+    equals the one `decode_batches` emits for the same payload."""
+    try:
+        cls, np_d, kinds, offs, tlen, text, rlen, refs = _parse(buf)
+    except ValueError:
+        return None
+    spans = []
+    t = r = 0
+    for k, o, tl, rl in zip(kinds.tolist(), offs.tolist(), tlen.tolist(),
+                            rlen.tolist()):
+        spans.append({"kind": IN_KINDS[k], "text": text[t : t + tl].decode(),
+                      "media_ref": refs[r : r + rl].decode(), "offset": o})
+        t += tl
+        r += rl
+    return {"doc_class": IN_DOC_CLASSES[cls], "n_pages": np_d, "spans": spans}
+
+
 def decode_batches(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
@@ -123,7 +197,6 @@ def decode_batches(
         n_docs = batch.num_rows
         if n_docs == 0:
             continue
-        payloads = batch.column("payload")
         doc_classes: list[str] = []
         n_pages = np.zeros(n_docs, dtype=np.int32)
         span_counts = np.zeros(n_docs, dtype=np.int64)
@@ -134,47 +207,18 @@ def decode_batches(
         rlen_parts: list[np.ndarray] = []
         ref_parts: list[bytes] = []
 
-        for d in range(n_docs):
-            buf = payloads[d].as_py() or b""
+        for d, buf in enumerate(batch.column("payload").to_pylist()):
             try:
-                if buf[: len(MAGIC)] != MAGIC or len(buf) < _HDR:
-                    raise ValueError("bad magic")
-                cls = buf[len(MAGIC)]
-                np_d = int.from_bytes(buf[6:10], "little")
-                n = int.from_bytes(buf[10:14], "little")
-                pos = _HDR
-                kinds = np.frombuffer(buf, np.uint8, n, pos)
-                pos += n
-                offs = np.frombuffer(buf, "<i4", n, pos)
-                pos += 4 * n
-                tlen = np.frombuffer(buf, "<u4", n, pos)
-                pos += 4 * n
-                t_total = int(tlen.sum())
-                text_data = buf[pos : pos + t_total]
-                pos += t_total
-                rlen = np.frombuffer(buf, "<u2", n, pos)
-                pos += 2 * n
-                r_total = int(rlen.sum())
-                ref_data = buf[pos : pos + r_total]
-                if (
-                    len(text_data) != t_total
-                    or len(ref_data) != r_total
-                    or kinds.size and kinds.max() >= len(IN_KINDS)
-                    or cls >= len(IN_DOC_CLASSES)
-                    # u32 n_pages must fit the int32 output column —
-                    # a wild value would wrap (numpy 1.x) or raise
-                    # OUTSIDE this try (numpy 2.x) instead of
-                    # quarantining
-                    or not 0 <= np_d <= 0x7FFFFFFF
-                ):
-                    raise ValueError("truncated or corrupt container")
-            except (ValueError, IndexError):
+                cls, np_d, kinds, offs, tlen, text_data, rlen, ref_data = (
+                    _parse(buf or b"")
+                )
+            except ValueError:
                 # O19: malformed bytes -> quarantine-shaped row
                 doc_classes.append("")
                 continue
             doc_classes.append(IN_DOC_CLASSES[cls])
             n_pages[d] = np_d
-            span_counts[d] = n
+            span_counts[d] = len(kinds)
             kind_parts.append(kinds)
             off_parts.append(offs)
             tlen_parts.append(tlen.astype(np.int64))

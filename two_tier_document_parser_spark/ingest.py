@@ -23,22 +23,16 @@ from .schemas import RAW_SCHEMA
 
 
 def sniff_decode_doc(payload: bytes) -> dict | None:
-    """One payload -> documents_raw row dict (sans doc_id) or None."""
+    """One payload -> documents_raw row dict (sans doc_id) or None
+    (undecodable). Each format has a per-payload decoder, no Arrow
+    batch: pdf_io.parse_pdf, binary_io.decode_doc, html_io.parse_html."""
     from . import binary_io, html_io, pdf_io
 
     p = payload or b""
     if p.startswith(b"%PDF-"):
         return pdf_io.parse_pdf(p)
     if p.startswith(binary_io.MAGIC):
-        got = list(
-            binary_io.decode_batches(
-                iter(
-                    [pa.RecordBatch.from_pylist([{"doc_id": "", "payload": p}])]
-                )
-            )
-        )
-        row = got[0].to_pylist()[0] if got else None
-        return row if row and row["doc_class"] else None
+        return binary_io.decode_doc(p)
     return html_io.parse_html(p)
 
 

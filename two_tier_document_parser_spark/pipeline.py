@@ -93,39 +93,18 @@ def quarantine_rows(batch, tier, reason):
     """The documents of a documents_raw batch that routing.route sent
     to tier 'error', as documents_out rows (one batch, or none): no
     spans, the routing reason in `error`, a null doc_id as ''."""
-    import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
+
+    from .schemas import DocOut, out_batch
 
     bad = tier == "error"
-    n = int(bad.sum())
-    if n == 0:
+    if not bad.any():
         return
-    empty_spans = pa.ListArray.from_arrays(
-        pa.array(np.zeros(n + 1, np.int32), type=pa.int32()),
-        pa.StructArray.from_arrays(
-            [pa.array([], type=pa.string())] * 3
-            + [pa.array([], type=pa.int32()),
-               pa.array([], type=pa.list_(pa.int32()))],
-            names=["kind", "text", "media_ref", "order", "bbox"],
-        ),
-    )
-    zeros32 = pa.array(np.zeros(n, np.int32), type=pa.int32())
-    yield pa.RecordBatch.from_arrays(
-        [
-            pc.fill_null(batch.column("doc_id").filter(pa.array(bad)), ""),
-            pa.array(["error"] * n, type=pa.string()),
-            zeros32,
-            empty_spans,
-            pa.array([""] * n, type=pa.string()),
-            zeros32,
-            zeros32,
-            zeros32,
-            pa.array([[]] * n, type=pa.list_(pa.int32())),
-            pa.array(np.zeros(n, np.int64), type=pa.int64()),
-            pa.array(reason[bad].tolist(), type=pa.string()),
-        ],
-        names=[f.name for f in OUT_SCHEMA.fields],
+    ids = batch.column("doc_id").filter(pa.array(bad)).to_pylist()
+    yield out_batch(
+        [d or "" for d in ids],
+        [DocOut("error", error=r) for r in reason[bad].tolist()],
+        0,
     )
 
 
@@ -141,7 +120,8 @@ def fused_batches(batches):
     import pyarrow as pa
 
     from .routing import route_batch
-    from .tier1 import rebatch_by_spans, tier1_batches
+    from .schemas import rebatch_by_spans
+    from .tier1 import tier1_batches
     from .tier2 import tier2_batches
 
     for batch in rebatch_by_spans(batches):

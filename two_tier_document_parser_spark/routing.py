@@ -12,17 +12,19 @@ engine makes it data-driven from per-document structural counts:
   semantics (100 MB fast / 500 MB accurate, fast/app.py:71-73,
   accurate/app.py:125-127), in spans (spec.T1/T2_MAX_SPANS).
 
-`route` is numpy over per-document arrays. The fused kernel
-(pipeline.fused_batches) and the giant-document pre-split (presplit)
-call it through `route_batch`, the per-request facade (api._route_one)
-through `route_doc`, so every entry path quarantines the same
-documents with the same reason.
+`route` is the rule itself, plain Python over one document's counts.
+The fused kernel (pipeline.fused_batches) and the giant-document
+pre-split (presplit) map it over a batch through `route_batch`, the
+per-request facade (api._route_one) calls it through `route_doc`, so
+every entry path quarantines the same documents with the same reason.
 
 Determinism: the tier is a pure function of the row (SURVEY §7.7.2) —
 never of partition, time, or size-of-cluster.
 """
 
 from __future__ import annotations
+
+from operator import itemgetter
 
 import numpy as np
 
@@ -37,90 +39,68 @@ from .spec import (
 )
 
 FAST, DEEP, ERROR = "fast", "deep", "error"
+_KIND = itemgetter("kind")
 
 
-def route(n_spans, n_box, n_media, doc_class, null_id, n_pages):
-    """Per-document arrays -> (tier, reason) string arrays; reason is
-    '' on routed rows. `doc_class` is a sequence of str (None or an
-    unknown class takes spec.ROUTING_DEFAULT); `n_pages` is float with
-    NaN for NULL, which is valid (the SQL predicate `n_pages < 1` is
-    false on null)."""
-    n_spans = np.asarray(n_spans, np.int64)
-    model = [ROUTING_MODEL.get(c, ROUTING_DEFAULT) for c in doc_class]
-    box_t = np.array([m[0] for m in model], np.float64)
-    media_t = np.array([m[1] for m in model], np.int64)
-    invalid = (
-        np.asarray(null_id, bool)
-        | (n_spans == 0)
-        | (np.asarray(n_pages, np.float64) < 1)
-    )
-    deep = (np.asarray(n_box) / np.maximum(n_spans, 1) > box_t) | (
-        np.asarray(n_media) >= media_t
-    )
-    too_large = ~invalid & (
-        n_spans > np.where(deep, T2_MAX_SPANS, T1_MAX_SPANS)
-    )
-    tier = np.where(invalid | too_large, ERROR, np.where(deep, DEEP, FAST))
-    reason = np.where(
-        invalid,
-        REASON_INVALID,
-        np.where(
-            too_large,
-            np.where(deep, too_large_reason(DEEP), too_large_reason(FAST)),
-            "",
-        ),
-    )
-    return tier, reason
+def route(n_spans: int, n_box: int, n_media: int, doc_class, null_id: bool,
+          n_pages) -> tuple[str, str]:
+    """One document's counts -> (tier, reason); reason is '' on routed
+    documents. `doc_class` None or an unknown class takes
+    spec.ROUTING_DEFAULT; `n_pages` None (SQL NULL) is valid, since the
+    predicate `n_pages < 1` is false on null."""
+    if null_id or n_spans == 0 or (n_pages is not None and n_pages < 1):
+        return ERROR, REASON_INVALID
+    box_t, media_t = ROUTING_MODEL.get(doc_class, ROUTING_DEFAULT)
+    tier = DEEP if n_box / n_spans > box_t or n_media >= media_t else FAST
+    if n_spans > (T2_MAX_SPANS if tier == DEEP else T1_MAX_SPANS):
+        return ERROR, too_large_reason(tier)
+    return tier, ""
 
 
 def route_batch(batch):
     """`route` over a documents_raw Arrow batch (doc_id, doc_class,
     spans, and n_pages when present; a NULL spans list counts as
-    empty). Counts come from Arrow C++ kernels over the flattened span
-    kinds, not per-row Python."""
+    empty) -> (tier, reason) numpy string arrays. The per-document
+    counts come from Arrow C++ kernels over the flattened span kinds;
+    only the rule runs per document."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = batch.num_rows
     lst = batch.column("spans")
     counts = pc.fill_null(pc.list_value_length(lst), 0).to_numpy()
-    counts = counts.astype(np.int64)
     kind = lst.flatten().field("kind")
     doc_of = np.repeat(np.arange(n), counts)
-    n_box = np.bincount(
-        doc_of, pc.equal(kind, "box").to_numpy(zero_copy_only=False), n
-    )
-    n_media = np.bincount(
-        doc_of,
-        pc.is_in(kind, value_set=pa.array(sorted(MEDIA_KINDS))).to_numpy(
-            zero_copy_only=False
-        ),
-        n,
-    )
-    if "n_pages" in batch.schema.names:
-        n_pages = batch.column("n_pages").to_numpy(zero_copy_only=False)
-    else:
-        n_pages = np.full(n, np.nan)
-    return route(
-        counts,
-        n_box,
-        n_media,
-        batch.column("doc_class").to_pylist(),
-        pc.is_null(batch.column("doc_id")).to_numpy(zero_copy_only=False),
-        n_pages,
-    )
+
+    def as_list(arr):  # NULL -> None (NaN for n_pages, also valid)
+        return arr.to_numpy(zero_copy_only=False).tolist()
+
+    def per_doc(mask):
+        w = mask.to_numpy(zero_copy_only=False)
+        return np.bincount(doc_of, w, n).astype(np.int64).tolist()
+
+    out = list(map(
+        route,
+        counts.tolist(),
+        per_doc(pc.equal(kind, "box")),
+        per_doc(pc.is_in(kind, value_set=pa.array(sorted(MEDIA_KINDS)))),
+        as_list(batch.column("doc_class")),
+        as_list(pc.is_null(batch.column("doc_id"))),
+        as_list(batch.column("n_pages")) if "n_pages" in batch.schema.names
+        else [None] * n,
+    ))
+    return (np.array([t for t, _ in out], dtype=str),
+            np.array([r for _, r in out], dtype=str))
 
 
 def route_doc(doc: dict) -> tuple[str, str]:
     """`route` on one documents_raw row as a dict -> (tier, reason)."""
-    spans = doc.get("spans") or []
-    n_pages = doc.get("n_pages")
-    tier, reason = route(
-        [len(spans)],
-        [sum(1 for s in spans if s["kind"] == "box")],
-        [sum(1 for s in spans if s["kind"] in MEDIA_KINDS)],
-        [doc.get("doc_class")],
-        [doc.get("doc_id") is None],
-        [np.nan if n_pages is None else n_pages],
+    kinds = list(map(_KIND, doc.get("spans") or ()))
+    return route(
+        len(kinds),
+        kinds.count("box"),
+        sum(map(MEDIA_KINDS.__contains__, kinds)),
+        doc.get("doc_class"),
+        doc.get("doc_id") is None,
+        doc.get("n_pages"),
     )
-    return str(tier[0]), str(reason[0])

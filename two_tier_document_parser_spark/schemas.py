@@ -122,6 +122,164 @@ def decode_raw_batches(batches, decode_fn):
         )
 
 
+# ---------------------------------------------------------------------------
+# documents_out rows as plain values (the tier cores' result): `row` is
+# one document's dict for the per-request facade, `out_batch` the Arrow
+# batch of many for the kernels and the quarantine channel. Both read
+# the same fields, so the facade and the batch rows cannot drift.
+# `core_batches` is the one Arrow adapter both tier cores run under.
+# ---------------------------------------------------------------------------
+
+
+class DocOut:
+    """One documents_out row under construction: the output spans as
+    parallel lists (`bbox` is the geometry stamped on spans emitted
+    now) and the per-document fields."""
+
+    __slots__ = ("tier", "pages", "kinds", "texts", "refs", "bboxes", "bbox",
+                 "markdown", "n_img", "n_tab", "n_form", "skipped", "error")
+
+    def __init__(self, tier: str, error: str = "") -> None:
+        self.tier, self.error = tier, error
+        self.pages = 0
+        self.kinds: list[str] = []
+        self.texts: list[str] = []
+        self.refs: list[str] = []
+        self.bboxes: list[list[int]] = []
+        self.bbox: list[int] = []
+        self.markdown = ""
+        self.n_img = self.n_tab = self.n_form = 0
+        self.skipped: list[int] = []
+
+    def emit(self, kind: str, text: str, ref: str = "") -> None:
+        self.kinds.append(kind)
+        self.texts.append(text)
+        self.refs.append(ref)
+        self.bboxes.append(self.bbox)
+
+    def row(self, doc_id: str, ms: int) -> dict:
+        return {
+            "doc_id": doc_id,
+            "tier": self.tier,
+            "pages": self.pages,
+            "spans": [
+                {"kind": k, "text": t, "media_ref": r, "order": i, "bbox": b}
+                for i, (k, t, r, b) in enumerate(
+                    zip(self.kinds, self.texts, self.refs, self.bboxes))
+            ],
+            "markdown": self.markdown,
+            "n_images": self.n_img,
+            "n_tables": self.n_tab,
+            "n_formulas": self.n_form,
+            "skipped_pages": self.skipped,
+            "processing_time_ms": ms,
+            "error": self.error,
+        }
+
+
+def out_batch(doc_ids: list[str], docs: list[DocOut], ms: int):
+    """documents_out RecordBatch of `docs`, every row stamped `ms`."""
+    import numpy as np
+    import pyarrow as pa
+
+    kinds: list[str] = []
+    texts: list[str] = []
+    refs: list[str] = []
+    bboxes: list[list[int]] = []
+    order: list[int] = []
+    offsets = np.zeros(len(docs) + 1, np.int32)
+    for i, d in enumerate(docs):
+        kinds += d.kinds
+        texts += d.texts
+        refs += d.refs
+        bboxes += d.bboxes
+        order += range(len(d.kinds))
+        offsets[i + 1] = len(kinds)
+    i32, s = pa.int32(), pa.string()
+    spans = pa.StructArray.from_arrays(
+        [pa.array(kinds, s), pa.array(texts, s), pa.array(refs, s),
+         pa.array(order, i32), pa.array(bboxes, pa.list_(i32))],
+        names=["kind", "text", "media_ref", "order", "bbox"],
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(doc_ids, s),
+            pa.array([d.tier for d in docs], s),
+            pa.array([d.pages for d in docs], i32),
+            pa.ListArray.from_arrays(pa.array(offsets, i32), spans),
+            pa.array([d.markdown for d in docs], s),
+            pa.array([d.n_img for d in docs], i32),
+            pa.array([d.n_tab for d in docs], i32),
+            pa.array([d.n_form for d in docs], i32),
+            pa.array([d.skipped for d in docs], pa.list_(i32)),
+            pa.array([ms] * len(docs), pa.int64()),
+            pa.array([d.error for d in docs], s),
+        ],
+        names=OUT_SCHEMA.names,
+    )
+
+
+# Re-chunk budget: at most ~this many spans per Arrow chunk handed to a
+# tier core, whatever spark.sql.execution.arrow.maxRecordsPerBatch is.
+MAX_SPANS_PER_CHUNK = 200_000
+
+
+def rebatch_by_spans(batches, max_spans: int = MAX_SPANS_PER_CHUNK):
+    """Re-chunk incoming batches so each chunk holds at most
+    ~max_spans spans (always ≥1 doc). Bounds Python-side memory under
+    giant-document skew; slices are zero-copy."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        counts = (
+            pc.fill_null(pc.list_value_length(batch.column("spans")), 0)
+            .to_numpy()
+            .astype(np.int64)
+        )
+        if counts.sum() <= max_spans:
+            yield batch
+            continue
+        start = 0
+        acc = 0
+        for i, c in enumerate(counts):
+            if acc + c > max_spans and i > start:
+                yield batch.slice(start, i - start)
+                start, acc = i, 0
+            acc += int(c)
+        if start < batch.num_rows:
+            yield batch.slice(start, batch.num_rows - start)
+
+
+def core_batches(batches, core, fields: tuple[str, ...]):
+    """The Arrow adapter of a tier core (tier1.extract_fast,
+    tier2.extract_deep). Per (re-chunked) batch: flatten the span fields
+    named in `fields` to plain lists once, call `core(*one document's
+    slice of each list)` per document, and build one documents_out
+    batch stamped with the batch wall time."""
+    import time
+
+    import pyarrow.compute as pc
+
+    def as_list(arr):  # numpy's tolist builds strings ~7x faster than to_pylist
+        return arr.to_numpy(zero_copy_only=False).tolist()
+
+    for batch in rebatch_by_spans(batches):
+        t0 = time.time()
+        lst = batch.column("spans")
+        flat = lst.flatten()
+        cols = [as_list(flat.field(f)) for f in fields]
+        docs = []
+        lo = 0
+        for n in as_list(pc.fill_null(pc.list_value_length(lst), 0)):
+            docs.append(core(*[c[lo:lo + n] for c in cols]))
+            lo += n
+        yield out_batch(as_list(batch.column("doc_id")), docs,
+                        int((time.time() - t0) * 1000))
+
+
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),
