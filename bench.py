@@ -116,7 +116,6 @@ def main() -> int:
         session_tuning,
         ship_package,
     )
-    from two_tier_document_parser_spark.presplit import extract_with_presplit
     from two_tier_document_parser_spark.synth import synth_spark
 
     enable_worker_preload()
@@ -153,7 +152,7 @@ def main() -> int:
         for _ in range(reps):
             # settle heap debt from the previous measurement: garbage
             # left by a prior stage otherwise lands in THIS stage's GC
-            # pauses (measured 3x inflation on the presplit timing)
+            # pauses (measured 3x inflation on a shuffle-heavy timing)
             spark._jvm.System.gc()
             t0 = time.time()
             res = fn()
@@ -183,16 +182,7 @@ def main() -> int:
         "docs_per_sec": round(n_docs / timings["extract_fused"], 1),
     }
 
-    # 2. skew path: giant docs pre-split by page + reassembled
-    timed(
-        "extract_presplit",
-        lambda: extract_with_presplit(spark, raw)
-        .select(F.count(F.lit(1)))
-        .collect(),
-        reps=2,
-    )
-
-    # 3. the fused cascade behind a salted repartition (skew defeat):
+    # 2. the fused cascade behind a salted repartition (skew defeat):
     # the difference to extract_fused is the salt shuffle. The salted
     # shuffle path cold-starts expensively (shuffle-file creation +
     # first-write page cache); measured 45s/15s/6.4s over three reps in

@@ -28,7 +28,7 @@ def _decode_bytes_table(bin_df, fmt: str):
     """(doc_id, payload binary) -> documents_raw via the matching
     from-scratch decoder; 'bytes' sniffs per document by content
     (%PDF- / TTDP1 magic / HTML fallback) inside one Arrow kernel
-    (ingest.sniff_decode_table — shared with the streaming path)."""
+    (ingest.sniff_decode_table)."""
     from two_tier_document_parser_spark import binary_io, html_io, pdf_io
     from two_tier_document_parser_spark.ingest import sniff_decode_table
 
@@ -62,12 +62,6 @@ def main() -> int:
     ap.add_argument("--master", default=None, help="spark master (default: env)")
     ap.add_argument("--salt", type=int, default=0, help="doc_id salt buckets (0=off)")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument(
-        "--presplit",
-        type=int,
-        default=0,
-        help="page pre-split threshold in spans (0=off)",
-    )
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument(
         "--checkpoint",
@@ -87,7 +81,6 @@ def main() -> int:
         session_tuning,
         ship_package,
     )
-    from two_tier_document_parser_spark.presplit import extract_with_presplit
     from two_tier_document_parser_spark.synth import synth_spark
 
     enable_worker_preload()
@@ -138,7 +131,7 @@ def main() -> int:
         from two_tier_document_parser_spark.checkpoint import CheckpointedExtract
 
         ck = CheckpointedExtract(spark, args.output)
-        run_id = ck.run(raw, presplit=args.presplit, **kw)
+        run_id = ck.run(raw, **kw)
         res = ck.result()
         lineage = ck.metrics()
         # throughput is for THIS run only (a resumed run must not claim
@@ -153,10 +146,6 @@ def main() -> int:
                 else 0
             ),
         }
-    elif args.presplit:
-        out = extract_with_presplit(spark, raw, threshold=args.presplit, **kw)
-        out.write.mode("overwrite").parquet(args.output)
-        res = spark.read.parquet(args.output)
     else:
         out = extract(spark, raw, **kw)
         out.write.mode("overwrite").parquet(args.output)

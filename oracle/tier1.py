@@ -61,7 +61,8 @@ def classify_block(pieces: list[tuple[str, bool]]) -> str:
         return SHORT
     tokens = joined.lower().split()
     stops = sum(1 for t in tokens if t in STOP_UNION)
-    if stops / len(tokens) < T1_MIN_STOP_DENSITY:
+    # no tokens (only whitespace): stop density 0, so BAD
+    if not tokens or stops / len(tokens) < T1_MIN_STOP_DENSITY:
         return BAD
     return GOOD
 

@@ -485,62 +485,6 @@ def test_copy_on_write_delete(table, docs):
         table.read(snapshot_id=3)
 
 
-def test_stream_to_iceberg_exactly_once(spark, tmp_path):
-    """Streaming extraction into the iceberg-lite table of record:
-    the stream output equals the batch cascade, each micro-batch is
-    one snapshot keyed by batch id, and a replayed batch is a no-op
-    (exactly-once under at-least-once foreachBatch delivery)."""
-    from two_tier_document_parser_spark.pipeline import (
-        extract,
-        ship_package,
-    )
-    from two_tier_document_parser_spark.streaming import (
-        iceberg_sink_batch,
-        run_stream_to_iceberg,
-    )
-    from two_tier_document_parser_spark.synth import synth_spark
-    from two_tier_document_parser_spark.table_io import open_table
-
-    ship_package(spark)
-    raw_dir = str(tmp_path / "raw")
-    target = f"iceberg-lite:{tmp_path}/tbl"
-    ckpt = str(tmp_path / "ckpt")
-    synth_spark(spark, 200, partitions=4).write.parquet(raw_dir)
-
-    res = run_stream_to_iceberg(spark, raw_dir, target, ckpt)
-
-    def canon(df):
-        return {
-            r["doc_id"]: (
-                r["tier"],
-                [
-                    (s["kind"], s["text"], s["media_ref"], s["order"])
-                    for s in r["spans"]
-                ],
-            )
-            for r in df.collect()
-        }
-
-    batch = canon(
-        extract(spark, spark.read.parquet(raw_dir))
-    )
-    assert canon(res) == batch
-
-    # every committed snapshot is batch-id keyed
-    t = open_table(spark, target)
-    runs = t.committed_runs()
-    assert runs and all(r.startswith("batch-") for r in runs)
-    n_before = len(t._metadata()["snapshots"])
-
-    # replay the first batch verbatim: must be a no-op, not a
-    # double-append
-    first_id = int(runs[0].split("-", 1)[1])
-    sample = t.read().limit(5)
-    iceberg_sink_batch(sample, first_id, t)
-    assert len(t._metadata()["snapshots"]) == n_before
-    assert canon(t.read()) == batch
-
-
 def test_schema_evolution_add_column(table, docs):
     """ADD-column evolution: a later append carries a new primitive
     column; old files read back with typed nulls, field ids of

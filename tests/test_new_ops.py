@@ -293,205 +293,6 @@ def test_stream_extract_equals_batch(spark, tmp_path):
     assert stream == batch
 
 
-def test_stream_binary_ingest_equals_batch(spark, tmp_path):
-    """Byte-level streaming ingest: TTDP1 payload stream -> decode ->
-    cascade (AvailableNow) equals the batch output over the same
-    bytes."""
-    from two_tier_document_parser_spark.binary_io import (
-        decode_table,
-        encode_table,
-    )
-    from two_tier_document_parser_spark.pipeline import extract, ship_package
-    from two_tier_document_parser_spark.streaming import (
-        read_binary_document_stream,
-        stream_extract_binary,
-    )
-    from two_tier_document_parser_spark.synth import synth_spark
-
-    ship_package(spark)
-    bin_dir = str(tmp_path / "bin")
-    out_dir = str(tmp_path / "out")
-    raw = synth_spark(spark, 200, partitions=4)
-    encode_table(raw).write.parquet(bin_dir)
-
-    q = (
-        stream_extract_binary(read_binary_document_stream(spark, bin_dir))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def canon(df):
-        return {
-            r["doc_id"]: (
-                r["tier"],
-                [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans"]],
-            )
-            for r in df.collect()
-        }
-
-    batch = canon(
-        extract(spark, decode_table(spark.read.parquet(bin_dir)))
-    )
-    assert canon(spark.read.parquet(out_dir)) == batch
-    assert len(batch) == 200
-
-
-def test_stream_mixed_bytes_ingest_equals_batch(spark, tmp_path):
-    """Mixed-format streaming ingest: a directory of raw PDF / HTML /
-    TTDP1 payloads (plus junk) streams through content sniffing + the
-    cascade (AvailableNow) and equals the batch output; junk rows land
-    in tier='error'."""
-    from pyspark.sql import functions as F
-
-    from two_tier_document_parser_spark.binary_io import encode_doc
-    from two_tier_document_parser_spark.html_io import render_html
-    from two_tier_document_parser_spark.ingest import sniff_decode_table
-    from two_tier_document_parser_spark.pdf_io import render_pdf
-    from two_tier_document_parser_spark.pipeline import extract, ship_package
-    from two_tier_document_parser_spark.streaming import (
-        read_binary_document_stream,
-        stream_extract_bytes,
-    )
-    from two_tier_document_parser_spark.synth import synth_docs
-
-    ship_package(spark)
-    bin_dir = str(tmp_path / "mixed")
-    out_dir = str(tmp_path / "out")
-    docs = synth_docs(0, 60)
-    rows = [
-        (d["doc_id"], bytearray((render_pdf, render_html, encode_doc)[i % 3](d)))
-        for i, d in enumerate(docs)
-        # NUL-bearing binary junk: still quarantines post-charset-
-        # sniffer (a NUL-free byte soup now w1252-decodes best-effort)
-    ] + [("junk", bytearray(b"\xff\x80\x00?"))]
-    spark.createDataFrame(rows, "doc_id string, payload binary").repartition(
-        4
-    ).write.parquet(bin_dir)
-
-    q = (
-        stream_extract_bytes(read_binary_document_stream(spark, bin_dir))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def canon(df):
-        return {
-            r["doc_id"]: (
-                r["tier"],
-                [(s["kind"], s["text"], s["media_ref"], s["order"])
-                 for s in r["spans"]],
-            )
-            for r in df.collect()
-        }
-
-    batch = canon(
-        extract(spark, sniff_decode_table(spark.read.parquet(bin_dir)))
-    )
-    got = canon(spark.read.parquet(out_dir))
-    assert got == batch
-    assert len(got) == 61
-    assert got["junk"][0] == "error"
-
-
-def _stage_events_dir(tmp_path) -> str:
-    """File-source streams need a *directory*; the driver table is a
-    single parquet file — stage it."""
-    import shutil
-
-    d = tmp_path / "events_dir"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-@needs_testdata
-def test_stream_windowed_counts_equal_batch(spark, tmp_path):
-    from two_tier_document_parser_spark.streaming import (
-        run_stream_event_counts,
-        windowed_event_counts,
-    )
-
-    events_dir = _stage_events_dir(tmp_path)
-    events = spark.read.parquet(events_dir)
-    batch = {
-        (r["w_start"], r["event_type"]): r["n"]
-        for r in windowed_event_counts(events).collect()
-    }
-    got = run_stream_event_counts(
-        spark, events_dir, "ttdp_test_counts", str(tmp_path / "ck")
-    )
-    stream = {
-        (r["w_start"], r["event_type"]): r["n"] for r in got.collect()
-    }
-    assert stream == batch
-    assert sum(batch.values()) == events.count()
-
-
-@needs_testdata
-def test_stream_session_windows_equal_batch(spark, tmp_path):
-    """Built-in session_window on a stream (update mode, AvailableNow,
-    single micro-batch) matches the same aggregation run in batch."""
-    from two_tier_document_parser_spark.streaming import (
-        run_stream_session_counts,
-        session_window_counts,
-    )
-
-    events_dir = _stage_events_dir(tmp_path)
-    events = spark.read.parquet(events_dir)
-    batch = {
-        (r["user_id"], r["start_epoch"]): r["n_events"]
-        for r in session_window_counts(events).collect()
-    }
-    got = run_stream_session_counts(
-        spark, events_dir, "ttdp_test_sessions", str(tmp_path / "ck")
-    )
-    stream = {
-        (r["user_id"], r["start_epoch"]): r["n_events"] for r in got.collect()
-    }
-    assert stream == batch
-
-
-def test_stream_first_seen_dedup_across_restarts(spark, tmp_path):
-    """Stateful streaming dedup: the keeper for a fingerprint is
-    emitted once; duplicates arriving in a LATER run (same checkpoint)
-    are suppressed because the state store is restored on restart."""
-    from two_tier_document_parser_spark.streaming import run_stream_first_seen
-
-    in_dir = tmp_path / "docs"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ck")
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(
-            1
-        ).write.parquet(str(in_dir / name))
-
-    # batch 1: d1/d2 are exact dups (same normalized text), d3 unique
-    write_batch("b1", [("d1", "hello  world"), ("d2", "hello world"), ("d3", "other text")])
-    got1 = run_stream_first_seen(
-        spark, str(in_dir) + "/*", str(tmp_path / "out1"), ckpt
-    ).collect()
-    kept1 = {r["doc_id"] for r in got1}
-    assert kept1 == {"d1", "d3"}  # min doc_id wins within a batch
-
-    # batch 2 (restart, same checkpoint): d4 dups d1 -> suppressed;
-    # d5 is new -> emitted
-    write_batch("b2", [("d4", "hello world"), ("d5", "brand new")])
-    got2 = run_stream_first_seen(
-        spark, str(in_dir) + "/*", str(tmp_path / "out2"), ckpt
-    ).collect()
-    kept2 = {r["doc_id"] for r in got2}
-    assert kept2 == {"d5"}
-
-
 @pytest.mark.slow
 def test_spark_submit_py_files(tmp_path):
     """The north-rule ship path: `spark-submit --py-files engine.zip
@@ -1450,71 +1251,6 @@ def test_incremental_agg_null_group_and_null_sum(spark):
     assert got == {None: (2, 15), "en": (1, None)}
 
 
-@needs_testdata
-def test_stream_agg_maintenance_across_restarts(spark, tmp_path):
-    """The streamed-maintained aggregate must equal a from-scratch
-    batch recompute after every drain, including a restart that
-    appends new files to the same checkpoint: incremental merge,
-    never a corpus rescan."""
-    from pyspark.sql import functions as F
-
-    from two_tier_document_parser_spark.streaming import (
-        run_stream_agg_maintenance,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    inp = str(tmp_path / "in")
-    # three files -> three micro-batches (maxFilesPerTrigger=1)
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp)
-
-    agg_dir = str(tmp_path / "agg")
-    ckpt = str(tmp_path / "ckpt")
-    got = {
-        r["lang"]: (r["n_docs"], r["sum_value"])
-        for r in run_stream_agg_maintenance(
-            spark, inp, agg_dir, ckpt, max_files_per_trigger=1
-        ).collect()
-    }
-    want = {
-        r["lang"]: (r["n"], r["s"])
-        for r in docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("n_chars").cast("long").alias("s"),
-        )
-        .collect()
-    }
-    assert got == want
-
-    # restart: append a fourth slice, drain with the SAME checkpoint —
-    # only the new file is processed, the merge picks up from the
-    # maintained snapshot
-    extra = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 10_000_000
-    )
-    extra.coalesce(1).write.mode("append").parquet(inp)
-    got2 = {
-        r["lang"]: (r["n_docs"], r["sum_value"])
-        for r in run_stream_agg_maintenance(
-            spark, inp, agg_dir, ckpt, max_files_per_trigger=1
-        ).collect()
-    }
-    all_docs = docs.unionByName(extra)
-    want2 = {
-        r["lang"]: (r["n"], r["s"])
-        for r in all_docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("n_chars").cast("long").alias("s"),
-        )
-        .collect()
-    }
-    assert got2 == want2
-
-
 def test_funnel_counts_ordering_semantics(spark):
     """Funnel order is strict-by-anchor: a view BEFORE the user's
     first signup doesn't count; an equal timestamp does (inclusive);
@@ -1559,39 +1295,6 @@ def test_funnel_counts_ordering_semantics(spark):
         ).collect()
     }
     assert got2 == {1: 4, 2: 2, 3: 0}
-
-
-def test_merge_agg_batch_replay_is_idempotent(spark, tmp_path):
-    """The exactly-once guard: re-applying the SAME batch id (crash
-    between pointer swap and streaming commit) must be a no-op — no
-    double count, no self-overwrite crash; a NEW batch id still
-    merges."""
-    from two_tier_document_parser_spark.streaming import (
-        merge_agg_batch,
-        read_maintained_agg,
-    )
-
-    agg = str(tmp_path / "agg")
-    import os
-
-    os.makedirs(agg)
-    b0 = spark.createDataFrame(
-        [("en", 10), ("fr", 20)], "lang string, n_chars long"
-    )
-    merge_agg_batch(b0, 0, agg, "lang", "n_chars")
-    merge_agg_batch(b0, 0, agg, "lang", "n_chars")  # replay: no-op
-    got = {
-        r["lang"]: (r["n_docs"], r["sum_value"])
-        for r in read_maintained_agg(spark, agg).collect()
-    }
-    assert got == {"en": (1, 10), "fr": (1, 20)}
-    b1 = spark.createDataFrame([("en", 5)], "lang string, n_chars long")
-    merge_agg_batch(b1, 1, agg, "lang", "n_chars")
-    got2 = {
-        r["lang"]: (r["n_docs"], r["sum_value"])
-        for r in read_maintained_agg(spark, agg).collect()
-    }
-    assert got2 == {"en": (2, 15), "fr": (1, 20)}
 
 
 def test_media_text_pairs_caption_policy(spark):

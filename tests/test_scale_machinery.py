@@ -1,5 +1,5 @@
-"""Scale machinery: checkpoint/resume, giant-doc page pre-split,
-training-data operators (dedup/similarity/multimodal)."""
+"""Scale machinery: checkpoint/resume, training-data operators
+(dedup/similarity/multimodal)."""
 
 from __future__ import annotations
 
@@ -27,17 +27,6 @@ def _assert_golden(rows, n_expected):
         assert (row.tier, row.pages, list(row.skipped_pages)) == (
             g["tier"], g["pages"], g["skipped_pages"],
         ), row.doc_id
-
-
-def test_presplit_matches_golden(spark):
-    """Page pre-split + reassembly is invisible in the output
-    (SURVEY §4.3.1: order preservation is exact)."""
-    from two_tier_document_parser_spark.presplit import extract_with_presplit
-    from two_tier_document_parser_spark.synth import synth_spark
-
-    raw = synth_spark(spark, 300, SEED, partitions=6)
-    out = extract_with_presplit(spark, raw, threshold=300).collect()
-    _assert_golden(out, 300)
 
 
 def test_checkpoint_kill_and_resume(spark, tmp_path):
@@ -506,13 +495,11 @@ def test_empty_text_doc_oracle_parity(spark, tmp_path):
 
 def test_entry_paths_agree_on_quarantine(spark):
     """Every entry path runs the one routing rule (routing.route):
-    extract(), extract_with_presplit at a threshold that makes every
-    non-empty document a giant, and the facade's tier="auto" route the
-    same documents to the same tier and quarantine the rest with the
-    same reason (a null doc_id comes out as '')."""
+    extract() and the facade's tier="auto" route the same documents to
+    the same tier and quarantine the rest with the same reason (a null
+    doc_id comes out as '')."""
     from two_tier_document_parser_spark.api import parse_document
     from two_tier_document_parser_spark.pipeline import extract, ship_package
-    from two_tier_document_parser_spark.presplit import extract_with_presplit
     from two_tier_document_parser_spark.spec import (
         REASON_INVALID,
         T1_MAX_SPANS,
@@ -558,7 +545,6 @@ def test_entry_paths_agree_on_quarantine(spark):
         return ("deep" if "images" in out else "fast", "")
 
     assert batch_rows(extract(spark, raw)) == expected
-    assert batch_rows(extract_with_presplit(spark, raw, threshold=2)) == expected
     assert {(d[0] or ""): facade_row(d) for d, _ in table} == expected
 
 
@@ -861,50 +847,6 @@ def test_shuffle_rank_across_arrow_batch_boundaries(spark):
         )
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    """A partition-column predicate must become a PartitionFilter:
-    whole directories are skipped before any file opens — the file
-    set actually read is confined to the matching partition — and a
-    sort-column predicate is pushed to the parquet scan for row-group
-    skipping."""
-    from pyspark.sql import functions as F
-
-    from two_tier_document_parser_spark.table_io import write_partitioned
-
-    docs = spark.createDataFrame(
-        [(i, ["en", "fr", "de"][i % 3], i * 10) for i in range(300)],
-        "doc_id long, lang string, n_chars long",
-    )
-    path = str(tmp_path / "part")
-    write_partitioned(docs, path, ["lang"], sort_col="doc_id")
-
-    back = spark.read.parquet(path)
-    q = back.filter((F.col("lang") == "en") & (F.col("doc_id") >= 150))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    assert "lang" in plan.split("PartitionFilters")[1].split("]")[0], plan
-    # the non-partition predicate reaches the parquet reader
-    assert "PushedFilters" in plan
-    assert (
-        "GreaterThanOrEqual(doc_id,150)"
-        in plan.split("PushedFilters")[1].split("]")[0]
-    ), plan
-    # only files under lang=en are touched
-    touched = {
-        r[0]
-        for r in q.select(
-            F.input_file_name().alias("f")
-        ).distinct().collect()
-    }
-    assert touched and all("lang=en" in f for f in touched), touched
-    # values: partition column round-trips, predicate is exact
-    got = {(r["doc_id"], r["lang"]) for r in q.collect()}
-    want = {
-        (i, "en") for i in range(150, 300) if i % 3 == 0
-    }
-    assert got == want
-
-
 def test_aqe_splits_skewed_join_partition(spark):
     """The engine leans on AQE for runtime skew handling (SURVEY
     §4.3): a hot join key whose shuffle partition exceeds the skew
@@ -958,72 +900,6 @@ def test_aqe_splits_skewed_join_partition(spark):
             spark.conf.set(k, v)
 
 
-def test_zorder_layout_skips_on_both_axes(spark, tmp_path):
-    """Z-order clustering must give multi-axis data skipping: for a
-    small (x, y) rectangle query, the number of files whose parquet
-    footer min/max overlaps the rectangle is small under the z-order
-    layout, while a linear x-sort layout overlaps EVERY file on a
-    y-only predicate (each x-slice file spans all y). Overlap is
-    measured directly from the footers — the exact stats the reader
-    prunes with — and values must round-trip exactly."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from two_tier_document_parser_spark.table_io import write_zordered
-
-    grid = spark.createDataFrame(
-        [(x, y, x * 64 + y) for x in range(64) for y in range(64)],
-        "x long, y long, payload long",
-    )
-    zpath = str(tmp_path / "zord")
-    lpath = str(tmp_path / "linear")
-    write_zordered(grid, zpath, ["x", "y"], bits=6, files=16)
-    (
-        grid.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    def overlapping(path, lo, hi, col):
-        n = 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            fmin = min(
-                md.row_group(g).column(idx).statistics.min
-                for g in range(md.num_row_groups)
-            )
-            fmax = max(
-                md.row_group(g).column(idx).statistics.max
-                for g in range(md.num_row_groups)
-            )
-            if fmax >= lo and fmin <= hi:
-                n += 1
-        return n
-
-    total = len(glob.glob(f"{zpath}/part-*.parquet"))
-    assert total >= 8  # layout actually split into many files
-    # y-predicate: linear x-sort cannot skip anything, z-order can
-    lin_hit = overlapping(lpath, 0, 7, "y")
-    z_hit = overlapping(zpath, 0, 7, "y")
-    assert lin_hit == len(glob.glob(f"{lpath}/part-*.parquet")), lin_hit
-    assert z_hit <= total // 2, (z_hit, total)
-    # and the x-axis still skips too (z-order trades, not loses)
-    assert overlapping(zpath, 0, 7, "x") <= total // 2
-
-    # exact values through the layout
-    got = {
-        (r["x"], r["y"])
-        for r in spark.read.parquet(zpath)
-        .filter((F.col("x") <= 7) & (F.col("y") <= 7))
-        .collect()
-    }
-    assert got == {(x, y) for x in range(8) for y in range(8)}
-
-
 def test_runtime_bloom_filter_prunes_shuffle_join(spark, tmp_path):
     """Runtime-filter awareness: when a selective dim filter feeds a
     shuffle join, Catalyst injects a Bloom filter on the fact side
@@ -1068,64 +944,6 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    """A fragmented directory (one file per micro-batch per partition)
-    must compact to ceil(rows/target) files with identical values,
-    written as a NEW snapshot dir (source untouched); the sort_col
-    variant restores clustering (per-file disjoint ranges)."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from two_tier_document_parser_spark.table_io import compact_parquet
-
-    src = str(tmp_path / "frag")
-    spark.range(10000).select(
-        F.col("id"), (F.col("id") % 97).alias("v")
-    ).repartition(64).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-
-    out = str(tmp_path / "compacted")
-    stats = compact_parquet(
-        spark, src, out, target_rows_per_file=2500, sort_col="id"
-    )
-    assert stats == {"files_before": 64, "files_after": 4, "rows": 10000}
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64  # source kept
-    a = {(r["id"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert a == {(i, i % 97) for i in range(10000)}
-    # clustering restored: per-file id ranges are disjoint
-    ranges = []
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index("id")
-        ranges.append(
-            (
-                min(md.row_group(g).column(idx).statistics.min
-                    for g in range(md.num_row_groups)),
-                max(md.row_group(g).column(idx).statistics.max
-                    for g in range(md.num_row_groups)),
-            )
-        )
-    ranges.sort()
-    for (a0, a1), (b0, b1) in zip(ranges, ranges[1:]):
-        assert a1 < b0, ranges
-
-
-def test_write_zordered_rejects_zkey_collision(spark, tmp_path):
-    """A pre-existing '_zkey' column must raise, not be silently
-    overwritten and dropped from the written table."""
-    import pytest as _pytest
-
-    from two_tier_document_parser_spark.table_io import write_zordered
-
-    df = spark.createDataFrame(
-        [(1, 2, 3)], "x long, y long, _zkey long"
-    )
-    with _pytest.raises(ValueError, match="_zkey"):
-        write_zordered(df, str(tmp_path / "z"), ["x", "y"])
 
 
 def test_dynamic_partition_pruning(spark, tmp_path):

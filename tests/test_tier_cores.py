@@ -5,7 +5,8 @@
 - TTDP1: `binary_io.decode_doc` (one payload) against `decode_batches`
   (a table of payloads) row by row, on well-formed and corrupt bytes.
 - The tier cores: `api._run_kernel_one` on one document against the
-  row the Arrow adapters emit for it inside a multi-document batch.
+  row the Arrow adapters emit for it inside a multi-document batch,
+  also for documents at each tier's span cap.
 - The facade never imports the oracle.
 """
 
@@ -26,9 +27,11 @@ from two_tier_document_parser_spark.binary_io import (
     decode_doc,
     encode_doc,
 )
+from two_tier_document_parser_spark.pipeline import fused_batches
 from two_tier_document_parser_spark.routing import route, route_batch, route_doc
 from two_tier_document_parser_spark.schemas import spans_arrow_type
 from two_tier_document_parser_spark.spec import (
+    MEDIA_KINDS,
     REASON_INVALID,
     T1_MAX_SPANS,
     T1_MIN_BLOCK_CHARS,
@@ -289,9 +292,6 @@ def test_run_kernel_one_matches_batch_rows_on_arbitrary_spans():
     check()
 
 
-@pytest.mark.xfail(raises=ZeroDivisionError, strict=True,
-                   reason="a fast-tier block of only whitespace has no "
-                   "tokens and the stop-word density divides by zero")
 def test_fast_tier_whitespace_block_answers_in_band():
     """A whitespace-only block long enough to be classified must give a
     response, not an exception (parse errors are answered in-band)."""
@@ -300,6 +300,51 @@ def test_fast_tier_whitespace_block_answers_in_band():
                       "media_ref": "", "offset": 0}]}
     resp = parse_document(doc, tier="fast")
     assert resp["markdown"].strip() == ""
+
+
+def _tiled(doc_id, doc_class, spans, n):
+    """A document of exactly n spans: `spans` repeated and cut."""
+    tiled = (spans * (n // len(spans) + 1))[:n]
+    pages = 1 + sum(s["kind"] == "page_break" for s in tiled)
+    return {"doc_id": doc_id, "doc_class": doc_class, "n_pages": pages,
+            "spans": tiled}
+
+
+def test_fused_batches_extract_documents_at_the_span_caps():
+    """The span caps bound the largest document extracted whole: one
+    Arrow batch through pipeline.fused_batches holding a fast document
+    of exactly T1_MAX_SPANS spans, a deep one of exactly T2_MAX_SPANS
+    and a few ordinary ones gives one row per document, each equal to
+    api._run_kernel_one for that document and tier."""
+    synth = synth_docs(0, 500, 42)
+    giant = max(synth, key=lambda d: len(d["spans"]))
+    # fast: text-only spans of the fast-routed documents (no box, no
+    # media, so no class threshold can make it deep)
+    fast_spans = [s for d in synth if route_doc(d)[0] == "fast"
+                  for s in d["spans"]
+                  if s["kind"] != "box" and s["kind"] not in MEDIA_KINDS]
+    docs = [
+        _tiled("cap_fast", "html", fast_spans, T1_MAX_SPANS),
+        _tiled("cap_deep", giant["doc_class"], giant["spans"], T2_MAX_SPANS),
+    ] + synth_docs(0, 6, 7)
+    want_tiers = ["fast", "deep"] + [route_doc(d)[0] for d in docs[2:]]
+    assert [route_doc(d) for d in docs] == [(t, "") for t in want_tiers]
+    assert {"fast", "deep"} <= set(want_tiers[2:])
+
+    batch = pa.RecordBatch.from_pylist(docs, schema=pa.schema([
+        ("doc_id", pa.string()), ("doc_class", pa.string()),
+        ("n_pages", pa.int32()), ("spans", spans_arrow_type())]))
+    out = list(fused_batches(iter([batch])))
+    # compared as Arrow: converting the giants' rows to Python costs
+    # seconds and hundreds of MB
+    got = pa.Table.from_batches(out).sort_by("doc_id")
+    want = pa.Table.from_pylist(
+        [_run_kernel_one(d, t) for d, t in zip(docs, want_tiers)],
+        schema=got.schema).sort_by("doc_id")
+    assert got.column("doc_id").to_pylist() == sorted(d["doc_id"] for d in docs)
+    for name in got.column_names:
+        if name != "processing_time_ms":
+            assert got.column(name).equals(want.column(name)), name
 
 
 @pytest.mark.parametrize("tier,kernel", [("fast", tier1_batches),

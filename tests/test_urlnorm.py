@@ -130,57 +130,6 @@ def test_canonicalize_is_idempotent_on_corpus(spark):
     assert n_fixed == twice.count()
 
 
-def test_stream_url_frontier_dedup_across_restarts(spark, tmp_path):
-    """Streaming crawl-frontier dedup: keeper per canonical URL is
-    emitted once; a dup URL arriving in a LATER run (same checkpoint)
-    stays suppressed; keep SET matches batch url_dedup."""
-    from two_tier_document_parser_spark.streaming import (
-        run_stream_url_frontier,
-    )
-    from two_tier_document_parser_spark.urlnorm import url_dedup
-
-    in_dir = tmp_path / "fetches"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ck")
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, ["doc_id", "url"]).coalesce(
-            1
-        ).write.parquet(str(in_dir / name))
-
-    b1 = [
-        ("d1", "http://h.net/p?id=1"),
-        ("d2", "HTTP://WWW.h.net:80/p/?id=1&utm_s=x"),  # dup of d1
-        ("d3", "http://h.net/p?id=2"),
-    ]
-    write_batch("b1", b1)
-    got1 = run_stream_url_frontier(
-        spark, str(in_dir) + "/*", str(tmp_path / "out1"), ckpt
-    ).collect()
-    assert {r["doc_id"] for r in got1} == {"d1", "d3"}
-    # keep SET of canonical URLs matches the batch operator
-    batch = url_dedup(
-        spark.createDataFrame(
-            [(int(d[1:]), u) for d, u in b1], "doc_id long, url string"
-        )
-    )
-    assert {r["fp"] for r in got1} == {
-        r["canon_url"] for r in batch.collect()
-    }
-
-    # restart with the same checkpoint: d4 re-fetches d1's canonical
-    # URL -> suppressed; d5 is a new resource -> kept
-    write_batch(
-        "b2",
-        [("d4", "https://h.net/p?id=1"),  # https != http: NEW resource
-         ("d5", "http://h.net/p?id=1&ref=x")],  # dup of d1
-    )
-    got2 = run_stream_url_frontier(
-        spark, str(in_dir) + "/*", str(tmp_path / "out2"), ckpt
-    ).collect()
-    assert {r["doc_id"] for r in got2} == {"d4"}
-
-
 def test_default_port_strip_is_scheme_aware(spark):
     """':80' is only redundant under http and ':443' only under
     https — 'https://h:80/x' is a REAL distinct resource and must not

@@ -17,10 +17,9 @@ Layout:
   synth.py        deterministic synthetic corpus generator
   schemas.py      canonical Spark StructTypes
   adapter.py      driver `documents` table -> documents_raw adapter
-  routing.py      feature projection + broadcast routing model
+  routing.py      the one tier/quarantine rule
   tier1.py        fast extractor: per-document core + Arrow adapter
   tier2.py        deep extractor: per-document core + Arrow adapter
-  presplit.py     giant-doc page pre-split + order-preserving reassembly
   pipeline.py     end-to-end job graph
   checkpoint.py   lineage + resume
   table_io.py     Iceberg | parquet+manifest table layer

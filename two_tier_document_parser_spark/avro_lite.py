@@ -43,7 +43,7 @@ import io
 import json
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 MAGIC = b"Obj\x01"
 
@@ -312,7 +312,3 @@ def read_container(data: bytes) -> tuple[Any, list[dict], dict[str, bytes]]:
         if buf.read(16) != sync:
             raise ValueError("sync marker mismatch")
     return schema, records, meta
-
-
-def iter_container(data: bytes) -> Iterator[dict]:
-    return iter(read_container(data)[1])

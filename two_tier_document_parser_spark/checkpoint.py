@@ -167,22 +167,13 @@ class CheckpointedExtract:
         inside = raw.filter(pred).join(done, "doc_id", "left_anti")
         return outside.unionByName(inside)
 
-    def run(self, raw: DataFrame, presplit: int = 0, **extract_kw) -> str:
-        """Extract everything not yet committed; returns run_id.
-        `presplit` > 0 routes through the giant-doc page pre-split at
-        that span threshold (same semantics as the plain job)."""
+    def run(self, raw: DataFrame, **extract_kw) -> str:
+        """Extract everything not yet committed; returns run_id."""
         self.data.drop_uncommitted()
         t0 = time.time()
         todo = self.pending(raw)
         run_id = uuid.uuid4().hex[:12]
-        if presplit:
-            from .presplit import extract_with_presplit
-
-            out = extract_with_presplit(
-                self.spark, todo, threshold=presplit, **extract_kw
-            )
-        else:
-            out = extract(self.spark, todo, **extract_kw)
+        out = extract(self.spark, todo, **extract_kw)
         self.data.append(out, run_id)
         written = self.data.read_run(run_id)
         wall_ms = int((time.time() - t0) * 1000)

@@ -130,7 +130,8 @@ def chunk_documents(
 
     Scale: one explode (bounded constant fan-out) + one shuffle on
     (doc_id, chunk_id) with map-side partial aggregation; no windows,
-    no skew beyond document length, which presplit already bounds.
+    no skew beyond document length, which the span caps bound
+    (spec.T1_MAX_SPANS / T2_MAX_SPANS).
 
     Returns (doc_id, chunk_id, n_tokens, chunk_text).
     """
@@ -640,10 +641,7 @@ def merge_group_stats(
     """Add two additive aggregates group-wise. The join is
     NULL-SAFE on the group key (eqNullSafe): a NULL group is one
     group, exactly as GROUP BY treats it — a plain column join would
-    leave NULL-group rows unmatched and duplicate them. Shared by the
-    batch (incremental_agg_update) and streaming
-    (run_stream_agg_maintenance) maintenance paths so their merge
-    semantics cannot diverge."""
+    leave NULL-group rows unmatched and duplicate them."""
     b = base.select(
         F.col(group_col).alias("_bg"),
         F.col("n_docs").alias("_bn"),

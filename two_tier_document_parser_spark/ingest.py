@@ -9,8 +9,7 @@ rows (doc_class='', no spans — error channel O19); the kernel never
 raises. Content wins over filename, matching api._decode_payload.
 
 Map-only: no shuffle, splits on parquet row groups, composes with
-the fused cascade in the same stage — identical plan shape batch or
-streaming (both call `sniff_decode_table`; the kernel is stateless).
+the fused cascade in the same stage (the kernel is stateless).
 """
 
 from __future__ import annotations
@@ -45,8 +44,8 @@ def sniff_decode_batches(
 
 
 def sniff_decode_table(bin_df):
-    """(doc_id, payload binary) DataFrame (batch OR stream) ->
-    documents_raw rows with per-document format sniffing."""
+    """(doc_id, payload binary) DataFrame -> documents_raw rows with
+    per-document format sniffing."""
     return bin_df.select("doc_id", "payload").mapInArrow(
         sniff_decode_batches, RAW_SCHEMA
     )

@@ -80,9 +80,9 @@ def session_tuning(builder):
 
 # NOTE: the O2 validation/quarantine rule (reference 400/413
 # semantics, fast/app.py:61-73) has one executable copy,
-# routing.route. fused_batches, the giant-document pre-split
-# (presplit) and the facade (api._route_one) all call it, so the entry
-# paths cannot quarantine different documents; keep it that way.
+# routing.route. fused_batches and the facade (api._route_one) both
+# call it, so the entry paths cannot quarantine different documents;
+# keep it that way.
 
 
 def with_salt(df: DataFrame, salt: int) -> DataFrame:

@@ -13,10 +13,10 @@ engine makes it data-driven from per-document structural counts:
   accurate/app.py:125-127), in spans (spec.T1/T2_MAX_SPANS).
 
 `route` is the rule itself, plain Python over one document's counts.
-The fused kernel (pipeline.fused_batches) and the giant-document
-pre-split (presplit) map it over a batch through `route_batch`, the
-per-request facade (api._route_one) calls it through `route_doc`, so
-every entry path quarantines the same documents with the same reason.
+The fused kernel (pipeline.fused_batches) maps it over a batch through
+`route_batch`, the per-request facade (api._route_one) calls it through
+`route_doc`, so every entry path quarantines the same documents with
+the same reason.
 
 Determinism: the tier is a pure function of the row (SURVEY §7.7.2) —
 never of partition, time, or size-of-cluster.

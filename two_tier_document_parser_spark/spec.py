@@ -101,9 +101,9 @@ MEDIA_KINDS = frozenset({"image", "formula", "table_cell"})
 # bytes never reach the router in the span schema); the 1:5 ratio
 # mirrors the reference. Oversize documents are routed to quarantine
 # (tier='error') with a distinct reason — never an exception, a
-# 10^12-doc job cannot afford one. Docs beyond the cap that SHOULD be
-# processed go through the page pre-split path (presplit.py), whose
-# threshold sits far below these caps.
+# 10^12-doc job cannot afford one. The caps also bound the largest
+# document one task extracts whole, so no document is ever split (its
+# cost at each cap: README "Scale design").
 # ---------------------------------------------------------------------------
 T1_MAX_SPANS = 100_000
 T2_MAX_SPANS = 500_000

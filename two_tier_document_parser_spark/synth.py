@@ -17,7 +17,7 @@ Corpus shape (exercises every extraction path):
   reading order; tables with cells/rows, cell-less fallback tables,
   empty tables, figures with captions, empty formulas (drop rule);
 - Zipf-ish sizes plus ~0.5% giant docs (hundreds of pages) to drive
-  the skew/salting/page-pre-split machinery (SURVEY §4.3.1).
+  the skew/salting machinery (SURVEY §4.3.1).
 """
 
 from __future__ import annotations

@@ -93,16 +93,12 @@ class ParquetManifestIO:
 
     def replace(self, df: DataFrame, run_id: str) -> str:
         """Snapshot-REPLACE commit: the new run supersedes every
-        prior run (maintenance snapshots, compaction results). Same
-        commit point as append() — the atomic manifest swap — so
-        readers never observe a torn or half-superseded table, and
-        the streaming maintenance path (streaming.merge_agg_batch)
-        shares one commit story with the batch sink. Crash windows:
-        before the data move, replay overwrites the staging dir;
+        prior run (similarity.quantize_at_ingest). Same commit point
+        as append() — the atomic manifest swap — so readers never
+        observe a torn or half-superseded table. Crash windows:
+        before the data move, a retry overwrites the staging dir;
         between move and manifest swap, the orphaned final dir is
-        dead by definition (committed ids short-circuit in the
-        caller) and is rebuilt; after the swap, the caller's
-        last-run guard makes the replay a no-op."""
+        dead by definition and is rebuilt."""
         staging = os.path.join(self.path, f"_staging_{run_id}")
         final = os.path.join(self.path, "runs", run_id)
         df.write.mode("overwrite").parquet(staging)
@@ -206,156 +202,3 @@ def write_bucketed(
     )
     return spark.table(name)
 
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_col: str | None = None,
-) -> None:
-    """Hive-partitioned parquet layout — the physical layout a 100 TB
-    corpus actually lives in (low-cardinality partition columns such
-    as date/lang/source as directories; high-cardinality keys must
-    NOT be partition columns or the filesystem drowns in directories
-    — bucket those with `write_bucketed` instead).
-
-    Reading back with a predicate on a partition column prunes whole
-    directories BEFORE any file is opened (`PartitionFilters` in the
-    scan, pinned by tests/test_scale_machinery.py); a predicate on
-    `sort_col` additionally skips row groups inside each file via
-    parquet min/max stats, because `sortWithinPartitions` clusters
-    values so each row group covers a narrow range."""
-    out = df
-    if sort_col is not None:
-        out = out.sortWithinPartitions(sort_col)
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def zorder_key(cols: list[str], bits: int = 8):
-    """Morton/Z-order key: interleave the low `bits` bits of each
-    (non-negative integer) column — bit i of column j lands at
-    position i*len(cols)+j. Built from shift/AND/OR column
-    expressions only, so the whole key evaluates inside whole-stage
-    codegen (no UDF).
-
-    Clustering a table by this key gives MULTI-column data skipping
-    from ordinary parquet min/max stats: a file covering a contiguous
-    z-range covers a small rectangle in (col1, col2, ...) space, so a
-    predicate on ANY of the interleaved columns prunes files/row
-    groups — unlike a linear sort, which skips only on its leading
-    column. This is the standard layout trick for 100 TB tables
-    queried along several axes (public art: Databricks/Delta OPTIMIZE
-    ZORDER, Iceberg sort orders). Callers pre-normalize values into
-    [0, 2^bits) — rank/bucket high-cardinality or signed columns
-    first.
-    """
-    from pyspark.sql import functions as F
-
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    for i in range(bits):
-        for j, c in enumerate(cols):
-            bit = F.shiftrightunsigned(
-                F.col(c).cast("long"), i
-            ).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    files: int = 8,
-) -> None:
-    """Write `df` as parquet clustered by the Z-order key of `cols`:
-    range-partition on the key (contiguous z-ranges per file), sort
-    within each file (narrow row-group stats), drop the key before
-    writing (pure layout, schema unchanged). Reading back with a
-    rectangle predicate skips every file whose per-column min/max
-    does not overlap — pinned by tests/test_scale_machinery.py, which
-    measures overlap directly from the parquet footers against a
-    linear-sort control."""
-    if "_zkey" in df.columns:
-        raise ValueError(
-            "input already has a '_zkey' column; rename it first "
-            "(write_zordered would silently overwrite and drop it)"
-        )
-    (
-        df.withColumn("_zkey", zorder_key(cols, bits))
-        .repartitionByRange(files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_rows_per_file: int = 1_000_000,
-    sort_col: str | None = None,
-) -> dict:
-    """Small-file compaction — the maintenance pass every streaming
-    sink needs at scale: micro-batches write a file per trigger per
-    partition, and a 100 TB table read through a million tiny files
-    pays a task + footer + open() per file. Rewrite the directory
-    into ceil(rows/target) files (optionally re-clustered on
-    `sort_col` to restore row-group skipping), as a NEW snapshot
-    directory — the swap is atomic at the table-pointer level, the
-    same commit discipline as the engine's parquet+manifest sink
-    (checkpoint.py); never rewrite in place.
-
-    Returns {"files_before", "files_after", "rows"} so the caller can
-    assert/log the compaction ratio.
-    """
-    import math
-
-    from pyspark.sql import functions as F
-
-    def _list_parquet(p: str) -> list[str]:
-        if os.path.isdir(p):
-            return [
-                f
-                for f in os.listdir(p)
-                if f.startswith("part-") and f.endswith(".parquet")
-            ]
-        return []
-
-    df = spark.read.parquet(path)
-    # on the advertised input (a million tiny files) every extra data
-    # scan pays a task + open + footer per file — so rows and
-    # files_before come from ONE combined pass, and file counts come
-    # from directory listings when the path is a plain directory
-    listing = _list_parquet(path)
-    if listing:
-        files_before = len(listing)
-        rows = df.count()  # parquet metadata-only count, no row scan
-    else:
-        stats = df.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct(F.input_file_name()).alias("nf"),
-        ).collect()[0]
-        rows, files_before = stats["rows"], stats["nf"]
-    n_files = max(1, math.ceil(rows / target_rows_per_file))
-    out = df
-    if sort_col is not None:
-        out = out.repartitionByRange(n_files, sort_col)
-        out = out.sortWithinPartitions(sort_col)
-    else:
-        out = out.coalesce(n_files)
-    out.write.mode("overwrite").parquet(out_path)
-    files_after = len(_list_parquet(out_path)) or (
-        spark.read.parquet(out_path)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .count()
-    )
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": rows,
-    }

@@ -20,8 +20,9 @@ Arrow adapter:
 Scale notes (100 TB): map-only stage, no shuffle; incoming Arrow
 batches are re-chunked to a span budget (`schemas.MAX_SPANS_PER_CHUNK`) so a
 run of giant documents cannot blow the Python worker heap regardless
-of spark.sql.execution.arrow.maxRecordsPerBatch; skew is handled
-upstream by salting/repartition + page pre-split (presplit.py).
+of spark.sql.execution.arrow.maxRecordsPerBatch; producer skew is
+handled upstream by salting/repartition, and the span caps
+(spec.T1_MAX_SPANS) bound the largest document one call extracts.
 """
 
 from __future__ import annotations
@@ -88,7 +89,10 @@ def _page_blocks(cls, kinds, texts, lo: int, hi: int, out: DocOut) -> None:
             else:
                 toks = joined.lower().split()
                 stops = sum(map(STOP_UNION.__contains__, toks))
-                good = prev_good = stops / len(toks) >= T1_MIN_STOP_DENSITY
+                # no tokens (only whitespace): stop density 0, so BAD
+                good = prev_good = (
+                    bool(toks) and stops / len(toks) >= T1_MIN_STOP_DENSITY
+                )
             if good:
                 out.emit("text", joined)
         i = j

@@ -13,9 +13,9 @@ once); the per-request facade calls the core directly. Shares the
 pure-integer xycut and markdown renderers with the oracle (exact by
 construction, SURVEY §7.7.4).
 
-Map-only stage: no shuffle; batch size bounded upstream. Giant docs
-are pre-split by page before this stage (presplit.py) so a single doc
-cannot serialize one task at 100 TB scale.
+Map-only stage: no shuffle; batch size bounded upstream. Routing
+quarantines a document over spec.T2_MAX_SPANS, so the largest
+document one call extracts is bounded.
 """
 
 from __future__ import annotations
