@@ -26,7 +26,6 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]

@@ -6,7 +6,6 @@ oracle."""
 
 import duckdb
 import numpy as np
-import pytest
 
 from two_tier_document_parser_spark.bpe import (
     bpe_segment,

@@ -11,7 +11,7 @@ from two_tier_document_parser_spark.ccitt import (
     _EXT_CODES,
     _WHITE_CODES,
     decode_g4,
-    decode_tiff_g4,
+    decode_tiff_gray,
     encode_g4,
     tiff_dims,
     tiff_wrap_g4,
@@ -88,11 +88,11 @@ def test_tiff_wrap_round_trip():
     gray = np.where(rng.random((33, 77)) < 0.2, 0, 255).astype(np.uint8)
     t = tiff_wrap_g4(gray)
     assert tiff_dims(t) == (77, 33)
-    assert np.array_equal(decode_tiff_g4(t), gray)
+    assert np.array_equal(decode_tiff_gray(t), gray)
     # non-TIFF and non-G4 payloads fall through to None
     assert tiff_dims(b"nope") is None
-    assert decode_tiff_g4(b"\x89PNG\r\n\x1a\n") is None
-    assert decode_tiff_g4(b"") is None
+    assert decode_tiff_gray(b"\x89PNG\r\n\x1a\n") is None
+    assert decode_tiff_gray(b"") is None
 
 
 def test_media_pipeline_g4(spark):
@@ -168,7 +168,7 @@ def test_tiff_mh_round_trip():
     gray = np.where(rng.random((19, 83)) < 0.25, 0, 255).astype(np.uint8)
     t = tiff_wrap_g4(gray, compression=2)
     assert tiff_dims(t) == (83, 19)
-    assert np.array_equal(decode_tiff_g4(t), gray)
+    assert np.array_equal(decode_tiff_gray(t), gray)
 
 
 def _bits_to_bytes(bits: str) -> bytes:
@@ -249,7 +249,7 @@ def _jbig2_page_info(w: int, h: int, first_junk_segment: bool = False,
 
 
 def test_jbig2_dims_embedded_and_file_header():
-    from two_tier_document_parser_spark.ccitt import jbig2_dims
+    from two_tier_document_parser_spark.jbig2 import jbig2_dims
 
     assert jbig2_dims(_jbig2_page_info(2550, 3300)) == (2550, 3300)
     assert jbig2_dims(
@@ -261,7 +261,7 @@ def test_jbig2_dims_embedded_and_file_header():
 
 
 def test_jbig2_dims_rejects_non_jbig2_and_striped():
-    from two_tier_document_parser_spark.ccitt import jbig2_dims
+    from two_tier_document_parser_spark.jbig2 import jbig2_dims
 
     assert jbig2_dims(b"") is None
     # printable text: first 4 bytes read as a huge segment number
@@ -329,7 +329,7 @@ def test_tiff_compression3_2d():
     import struct as _struct
 
     from two_tier_document_parser_spark.ccitt import (
-        decode_tiff_g4,
+        decode_tiff_gray,
         encode_g3_2d,
     )
 
@@ -352,6 +352,6 @@ def test_tiff_compression3_2d():
             val = strip_off
         out += _struct.pack("<HHII", tag, typ, cnt, val)
     out += b"\x00" * 4 + payload
-    gray = decode_tiff_g4(out)
+    gray = decode_tiff_gray(out)
     assert gray is not None
     assert np.array_equal(gray, np.where(pix == 1, 0, 255))

@@ -11,8 +11,6 @@ second engine.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def _docs(spark, rows):
     return spark.createDataFrame(

@@ -118,6 +118,26 @@ def test_garbage_and_truncation_safety():
         buf = bytearray(full)
 
 
+@pytest.mark.parametrize("min_code", [9, 10, 11])
+def test_min_code_size_above_8_is_not_a_gif(min_code):
+    """GIF allows LZW minimum code sizes 2..8; a larger one makes root
+    codes that do not fit a palette index byte. Such a payload is not
+    decodable: None from every GIF entry point, never an exception
+    escaping into the media kernels."""
+    from two_tier_document_parser_spark.gif import decode_gif_frames
+    from two_tier_document_parser_spark.multimodal import decode_image_gray
+
+    px = np.arange(16, dtype=np.uint8).reshape(4, 4)
+    data = bytearray(encode_gif_gray(px))
+    lzw_min = 6 + 7 + 768 + 10  # header, screen, GCT, image descriptor
+    assert data[lzw_min] == 8
+    data[lzw_min] = min_code
+    data = bytes(data)
+    assert decode_gif_gray(data) is None
+    assert decode_gif_frames(data) is None
+    assert decode_image_gray(data) is None
+
+
 def _animated_gif(screen, frames):
     """Multi-frame GIF built by splicing the package encoder's image
     blocks: frames = list of (pixels, left, top, disposal,

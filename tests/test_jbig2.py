@@ -11,15 +11,18 @@ symbol/text profile the module scopes out."""
 import numpy as np
 import pytest
 
-from two_tier_document_parser_spark.ccitt import encode_g4, jbig2_dims
+from two_tier_document_parser_spark.ccitt import encode_g4
 from two_tier_document_parser_spark.jbig2 import (
     _QE,
+    _LEGAL_TYPES,
     _TEMPLATES,
     NOMINAL_AT,
     _MQDecoder,
+    _segments,
     decode_generic_region,
     decode_jbig2,
     decode_jbig2_gray,
+    jbig2_dims,
 )
 
 # ---------------------------------------------------------------------------
@@ -739,6 +742,39 @@ def test_honest_fallbacks():
         seg(1, 38, 1, generic_region_payload(bmp, comb=5)),
     )
     assert decode_jbig2(bad) is None
+
+
+# ITU-T T.88 §7.3 Table 2: every segment type the standard defines
+T88_SEGMENT_TYPES = {
+    0,  # symbol dictionary
+    4, 6, 7,  # intermediate / immediate / immediate lossless text region
+    16,  # pattern dictionary
+    20, 22, 23,  # halftone regions
+    36, 38, 39,  # generic regions
+    40, 42, 43,  # generic refinement regions
+    48, 49, 50, 51,  # page information, end of page / stripe / file
+    52, 53, 62,  # profiles, tables, extension
+}
+
+
+def test_type5_first_segment_rejected_by_dims_and_decoder():
+    """Type 5 is not a T.88 segment type: a stream that starts with
+    one is not JBIG2, for the segment walk, the decoder and the dims
+    path alike — all three read the one legal-type set."""
+    assert _LEGAL_TYPES == T88_SEGMENT_TYPES
+    bmp = _rand(6, 9, 0.3, 53)
+    rest = stream(
+        seg(1, 48, 1, page_info(9, 6)),
+        seg(2, 38, 1, generic_region_payload(bmp)),
+    )
+    data = seg(0, 5, 1, b"\0" * 4) + rest
+    with pytest.raises(ValueError):
+        list(_segments(data))
+    assert decode_jbig2(data) is None
+    assert jbig2_dims(data) is None
+    # the same stream without the type-5 segment is fine
+    assert jbig2_dims(rest) == (9, 6)
+    assert np.array_equal(decode_jbig2(rest), bmp)
 
 
 def test_media_pipeline_jbig2(spark):

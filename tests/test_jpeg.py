@@ -411,7 +411,7 @@ def _jp2_container(w: int, h: int) -> bytes:
 
 
 def test_jp2_dims_container_and_codestream():
-    from two_tier_document_parser_spark.jpeg import jp2_dims
+    from two_tier_document_parser_spark.jpeg2000 import jp2_dims
 
     assert jp2_dims(_jp2_container(640, 480)) == (640, 480)
     # raw codestream: SOC + SIZ with reference-grid offsets
@@ -424,13 +424,26 @@ def test_jp2_dims_container_and_codestream():
 
 
 def test_jp2_dims_rejects_non_jp2():
-    from two_tier_document_parser_spark.jpeg import jp2_dims
+    from two_tier_document_parser_spark.jpeg2000 import jp2_dims
 
     assert jp2_dims(b"") is None
     assert jp2_dims(b"this is not an image, just text " * 4) is None
     assert jp2_dims(b"\xff\xd8\xff\xe0 jpeg not jp2") is None
     # signature box present but ihdr truncated
     assert jp2_dims(b"\x00\x00\x00\x0cjP  \r\n\x87\nihdr\x00\x01") is None
+
+
+def test_jp2_dims_reads_the_jp2h_ihdr_box_not_stray_bytes():
+    """An xml box ahead of jp2h whose text holds the bytes "ihdr" must
+    not be read as the image header: dims come from the ihdr box
+    inside jp2h, found by walking the boxes."""
+    from two_tier_document_parser_spark.jpeg2000 import jp2_dims
+
+    stray = b"ihdr" + (5).to_bytes(4, "big") + (7).to_bytes(4, "big")
+    xml = (8 + len(stray)).to_bytes(4, "big") + b"xml " + stray
+    c = _jp2_container(640, 480)
+    data = c[:32] + xml + c[32:]  # signature + ftyp, xml, jp2h
+    assert jp2_dims(data) == (640, 480)
 
 
 # -------------------------------------------- progressive (SOF2) tests

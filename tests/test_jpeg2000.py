@@ -20,7 +20,6 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 from test_jbig2 import MQEncoder
-from two_tier_document_parser_spark.jpeg import jp2_dims
 from two_tier_document_parser_spark.jpeg2000 import (
     _ZC,
     _SC,
@@ -28,6 +27,7 @@ from two_tier_document_parser_spark.jpeg2000 import (
     _TagTree,
     decode_jp2,
     decode_jp2_gray,
+    jp2_dims,
 )
 
 # ---------------------------------------------------------------------------

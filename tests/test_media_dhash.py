@@ -12,7 +12,6 @@ boundary, and the sha256 fallback flag for non-decodable payloads.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from two_tier_document_parser_spark.ccitt import tiff_wrap_g4
 from two_tier_document_parser_spark.multimodal import (

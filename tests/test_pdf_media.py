@@ -11,9 +11,7 @@ import zlib
 from pathlib import Path
 
 import numpy as np
-import pytest
 
-from two_tier_document_parser_spark.ccitt import encode_g4
 from two_tier_document_parser_spark.jbig2 import decode_jbig2_gray
 from two_tier_document_parser_spark.pdf_io import (
     _PdfWriter,

@@ -13,7 +13,6 @@ import numpy as np
 import pytest
 
 from two_tier_document_parser_spark.ccitt import (
-    decode_tiff_g4,
     decode_tiff_gray,
     tiff_wrap_g4,
 )
@@ -303,8 +302,7 @@ def test_g4_still_routed_to_ccitt_decoder():
     rng = np.random.default_rng(6)
     bits = (rng.integers(0, 5, (18, 40)) == 0).astype(np.uint8)
     data = tiff_wrap_g4(bits)
-    assert decode_tiff_gray(data) is None  # compression 4 not claimed
-    assert decode_tiff_g4(data) is not None
+    assert decode_tiff_gray(data) is not None
 
 
 def test_garbage_safety():

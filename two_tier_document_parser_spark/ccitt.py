@@ -20,19 +20,21 @@ Scope:
   CCITTFaxDecode K>0, TIFF Compression=3 + T4Options bit 0) —
   per-line EOL + tag bit selecting 1-D or 2-D, sharing the 2-D mode
   machinery with G4 via _decode_2d_line/_encode_2d_line.
-- decode_tiff_gray: baseline-TIFF strips beyond the CCITT classes
-  (Compression 1/5/8/32773 — none / early-change LZW / Deflate /
-  PackBits — with horizontal predictor, multi-strip, 1/8-bit gray
-  and RGB-to-luma).
-- tiff_wrap_g4 / tiff_dims / decode_tiff_g4: raw G4 bits are NOT
-  self-describing (width/height live in the PDF stream dict or TIFF
-  tags), so payload columns carry G4 inside a minimal little-endian
-  single-strip TIFF (ImageWidth/ImageLength/BitsPerSample=1/
-  Compression=4/PhotometricInterpretation=0) — exactly how scanned
-  masters ship in practice.
+- tiff_wrap_g4 / tiff_dims: raw G4 bits are NOT self-describing
+  (width/height live in the PDF stream dict or TIFF tags), so payload
+  columns carry G4 inside a minimal little-endian single-strip TIFF
+  (ImageWidth/ImageLength/BitsPerSample=1/Compression=4/
+  PhotometricInterpretation=0) — exactly how scanned masters ship in
+  practice.
+- decode_tiff_gray: the one TIFF decode over the one IFD walk
+  (_tiff_ifd). CCITT strips (Compression 2/3/4) go through the
+  decoders above; baseline strips and tiles (Compression 1/5/8/32773
+  — none / early-change LZW / Deflate / PackBits — with horizontal
+  predictor, 1/8-bit gray and RGB-to-luma) through the section at
+  the end of the module.
 
 Bit convention: decode_g4 returns (h, w) uint8 with 1 = black (the
-ITU convention); decode_tiff_g4 maps to the repo's grayscale
+ITU convention); decode_tiff_gray maps to the repo's grayscale
 convention (black=0, white=255) so it composes with
 png.encode_png_gray in the resize path.
 
@@ -49,6 +51,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .png import luma_bt601
 
 # ---------------------------------------------------------------------------
 # T.4 run-length code tables (ITU-T T.4 §4.1.3/§4.2.1.3, reproduced in
@@ -451,7 +455,10 @@ def tiff_wrap_g4(pix: np.ndarray, compression: int = 4) -> bytes:
     return bytes(out)
 
 
-def _tiff_tags(data: bytes) -> dict[int, int] | None:
+def _tiff_ifd(data: bytes) -> tuple[str, list[tuple[int, ...]]] | None:
+    """The one first-IFD walk: the struct byte order and a (tag, type,
+    count, value-field offset) entry per IFD slot in file order, or
+    None when the payload is not a TIFF or the IFD is cut short."""
     if len(data) < 12 or data[:4] not in (_TIFF_II, _TIFF_MM):
         return None
     end = "<" if data[:2] == b"II" else ">"
@@ -459,16 +466,27 @@ def _tiff_tags(data: bytes) -> dict[int, int] | None:
     if ifd + 2 > len(data):
         return None
     (n,) = struct.unpack_from(end + "H", data, ifd)
-    tags: dict[int, int] = {}
+    entries = []
     for i in range(n):
         off = ifd + 2 + 12 * i
         if off + 12 > len(data):
             return None
-        tag, typ, cnt, val = struct.unpack_from(end + "HHII", data, off)
-        if typ == 3:  # SHORT packs in the low bytes of the value field
-            val = struct.unpack_from(end + "H", data, off + 8)[0]
-        tags[tag] = val
-    return tags
+        entries.append((*struct.unpack_from(end + "HHI", data, off), off + 8))
+    return end, entries
+
+
+def _tiff_tags(data: bytes) -> dict[int, int] | None:
+    """First-IFD tags as one value each, read in place from the value
+    field (a SHORT packs in its low bytes) — the header view tiff_dims
+    and the single-strip CCITT read use."""
+    ifd = _tiff_ifd(data)
+    if ifd is None:
+        return None
+    end, entries = ifd
+    return {
+        tag: struct.unpack_from(end + ("H" if typ == 3 else "I"), data, off)[0]
+        for tag, typ, _cnt, off in entries
+    }
 
 
 def tiff_dims(data: bytes) -> tuple[int, int] | None:
@@ -480,92 +498,13 @@ def tiff_dims(data: bytes) -> tuple[int, int] | None:
     return tags[256], tags[257]
 
 
-_JBIG2_FILE_MAGIC = b"\x97JB2\r\n\x1a\n"
-
-# segment types a JBIG2 generic stream can legally start with
-# (ITU-T T.88 §7.3) — part of the embedded-stream sniff gate
-_JBIG2_SEG_TYPES = frozenset(
-    (0, 4, 6, 7, 16, 20, 22, 23, 36, 38, 39, 40, 42, 43,
-     48, 49, 50, 51, 52, 53, 62)
-)
-
-
-def jbig2_dims(data: bytes) -> tuple[int, int] | None:
-    """(width, height) from a JBIG2 page information segment (ITU-T
-    T.88 §7.4.8) — the honest dimension path for JBIG2Decode streams
-    until a full MMR/arithmetic decoder exists (r04 verdict task #8).
-
-    Walks generic-stream segment headers (§7.2) until the first
-    type-48 page-info segment and reads its width/height words. A
-    standalone file header (§9.1, magic 97 4A 42 32 0D 0A 1A 0A) is
-    skipped; PDF-embedded streams omit it and start directly at a
-    segment header, so the sniff is gated hard against false
-    positives on arbitrary binaries: the first segment's number must
-    be tiny (<= 3 — real streams start numbering at 0/1; any
-    printable-ASCII payload reads >= 0x20202020) and its type must
-    be a legal T.88 segment kind. Striped pages of unknown height
-    (0xFFFFFFFF) return None — reporting a fake height would be the
-    hash stub wearing a different hat."""
-    data = bytes(data or b"")
-    i = 0
-    if data.startswith(_JBIG2_FILE_MAGIC):
-        if len(data) < 9:
-            return None
-        i = 9 if data[8] & 2 else 13  # bit 1: page count absent
-    if i + 11 > len(data):
-        return None
-    if int.from_bytes(data[i : i + 4], "big") > 3:
-        return None  # embedded streams start at segment 0/1
-    if data[i + 4] & 0x3F not in _JBIG2_SEG_TYPES:
-        return None
-    for _ in range(64):  # bounded walk — headers, never payloads
-        if i + 11 > len(data):
-            return None
-        segnum = int.from_bytes(data[i : i + 4], "big")
-        flags = data[i + 4]
-        stype = flags & 0x3F
-        rts = data[i + 5]
-        cnt = rts >> 5
-        j = i + 6
-        if cnt == 7:  # long form: 29-bit count + retain-bit bytes
-            cnt = int.from_bytes(data[i + 5 : i + 9], "big") & 0x1FFFFFFF
-            j = i + 9 + (cnt + 8) // 8
-        ref_sz = 1 if segnum <= 256 else (2 if segnum <= 65536 else 4)
-        j += cnt * ref_sz
-        j += 4 if flags & 0x40 else 1  # page association size
-        if j + 4 > len(data):
-            return None
-        dlen = int.from_bytes(data[j : j + 4], "big")
-        j += 4
-        if stype == 48:
-            if j + 8 > len(data):
-                return None
-            w = int.from_bytes(data[j : j + 4], "big")
-            h = int.from_bytes(data[j + 4 : j + 8], "big")
-            if not w or not h or h == 0xFFFFFFFF:
-                return None
-            return w, h
-        if dlen == 0xFFFFFFFF:
-            return None  # unknown-length generic region: stop
-        i = j + dlen
-    return None
-
-
-def decode_tiff_g4(data: bytes) -> np.ndarray | None:
-    """Single-strip CCITT TIFF (Compression=4 G4, or Compression=2
-    Modified Huffman with its spec-mandated byte-aligned rows) ->
-    (h, w) uint8 grayscale (black=0, white=255), or None when the
-    payload is not such a TIFF (other compressions keep the callers'
-    documented fallback)."""
-    data = bytes(data or b"")
-    tags = _tiff_tags(data)
-    if not tags or tags.get(259) not in (2, 3, 4):
-        return None
-    w, h = tags.get(256), tags.get(257)
-    off, cnt = tags.get(273), tags.get(279)
-    if not all(isinstance(x, int) and x >= 0 for x in (w, h, off, cnt)):
-        return None
-    if w <= 0 or h <= 0 or off + cnt > len(data):
+def _ccitt_strip_gray(data: bytes, tags: dict[int, int]) -> np.ndarray | None:
+    """Single-strip CCITT TIFF (Compression=4 G4, 3 T.4 with its
+    T4Options, or 2 Modified Huffman with its spec-mandated
+    byte-aligned rows) -> (h, w) uint8 grayscale (black=0,
+    white=255), or None."""
+    w, h, off, cnt = (tags.get(t) for t in (256, 257, 273, 279))
+    if None in (w, h, off, cnt) or not w or not h or off + cnt > len(data):
         return None
     try:
         strip = data[off : off + cnt]
@@ -575,20 +514,15 @@ def decode_tiff_g4(data: bytes) -> np.ndarray | None:
             # T4Options (tag 292): bit 0 = 2-D mixed coding, bit 2 =
             # fill bits so EOLs land byte-aligned
             t4 = tags.get(292, 0)
-            if t4 & 1:
-                bits = decode_g3_2d(
-                    strip, columns=w, rows=h, byte_align=bool(t4 & 4)
-                )
-            else:
-                bits = decode_g3_1d(
-                    strip, columns=w, rows=h, byte_align=bool(t4 & 4)
-                )
+            decode = decode_g3_2d if t4 & 1 else decode_g3_1d
+            bits = decode(strip, columns=w, rows=h, byte_align=bool(t4 & 4))
         else:
             bits = decode_g3_1d(strip, columns=w, rows=h, byte_align=True)
     except (ValueError, EOFError):
         return None
     gray = np.where(bits == 1, 0, 255).astype(np.uint8)
-    # Photometric=1 (BlackIsZero) inverts the bilevel meaning
+    # Photometric=1 (BlackIsZero) inverts the bilevel meaning; an
+    # absent tag means WhiteIsZero, the fax default
     if tags.get(262, 0) == 1:
         gray = 255 - gray
     return gray
@@ -810,27 +744,20 @@ def _tiff_tag_arrays(data: bytes) -> dict[int, list[int]] | None:
     """First-IFD tags as value ARRAYS (BYTE/SHORT/LONG), reading
     out-of-line arrays — StripOffsets/StripByteCounts/BitsPerSample
     need more than the packed single value _tiff_tags returns."""
-    if len(data) < 12 or data[:4] not in (_TIFF_II, _TIFF_MM):
+    ifd = _tiff_ifd(data)
+    if ifd is None:
         return None
-    end = "<" if data[:2] == b"II" else ">"
-    (ifd,) = struct.unpack_from(end + "I", data, 4)
-    if ifd + 2 > len(data):
-        return None
-    (n,) = struct.unpack_from(end + "H", data, ifd)
+    end, entries = ifd
     out: dict[int, list[int]] = {}
     fmt = {1: "B", 3: "H", 4: "I"}
-    for i in range(n):
-        off = ifd + 2 + 12 * i
-        if off + 12 > len(data):
-            return None
-        tag, typ, cnt = struct.unpack_from(end + "HHI", data, off)
+    for tag, typ, cnt, off in entries:
         if typ not in fmt or cnt == 0:
             continue
         size = _TIFF_TYPE_SIZE[typ] * cnt
         if size <= 4:
-            src = off + 8
+            src = off
         else:
-            (src,) = struct.unpack_from(end + "I", data, off + 8)
+            (src,) = struct.unpack_from(end + "I", data, off)
         if src + size > len(data):
             return None
         out[tag] = list(
@@ -881,14 +808,17 @@ def _tiff_decompress(strip: bytes, expect: int, comp: int) -> bytes | None:
 
 
 def decode_tiff_gray(data: bytes) -> np.ndarray | None:
-    """Baseline-TIFF rasters -> (h, w) uint8 grayscale, or None.
-    Compression 1/5/8/32773/32946; 1-bit bilevel (photometric 0/1)
-    and 8-bit gray/RGB (SamplesPerPixel 1/3, optional horizontal
-    predictor for LZW/Deflate); BOTH layouts — strips via
-    RowsPerStrip and tiles via TileWidth/TileLength (tags 322-325,
-    raster order, edge tiles padded to the tile size). CCITT
-    compressions (2/4) stay with decode_tiff_g4."""
+    """TIFF rasters -> (h, w) uint8 grayscale, or None. CCITT strips
+    (Compression 2/3/4, bilevel) decode through the T.4/T.6 decoders
+    above. Baseline Compression 1/5/8/32773/32946; 1-bit bilevel
+    (photometric 0/1) and 8-bit gray/RGB (SamplesPerPixel 1/3,
+    optional horizontal predictor for LZW/Deflate); BOTH layouts —
+    strips via RowsPerStrip and tiles via TileWidth/TileLength (tags
+    322-325, raster order, edge tiles padded to the tile size)."""
     data = bytes(data or b"")
+    tags = _tiff_tags(data)
+    if tags and tags.get(259) in (2, 3, 4):
+        return _ccitt_strip_gray(data, tags)
     tags = _tiff_tag_arrays(data)
     if not tags:
         return None
@@ -1000,6 +930,4 @@ def decode_tiff_gray(data: bytes) -> np.ndarray | None:
         g = plane[:, :w]
         return (255 - g) if photometric == 0 else g
     rgb = plane.reshape(h, w, 3).astype(np.int64)
-    return (
-        (299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]) // 1000
-    ).astype(np.uint8)
+    return luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2]).astype(np.uint8)

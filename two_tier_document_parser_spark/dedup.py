@@ -25,7 +25,7 @@ import hashlib
 import re
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textstats import fingerprint, tokens

@@ -15,15 +15,16 @@ Scope (honest, like the other codecs):
 - Graphic Control Extension: transparency index — transparent pixels
   composite over white (255), matching the engine's document
   convention (white page background, like ccitt/jbig2 map 0=black).
-- Animation: the FIRST image descriptor decodes (the still-image
-  identity of the asset); later frames are skipped structurally.
+- Animation: one block walk (_images) yields every image descriptor;
+  decode_gif_frames composites them onto the logical screen (disposal
+  methods 0-3), decode_gif_gray takes the first one (the still-image
+  identity of the asset).
 - Extensions (comment/plain-text/application) are skipped by their
   sub-block chain, never parsed.
 
-Output is grayscale uint8 (h, w) via integer ITU-R BT.601 luma
-((299 R + 587 G + 114 B) // 1000), so GIF payloads compose with
-png.encode_png_gray in the resize/dhash paths exactly like the other
-codecs' outputs.
+Output is grayscale uint8 (h, w) via png.luma_bt601 (integer ITU-R
+BT.601), so GIF payloads compose with png.encode_png_gray in the
+resize/dhash paths exactly like the other codecs' outputs.
 
 Shape of the work: LZW code emission is inherently sequential (each
 code extends the dictionary the next code indexes), so the symbol
@@ -34,7 +35,13 @@ kernels: Spark-side parallelism is per-payload, never a shuffle.
 
 from __future__ import annotations
 
+import struct
+from itertools import islice
+from typing import Iterator
+
 import numpy as np
+
+from .png import luma_bt601
 
 _SIGS = (b"GIF87a", b"GIF89a")
 
@@ -77,7 +84,9 @@ def _lzw_decode(data: bytes, min_code: int, npix: int) -> bytearray | None:
     bit packing, CLEAR resets the table, EOI ends. Returns exactly
     `npix` indices (truncated streams pad with 0 — lenient, like
     browser decoders) or None on a structurally broken stream."""
-    if not 2 <= min_code <= 11:
+    # GIF89a allows minimum code sizes 2..8: every root code is a
+    # palette index and must fit the byte it decodes to
+    if not 2 <= min_code <= 8:
         return None
     clear = 1 << min_code
     eoi = clear + 1
@@ -149,13 +158,85 @@ def _frame_luma_and_alpha(
     """Index array -> (luma uint8, opaque-mask bool)."""
     pal = np.clip(arr, 0, len(palette) - 1)
     rgb = palette[pal].astype(np.int32)
-    gray = (299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]) // 1000
+    gray = luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2])
     opaque = (
         arr != transparent
         if 0 <= transparent < len(palette)
         else np.ones(arr.shape, bool)
     )
     return gray.astype(np.uint8), opaque
+
+
+def _images(data: bytes) -> Iterator[tuple]:
+    """The one GIF block walk: yield (left, top, gray, opaque,
+    disposal) per image descriptor in stream order — the frame's
+    pixels as luma, its transparency mask and the disposal method of
+    its Graphic Control Extension. Stops at the trailer or the first
+    malformed block. A generator, so a caller holding the frames it
+    wants parses no further."""
+    if not isinstance(data, (bytes, bytearray)) or bytes(data[:6]) not in _SIGS:
+        return
+    data = bytes(data)
+    n = len(data)
+    if n < 13:
+        return
+    i = 13
+    gct = None
+    if data[10] & 0x80:
+        size = 3 * (2 << (data[10] & 0x07))
+        if i + size > n:
+            return
+        gct = np.frombuffer(data[i : i + size], np.uint8).reshape(-1, 3)
+        i += size
+    transparent = -1
+    disposal = 0
+    while i < n:
+        if data[i] == 0x21:  # extension
+            if i + 2 > n:
+                return
+            j = i + 2
+            if data[i + 1] == 0xF9 and j < n and data[j] >= 4 and j + 5 <= n:
+                # graphic control: disposal method + transparency index
+                packed = data[j + 1]
+                disposal = (packed >> 2) & 0x07
+                transparent = data[j + 4] if packed & 0x01 else -1
+            i = _skip_subblocks(data, j)
+            continue
+        if data[i] != 0x2C or i + 10 > n:  # trailer or not a descriptor
+            return
+        left, top, w, h = struct.unpack_from("<4H", data, i + 1)
+        flags = data[i + 9]
+        i += 10
+        palette = gct
+        if flags & 0x80:
+            size = 3 * (2 << (flags & 0x07))
+            if i + size > n:
+                return
+            palette = np.frombuffer(data[i : i + size], np.uint8).reshape(-1, 3)
+            i += size
+        if palette is None or not w or not h or i >= n or w * h > MAX_PIXELS:
+            return
+        min_code = data[i]
+        i += 1
+        chunks = []
+        while i < n:
+            ln = data[i]
+            i += 1
+            if ln == 0:
+                break
+            chunks.append(data[i : i + ln])
+            i += ln
+        idx = _lzw_decode(b"".join(chunks), min_code, w * h)
+        if idx is None:
+            return
+        arr = np.frombuffer(bytes(idx), np.uint8).reshape(h, w)
+        if flags & 0x40:  # interlaced: rows were emitted in pass order
+            order = [y for f, s in _INTERLACE for y in range(f, h, s)]
+            arr = arr[np.argsort(order)]
+        gray, opaque = _frame_luma_and_alpha(arr, palette, transparent)
+        yield left, top, gray, opaque, disposal
+        transparent = -1
+        disposal = 0
 
 
 def decode_gif_frames(
@@ -174,87 +255,16 @@ def decode_gif_frames(
     frame-sampling path for the one animated format the sandbox can
     decode; multimodal.sample_frames uses it before falling back to
     the byte-chunk stub for undecodable media."""
-    if not isinstance(data, (bytes, bytearray)) or bytes(data[:6]) not in _SIGS:
+    dims = gif_dims(data) if isinstance(data, (bytes, bytearray)) else None
+    if dims is None or dims[0] * dims[1] > MAX_PIXELS:
         return None
-    data = bytes(data)
-    n = len(data)
-    if n < 13:
-        return None
-    sw = int.from_bytes(data[6:8], "little")
-    sh = int.from_bytes(data[8:10], "little")
-    if not sw or not sh or sw * sh > MAX_PIXELS:
-        return None
-    gct_flag = data[10] & 0x80
-    gct_size = 2 << (data[10] & 0x07)
-    i = 13
-    gct = None
-    if gct_flag:
-        if i + 3 * gct_size > n:
-            return None
-        gct = np.frombuffer(data[i : i + 3 * gct_size], np.uint8).reshape(-1, 3)
-        i += 3 * gct_size
+    sw, sh = dims
     canvas = np.full((sh, sw), 255, np.uint8)
     frames: list[np.ndarray] = []
-    transparent = -1
-    disposal = 0
-    while i < n and len(frames) < max_frames:
-        b0 = data[i]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            if i + 2 > n:
-                break
-            label = data[i + 1]
-            j = i + 2
-            if label == 0xF9 and j < n and data[j] >= 4 and j + 5 <= n:
-                packed = data[j + 1]
-                disposal = (packed >> 2) & 0x07
-                transparent = data[j + 4] if packed & 0x01 else -1
-            i = _skip_subblocks(data, j)
-            continue
-        if b0 != 0x2C:
-            break
-        if i + 10 > n:
-            break
-        left = int.from_bytes(data[i + 1 : i + 3], "little")
-        top = int.from_bytes(data[i + 3 : i + 5], "little")
-        w = int.from_bytes(data[i + 5 : i + 7], "little")
-        h = int.from_bytes(data[i + 7 : i + 9], "little")
-        flags = data[i + 9]
-        i += 10
-        lct = None
-        if flags & 0x80:
-            sz = 2 << (flags & 0x07)
-            if i + 3 * sz > n:
-                break
-            lct = np.frombuffer(data[i : i + 3 * sz], np.uint8).reshape(-1, 3)
-            i += 3 * sz
-        palette = lct if lct is not None else gct
-        if palette is None or not w or not h or i >= n or w * h > MAX_PIXELS:
-            break
-        min_code = data[i]
-        i += 1
-        chunks = []
-        while i < n:
-            ln = data[i]
-            i += 1
-            if ln == 0:
-                break
-            chunks.append(data[i : i + ln])
-            i += ln
-        idx = _lzw_decode(b"".join(chunks), min_code, w * h)
-        if idx is None:
-            break
-        arr = np.frombuffer(bytes(idx), np.uint8).reshape(h, w)
-        if flags & 0x40:  # interlaced
-            out_rows = np.empty(h, np.int32)
-            r = 0
-            for first, step in _INTERLACE:
-                for y in range(first, h, step):
-                    out_rows[y] = r
-                    r += 1
-            arr = arr[out_rows]
-        gray, opaque = _frame_luma_and_alpha(arr, palette, transparent)
+    for left, top, gray, opaque, disposal in islice(
+        _images(data), max(max_frames, 0)
+    ):
+        h, w = gray.shape
         # clip the frame rect to the canvas
         y1 = min(top + h, sh)
         x1 = min(left + w, sw)
@@ -266,100 +276,20 @@ def decode_gif_frames(
             frames.append(canvas.copy())
             if disposal == 2:
                 canvas[top:y1, left:x1] = 255
-            elif disposal == 3 and prev is not None:
+            elif prev is not None:
                 canvas = prev
         else:
             frames.append(canvas.copy())
-        transparent = -1
-        disposal = 0
     return frames if frames else None
 
 
 def decode_gif_gray(data: bytes) -> np.ndarray | None:
-    """GIF bytes -> (h, w) uint8 grayscale, or None when the payload
-    is not a decodable GIF. First frame only; transparency composites
-    over white; interlaced rows are re-ordered per the spec."""
-    if not isinstance(data, (bytes, bytearray)) or bytes(data[:6]) not in _SIGS:
-        return None
-    data = bytes(data)
-    n = len(data)
-    if n < 13:
-        return None
-    gct_flag = data[10] & 0x80
-    gct_size = 2 << (data[10] & 0x07)
-    i = 13
-    gct = None
-    if gct_flag:
-        if i + 3 * gct_size > n:
-            return None
-        gct = np.frombuffer(data[i : i + 3 * gct_size], np.uint8).reshape(-1, 3)
-        i += 3 * gct_size
-
-    transparent = -1
-    while i < n:
-        b0 = data[i]
-        if b0 == 0x3B:  # trailer
-            return None
-        if b0 == 0x21:  # extension
-            if i + 2 > n:
-                return None
-            label = data[i + 1]
-            j = i + 2
-            if label == 0xF9 and j < n and data[j] >= 4 and j + 5 <= n:
-                # graphic control: transparency flag + index
-                if data[j + 1] & 0x01:
-                    transparent = data[j + 4]
-            i = _skip_subblocks(data, j)
-            continue
-        if b0 != 0x2C:  # not an image descriptor
-            return None
-        if i + 10 > n:
-            return None
-        w = int.from_bytes(data[i + 5 : i + 7], "little")
-        h = int.from_bytes(data[i + 7 : i + 9], "little")
-        flags = data[i + 9]
-        i += 10
-        lct = None
-        if flags & 0x80:
-            sz = 2 << (flags & 0x07)
-            if i + 3 * sz > n:
-                return None
-            lct = np.frombuffer(data[i : i + 3 * sz], np.uint8).reshape(-1, 3)
-            i += 3 * sz
-        palette = lct if lct is not None else gct
-        if palette is None or not w or not h or i >= n:
-            return None
-        if w * h > MAX_PIXELS:
-            return None
-        min_code = data[i]
-        i += 1
-        # gather the LZW sub-block chain
-        chunks = []
-        while i < n:
-            ln = data[i]
-            i += 1
-            if ln == 0:
-                break
-            chunks.append(data[i : i + ln])
-            i += ln
-        idx = _lzw_decode(b"".join(chunks), min_code, w * h)
-        if idx is None:
-            return None
-        arr = np.frombuffer(bytes(idx), np.uint8).reshape(h, w)
-        if flags & 0x40:  # interlaced: rows were emitted in pass order
-            out_rows = np.empty(h, np.int32)
-            r = 0
-            for first, step in _INTERLACE:
-                for y in range(first, h, step):
-                    out_rows[y] = r
-                    r += 1
-            arr = arr[out_rows]
-        pal = np.clip(arr, 0, len(palette) - 1)
-        rgb = palette[pal].astype(np.int32)
-        gray = (299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]) // 1000
-        if 0 <= transparent < len(palette):
-            gray = np.where(arr == transparent, 255, gray)
-        return gray.astype(np.uint8)
+    """GIF bytes -> (h, w) uint8 grayscale of the first image, or None
+    when the payload is not a decodable GIF: the first frame of the
+    walk decode_gif_frames composites, at the image's own size, with
+    transparent pixels over white."""
+    for _left, _top, gray, opaque, _disposal in _images(data):
+        return np.where(opaque, gray, 255).astype(np.uint8)
     return None
 
 

@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from typing import Any
 
 from .avro_lite import read_container, write_container
 

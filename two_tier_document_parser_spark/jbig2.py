@@ -21,7 +21,8 @@ Scope (honest, like the other codecs):
   page info (type 48), immediate/intermediate generic regions
   (36/38/39) composed with the external combination operator
   (OR/AND/XOR/XNOR/REPLACE), end-of-stripe/page/file skipped, the
-  optional standalone file header (§9.1) skipped.
+  optional standalone file header (§9.1) skipped. jbig2_dims reads
+  the page-info dims off the same segment-header walk.
 - Symbol dictionary (§6.5, type 0) + text region (§6.4, types
   4/6/7) in their arithmetic-coded form: Annex A integer decoding
   (IADH/IADW/IAEX/IADT/IAFS/IADS/IAIT + the IAID tree), height-class
@@ -38,7 +39,7 @@ Scope (honest, like the other codecs):
 Bit conventions: JBIG2 pixel 1 = black. decode_jbig2_gray maps to
 the repo's grayscale convention (black=0, white=255) so it composes
 with png.encode_png_gray in the resize/dhash paths, exactly like
-ccitt.decode_tiff_g4.
+ccitt.decode_tiff_gray does for CCITT strips.
 
 Shape of the work: the MQ coder is inherently sequential (each
 decoded bit feeds both the context window and the interval state —
@@ -284,28 +285,31 @@ def _generic_into(
 _FILE_MAGIC = b"\x97JB2\r\n\x1a\n"
 _GENERIC_REGION_TYPES = frozenset((36, 38, 39))
 _SKIPPABLE_TYPES = frozenset((49, 50, 51, 53, 62))  # EOP/EOS/EOF/tables/ext
-# every segment kind T.88 §7.3 defines — anything else is not JBIG2
+# every segment type of T.88 §7.3 Table 2; anything else is not JBIG2
 _LEGAL_TYPES = frozenset(
-    (0, 4, 5, 6, 7, 16, 20, 22, 23, 36, 38, 39, 40, 42, 43,
+    (0, 4, 6, 7, 16, 20, 22, 23, 36, 38, 39, 40, 42, 43,
      48, 49, 50, 51, 52, 53, 62)
 )
+_UNKNOWN_LENGTH = 0xFFFFFFFF
 
 
-def _segments(data: bytes):
-    """Yield (segnum, type, refs, page_assoc, payload) per §7.2
-    segment header (refs = referred-to segment numbers — text
-    regions name their symbol dictionaries through them).
-    Raises ValueError on truncation, unknown-length segments, or
-    non-JBIG2 bytes. The media kernels feed this ARBITRARY binary
-    payloads, so the sniff is gated hard (same rule as
-    ccitt.jbig2_dims): the first segment's number must be tiny
-    (embedded streams start numbering at 0/1; printable ASCII reads
-    >= 0x20202020) and every segment type must be a §7.3 kind."""
+def _segment_headers(data: bytes):
+    """The one segment-header walk (§7.2): yield (segnum, type, refs,
+    page_assoc, data start, data length) per segment header (refs =
+    referred-to segment numbers — text regions name their symbol
+    dictionaries through them). The data itself may be cut short or
+    of unknown length (_UNKNOWN_LENGTH); callers decide. Raises
+    ValueError on a truncated header or non-JBIG2 bytes. The media
+    kernels feed this ARBITRARY binary payloads, so the sniff is gated
+    hard: the first segment's number must be tiny (embedded streams
+    start numbering at 0/1; printable ASCII reads >= 0x20202020) and
+    every segment type must be a §7.3 kind. A standalone file header
+    (§9.1) is skipped; PDF-embedded streams omit it."""
     i = 0
     if data.startswith(_FILE_MAGIC):
         if len(data) < 9:
             raise ValueError("truncated file header")
-        i = 9 if data[8] & 2 else 13
+        i = 9 if data[8] & 2 else 13  # bit 1: page count absent
     n = len(data)
     first = True
     while i < n:
@@ -344,15 +348,45 @@ def _segments(data: bytes):
         if j + 4 > n:
             raise ValueError("truncated data length")
         dlen = int.from_bytes(data[j : j + 4], "big")
-        j += 4
-        if dlen == 0xFFFFFFFF:
+        yield segnum, stype, refs, page, j + 4, dlen
+        i = j + 4 + dlen
+
+
+def _segments(data: bytes):
+    """Yield (segnum, type, refs, page_assoc, payload) per segment of
+    a whole stream. Raises ValueError where _segment_headers does,
+    and on unknown-length or overrunning segment data."""
+    for segnum, stype, refs, page, start, dlen in _segment_headers(data):
+        if dlen == _UNKNOWN_LENGTH:
             # §7.2.7 unknown length (MMR generic trailer search) —
             # out of scope; the caller falls back honestly
             raise ValueError("unknown-length segment")
-        if j + dlen > n:
+        if start + dlen > len(data):
             raise ValueError("segment data overruns stream")
-        yield segnum, stype, refs, page, data[j : j + dlen]
-        i = j + dlen
+        yield segnum, stype, refs, page, data[start : start + dlen]
+
+
+def jbig2_dims(data: bytes) -> tuple[int, int] | None:
+    """(width, height) from the page information segment (§7.4.8),
+    or None — the dimension path for JBIG2 payloads the decoder's
+    profile does not cover. Reads segment headers only, so a payload
+    cut short after the page info still reports its dims. Striped
+    pages of unknown height (0xFFFFFFFF) return None: reporting a
+    fake height would be the hash stub wearing a different hat."""
+    data = bytes(data or b"")
+    try:
+        for _segnum, stype, _refs, _page, j, dlen in _segment_headers(data):
+            if stype == 48:
+                if j + 8 > len(data):
+                    return None
+                w = int.from_bytes(data[j : j + 4], "big")
+                h = int.from_bytes(data[j + 4 : j + 8], "big")
+                return (w, h) if w and h and h != 0xFFFFFFFF else None
+            if dlen == _UNKNOWN_LENGTH:
+                return None
+    except ValueError:
+        return None
+    return None
 
 
 # ---------------------------------------------------------------------------
@@ -763,7 +797,8 @@ def decode_jbig2_gray(
     data: bytes, globals_data: bytes = b"", max_pixels: int = 64_000_000
 ) -> np.ndarray | None:
     """decode_jbig2 mapped to the repo grayscale convention
-    (1=black -> 0, 0=white -> 255), mirroring ccitt.decode_tiff_g4."""
+    (1=black -> 0, 0=white -> 255), like ccitt.decode_tiff_gray's
+    CCITT strips."""
     bmp = decode_jbig2(data, globals_data, max_pixels)
     if bmp is None:
         return None

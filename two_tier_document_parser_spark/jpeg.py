@@ -162,41 +162,6 @@ def jpeg_dims(data: bytes) -> tuple[int, int] | None:
     return None
 
 
-_JP2_SIG = b"\x00\x00\x00\x0cjP  \r\n\x87\n"
-_J2K_SOC_SIZ = b"\xff\x4f\xff\x51"
-
-
-def jp2_dims(data: bytes) -> tuple[int, int] | None:
-    """(width, height) from a JPEG-2000 payload header (the honest
-    dimension path for JPXDecode streams until a full wavelet decoder
-    exists — r04 verdict task #8). Two layouts, both magic-gated so
-    arbitrary binaries can never sniff as JP2:
-
-    - JP2 box container (ISO/IEC 15444-1 §I.5): the 12-byte signature
-      box, then the jp2h superbox's ihdr box — HEIGHT then WIDTH,
-      4 bytes big-endian each (§I.5.3.1, note the order).
-    - Raw codestream (§A.5.1): SOC (FF4F) + SIZ (FF51), where the
-      image grid is Xsiz/Ysiz minus the XOsiz/YOsiz reference-grid
-      offsets.
-    """
-    if data.startswith(_JP2_SIG):
-        i = data.find(b"ihdr")
-        if i >= 0 and len(data) >= i + 12:
-            h = int.from_bytes(data[i + 4 : i + 8], "big")
-            w = int.from_bytes(data[i + 8 : i + 12], "big")
-            if w and h:
-                return w, h
-        return None
-    if data.startswith(_J2K_SOC_SIZ) and len(data) >= 24:
-        xs = int.from_bytes(data[8:12], "big")
-        ys = int.from_bytes(data[12:16], "big")
-        xo = int.from_bytes(data[16:20], "big")
-        yo = int.from_bytes(data[20:24], "big")
-        if xs > xo and ys > yo:
-            return xs - xo, ys - yo
-    return None
-
-
 def decode_jpeg(data: bytes) -> np.ndarray | None:
     """Sequential (SOF0/SOF1) or progressive (SOF2) JPEG -> uint8
     array (h, w) for grayscale or (h, w, 3) RGB for YCbCr. None when

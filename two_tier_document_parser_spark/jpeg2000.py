@@ -9,7 +9,8 @@ ccitt.py / jbig2.py for theirs. No external codec in this sandbox.
 
 Scope (honest; everything else returns None and callers keep their
 documented header-dims fallback):
-- JP2 box container (finds the jp2c codestream) or raw codestream.
+- JP2 box container (one box walk finds the jp2c codestream, and the
+  jp2h/ihdr header for jp2_dims) or raw codestream.
 - Single tile covering the image, zero image/tile offsets, no
   component subsampling (XRsiz = YRsiz = 1).
 - Reversible 5/3 wavelet (Annex F) with quantization style "none"
@@ -40,6 +41,8 @@ Spark-side parallelism is per-payload, never a shuffle.
 """
 
 from __future__ import annotations
+
+from typing import Iterator
 
 import numpy as np
 
@@ -431,34 +434,85 @@ class _Band:
         self.blocks: dict[tuple[int, int], dict] = {}
 
 
-def _box_codestream(data: bytes) -> bytes:
-    """Extract the contiguous codestream from a JP2 container, or
-    pass a raw codestream through."""
-    if data[:4] == b"\xff\x4f\xff\x51":
-        return data
-    if not data.startswith(b"\x00\x00\x00\x0cjP  \r\n\x87\n"):
-        raise ValueError("not a JP2 signature or raw codestream")
-    i, n = 12, len(data)
+_JP2_SIG = b"\x00\x00\x00\x0cjP  \r\n\x87\n"
+_SOC_SIZ = b"\xff\x4f\xff\x51"
+
+
+def _boxes(data: bytes, i: int, n: int) -> Iterator[tuple[bytes, int, int]]:
+    """The one box walk (§I.4): yield (type, body start, end) per box
+    header in data[i:n]. `end` runs past `n` for a box the payload
+    cuts short — the caller decides whether that matters; the walk
+    stops at the first header that does not fit or declares a length
+    shorter than itself."""
     while i + 8 <= n:
         ln = int.from_bytes(data[i : i + 4], "big")
         tag = data[i + 4 : i + 8]
         body = i + 8
-        if ln == 1:
+        if ln == 1:  # XLBox: 64-bit length follows the type
             if body + 8 > n:
-                raise ValueError("truncated XLBox")
+                return
             ln = int.from_bytes(data[body : body + 8], "big")
             body += 8
-            end = i + ln
-        elif ln == 0:
-            end = n
-        else:
-            end = i + ln
-        if end > n or end <= body:
+        end = n if ln == 0 else i + ln  # 0: box runs to the end
+        if end <= body:
+            return
+        yield tag, body, end
+        i = end
+
+
+def _box_codestream(data: bytes) -> bytes:
+    """Extract the contiguous codestream from a JP2 container, or
+    pass a raw codestream through."""
+    if data[:4] == _SOC_SIZ:
+        return data
+    if not data.startswith(_JP2_SIG):
+        raise ValueError("not a JP2 signature or raw codestream")
+    for tag, body, end in _boxes(data, 12, len(data)):
+        if end > len(data):
             raise ValueError("bad box length")
         if tag == b"jp2c":
             return data[body:end]
-        i = end
     raise ValueError("no jp2c box")
+
+
+def _siz_grid(cs: bytes) -> tuple[int, int, int, int]:
+    """(Xsiz, Ysiz, XOsiz, YOsiz) from the SIZ segment that follows
+    SOC (§A.5.1) — the image grid both the decoder and jp2_dims
+    read."""
+    if cs[:4] != _SOC_SIZ:
+        raise ValueError("missing SOC/SIZ")
+    return _u(cs, 8, 4), _u(cs, 12, 4), _u(cs, 16, 4), _u(cs, 20, 4)
+
+
+def jp2_dims(data: bytes) -> tuple[int, int] | None:
+    """(width, height) from a JPEG-2000 payload header, or None — the
+    dimension path for JPX payloads the decoder's profile does not
+    cover. Two layouts, both magic-gated so arbitrary binaries can
+    never sniff as JP2:
+
+    - JP2 box container (§I.5): the ihdr box inside the jp2h superbox
+      — HEIGHT then WIDTH, 4 bytes big-endian each (§I.5.3.1, note
+      the order).
+    - Raw codestream (§A.5.1): SOC + SIZ, where the image grid is
+      Xsiz/Ysiz minus the XOsiz/YOsiz reference-grid offsets.
+
+    Only the header boxes must be present: a payload cut short after
+    them still reports its dims."""
+    n = len(data)
+    if data.startswith(_JP2_SIG):
+        for tag, body, end in _boxes(data, 12, n):
+            if tag != b"jp2h":
+                continue
+            for sub, b, _end in _boxes(data, body, min(end, n)):
+                if sub == b"ihdr" and b + 8 <= n:
+                    h, w = _u(data, b, 4), _u(data, b + 4, 4)
+                    return (w, h) if w and h else None
+        return None
+    try:
+        xs, ys, xo, yo = _siz_grid(data)
+    except ValueError:
+        return None
+    return (xs - xo, ys - yo) if xs > xo and ys > yo else None
 
 
 def _u(data: bytes, i: int, n: int) -> int:
@@ -478,21 +532,18 @@ def decode_jp2(data: bytes, max_pixels: int = 64_000_000) -> np.ndarray | None:
     reversible profile. `max_pixels` bounds the sequential tier-1
     work a crafted header can demand, like jbig2.decode_jbig2."""
     try:
-        return _decode_inner(bytes(data or b""), max_pixels)
+        return _decode_inner(bytes(data or b""), max_pixels)[0]
     except Exception:
         return None
 
 
-def _decode_inner(data: bytes, max_pixels: int) -> np.ndarray | None:
+def _decode_inner(data: bytes, max_pixels: int) -> tuple[np.ndarray, int]:
+    """decode_jp2's pixels and the first component's bit depth;
+    raises on anything outside the profile."""
     cs = _box_codestream(data)
-    if cs[:2] != b"\xff\x4f":
-        raise ValueError("missing SOC")
-    i = 2
     # --- SIZ ---
-    if cs[i : i + 2] != b"\xff\x51":
-        raise ValueError("missing SIZ")
-    xsiz, ysiz = _u(cs, i + 6, 4), _u(cs, i + 10, 4)
-    xo, yo = _u(cs, i + 14, 4), _u(cs, i + 18, 4)
+    xsiz, ysiz, xo, yo = _siz_grid(cs)
+    i = 2
     xt, yt = _u(cs, i + 22, 4), _u(cs, i + 26, 4)
     xto, yto = _u(cs, i + 30, 4), _u(cs, i + 34, 4)
     ncomp = _u(cs, i + 38, 2)
@@ -804,9 +855,7 @@ def _decode_inner(data: bytes, max_pixels: int) -> np.ndarray | None:
                     (1 << depth) - 1 if not signed
                     else (1 << (depth - 1)) - 1)
         out.append(p.astype(np.int32))
-    if ncomp == 1:
-        return out[0]
-    return np.stack(out, axis=-1)
+    return (out[0] if ncomp == 1 else np.stack(out, axis=-1)), comps[0][0]
 
 
 def decode_jp2_gray(
@@ -814,12 +863,14 @@ def decode_jp2_gray(
 ) -> np.ndarray | None:
     """decode_jp2 collapsed to one uint8 grayscale plane (BT.601
     luma for 3-component images, like jpeg.decode_jpeg_gray;
-    component 0 otherwise), scaled to 8 bits from the coded depth."""
-    px = decode_jp2(data, max_pixels)
-    if px is None:
+    component 0 otherwise), scaled to 8 bits from the first
+    component's coded depth."""
+    try:
+        px, depth = _decode_inner(bytes(data or b""), max_pixels)
+    except Exception:
         return None
-    # recover per-component depth for scaling
-    def _scale(plane: np.ndarray, depth: int) -> np.ndarray:
+
+    def _scale(plane: np.ndarray) -> np.ndarray:
         if depth == 8:
             return np.clip(plane, 0, 255).astype(np.uint8)
         maxv = (1 << depth) - 1
@@ -827,24 +878,10 @@ def decode_jp2_gray(
             (plane.astype(np.int64) * 255 + maxv // 2) // maxv, 0, 255
         ).astype(np.uint8)
 
-    depth = _jp2_depth(data)
-    if depth is None:
-        return None
     if px.ndim == 2:
-        return _scale(px, depth)
+        return _scale(px)
     if px.shape[-1] >= 3:
-        r = _scale(px[..., 0], depth)
-        g = _scale(px[..., 1], depth)
-        b = _scale(px[..., 2], depth)
+        r, g, b = _scale(px[..., 0]), _scale(px[..., 1]), _scale(px[..., 2])
         y = 0.299 * r + 0.587 * g + 0.114 * b
         return np.clip(np.round(y), 0, 255).astype(np.uint8)
-    return _scale(px[..., 0], depth)
-
-
-def _jp2_depth(data: bytes) -> int | None:
-    """First component's bit depth from SIZ (unsigned offset depth)."""
-    try:
-        cs = _box_codestream(bytes(data or b""))
-        return (cs[2 + 40] & 0x7F) + 1 if cs[2:4] == b"\xff\x51" else None
-    except Exception:
-        return None
+    return _scale(px[..., 0])

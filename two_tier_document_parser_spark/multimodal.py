@@ -7,17 +7,18 @@ pixels through the driver: payloads live in a `binary` column (or an
 object-store pointer), metadata in typed columns, and decode /
 feature-extract runs as Arrow-batched mapInPandas.
 
-The actual codecs (PIL/ffmpeg) are NOT installed in this container —
-the decode step is a clearly-marked deterministic stub
-(`_decode_stub`) so the Spark-side plumbing (schema, partitioning,
-UDF signature, batch shape) is real and tested while the pixel math
-is swappable.
+Still images decode through the package's own from-scratch codecs,
+listed once in `_image_codecs` (no PIL in this container); video and
+audio have no codec here (no ffmpeg), so their dims come from a
+deterministic hash fallback (`_decode_stub`) and their frames from a
+byte-chunk stub, with the Spark-side plumbing (schema, partitioning,
+UDF signature, batch shape) real around them.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -122,68 +123,69 @@ def media_side_table(
     )
 
 
-def _decode_stub(payload: bytes) -> tuple[int, int]:
-    """Dimension decode: REAL for PNG payloads (IHDR parse, png.py),
-    JPEG payloads (SOFn header parse, jpeg.py — round-3 verdict
-    task #4: DCT payloads stopped using the hash stub), TIFF
-    payloads (IFD tag parse, ccitt.py — the scanned-bilevel leg),
-    JPEG-2000 payloads (JP2 ihdr box / raw-codestream SIZ, jpeg.py),
-    JBIG2 payloads (page-info segment walk, ccitt.py), GIF payloads
-    (logical-screen descriptor, gif.py) and WebP payloads (RIFF
-    VP8/VP8L/VP8X headers, webp.py). Deterministic hash fallback only
-    for payloads with no image header at all. A production deployment
-    swaps the fallback for PIL/libvips/ffmpeg; the Arrow batching,
-    schema, and partitioning around it are already the production
-    shape."""
-    from .ccitt import jbig2_dims, tiff_dims
-    from .gif import gif_dims
-    from .jpeg import jp2_dims, jpeg_dims
-    from .png import png_dims
-    from .webp import webp_dims
+def _image_codecs() -> tuple[tuple[Callable, Callable], ...]:
+    """The one codec table: a (dims, decode_gray) row per still-image
+    format, in claim order. Each row's functions return None for a
+    payload that is not theirs (or, for decode, that their profile
+    does not cover); the first row that answers wins. Imported on
+    first use so the media kernels load no codec until a payload
+    needs one.
 
-    payload = payload or b""
-    dims = (
-        png_dims(payload)
-        or jpeg_dims(payload)
-        or tiff_dims(payload)
-        or jp2_dims(payload)
-        or jbig2_dims(payload)
-        or gif_dims(payload)
-        or webp_dims(payload)
+    - png: IHDR / every still color type + Adam7 (png.py)
+    - jpeg: SOFn header / baseline, extended and progressive 8/12-bit
+      (jpeg.py)
+    - tiff: first IFD / CCITT G4/G3 and baseline none/LZW/PackBits/
+      Deflate strips and tiles (ccitt.py)
+    - jbig2: page-info segment / generic and symbol-text regions
+      (jbig2.py)
+    - jp2: jp2h/ihdr box or raw SIZ / EBCOT with 5/3 or 9/7 wavelets
+      (jpeg2000.py)
+    - gif: logical screen / first frame, LZW + interlace +
+      transparency (gif.py)
+    - webp: VP8/VP8L/VP8X headers / lossless VP8L (webp.py); lossy
+      VP8 has dims but no decode."""
+    from .ccitt import decode_tiff_gray, tiff_dims
+    from .gif import decode_gif_gray, gif_dims
+    from .jbig2 import decode_jbig2_gray, jbig2_dims
+    from .jpeg import decode_jpeg_gray, jpeg_dims
+    from .jpeg2000 import decode_jp2_gray, jp2_dims
+    from .png import decode_png_gray, png_dims
+    from .webp import decode_webp_gray, webp_dims
+
+    return (
+        (png_dims, decode_png_gray),
+        (jpeg_dims, decode_jpeg_gray),
+        (tiff_dims, decode_tiff_gray),
+        (jbig2_dims, decode_jbig2_gray),
+        (jp2_dims, decode_jp2_gray),
+        (gif_dims, decode_gif_gray),
+        (webp_dims, decode_webp_gray),
     )
-    if dims is not None:
-        return dims
+
+
+def _decode_stub(payload: bytes) -> tuple[int, int]:
+    """(width, height): the header dims of the first codec in
+    `_image_codecs` that claims the payload, else a deterministic
+    hash fallback for payloads with no image header at all (video,
+    audio). A production deployment swaps the fallback for
+    ffmpeg; the Arrow batching, schema, and partitioning around it
+    are already the production shape."""
+    payload = payload or b""
+    for dims, _decode in _image_codecs():
+        wh = dims(payload)
+        if wh is not None:
+            return wh
     h = hashlib.sha256(payload).digest()
     return 16 + h[0] % 64, 16 + h[1] % 64
 
 
 def decode_image_gray(raw: bytes) -> "np.ndarray | None":
-    """Shared pixel-decode dispatcher for the media kernels: PNG (all
-    still-image color types + Adam7), JPEG (SOF0/SOF1/SOF2, 8/12-bit),
-    TIFF (G4/MH CCITT plus baseline none/LZW/PackBits/Deflate strips),
-    JBIG2, JPEG-2000, GIF and lossless WebP (VP8L) payloads ->
-    (h, w) uint8 grayscale via the from-scratch codecs, or None when
-    no codec claims the payload (lossy-VP8 WebP, video, audio — the
-    honest fallback class)."""
-    from .ccitt import decode_tiff_g4, decode_tiff_gray
-    from .gif import decode_gif_gray
-    from .jbig2 import decode_jbig2_gray
-    from .jpeg import decode_jpeg_gray
-    from .jpeg2000 import decode_jp2_gray
-    from .png import decode_png_gray
-    from .webp import decode_webp_gray
-
-    for dec in (
-        decode_png_gray,
-        decode_jpeg_gray,
-        decode_tiff_g4,
-        decode_tiff_gray,
-        decode_jbig2_gray,
-        decode_jp2_gray,
-        decode_gif_gray,
-        decode_webp_gray,
-    ):
-        pix = dec(raw)
+    """Shared pixel decode for the media kernels: (h, w) uint8
+    grayscale from the first codec in `_image_codecs` that decodes
+    the payload, or None when none does (lossy-VP8 WebP, video,
+    audio — the honest fallback class)."""
+    for _dims, decode in _image_codecs():
+        pix = decode(raw)
         if pix is not None:
             return pix
     return None
@@ -204,19 +206,8 @@ def resize_media(media: DataFrame, max_side: int = 32) -> DataFrame:
     """Arrow-batched resize: scale so the longer side is `max_side`,
     preserving aspect ratio in integer math.
 
-    For PNG payloads (png.decode_png_gray), JPEG payloads — baseline
-    AND progressive SOF2 (jpeg.decode_jpeg_gray — from-scratch T.81
-    huffman + IDCT + Annex G scan engine, round-3 task #4 + round-5
-    task #3), G4-TIFF payloads
-    (ccitt.decode_tiff_g4 — from-scratch T.6 MMR, the scanned-bilevel
-    leg of round-3 "what's missing" #2), JBIG2 generic-region
-    payloads (jbig2.decode_jbig2_gray — from-scratch T.88 MQ coder),
-    reversible JPEG-2000 payloads (jpeg2000.decode_jp2_gray —
-    from-scratch T.800 EBCOT + 5/3 lifting; with JBIG2 this closes
-    the round-4 "what's missing" #1 format families), GIF payloads
-    (gif.decode_gif_gray — LZW + interlace + transparency) and
-    lossless-WebP payloads (webp.decode_webp_gray — VP8L prefix
-    codes + LZ77 + transforms) the resample is REAL: decode
+    For every payload a codec in `_image_codecs` decodes
+    (decode_image_gray) the resample is REAL: decode
     pixels, nearest-neighbor index-sample in numpy, and re-encode —
     the output payload is a PNG whose IHDR dims equal the reported
     (width, height). Remaining non-decodable payloads (no pixel
@@ -290,11 +281,7 @@ def sample_frames(media: DataFrame, chunk: int = FRAME_CHUNK) -> DataFrame:
             ids, refs, idxs, frames = [], [], [], []
             for did, ref, p in zip(b["doc_id"], b["media_ref"], b["payload"]):
                 p = bytes(p) if p is not None else b""
-                gif_frames = (
-                    decode_gif_frames(p)
-                    if p[:6] in (b"GIF87a", b"GIF89a")
-                    else None
-                )
+                gif_frames = decode_gif_frames(p)
                 if gif_frames:
                     for i, fr in enumerate(gif_frames):
                         ids.append(did)
@@ -500,11 +487,8 @@ def media_dhash(media: DataFrame) -> DataFrame:
     accurate/service.py's first-seen id policy; dHash extends that
     from exact bytes to perceptual identity).
 
-    Decode is REAL for PNG (all still-image color types + Adam7) /
-    JPEG (baseline SOF0/SOF1 AND progressive SOF2 — r05 task #3
-    closed the dominant web-JPEG gap) / G4-TIFF / JBIG2
-    generic-region / reversible JPEG-2000 / GIF / lossless-WebP
-    payloads (the from-scratch codecs), with the same
+    Decode is REAL for every payload a codec in `_image_codecs`
+    decodes (decode_image_gray), with the same
     nearest-neighbor resample as resize_media. Non-decodable payloads (no pixel
     semantics in this sandbox) fall back to a sha256-derived hash —
     exact-dup-only for those, flagged real_pixels=false so downstream

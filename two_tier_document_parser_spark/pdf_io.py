@@ -1855,7 +1855,9 @@ def _lift_image(objs, d: dict, ref, media_ref: str) -> dict | None:
             rgb = np.frombuffer(data[: 3 * w * h], dtype=np.uint8).reshape(
                 h, w, 3
             )
-            # BT.601 integer luma — the repo-wide grayscale convention
+            # 8-bit fixed-point BT.601 luma, (77 R + 150 G + 29 B) >> 8:
+            # close to png.luma_bt601, which the image codecs use, but
+            # not the same pixels
             gray = (
                 (77 * rgb[:, :, 0].astype(np.uint32)
                  + 150 * rgb[:, :, 1].astype(np.uint32)

@@ -52,6 +52,14 @@ def encode_png_gray(pixels: np.ndarray) -> bytes:
     )
 
 
+def luma_bt601(r, g, b):
+    """Integer ITU-R BT.601 luma of integer R, G, B sample arrays:
+    (299 R + 587 G + 114 B) // 1000. Every codec that turns color into
+    the engine's grayscale plane (PNG, GIF, WebP, TIFF) goes through
+    this one formula; the caller picks the integer width and casts."""
+    return (299 * r + 587 * g + 114 * b) // 1000
+
+
 def png_dims(data: bytes) -> tuple[int, int] | None:
     """(width, height) from IHDR — a REAL header decode — or None if
     the payload is not a PNG."""
@@ -149,7 +157,7 @@ def _samples_to_gray(
             return None
         idx = np.clip(px, 0, len(palette) - 1)
         rgb = palette[idx].astype(np.int32)
-        g = (299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]) // 1000
+        g = luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2])
         if trns:
             a = np.frombuffer(trns, np.uint8).astype(np.int32)
             alpha = np.where(px < len(a), np.take(a, np.minimum(px, len(a) - 1)), 255)
@@ -169,7 +177,7 @@ def _samples_to_gray(
             g = g * (255 // ((1 << depth) - 1))
     else:  # 2 / 6: RGB(A)
         r, gg, b = px[..., 0], px[..., 1], px[..., 2]
-        g = (299 * r + 587 * gg + 114 * b) // 1000
+        g = luma_bt601(r, gg, b)
     if ctype in (4, 6):
         a = px[..., -1]
         g = (a * g + (255 - a) * 255 + 127) // 255

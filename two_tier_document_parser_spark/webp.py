@@ -34,15 +34,20 @@ sorted by x^2+y^2 with larger y first and positive x before
 negative) rather than pasted as a literal; the head of the table and
 the plain >120 codes are pinned by roundtrip fixtures.
 
-Output is grayscale uint8 (h, w) via the same integer BT.601 luma as
-gif.py/png.py, alpha composited over white (the engine's document
-convention). Runs inside the existing Arrow-batched mapInPandas
-media kernels: parallelism is per-payload, never a shuffle.
+Output is grayscale uint8 (h, w) via png.luma_bt601, the integer
+BT.601 luma gif.py/png.py use too, alpha composited over white (the
+engine's document convention). Runs inside the existing
+Arrow-batched mapInPandas media kernels: parallelism is per-payload,
+never a shuffle.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
+
+from .png import luma_bt601
 
 # code-length-code read order (spec §"Decoding the Code Lengths")
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -72,17 +77,25 @@ def _distance_map() -> list[tuple[int, int]]:
 _DIST_MAP = _distance_map()
 
 
-def webp_dims(data: bytes) -> tuple[int, int] | None:
-    """(width, height) from the RIFF headers — VP8L stream header,
-    VP8 frame header, or VP8X canvas size — or None if not WebP."""
+def _chunks(data: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """The one RIFF walk: yield (fourcc, body) per chunk after the
+    WEBP header, in order. A truncated last chunk yields the body
+    bytes present; nothing is yielded for a payload that is not
+    RIFF/WEBP."""
     if len(data) < 20 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        return None
+        return
     i = 12
     n = len(data)
     while i + 8 <= n:
-        tag = data[i : i + 4]
         ln = int.from_bytes(data[i + 4 : i + 8], "little")
-        body = data[i + 8 : i + 8 + ln]
+        yield data[i : i + 4], data[i + 8 : i + 8 + ln]
+        i += 8 + ln + (ln & 1)  # chunks are 2-byte aligned
+
+
+def webp_dims(data: bytes) -> tuple[int, int] | None:
+    """(width, height) from the RIFF headers — VP8L stream header,
+    VP8 frame header, or VP8X canvas size — or None if not WebP."""
+    for tag, body in _chunks(data):
         if tag == b"VP8X" and len(body) >= 10:
             w = int.from_bytes(body[4:7], "little") + 1
             h = int.from_bytes(body[7:10], "little") + 1
@@ -96,7 +109,6 @@ def webp_dims(data: bytes) -> tuple[int, int] | None:
             w = int.from_bytes(body[6:8], "little") & 0x3FFF
             h = int.from_bytes(body[8:10], "little") & 0x3FFF
             return (w, h) if w and h else None
-        i += 8 + ln + (ln & 1)  # chunks are 2-byte aligned
     return None
 
 
@@ -542,7 +554,7 @@ def _decode_vp8l(body: bytes) -> np.ndarray | None:
         r = ((px >> 16) & 0xFF).astype(np.int64)
         g = ((px >> 8) & 0xFF).astype(np.int64)
         b = (px & 0xFF).astype(np.int64)
-        luma = (299 * r + 587 * g + 114 * b) // 1000
+        luma = luma_bt601(r, g, b)
         luma = (a * luma + (255 - a) * 255 + 127) // 255
         return luma.astype(np.uint8).reshape(h, w)
     except (ValueError, EOFError, IndexError):
@@ -553,22 +565,11 @@ def decode_webp_gray(data: bytes) -> np.ndarray | None:
     """WebP bytes -> (h, w) uint8 grayscale for VP8L (lossless)
     frames, including inside VP8X containers; None for lossy VP8
     (dims still available via webp_dims) or non-WebP payloads."""
-    if (
-        not isinstance(data, (bytes, bytearray))
-        or len(data) < 20
-        or bytes(data[:4]) != b"RIFF"
-        or bytes(data[8:12]) != b"WEBP"
-    ):
+    if not isinstance(data, (bytes, bytearray)):
         return None
-    data = bytes(data)
-    i = 12
-    n = len(data)
-    while i + 8 <= n:
-        tag = data[i : i + 4]
-        ln = int.from_bytes(data[i + 4 : i + 8], "little")
+    for tag, body in _chunks(bytes(data)):
         if tag == b"VP8L":
-            return _decode_vp8l(data[i + 8 : i + 8 + ln])
-        i += 8 + ln + (ln & 1)
+            return _decode_vp8l(body)
     return None
 
 
