@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -17,6 +18,7 @@ def spark():
     from two_tier_document_parser_spark.pipeline import (
         enable_worker_preload,
         session_tuning,
+        ship_package,
     )
 
     # the JVM captures PYTHONPATH at launch and hands it to the worker
@@ -33,9 +35,14 @@ def spark():
             .config("spark.driver.memory", "4g")
         )
     ).getOrCreate()
+    # executors import the package by name: without the shipped zip a
+    # run from any directory but the repo root fails in the workers
+    zpath = ship_package(s)
     if saved is None:
         os.environ.pop("PYTHONPATH", None)
     else:
         os.environ["PYTHONPATH"] = saved
     yield s
     s.stop()
+    if zpath:
+        shutil.rmtree(os.path.dirname(zpath), ignore_errors=True)

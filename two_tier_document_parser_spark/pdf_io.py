@@ -72,6 +72,7 @@ stream; malformed payloads quarantine in-band (O19), never raise.
 
 from __future__ import annotations
 
+import binascii
 import hashlib
 import re
 import zlib
@@ -99,8 +100,32 @@ _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
 # hex strings, refs, booleans/null) — enough for page-tree navigation
 # ---------------------------------------------------------------------------
 
-_WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+# whitespace and %-comments ahead of a token (ISO 32000 §7.2.2-7.2.4).
+# Possessive: when no token follows, the match fails instead of
+# backtracking into a comment and reading a token out of it.
+_WS_PREFIX = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
+_STREAM_AFTER_RE = re.compile(_WS_PREFIX + rb"stream\r?\n")
+_WSB_RE = re.compile(rb"\s+")
+_HEXSTR_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
+
+# one token per match; the group that matched (m.lastindex) names it
+_OBJ_TOKEN = re.compile(
+    _WS_PREFIX + rb"(?:"
+    rb"/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 1 name body
+    rb"|(\d+)\s+\d+\s+R\b"                  # 2 indirect reference
+    rb"|([-+]?\d*\.?\d+)"                   # 3 number
+    rb"|(<<)|(>>)|(\[)|(\])"                # 4-7 dict and array brackets
+    rb"|<([0-9A-Fa-f\s]*)>"                 # 8 hex string body
+    rb"|(\()"                               # 9 literal string opener
+    rb"|(true)|(false)|(null)"              # 10-12 keywords
+    rb")"
+)
+_KEYWORDS = (True, False, None)
+
+# an array or dict nested this deep raises ValueError (511 levels
+# still parse): bounded work, no RecursionError
+_MAX_NESTING = 512
+_NO_KEY = object()  # an open dict awaits its next key (arrays hold it too)
 
 
 class Ref:
@@ -113,72 +138,69 @@ class Ref:
         return f"Ref({self.num})"
 
 
-def _skip_ws(b: bytes, i: int) -> int:
-    n = len(b)
-    while i < n:
-        c = b[i]
-        if c in _WS:
-            i += 1
-        elif c == 0x25:  # % comment
-            while i < n and b[i] not in (0x0A, 0x0D):
-                i += 1
-        else:
-            break
-    return i
-
-
-_NUM_RE = re.compile(rb"[-+]?\d*\.?\d+")
-_WSB_RE = re.compile(rb"\s+")
-_HEXSTR_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
-_NAME_RE = re.compile(rb"/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-_REF_RE = re.compile(rb"(\d+)\s+\d+\s+R\b")
+def _hex_bytes(h: bytes) -> bytes:
+    """Hex string body -> bytes: whitespace is dropped and an odd
+    final digit is padded with 0 (ISO 32000 §7.3.4.3)."""
+    try:
+        return binascii.unhexlify(h)  # clean even-length digits
+    except binascii.Error:
+        h = _WSB_RE.sub(b"", h)
+        if len(h) % 2:
+            h += b"0"
+        return binascii.unhexlify(h)
 
 
 def _parse_obj(b: bytes, i: int):
-    """Parse one PDF object at offset i -> (value, next_offset)."""
-    i = _skip_ws(b, i)
-    c = b[i : i + 1]
-    if c == b"<":
-        if b[i + 1 : i + 2] == b"<":
-            d: dict[str, object] = {}
-            i += 2
-            while True:
-                i = _skip_ws(b, i)
-                if b[i : i + 2] == b">>":
-                    return d, i + 2
-                key, i = _parse_obj(b, i)
-                val, i = _parse_obj(b, i)
-                d[key] = val
-        m = _HEXSTR_RE.match(b, i)
-        hexs = _WSB_RE.sub(b"", m.group(1))
-        if len(hexs) % 2:
-            hexs += b"0"
-        return _decode_pdf_string(bytes.fromhex(hexs.decode())), m.end()
-    if c == b"/":
-        m = _NAME_RE.match(b, i)
-        return m.group(0)[1:].decode("latin-1"), m.end()
-    if c == b"[":
-        arr = []
-        i += 1
-        while True:
-            i = _skip_ws(b, i)
-            if b[i : i + 1] == b"]":
-                return arr, i + 1
-            v, i = _parse_obj(b, i)
-            arr.append(v)
-    if c == b"(":
-        return _parse_literal_string(b, i)
-    m = _REF_RE.match(b, i)
-    if m:
-        return Ref(int(m.group(1))), m.end()
-    m = _NUM_RE.match(b, i)
-    if m:
-        t = m.group(0)
-        return (float(t) if b"." in t else int(t)), m.end()
-    for kw, v in ((b"true", True), (b"false", False), (b"null", None)):
-        if b.startswith(kw, i):
-            return v, i + len(kw)
-    raise ValueError(f"bad PDF object at {i}")
+    """Parse one PDF object at offset i -> (value, next_offset).
+    Iterative: `stack` holds the open arrays and dicts, innermost
+    last, and `keys` the pending key of each (_NO_KEY when the next
+    token is a key, and always for arrays). Raises ValueError on
+    malformed input and at _MAX_NESTING levels of containers."""
+    stack: list = []
+    keys: list = []
+    match = _OBJ_TOKEN.match
+    while True:
+        m = match(b, i)
+        if m is None:
+            raise ValueError(f"bad PDF object at {i}")
+        i = m.end()
+        g = m.lastindex
+        if g == 1:
+            v = m.group(1).decode("latin-1")
+        elif g == 2:
+            v = Ref(int(m.group(2)))
+        elif g == 3:
+            t = m.group(3)
+            v = float(t) if b"." in t else int(t)
+        elif g == 4 or g == 6:
+            if len(stack) == _MAX_NESTING - 1:
+                raise ValueError(f"PDF object nested too deep at {i}")
+            stack.append({} if g == 4 else [])
+            keys.append(_NO_KEY)
+            continue
+        elif g == 5 or g == 7:
+            if not stack or keys[-1] is not _NO_KEY or (
+                stack[-1].__class__ is not (dict if g == 5 else list)
+            ):
+                raise ValueError(f"unbalanced PDF object at {i}")
+            keys.pop()
+            v = stack.pop()
+        elif g == 8:
+            v = _decode_pdf_string(_hex_bytes(m.group(8)))
+        elif g == 9:
+            v, i = _parse_literal_string(b, i - 1)
+        else:
+            v = _KEYWORDS[g - 10]
+        if not stack:
+            return v, i
+        top = stack[-1]
+        if top.__class__ is list:
+            top.append(v)
+        elif keys[-1] is _NO_KEY:
+            keys[-1] = v
+        else:
+            top[keys[-1]] = v  # an array or dict key raises TypeError
+            keys[-1] = _NO_KEY
 
 
 _ESCAPES = {
@@ -248,21 +270,20 @@ class _PdfStr(str):
 
     raw: bytes
 
-    def __new__(cls, s: str, raw: bytes):
-        obj = super().__new__(cls, s)
-        obj.raw = raw
-        return obj
-
 
 def _decode_pdf_string(raw: bytes) -> _PdfStr:
     if raw[:2] == b"\xfe\xff":
-        return _PdfStr(raw[2:].decode("utf-16-be", errors="replace"), raw)
-    s = raw.decode("latin-1")
-    if not raw.isascii():
+        # "utf-16" reads the big-endian BOM and drops it, on the
+        # codec's C fast path ("utf-16-be" goes through Python)
+        s = _PdfStr(raw.decode("utf-16", "replace"))
+    elif raw.isascii():
+        s = _PdfStr(raw.decode("latin-1"))
+    else:
         # WinAnsi differs from latin-1 only at 0x80-0x9F: skip the
         # (comparatively costly) translate for pure-ASCII strings
-        s = s.translate(_WINANSI_MAP)
-    return _PdfStr(s, raw)
+        s = _PdfStr(raw.decode("latin-1").translate(_WINANSI_MAP))
+    s.raw = raw
+    return s
 
 
 def _hex_str(s: str) -> bytes:
@@ -358,17 +379,16 @@ def _cmap_decode(raw: bytes, cmap: dict, widths: list[int]) -> str:
 # content-stream interpreter
 # ---------------------------------------------------------------------------
 
+# one token per match; the group that matched (m.lastindex) names it
 _CS_TOKEN = re.compile(
-    rb"\((?:\\.|[^\\()])*\)"      # literal string (writer emits hex only)
-    rb"|<<|>>"
-    rb"|<[0-9A-Fa-f\s]*>"
-    rb"|/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*"
-    rb"|[-+]?\d*\.?\d+"
-    rb"|\[|\]"
-    rb"|[A-Za-z'\"*]{1,3}"
-    rb"|\("  # lone opener: literals with BALANCED nested parens fail
-              # the alternative above; the interpreter re-scans from
-              # here with the real string scanner
+    rb"([-+]?\d*\.?\d+)"                     # 1 number
+    rb"|([A-Za-z'\"*]{1,3}|>>)"              # 2 operator (a stray >> too)
+    rb"|<([0-9A-Fa-f\s]*)>"                  # 3 hex string body
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 4 name body
+    rb"|(<<)"                                # 5 inline dict opener
+    rb"|(\()"                                # 6 literal string opener
+    rb"|[\[\]]"                              # TJ array brackets: ignored
+    rb"|%[^\r\n]*+"                          # comment (§7.2.4): ignored
 )
 
 _MARK_KIND = {
@@ -500,70 +520,79 @@ def _interp_page(
         else:
             spans.append(("text", txt, ""))
 
-    skip_until = 0  # one finditer pass; inline dicts advance this
-    for m in _CS_TOKEN.finditer(content):
-        if m.start() < skip_until:
-            continue
-        t = m.group(0)
-        c = t[:1]
-        if c == b"(":
-            # re-scan from the token start with the real string
-            # scanner: PDF literal strings may contain BALANCED nested
-            # parens, which a regex alternative cannot match
-            s, skip_until = _parse_literal_string(content, m.start())
-            operands.append(s)
-        elif t == b"<<":
-            # inline property dict: re-parse from the token start
-            d, skip_until = _parse_obj(content, m.start())
-            operands.append(d)
-        elif c == b"<":
-            hexs = _WSB_RE.sub(b"", t[1:-1])
-            if len(hexs) % 2:
-                hexs += b"0"
-            operands.append(_decode_pdf_string(bytes.fromhex(hexs.decode())))
-        elif c == b"/":
-            operands.append(t[1:].decode("latin-1"))
-        elif t in (b"[", b"]"):
-            continue  # TJ arrays: strings already land on the stack
-        elif t[:1].isdigit() or c in b"+-." or (t[:1] == b"." ):
-            operands.append(float(t) if b"." in t else int(t))
-        else:
-            op = t.decode("latin-1")
-            if op == "Tf" and len(operands) >= 1 and isinstance(operands[-1], (int, float)):
+    # One finditer pass, restarted after each construct that is
+    # scanned by its own parser (literal strings may nest balanced
+    # parens, inline dicts nest, inline images hold raw bytes): the
+    # restart begins at the construct's end, so no token begun inside
+    # it (a `%` in a string, say) can swallow the bytes after it.
+    pos = 0
+    while True:
+        for m in _CS_TOKEN.finditer(content, pos):
+            g = m.lastindex
+            if g == 1:
+                t = m.group(1)
+                operands.append(float(t) if b"." in t else int(t))
+                continue
+            if g != 2:
+                if g == 3:
+                    operands.append(_decode_pdf_string(_hex_bytes(m.group(3))))
+                elif g == 4:
+                    operands.append(m.group(4).decode("latin-1"))
+                elif g == 5:
+                    d, pos = _parse_obj(content, m.start())
+                    operands.append(d)
+                    break
+                elif g == 6:
+                    s, pos = _parse_literal_string(content, m.start())
+                    operands.append(s)
+                    break
+                continue  # None: TJ brackets, comments
+            op = m.group(2)
+            if op == b"Tm" and len(operands) >= 6:
+                y = float(operands[-1])
+            elif op == b"Tj" and operands and isinstance(operands[-1], str):
+                show(dec(operands[-1]))
+            elif op == b"Tf" and len(operands) >= 1 and isinstance(operands[-1], (int, float)):
                 size = float(operands[-1])
                 if fonts and len(operands) >= 2:
                     cur_cmap = fonts.get(str(operands[-2]))
-            elif op == "BT":
+            elif op == b"BMC" and operands:
+                stack.append((str(operands[-1]), {}))
+                buf = []
+            elif op == b"EMC" and stack:
+                tag, props = stack.pop()
+                flush_region(tag, props)
+                buf = []
+            elif op == b"BT":
                 y = 0.0  # BT initializes the text matrix to identity
-            elif op in ("Td", "TD") and len(operands) >= 2:
+            elif op == b"BDC" and len(operands) >= 2:
+                props = operands[-1] if isinstance(operands[-1], dict) else {}
+                stack.append((str(operands[-2]), props))
+                buf = []
+            elif op == b"Do" and operands:
+                nm = str(operands[-1])
+                xo = xobjects.get(nm)
+                if xo is not None and xo.get("Subtype") == "Image":
+                    spans.append(
+                        ("image", str(xo.get("TTDPAlt", "")),
+                         str(xo.get("TTDPRef", "")))
+                    )
+                    if image_uses is not None:
+                        image_uses.append(nm)
+            elif (op == b"Td" or op == b"TD") and len(operands) >= 2:
                 # Td/TD translate RELATIVE to the current line matrix
                 # (ISO 32000 §9.4.2) — classic multi-line PDFs step
                 # down with '0 -14 Td' per line
                 y += float(operands[-1])
-            elif op == "Tm" and len(operands) >= 6:
-                y = float(operands[-1])
-            elif op == "Tj" and operands and isinstance(operands[-1], str):
-                show(dec(operands[-1]))
-            elif op == "TJ":
+            elif op == b"TJ":
                 txt = "".join(
                     dec(x) for x in operands if isinstance(x, str)
                 )
                 if txt:
                     show(txt)
-            elif op in ("'", '"') and operands and isinstance(operands[-1], str):
+            elif (op == b"'" or op == b'"') and operands and isinstance(operands[-1], str):
                 show(dec(operands[-1]))
-            elif op == "BMC" and operands:
-                stack.append((str(operands[-1]), {}))
-                buf = []
-            elif op == "BDC" and len(operands) >= 2:
-                props = operands[-1] if isinstance(operands[-1], dict) else {}
-                stack.append((str(operands[-2]), props))
-                buf = []
-            elif op == "EMC" and stack:
-                tag, props = stack.pop()
-                flush_region(tag, props)
-                buf = []
-            elif op == "BI":
+            elif op == b"BI":
                 # inline image (§8.9.7): skip params + RAW payload to
                 # EI in one jump; the image keeps its reading-order
                 # slot as a span. The skip is EXACT whenever the spec
@@ -591,18 +620,13 @@ def _interp_page(
                         )
                     if mei is None:
                         mei = _INLINE_EI_RE.search(content, mid.end())
-                    skip_until = mei.end() if mei else len(content)
                     spans.append(("image", "", ""))
-            elif op == "Do" and operands:
-                xo = xobjects.get(str(operands[-1]))
-                if xo is not None and xo.get("Subtype") == "Image":
-                    spans.append(
-                        ("image", str(xo.get("TTDPAlt", "")),
-                         str(xo.get("TTDPRef", "")))
-                    )
-                    if image_uses is not None:
-                        image_uses.append(str(operands[-1]))
+                    operands.clear()
+                    pos = mei.end() if mei else len(content)
+                    break
             operands.clear()
+        else:
+            break
     # unterminated regions at stream end: flush best-effort
     while stack:
         tag, props = stack.pop()
@@ -615,18 +639,33 @@ def _interp_page(
 # ---------------------------------------------------------------------------
 
 
-def _resolve(objs: dict[int, bytes], v):
+def _obj_value(objs: _ObjMap, num: int):
+    """Object `num`'s parsed body (None when undefined), parsed once
+    per body: a memo hit needs the very body object it was parsed
+    from, so a body replaced by string decryption or an /ObjStm lift
+    is parsed again."""
+    body = objs.get(num)
+    if body is None:
+        return None
+    hit = objs.memo.get(num)
+    if hit is not None and hit[0] is body:
+        return hit[1]
+    v = _parse_obj(body, 0)[0]
+    objs.memo[num] = (body, v)
+    return v
+
+
+def _resolve(objs: _ObjMap, v):
     seen = 0
     while isinstance(v, Ref):
-        body = objs.get(v.num)
-        if body is None or seen > 32:
+        if seen > 32:
             return None
-        v = _parse_obj(body, 0)[0]
+        v = _obj_value(objs, v.num)
         seen += 1
     return v
 
 
-def _obj_dict(objs: dict[int, bytes], ref) -> dict | None:
+def _obj_dict(objs: _ObjMap, ref) -> dict | None:
     v = _resolve(objs, ref)
     return v if isinstance(v, dict) else None
 
@@ -758,7 +797,7 @@ def _runlength_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _apply_filters(data: bytes, d: dict, objs: dict[int, bytes]) -> bytes:
+def _apply_filters(data: bytes, d: dict, objs: _ObjMap) -> bytes:
     """Run the stream's /Filter chain. Terminal image codecs pass
     through untouched (their bytes are the media payload, not text).
     Raises on corrupt input — parse_pdf's catch-all quarantines."""
@@ -815,12 +854,12 @@ def _apply_filters(data: bytes, d: dict, objs: dict[int, bytes]) -> bytes:
     return data
 
 
-def _stream_bytes(objs: dict[int, bytes], ref) -> bytes:
+def _stream_bytes(objs: _ObjMap, ref) -> bytes:
     body = objs.get(ref.num) if isinstance(ref, Ref) else None
     if body is None:
         return b""
-    d, _ = _parse_obj(body, 0)
-    sm = re.search(rb"stream\r?\n", body)
+    d = _obj_value(objs, ref.num)
+    sm = _STREAM_KW_RE.search(body)
     if not sm:
         return b""
     data = body[sm.end():]
@@ -871,14 +910,17 @@ class _ObjMap(dict):
     top-level bodies and /ObjStm-delivered ones. `crypt` holds the
     verified StdCrypt context for encrypted files (None otherwise) —
     attached here so _stream_bytes sees it everywhere without
-    threading a parameter through every call site."""
+    threading a parameter through every call site. `memo` maps a
+    number to (body, parsed value) for _obj_value; it lives and dies
+    with the document."""
 
-    __slots__ = ("pos", "crypt")
+    __slots__ = ("pos", "crypt", "memo")
 
     def __init__(self) -> None:
         super().__init__()
         self.pos: dict[int, int] = {}
         self.crypt = None
+        self.memo: dict[int, tuple] = {}
 
 
 def _scan_objects(data: bytes) -> _ObjMap:
@@ -903,7 +945,7 @@ def _scan_objects(data: bytes) -> _ObjMap:
             continue
         end = vend
         if isinstance(val, dict):
-            sm = _STREAM_KW_RE.match(data, _skip_ws(data, vend))
+            sm = _STREAM_AFTER_RE.match(data, vend)
             if sm:
                 length = val.get("Length")
                 if isinstance(length, int) and sm.end() + length <= n:
@@ -914,8 +956,14 @@ def _scan_objects(data: bytes) -> _ObjMap:
                 end = (es + len(b"endstream")) if es != -1 else n
         eo = data.find(b"endobj", end)
         num = int(h.group(1))
-        objs[num] = data[body_start : eo if eo != -1 else end]
+        body_end = eo if eo != -1 else end
+        body = objs[num] = data[body_start:body_end]
         objs.pos[num] = h.start()
+        if isinstance(val, (dict, list)):
+            # a container parses the same from the body alone; a bare
+            # value may not: `1 0 R` just before `endobj` is a ref only
+            # once the body is cut out (the `\b` after R sees its end)
+            objs.memo[num] = (body, val)
         pos = (eo + len(b"endobj")) if eo != -1 else end
 
 
@@ -936,9 +984,8 @@ def _expand_object_streams(objs: _ObjMap) -> None:
     )
     pos = objs.pos
     for num in containers:
-        body = objs[num]
         try:
-            d, _ = _parse_obj(body, 0)
+            d = _obj_value(objs, num)
         except Exception:
             continue
         if not isinstance(d, dict) or d.get("Type") != "ObjStm":
@@ -960,7 +1007,7 @@ def _expand_object_streams(objs: _ObjMap) -> None:
                 pos[onum] = my_pos
 
 
-def _find_trailer(data: bytes, objs: dict[int, bytes]) -> dict | None:
+def _find_trailer(data: bytes, objs: _ObjMap) -> dict | None:
     """The trailer dict: the classic `trailer` keyword dicts when
     present (table xref), else the LAST /Type /XRef cross-reference
     STREAM dict (PDF 1.5+, §7.5.8 — its dict carries /Root and
@@ -990,11 +1037,11 @@ def _find_trailer(data: bytes, objs: dict[int, bytes]) -> dict | None:
     if merged is not None:
         return merged
     trailer = None
-    for body in objs.values():
+    for num, body in objs.items():
         if b"/XRef" not in body:
             continue
         try:
-            d, _ = _parse_obj(body, 0)
+            d = _obj_value(objs, num)
         except Exception:
             continue
         if isinstance(d, dict) and d.get("Type") == "XRef":
@@ -1121,10 +1168,7 @@ def _decrypt_body_strings(body: bytes, dec) -> bytes:
         elif c == b"<":
             m = _HEXSTR_RE.match(head, i)
             if m:
-                hexs = _WSB_RE.sub(b"", m.group(1))
-                if len(hexs) % 2:
-                    hexs += b"0"
-                raw = bytes.fromhex(hexs.decode())
+                raw = _hex_bytes(m.group(1))
                 try:
                     raw = dec(raw)
                 except Exception:
@@ -1153,7 +1197,7 @@ def _decrypt_strings(objs: _ObjMap, crypt) -> None:
         )
 
 
-def _font_decoder(objs: dict[int, bytes], fd: dict | None, cmap_cache: dict):
+def _font_decoder(objs: _ObjMap, fd: dict | None, cmap_cache: dict):
     """Resolve ONE font dict to its decode map — a (cmap, widths)
     tuple compatible with _cmap_decode, pdf_fonts.UNMAPPABLE for a
     symbolic font with no recoverable mapping (shown text
@@ -1274,11 +1318,9 @@ def _parse_pdf_inner(data: bytes) -> dict | None:
         xobjects = {}
         if isinstance(xo_map, dict):
             for nm, ref in xo_map.items():
-                body = objs.get(ref.num) if isinstance(ref, Ref) else None
-                if body is not None:
-                    d = _parse_obj(body, 0)[0]
-                    if isinstance(d, dict):
-                        xobjects[nm] = d
+                d = _obj_value(objs, ref.num) if isinstance(ref, Ref) else None
+                if isinstance(d, dict):
+                    xobjects[nm] = d
         # font decode maps, priority ToUnicode CMap (§9.10.3) >
         # /Encoding + /Differences (§9.6.6.3) > embedded symbolic
         # TrueType cmap/post (round-3 verdict task #6). Font dicts
@@ -1579,7 +1621,7 @@ def encrypt_pdf(
     for num in sorted(objs):
         body = objs[num]
         d, end = _parse_obj(body, 0)
-        sm = _STREAM_KW_RE.match(body, _skip_ws(body, end))
+        sm = _STREAM_AFTER_RE.match(body, end)
         enc = lambda raw, _n=num: crypt.enc(raw, _n)  # noqa: E731
         if isinstance(d, dict) and sm:
             length = d.get("Length")
@@ -1756,7 +1798,7 @@ MEDIA_TABLE_SCHEMA = (
 )
 
 
-def _terminal_filter(objs: dict[int, bytes], d: dict):
+def _terminal_filter(objs: _ObjMap, d: dict):
     """(terminal image filter name or None, its DecodeParms dict) for
     a stream dict — the parms entry aligned with the filter position
     exactly as _apply_filters aligns them."""
@@ -1903,12 +1945,10 @@ def _pdf_media_inner(data: bytes) -> list[dict]:
         xrefs: dict[str, object] = {}
         if isinstance(xo_map, dict):
             for nm, ref in xo_map.items():
-                body = objs.get(ref.num) if isinstance(ref, Ref) else None
-                if body is not None:
-                    dd = _parse_obj(body, 0)[0]
-                    if isinstance(dd, dict):
-                        xobjects[nm] = dd
-                        xrefs[nm] = ref
+                dd = _obj_value(objs, ref.num) if isinstance(ref, Ref) else None
+                if isinstance(dd, dict):
+                    xobjects[nm] = dd
+                    xrefs[nm] = ref
         contents = page.get("Contents")
         content_refs = contents if isinstance(contents, list) else [contents]
         content = b"".join(
