@@ -74,6 +74,15 @@ def test_comment_after_inline_dict_and_image():
     assert _texts(content) == [("image", ""), ("text", "z")]
 
 
+def test_number_runs_split_like_single_numbers():
+    # a run of numbers ends at NUL and at anything not a number
+    content = (b"BT 1 0 0 1 72 700 Tm (a) Tj 0 -660.5 Td (b) Tj"
+               b" 0\x00-20 Td (c) Tj 1.5.5 1 2. 3 Td (d) Tj 12 Tf (e) Tj ET")
+    assert _texts(content) == [("text", "a"), ("boilerplate", "b"),
+                               ("boilerplate", "c"), ("boilerplate", "d"),
+                               ("boilerplate", "e")]
+
+
 # ---------------------------------------------------------------------------
 # the nesting cap
 # ---------------------------------------------------------------------------

@@ -381,7 +381,9 @@ def _cmap_decode(raw: bytes, cmap: dict, widths: list[int]) -> str:
 
 # one token per match; the group that matched (m.lastindex) names it
 _CS_TOKEN = re.compile(
-    rb"([-+]?\d*\.?\d+)"                     # 1 number
+    # 1: a run of numbers, cut apart by bytes.split(): its separators
+    # are whitespace to both PDF and split() (a NUL ends the run)
+    rb"([-+]?\d*\.?\d+(?:[\t\n\x0c\r ]+[-+]?\d*\.?\d+)*)"
     rb"|([A-Za-z'\"*]{1,3}|>>)"              # 2 operator (a stray >> too)
     rb"|<([0-9A-Fa-f\s]*)>"                  # 3 hex string body
     rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 4 name body
@@ -531,7 +533,12 @@ def _interp_page(
             g = m.lastindex
             if g == 1:
                 t = m.group(1)
-                operands.append(float(t) if b"." in t else int(t))
+                if b"." in t:
+                    operands.extend(
+                        float(x) if b"." in x else int(x) for x in t.split()
+                    )
+                else:
+                    operands.extend(map(int, t.split()))
                 continue
             if g != 2:
                 if g == 3:
