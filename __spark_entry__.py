@@ -2151,7 +2151,7 @@ def q_binary_ingest(spark, sf_dir):
 # derived from `documents` so DuckDB can verify values exactly.
 # The extraction-derived variants stay pytest-gated
 # (test_scale_machinery.py::test_media_features_stub,
-# test_new_ops.py::test_resize_and_frame_sample).
+# test_new_ops.py::test_png_dhash_and_frame_sample).
 # --------------------------------------------------------------------------
 
 def _media_df(spark, sf_dir, hex_payload: bool = False):

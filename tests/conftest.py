@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 from pathlib import Path
 
@@ -37,12 +36,10 @@ def spark():
     ).getOrCreate()
     # executors import the package by name: without the shipped zip a
     # run from any directory but the repo root fails in the workers
-    zpath = ship_package(s)
+    ship_package(s)
     if saved is None:
         os.environ.pop("PYTHONPATH", None)
     else:
         os.environ["PYTHONPATH"] = saved
     yield s
     s.stop()
-    if zpath:
-        shutil.rmtree(os.path.dirname(zpath), ignore_errors=True)

@@ -1,7 +1,7 @@
 """CCITT Group 4 (ITU-T T.6) codec + minimal TIFF container: table
 integrity, encode/decode round trips across the full run-length code
 space, container round trips, and the Spark-side media-pipeline
-integration (real dims, real pixels in resize_media)."""
+integration (real dims, real pixels in media_dhash)."""
 
 import numpy as np
 import pytest
@@ -97,17 +97,14 @@ def test_tiff_wrap_round_trip():
 
 def test_media_pipeline_g4(spark):
     """End-to-end through the Spark kernels: a G4-TIFF payload gets
-    REAL dims from extract_media_features' decode path and a REAL
-    nearest-neighbor resample from resize_media (output PNG pixels
-    equal the numpy index-sample of the decoded source)."""
+    REAL dims from extract_media_features' decode path and REAL
+    pixels in media_dhash (its dHash equals the same pixels' as
+    PNG)."""
     from two_tier_document_parser_spark.multimodal import (
         _decode_stub,
-        resize_media,
+        media_dhash,
     )
-    from two_tier_document_parser_spark.png import (
-        decode_png_gray,
-        png_dims,
-    )
+    from two_tier_document_parser_spark.png import encode_png_gray
 
     rng = np.random.default_rng(9)
     src = np.where(rng.random((24, 48)) < 0.3, 0, 255).astype(np.uint8)
@@ -115,17 +112,14 @@ def test_media_pipeline_g4(spark):
     assert _decode_stub(payload) == (48, 24)
 
     media = spark.createDataFrame(
-        [("d1", "page_0_img_0", "image", payload)],
+        [("g4", "page_0_img_0", "image", payload),
+         ("png", "page_0_img_0", "image", encode_png_gray(src))],
         "doc_id string, media_ref string, kind string, payload binary",
     )
-    (r,) = resize_media(media, max_side=16).collect()
-    assert (r["width"], r["height"]) == (16, 8)
-    assert png_dims(bytes(r["payload"])) == (16, 8)
-    rows = (np.arange(8) * 24) // 8
-    cols = (np.arange(16) * 48) // 16
-    assert np.array_equal(
-        decode_png_gray(bytes(r["payload"])), src[rows][:, cols]
-    )
+    got = {r.doc_id: (r.dhash, r.real_pixels)
+           for r in media_dhash(media).collect()}
+    assert got["g4"] == got["png"]
+    assert got["g4"][1] is True
 
 
 def test_g3_1d_round_trips():

@@ -779,14 +779,14 @@ def test_type5_first_segment_rejected_by_dims_and_decoder():
 
 def test_media_pipeline_jbig2(spark):
     """End-to-end through the Spark kernels: a JBIG2 embedded stream
-    gets REAL dims from extract_media_features' decode path and a
-    REAL nearest-neighbor resample from resize_media — the same
-    done-criterion shape as test_media_pipeline_g4."""
+    gets REAL dims from extract_media_features' decode path and REAL
+    pixels in media_dhash (its dHash equals the same pixels' as PNG)
+    — the same done-criterion shape as test_media_pipeline_g4."""
     from two_tier_document_parser_spark.multimodal import (
         _decode_stub,
-        resize_media,
+        media_dhash,
     )
-    from two_tier_document_parser_spark.png import decode_png_gray, png_dims
+    from two_tier_document_parser_spark.png import encode_png_gray
 
     bits = _rand(24, 48, 0.3, 61)
     payload = stream(
@@ -797,17 +797,14 @@ def test_media_pipeline_jbig2(spark):
     src = np.where(bits == 1, 0, 255).astype(np.uint8)
 
     media = spark.createDataFrame(
-        [("d1", "page_0_img_0", "image", payload)],
+        [("jb2", "page_0_img_0", "image", payload),
+         ("png", "page_0_img_0", "image", encode_png_gray(src))],
         "doc_id string, media_ref string, kind string, payload binary",
     )
-    (r,) = resize_media(media, max_side=16).collect()
-    assert (r["width"], r["height"]) == (16, 8)
-    assert png_dims(bytes(r["payload"])) == (16, 8)
-    rows = (np.arange(8) * 24) // 8
-    cols = (np.arange(16) * 48) // 16
-    assert np.array_equal(
-        decode_png_gray(bytes(r["payload"])), src[rows][:, cols]
-    )
+    got = {r.doc_id: (r.dhash, r.real_pixels)
+           for r in media_dhash(media).collect()}
+    assert got["jb2"] == got["png"]
+    assert got["jb2"][1] is True
 
 
 def test_fallback_never_raises_on_fuzz():

@@ -393,6 +393,24 @@ def test_color_420_mcu_constant_exact():
         assert np.all(px == want[np.newaxis, np.newaxis, :]), (m, px[0, 0], want)
 
 
+def test_color_gray_is_the_shared_luma():
+    """decode_jpeg_gray reduces color by png.luma_bt601, the one
+    integer formula every codec's grayscale plane uses."""
+    from two_tier_document_parser_spark.jpeg import (
+        decode_jpeg,
+        decode_jpeg_gray,
+    )
+    from two_tier_document_parser_spark.png import luma_bt601
+
+    ymcu = np.array([[128.0, 144.0], [96.0, 208.0]])
+    cbmcu = np.array([[128.0, 96.0], [160.0, 128.0]])
+    crmcu = np.array([[128.0, 176.0], [112.0, 128.0]])
+    data = encode_color_jpeg_420(ymcu, cbmcu, crmcu)
+    rgb = decode_jpeg(data).astype(np.int32)
+    want = luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2])
+    assert np.array_equal(decode_jpeg_gray(data), want.astype(np.uint8))
+
+
 # ------------------------------------------------- JPEG-2000 dim sniff
 
 

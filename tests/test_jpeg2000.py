@@ -29,6 +29,7 @@ from two_tier_document_parser_spark.jpeg2000 import (
     decode_jp2_gray,
     jp2_dims,
 )
+from two_tier_document_parser_spark.png import luma_bt601
 
 # ---------------------------------------------------------------------------
 # test-side header-bit writer (B.10.1 stuffing, encoder direction)
@@ -728,9 +729,8 @@ def test_round_trip_irreversible_ict():
     assert np.abs(got.astype(np.int64) - rgb).max() <= 3
     gray = decode_jp2_gray(encode_j2k(rgb, nl=1, cb=8, irreversible=True,
                                       mct=1))
-    y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    assert np.abs(gray.astype(np.int64)
-                  - np.round(y).astype(np.int64)).max() <= 3
+    y = luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2])
+    assert np.abs(gray.astype(np.int64) - y).max() <= 3
 
 
 def test_jp2_container_and_gray():
@@ -750,8 +750,8 @@ def test_jp2_container_and_gray():
     # 3-component luma
     rgb = np.random.default_rng(14).integers(0, 256, (8, 8, 3), dtype=np.int64)
     gl = decode_jp2_gray(encode_j2k(rgb, nl=1, cb=8))
-    y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    assert np.array_equal(gl, np.clip(np.round(y), 0, 255).astype(np.uint8))
+    y = luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2])
+    assert np.array_equal(gl, y.astype(np.uint8))
 
 
 # ---------------------------------------------------------------------------
@@ -797,28 +797,26 @@ def test_fuzz_never_raises():
 
 
 def test_media_pipeline_jpx(spark):
-    """A JP2 payload gets REAL dims and a REAL resample through the
-    media kernels — the same done-criterion shape as the G4 and
-    JBIG2 integration pins."""
+    """A JP2 payload gets REAL dims and REAL pixels through the media
+    kernels: its dHash equals the dHash of the same pixels as PNG —
+    the same done-criterion shape as the G4 and JBIG2 integration
+    pins."""
     from two_tier_document_parser_spark.multimodal import (
         _decode_stub,
-        resize_media,
+        media_dhash,
     )
-    from two_tier_document_parser_spark.png import decode_png_gray, png_dims
+    from two_tier_document_parser_spark.png import encode_png_gray
 
     src = _img(24, 48, 30).astype(np.uint8)
     payload = wrap_jp2(encode_j2k(src, nl=2, cb=16), 48, 24)
     assert _decode_stub(payload) == (48, 24)
 
     media = spark.createDataFrame(
-        [("d1", "page_0_img_0", "image", payload)],
+        [("jpx", "page_0_img_0", "image", payload),
+         ("png", "page_0_img_0", "image", encode_png_gray(src))],
         "doc_id string, media_ref string, kind string, payload binary",
     )
-    (r,) = resize_media(media, max_side=16).collect()
-    assert (r["width"], r["height"]) == (16, 8)
-    assert png_dims(bytes(r["payload"])) == (16, 8)
-    rows = (np.arange(8) * 24) // 8
-    cols = (np.arange(16) * 48) // 16
-    assert np.array_equal(
-        decode_png_gray(bytes(r["payload"])), src[rows][:, cols]
-    )
+    got = {r.doc_id: (r.dhash, r.real_pixels)
+           for r in media_dhash(media).collect()}
+    assert got["jpx"] == got["png"]
+    assert got["jpx"][1] is True

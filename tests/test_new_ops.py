@@ -336,12 +336,12 @@ def test_spark_submit_py_files(tmp_path):
     assert sum(res["by_tier"].values()) == 500
 
 
-def test_resize_and_frame_sample(spark):
-    """Multimodal plumbing: resize preserves aspect ratio in integer
-    math; frame sampling reassembles to the original payload."""
+def test_png_dhash_and_frame_sample(spark):
+    """Multimodal plumbing: a PNG payload hashes over its real pixels;
+    frame sampling reassembles to the original payload."""
     from two_tier_document_parser_spark.multimodal import (
         FRAME_CHUNK,
-        resize_media,
+        media_dhash,
         sample_frames,
     )
 
@@ -353,34 +353,25 @@ def test_resize_and_frame_sample(spark):
     media = spark.createDataFrame(
         rows, "doc_id string, media_ref string, kind string, payload binary"
     )
-    resized = resize_media(media, max_side=16).collect()
-    assert all(max(r["width"], r["height"]) <= 16 for r in resized)
-    assert all(min(r["width"], r["height"]) >= 1 for r in resized)
 
-    # real PNG payload: the resample is pixel-real — output bytes are a
-    # PNG whose IHDR dims equal the reported (width, height), and the
-    # pixels are the nearest-neighbor sample of the source raster.
+    # real PNG payload: the dHash is over the decoded pixels — the
+    # 9x8 nearest-neighbor sample of the source raster, one bit per
+    # left-brighter-than-right neighbor pair, as a signed int64
     import numpy as np
 
-    from two_tier_document_parser_spark.png import (
-        decode_png_gray,
-        encode_png_gray,
-        png_dims,
-        render_crop,
-    )
+    from two_tier_document_parser_spark.png import encode_png_gray, render_crop
 
     src = render_crop("resize-me", 48, 24)  # (h=24, w=48)
     png_media = spark.createDataFrame(
         [("d9", "page_0_img_0", "image", encode_png_gray(src))],
         "doc_id string, media_ref string, kind string, payload binary",
     )
-    (r,) = resize_media(png_media, max_side=16).collect()
-    assert (r["width"], r["height"]) == (16, 8)
-    assert png_dims(bytes(r["payload"])) == (16, 8)
-    got = decode_png_gray(bytes(r["payload"]))
-    rows = (np.arange(8) * 24) // 8
-    cols = (np.arange(16) * 48) // 16
-    assert np.array_equal(got, src[rows][:, cols])
+    (r,) = media_dhash(png_media).collect()
+    s = src[(np.arange(8) * 24) // 8][:, (np.arange(9) * 48) // 9]
+    bits = (s[:, :8].astype(int) > s[:, 1:]).flatten()
+    want = int("".join("1" if b else "0" for b in bits), 2)
+    assert r["real_pixels"] is True
+    assert r["dhash"] == (want - (1 << 64) if want >= 1 << 63 else want)
 
     frames = sample_frames(media).collect()
     by_ref = {}
@@ -1353,17 +1344,14 @@ def test_media_text_pairs_caption_policy(spark):
         assert png_dims(bytes(r["payload"])) is not None  # real PNG
 
 
-def test_jpeg_media_real_dims_and_resize(spark):
+def test_jpeg_media_real_dims_and_dhash(spark):
     """Round-3 verdict task #4 closure at the Spark surface: a
     baseline-JPEG payload gets REAL dims from the SOF0 header in
-    extract_media_features (not the hash stub), and resize_media
-    decodes real pixels (T.81 huffman+IDCT) and nearest-neighbor
-    resamples them — output is a PNG with the reported dims whose
-    pixels equal the NN-sample of the JPEG decode."""
+    extract_media_features (not the hash stub), and media_dhash
+    decodes real pixels (T.81 huffman+IDCT): its dHash equals the
+    dHash of the JPEG decode re-encoded as PNG."""
     import sys
     from pathlib import Path
-
-    import numpy as np
 
     sys.path.insert(0, str(Path(__file__).resolve().parent))
     from test_jpeg import _test_image, encode_gray_jpeg
@@ -1371,9 +1359,9 @@ def test_jpeg_media_real_dims_and_resize(spark):
     from two_tier_document_parser_spark.jpeg import decode_jpeg_gray
     from two_tier_document_parser_spark.multimodal import (
         extract_media_features,
-        resize_media,
+        media_dhash,
     )
-    from two_tier_document_parser_spark.png import decode_png_gray, png_dims
+    from two_tier_document_parser_spark.png import encode_png_gray
 
     img = _test_image(24, 48, seed=11)
     payload = encode_gray_jpeg(img)
@@ -1384,14 +1372,14 @@ def test_jpeg_media_real_dims_and_resize(spark):
     (f,) = extract_media_features(media).collect()
     assert (f["width"], f["height"]) == (48, 24)  # real SOF0 dims
 
-    (r,) = resize_media(media, max_side=16).collect()
-    assert (r["width"], r["height"]) == (16, 8)
-    assert png_dims(bytes(r["payload"])) == (16, 8)
-    got = decode_png_gray(bytes(r["payload"]))
-    src = decode_jpeg_gray(payload)
-    rows = (np.arange(8) * 24) // 8
-    cols = (np.arange(16) * 48) // 16
-    assert np.array_equal(got, src[rows][:, cols])
+    png = encode_png_gray(decode_jpeg_gray(payload))
+    both = media.union(spark.createDataFrame(
+        [("d2", "page_0_img_0", "image", png)], media.schema
+    ))
+    got = {r.doc_id: (r.dhash, r.real_pixels)
+           for r in media_dhash(both).collect()}
+    assert got["d1"] == got["d2"]
+    assert got["d1"][1] is True
 
 
 def test_lsh_near_dup_cap_is_observable(spark):

@@ -22,7 +22,7 @@ from two_tier_document_parser_spark.pdf_io import (
     render_media_pdf,
     render_media_table,
 )
-from two_tier_document_parser_spark.png import decode_png_gray
+from two_tier_document_parser_spark.png import decode_png_gray, luma_bt601
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -250,7 +250,8 @@ def test_first_seen_across_pages_and_reuse():
 
 def test_one_bit_and_rgb_raw_normalise():
     """1-bit DeviceGray unpacks row-padded bits (1 = white); 8-bit
-    DeviceRGB reduces by the repo's BT.601 integer luma."""
+    DeviceRGB reduces by the repo's BT.601 integer luma
+    (png.luma_bt601)."""
     # 10 px wide -> 2-byte stride; rows: 0xFF 0xC0 then 0x00 0x00
     onebit = bytes([0xFF, 0xC0, 0x00, 0x00])
     rgb = np.zeros((2, 3, 3), dtype=np.uint8)
@@ -275,8 +276,8 @@ def test_one_bit_and_rgb_raw_normalise():
     assert g0.shape == (2, 10)
     assert list(g0[0]) == [255] * 10 and list(g0[1]) == [0] * 10
     g1 = decode_png_gray(rows[1]["payload"])
-    assert g1[0, 0] == (77 * 255) >> 8
-    assert g1[1, 2] == (150 * 255) >> 8
+    assert g1[0, 0] == luma_bt601(255, 0, 0)
+    assert g1[1, 2] == luma_bt601(0, 255, 0)
     assert g1[0, 1] == 0
 
 

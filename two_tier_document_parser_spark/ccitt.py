@@ -36,7 +36,7 @@ Scope:
 Bit convention: decode_g4 returns (h, w) uint8 with 1 = black (the
 ITU convention); decode_tiff_gray maps to the repo's grayscale
 convention (black=0, white=255) so it composes with
-png.encode_png_gray in the resize path.
+png.encode_png_gray and the dhash media kernel.
 
 Shape of the work: the per-line mode decode is a Python loop (the
 coding is inherently sequential), but changing-element lookups

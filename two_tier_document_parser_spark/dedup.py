@@ -232,17 +232,14 @@ def lsh_candidate_pairs(
     return out
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
+def _token_overlap(
+    df: DataFrame, pairs: DataFrame, text_col: str, key_col: str
 ) -> DataFrame:
-    """Integer n-gram Jaccard (x1000, integer division) for candidate
-    pairs: |A∩B|*1000 div |A∪B| over distinct token sets. Fully
-    relational (distinct token rows + joins + groupBy) — per-pair
-    array_intersect over token arrays burns JVM allocations instead of
-    hash joins and loses the shuffle reuse across pairs."""
+    """The distinct-token intersection `jaccard_pairs` and
+    `containment_pairs` share: every candidate (a, b) with i = |A∩B|
+    (NULL when the token sets are disjoint) and the distinct-token
+    set sizes na = |A|, nb = |B|. Distinct (key, token) rows, two
+    key-hashed joins and one pair-keyed aggregate."""
     ts = (
         df.select(
             F.col(key_col).alias("key"),
@@ -266,13 +263,26 @@ def jaccard_pairs(
         pairs.join(inter, ["a", "b"], "left")
         .join(sizes.withColumnRenamed("key", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("key", "b").withColumnRenamed("n", "nb"), "b")
-        .select(
-            "a",
-            "b",
-            F.expr("coalesce(i, 0) * 1000 div (na + nb - coalesce(i, 0))").alias(
-                "jaccard_x1000"
-            ),
-        )
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+) -> DataFrame:
+    """Integer n-gram Jaccard (x1000, integer division) for candidate
+    pairs: |A∩B|*1000 div |A∪B| over distinct token sets. Fully
+    relational (distinct token rows + joins + groupBy) — per-pair
+    array_intersect over token arrays burns JVM allocations instead of
+    hash joins and loses the shuffle reuse across pairs."""
+    return _token_overlap(df, pairs, text_col, key_col).select(
+        "a",
+        "b",
+        F.expr("coalesce(i, 0) * 1000 div (na + nb - coalesce(i, 0))").alias(
+            "jaccard_x1000"
+        ),
     )
 
 
@@ -930,45 +940,20 @@ def containment_pairs(
     quote/boilerplate/wrapper-page signal a curation keep-policy
     needs.
 
-    Same scale shape as `jaccard_pairs` (shared distinct token rows,
-    two key-hashed joins, one pair-keyed aggregate) — candidate pairs
-    come from the LSH bucketing, never all-pairs. Integer x1000
-    scores, hash-exact vs the oracle.
+    Same scale shape as `jaccard_pairs` (the shared `_token_overlap`);
+    candidate pairs come from the LSH bucketing, never all-pairs.
+    Integer x1000 scores, hash-exact vs the oracle.
 
     Columns: a, b, inter_n, na, nb, cont_ab_x1000, cont_ba_x1000.
     """
-    ts = (
-        df.select(
-            F.col(key_col).alias("key"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("t"),
-        )
-        .distinct()
-    )
-    sizes = ts.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        pairs.alias("p")
-        .join(ts.alias("ta"), F.col("p.a") == F.col("ta.key"))
-        .join(
-            ts.alias("tb"),
-            (F.col("p.b") == F.col("tb.key")) & (F.col("ta.t") == F.col("tb.t")),
-        )
-        .groupBy("p.a", "p.b")
-        .agg(F.count(F.lit(1)).alias("i"))
-        .select(F.col("a"), F.col("b"), F.col("i"))
-    )
-    return (
-        pairs.join(inter, ["a", "b"], "left")
-        .join(sizes.withColumnRenamed("key", "a").withColumnRenamed("n", "na"), "a")
-        .join(sizes.withColumnRenamed("key", "b").withColumnRenamed("n", "nb"), "b")
-        .select(
-            "a",
-            "b",
-            F.expr("CAST(coalesce(i, 0) AS BIGINT)").alias("inter_n"),
-            F.col("na").cast("long").alias("na"),
-            F.col("nb").cast("long").alias("nb"),
-            F.expr("coalesce(i, 0) * 1000 div na").alias("cont_ab_x1000"),
-            F.expr("coalesce(i, 0) * 1000 div nb").alias("cont_ba_x1000"),
-        )
+    return _token_overlap(df, pairs, text_col, key_col).select(
+        "a",
+        "b",
+        F.expr("CAST(coalesce(i, 0) AS BIGINT)").alias("inter_n"),
+        F.col("na").cast("long").alias("na"),
+        F.col("nb").cast("long").alias("nb"),
+        F.expr("coalesce(i, 0) * 1000 div na").alias("cont_ab_x1000"),
+        F.expr("coalesce(i, 0) * 1000 div nb").alias("cont_ba_x1000"),
     )
 
 

@@ -24,7 +24,7 @@ Scope (honest, like the other codecs):
 
 Output is grayscale uint8 (h, w) via png.luma_bt601 (integer ITU-R
 BT.601), so GIF payloads compose with png.encode_png_gray in the
-resize/dhash paths exactly like the other codecs' outputs.
+dhash media kernel exactly like the other codecs' outputs.
 
 Shape of the work: LZW code emission is inherently sequential (each
 code extends the dictionary the next code indexes), so the symbol

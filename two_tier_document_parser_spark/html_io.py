@@ -536,12 +536,6 @@ def parse_batches(
     return decode_raw_batches(batches, parse_html)
 
 
-# shared Arrow span type (kept as a re-export for existing callers)
-from .schemas import spans_arrow_type as _spans_arrow_type  # noqa: E402
-
-RAW_SCHEMA_SPANS_TYPE = _spans_arrow_type()
-
-
 def render_batches(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:

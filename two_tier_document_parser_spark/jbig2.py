@@ -38,7 +38,7 @@ Scope (honest, like the other codecs):
 
 Bit conventions: JBIG2 pixel 1 = black. decode_jbig2_gray maps to
 the repo's grayscale convention (black=0, white=255) so it composes
-with png.encode_png_gray in the resize/dhash paths, exactly like
+with png.encode_png_gray and the dhash media kernel, exactly like
 ccitt.decode_tiff_gray does for CCITT strips.
 
 Shape of the work: the MQ coder is inherently sequential (each

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .png import luma_bt601
+
 # zigzag order (T.81 Figure A.6): zz[i] = raster index of the i-th
 # zigzag-scanned coefficient
 _ZZ = np.array([
@@ -173,15 +175,15 @@ def decode_jpeg(data: bytes) -> np.ndarray | None:
 
 
 def decode_jpeg_gray(data: bytes) -> np.ndarray | None:
-    """decode_jpeg collapsed to one grayscale plane (BT.601 luma for
-    color images) — the engine's crop/resize unit."""
+    """decode_jpeg collapsed to one grayscale plane (png.luma_bt601
+    for color images) — the engine's crop/dhash unit."""
     px = decode_jpeg(data)
     if px is None:
         return None
     if px.ndim == 2:
         return px
-    y = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-    return np.clip(np.round(y), 0, 255).astype(np.uint8)
+    rgb = px.astype(np.int32)
+    return luma_bt601(rgb[..., 0], rgb[..., 1], rgb[..., 2]).astype(np.uint8)
 
 
 def _unstuff_scan(data: bytes, i: int) -> tuple[list[bytes], int]:

@@ -47,6 +47,7 @@ from typing import Iterator
 import numpy as np
 
 from .jbig2 import _MQDecoder
+from .png import luma_bt601
 
 # ---------------------------------------------------------------------------
 # context tables (T.800 Annex D)
@@ -881,7 +882,6 @@ def decode_jp2_gray(
     if px.ndim == 2:
         return _scale(px)
     if px.shape[-1] >= 3:
-        r, g, b = _scale(px[..., 0]), _scale(px[..., 1]), _scale(px[..., 2])
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        return np.clip(np.round(y), 0, 255).astype(np.uint8)
+        r, g, b = (_scale(px[..., c]).astype(np.int32) for c in range(3))
+        return luma_bt601(r, g, b).astype(np.uint8)
     return _scale(px[..., 0])

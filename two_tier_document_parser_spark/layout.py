@@ -25,8 +25,6 @@ from __future__ import annotations
 import functools
 from typing import Sequence
 
-REGION_KINDS = ("text", "table", "figure", "formula")
-
 
 def parse_box(text: str) -> tuple[int, int, int, int, str]:
     """Decode a box span's text. Raises ValueError on malformed input

@@ -191,73 +191,11 @@ def decode_image_gray(raw: bytes) -> "np.ndarray | None":
     return None
 
 
-RESIZED_SCHEMA = (
-    "doc_id string, media_ref string, kind string, payload binary, "
-    "width int, height int"
-)
 FRAME_SCHEMA = (
     "doc_id string, media_ref string, frame_idx int, frame binary"
 )
 
 FRAME_CHUNK = 8
-
-
-def resize_media(media: DataFrame, max_side: int = 32) -> DataFrame:
-    """Arrow-batched resize: scale so the longer side is `max_side`,
-    preserving aspect ratio in integer math.
-
-    For every payload a codec in `_image_codecs` decodes
-    (decode_image_gray) the resample is REAL: decode
-    pixels, nearest-neighbor index-sample in numpy, and re-encode —
-    the output payload is a PNG whose IHDR dims equal the reported
-    (width, height). Remaining non-decodable payloads (no pixel
-    semantics in this sandbox — no ffmpeg for video/audio) pass
-    through with stub-decoded dims; a production deployment swaps
-    that branch for PIL.Image.thumbnail. Reference
-    accurate/service.py scales crops the same longer-side-capped way
-    before base64 encoding."""
-    import numpy as np
-
-    from .png import encode_png_gray
-
-    def _target(w: int, h: int) -> tuple[int, int]:
-        s = max(w, h)
-        if s > max_side:
-            return max(1, w * max_side // s), max(1, h * max_side // s)
-        return w, h
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ws, hs, payloads = [], [], []
-            for p in b["payload"]:
-                raw = bytes(p) if p is not None else b""
-                pix = decode_image_gray(raw)
-                if pix is not None:
-                    h0, w0 = pix.shape
-                    w, h = _target(w0, h0)
-                    if (w, h) != (w0, h0):
-                        # nearest-neighbor: sample source pixel centers
-                        rows = (np.arange(h) * h0) // h
-                        cols = (np.arange(w) * w0) // w
-                        pix = pix[rows][:, cols]
-                        raw = encode_png_gray(np.ascontiguousarray(pix))
-                else:
-                    w, h = _target(*_decode_stub(raw))
-                ws.append(w)
-                hs.append(h)
-                payloads.append(raw if raw else p)
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"],
-                    "media_ref": b["media_ref"],
-                    "kind": b["kind"],
-                    "payload": payloads,
-                    "width": ws,
-                    "height": hs,
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, chunk: int = FRAME_CHUNK) -> DataFrame:
@@ -488,8 +426,8 @@ def media_dhash(media: DataFrame) -> DataFrame:
     from exact bytes to perceptual identity).
 
     Decode is REAL for every payload a codec in `_image_codecs`
-    decodes (decode_image_gray), with the same
-    nearest-neighbor resample as resize_media. Non-decodable payloads (no pixel
+    decodes (decode_image_gray), resampled nearest-neighbor (the
+    source pixel at each sample center). Non-decodable payloads (no pixel
     semantics in this sandbox) fall back to a sha256-derived hash —
     exact-dup-only for those, flagged real_pixels=false so downstream
     policy can tell.

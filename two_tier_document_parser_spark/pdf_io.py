@@ -1834,7 +1834,7 @@ def _lift_image(objs, d: dict, ref, media_ref: str) -> dict | None:
     import numpy as np
 
     from .ccitt import decode_g3_1d, decode_g3_2d, decode_g4
-    from .png import encode_png_gray
+    from .png import encode_png_gray, luma_bt601
 
     w = _resolve(objs, d.get("Width"))
     h = _resolve(objs, d.get("Height"))
@@ -1904,13 +1904,9 @@ def _lift_image(objs, d: dict, ref, media_ref: str) -> dict | None:
             rgb = np.frombuffer(data[: 3 * w * h], dtype=np.uint8).reshape(
                 h, w, 3
             )
-            # 8-bit fixed-point BT.601 luma, (77 R + 150 G + 29 B) >> 8:
-            # close to png.luma_bt601, which the image codecs use, but
-            # not the same pixels
-            gray = (
-                (77 * rgb[:, :, 0].astype(np.uint32)
-                 + 150 * rgb[:, :, 1].astype(np.uint32)
-                 + 29 * rgb[:, :, 2].astype(np.uint32)) >> 8
+            rgb = rgb.astype(np.int32)
+            gray = luma_bt601(
+                rgb[..., 0], rgb[..., 1], rgb[..., 2]
             ).astype(np.uint8)
         elif bpc == 1 and cs == "DeviceGray":
             stride = (w + 7) // 8

@@ -31,8 +31,11 @@ def ship_package(spark: SparkSession) -> str:
     """Ship this package to executors (the programmatic equivalent of
     `spark-submit --py-files engine.zip`). Required whenever the
     driver's CWD is not the repo root — Python workers import the
-    tier UDF modules by name."""
+    tier UDF modules by name. The zip's temp directory is removed when
+    the interpreter exits."""
+    import atexit
     import os
+    import shutil
     import tempfile
     import zipfile
 
@@ -41,9 +44,9 @@ def ship_package(spark: SparkSession) -> str:
         return ""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(
-        tempfile.mkdtemp(prefix="ttdp_pyfiles_"), f"{pkg_name}.zip"
-    )
+    tmp = tempfile.mkdtemp(prefix="ttdp_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    zpath = os.path.join(tmp, f"{pkg_name}.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _, files in os.walk(pkg_dir):
             for f in files:

@@ -55,7 +55,8 @@ def encode_png_gray(pixels: np.ndarray) -> bytes:
 def luma_bt601(r, g, b):
     """Integer ITU-R BT.601 luma of integer R, G, B sample arrays:
     (299 R + 587 G + 114 B) // 1000. Every codec that turns color into
-    the engine's grayscale plane (PNG, GIF, WebP, TIFF) goes through
+    the engine's grayscale plane (PNG, GIF, WebP, TIFF, JPEG, JPEG 2000
+    and raw PDF DeviceRGB samples) goes through
     this one formula; the caller picks the integer width and casts."""
     return (299 * r + 587 * g + 114 * b) // 1000
 

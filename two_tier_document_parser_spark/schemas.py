@@ -14,7 +14,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 SPAN_IN = StructType(
@@ -278,18 +277,3 @@ def core_batches(batches, core, fields: tuple[str, ...]):
             lo += n
         yield out_batch(as_list(batch.column("doc_id")), docs,
                         int((time.time() - t0) * 1000))
-
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("doc_id_min", StringType(), True),
-        StructField("doc_id_max", StringType(), True),
-        StructField("n_docs", LongType(), False),
-        StructField("n_spans", LongType(), False),
-        StructField("wall_ms", LongType(), False),
-        StructField("attempt", IntegerType(), False),
-        StructField("committed_at", TimestampType(), False),
-    ]
-)

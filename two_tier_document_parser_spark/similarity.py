@@ -9,6 +9,10 @@
   pseudo-hyperplanes derived from xxhash64(plane, dim) — bucket join
   replaces the cross join. Spark-only (rows-only check) since the
   hyperplane hash is engine-specific.
+- near-dup pairs: every operator (exact, LSH, q8, incremental,
+  semantic dedup) decides its candidate pairs in the one `_verify`
+  step, round(cosine, 6) >= threshold_x100 / 100 on float or int8
+  payloads; every *_topk ranks in the one `_rank_topk` window.
 
 Scale notes: brute force is O(Q*N) — fine for reranking, wrong as the
 only path at 10^9 vectors. The LSH variant buckets both sides and
@@ -55,6 +59,26 @@ def _cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return _dot(a, b) / (na * nb)
 
 
+def _dot_q8(a: Column, b: Column) -> Column:
+    """Exact integer dot product of two int8 vectors (long math —
+    64 dims x 127^2 is far inside int64)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _norm_q8(a: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("long") * x.cast("long")),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).cast("double")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -71,21 +95,23 @@ def brute_force_topk(
             _norm(F.col(vec_col)).alias("cn"),
         )
     ).filter(F.col("query") != F.col("candidate"))
-    sims = joined.select(
-        "query",
-        "candidate",
-        F.round(
-            _cosine_pre(
-                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
-            ),
-            6,
-        ).alias("sim"),
+    return _rank_topk(
+        joined,
+        _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")),
+        k,
     )
+
+
+def _rank_topk(joined: DataFrame, sim: Column, k: int) -> DataFrame:
+    """The top-k rank every *_topk shares: per query, the k candidates
+    of highest round(sim, 6), ties to the smaller candidate id ->
+    (query, candidate, rank)."""
     w = Window.partitionBy("query").orderBy(
         F.desc("sim"), F.asc("candidate")
     )
     return (
-        sims.withColumn("rank", F.row_number().over(w))
+        joined.select("query", "candidate", F.round(sim, 6).alias("sim"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query", "candidate", "rank")
     )
@@ -169,6 +195,48 @@ def srp_sig_rows(
     )
 
 
+def _verify(
+    cand: DataFrame | None,
+    a: DataFrame,
+    b: DataFrame,
+    threshold_x100: int,
+    vec_col: str,
+    id_col: str,
+    q8: bool,
+) -> DataFrame:
+    """The exact-cosine verify every near-dup operator shares -> (a, b).
+
+    Each side is (id, payload, hoisted norm), built once per row from
+    `a` and `b`; they join to the `cand` (a, b) pairs, or, with no
+    candidates, cross-join under a < b. A pair stays when
+    round(cosine, 6) >= threshold_x100 / 100. The payload is the float
+    `vec_col` (the `_cosine_pre` fold), or with `q8` the sides'
+    `q8` array<tinyint> (exact integer dot / float norms), where zero
+    vectors are filtered out before the division."""
+    col, norm = ("q8", _norm_q8) if q8 else (vec_col, _norm)
+    va, vb = (
+        side.select(
+            F.col(id_col).alias(k),
+            F.col(col).alias(k + "v"),
+            norm(F.col(col)).alias("n" + k),
+        )
+        for side, k in ((a, "a"), (b, "b"))
+    )
+    if cand is None:
+        pairs = va.crossJoin(vb).filter(F.col("a") < F.col("b"))
+    else:
+        pairs = cand.join(va, "a").join(vb, "b")
+    av, bv, na, nb = F.col("av"), F.col("bv"), F.col("na"), F.col("nb")
+    if q8:
+        pairs = pairs.filter((na > 0.0) & (nb > 0.0))
+        sim = _dot_q8(av, bv).cast("double") / (na * nb)
+    else:
+        sim = _cosine_pre(av, bv, na, nb)
+    return pairs.filter(
+        F.round(sim, 6) >= F.lit(threshold_x100) / 100.0
+    ).select("a", "b")
+
+
 def near_dup_pairs(
     emb: DataFrame,
     threshold_x100: int = 44,
@@ -182,79 +250,7 @@ def near_dup_pairs(
     comparison; the rounded compare makes the threshold decision
     reproducible between Spark's left-to-right double fold and the
     oracle's unordered SUM."""
-    a = emb.select(
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("avec"),
-        _norm(F.col(vec_col)).alias("na"),
-    )
-    b = emb.select(
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("bvec"),
-        _norm(F.col(vec_col)).alias("nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .filter(
-            F.round(
-                _cosine_pre(
-                    F.col("avec"), F.col("bvec"), F.col("na"), F.col("nb")
-                ),
-                6,
-            )
-            >= F.lit(threshold_x100) / 100.0
-        )
-        .select("a", "b")
-    )
-
-
-def _lsh_candidates(
-    emb: DataFrame,
-    n_planes: int,
-    n_tables: int,
-    vec_col: str,
-    id_col: str,
-    max_bucket: int | None,
-):
-    """Shared SRP-LSH candidate generation (the grouped in-bucket
-    expansion documented on lsh_near_dup_pairs): one signature pass,
-    one (tbl, sig) shuffle, JVM-side pair expansion, distinct.
-    Returns (candidate_pairs, lazy dropped-bucket diagnostics)."""
-    sigs = srp_sig_rows(emb, id_col, vec_col, n_planes, n_tables)
-    grouped = (
-        sigs.groupBy("tbl", "sig")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    dropped = None
-    if max_bucket is not None:
-        dropped = grouped.filter(F.size("ids") > max_bucket).agg(
-            F.count(F.lit(1)).alias("dropped_buckets"),
-            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias(
-                "dropped_ids"
-            ),
-        )
-        buckets = grouped.filter(F.size("ids") <= max_bucket)
-    else:
-        buckets = grouped
-    cand = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ids",
-                        lambda x, i: F.transform(
-                            F.slice("ids", i + F.lit(2), F.size("ids")),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    return cand, dropped
+    return _verify(None, emb, emb, threshold_x100, vec_col, id_col, False)
 
 
 def lsh_near_dup_pairs(
@@ -294,32 +290,65 @@ def lsh_near_dup_pairs(
     follows the observe node, so this recomputes the signature pass
     on demand instead). Pass max_bucket=None for the uncapped
     exact-recall behavior."""
-    cand, dropped = _lsh_candidates(
-        emb, n_planes, n_tables, vec_col, id_col, max_bucket
+    return _lsh_pairs(
+        emb, threshold_x100, n_planes, n_tables, vec_col, id_col, max_bucket,
+        None,
     )
-    va = emb.select(
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("avec"),
-        _norm(F.col(vec_col)).alias("na"),
+
+
+def _lsh_pairs(
+    emb: DataFrame,
+    threshold_x100: int,
+    n_planes: int,
+    n_tables: int,
+    vec_col: str,
+    id_col: str,
+    max_bucket: int | None,
+    q8_table: DataFrame | None,
+) -> DataFrame:
+    """SRP-LSH near-dup pairs of `emb` (the grouped in-bucket expansion
+    documented on lsh_near_dup_pairs): one signature pass, one
+    (tbl, sig) shuffle, JVM-side pair expansion, distinct, then
+    `_verify` on the float vectors, or on `q8_table`'s int8 payload
+    when one is given. The result carries the lazy dropped-bucket
+    diagnostics as `lsh_dropped`."""
+    sigs = srp_sig_rows(emb, id_col, vec_col, n_planes, n_tables)
+    grouped = (
+        sigs.groupBy("tbl", "sig")
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
     )
-    vb = emb.select(
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("bvec"),
-        _norm(F.col(vec_col)).alias("nb"),
-    )
-    out = (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .filter(
-            F.round(
-                _cosine_pre(
-                    F.col("avec"), F.col("bvec"), F.col("na"), F.col("nb")
-                ),
-                6,
-            )
-            >= F.lit(threshold_x100) / 100.0
+    dropped = None
+    if max_bucket is not None:
+        dropped = grouped.filter(F.size("ids") > max_bucket).agg(
+            F.count(F.lit(1)).alias("dropped_buckets"),
+            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias(
+                "dropped_ids"
+            ),
         )
-        .select("a", "b")
+        buckets = grouped.filter(F.size("ids") <= max_bucket)
+    else:
+        buckets = grouped
+    cand = (
+        buckets.select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        "ids",
+                        lambda x, i: F.transform(
+                            F.slice("ids", i + F.lit(2), F.size("ids")),
+                            lambda y: F.struct(x.alias("a"), y.alias("b")),
+                        ),
+                    )
+                )
+            ).alias("p")
+        )
+        .select("p.a", "p.b")
+        .distinct()
+    )
+    side = emb if q8_table is None else q8_table
+    out = _verify(
+        cand, side, side, threshold_x100, vec_col, id_col, q8_table is not None
     )
     out.lsh_dropped = dropped
     return out
@@ -369,27 +398,10 @@ def semantic_dedup(
     """
     from .dedup import connected_components_star
 
-    if q8_table is not None:
-        pairs = lsh_near_dup_pairs_q8(
-            emb,
-            threshold_x100=threshold_x100,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            vec_col=vec_col,
-            id_col=id_col,
-            max_bucket=max_bucket,
-            q8_table=q8_table,
-        )
-    else:
-        pairs = lsh_near_dup_pairs(
-            emb,
-            threshold_x100=threshold_x100,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            vec_col=vec_col,
-            id_col=id_col,
-            max_bucket=max_bucket,
-        )
+    pairs = _lsh_pairs(
+        emb, threshold_x100, n_planes, n_tables, vec_col, id_col, max_bucket,
+        q8_table,
+    )
     comps = connected_components_star(pairs).withColumnRenamed(
         "doc_id", id_col
     )
@@ -511,17 +523,7 @@ def ivf_topk(
         .filter(F.col("query") != F.col("candidate"))
         .dropDuplicates(["query", "candidate"])
     )
-    sims = joined.select(
-        "query",
-        "candidate",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query").orderBy(F.desc("sim"), F.asc("candidate"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query", "candidate", "rank")
-    )
+    return _rank_topk(joined, cosine(F.col("qvec"), F.col("cvec")), k)
 
 
 def lsh_topk(
@@ -558,17 +560,7 @@ def lsh_topk(
         ),
         "candidate",
     )
-    sims = joined.select(
-        "query",
-        "candidate",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query").orderBy(F.desc("sim"), F.asc("candidate"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query", "candidate", "rank")
-    )
+    return _rank_topk(joined, cosine(F.col("qvec"), F.col("cvec")), k)
 
 
 def incremental_semantic_dedup(
@@ -633,55 +625,11 @@ def incremental_semantic_dedup(
         .select("a", "b")
         .distinct()
     )
-    if old_q8_table is not None:
-        qa = quantize_embeddings(new, vec_col=vec_col, id_col=id_col)
-        va = qa.select(
-            F.col(id_col).alias("a"),
-            F.col("q8").alias("aq"),
-            _norm_q8(F.col("q8")).alias("na"),
-        )
-        vb = old_q8_table.select(
-            F.col(id_col).alias("b"),
-            F.col("q8").alias("bq"),
-            _norm_q8(F.col("q8")).alias("nb"),
-        )
-        verified = (
-            cand.join(va, "a")
-            .join(vb, "b")
-            .filter((F.col("na") > 0.0) & (F.col("nb") > 0.0))
-            .filter(
-                F.round(
-                    _dot_q8(F.col("aq"), F.col("bq")).cast("double")
-                    / (F.col("na") * F.col("nb")),
-                    6,
-                )
-                >= F.lit(threshold_x100) / 100.0
-            )
-        )
-    else:
-        va = new.select(
-            F.col(id_col).alias("a"),
-            F.col(vec_col).alias("avec"),
-            _norm(F.col(vec_col)).alias("na"),
-        )
-        vb = old.select(
-            F.col(id_col).alias("b"),
-            F.col(vec_col).alias("bvec"),
-            _norm(F.col(vec_col)).alias("nb"),
-        )
-        verified = (
-            cand.join(va, "a")
-            .join(vb, "b")
-            .filter(
-                F.round(
-                    _cosine_pre(
-                        F.col("avec"), F.col("bvec"), F.col("na"), F.col("nb")
-                    ),
-                    6,
-                )
-                >= F.lit(threshold_x100) / 100.0
-            )
-        )
+    q8 = old_q8_table is not None
+    a = quantize_embeddings(new, vec_col=vec_col, id_col=id_col) if q8 else new
+    verified = _verify(
+        cand, a, old_q8_table if q8 else old, threshold_x100, vec_col, id_col, q8
+    )
     hits = verified.groupBy("a").agg(F.min("b").alias("matched_old"))
     return (
         new.select(F.col(id_col).alias("a"))
@@ -729,27 +677,10 @@ def semantic_rep_by_score(
     """
     from .dedup import connected_components_star
 
-    if q8_table is not None:
-        pairs = lsh_near_dup_pairs_q8(
-            emb,
-            threshold_x100=threshold_x100,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            vec_col=vec_col,
-            id_col=id_col,
-            max_bucket=max_bucket,
-            q8_table=q8_table,
-        )
-    else:
-        pairs = lsh_near_dup_pairs(
-            emb,
-            threshold_x100=threshold_x100,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            vec_col=vec_col,
-            id_col=id_col,
-            max_bucket=max_bucket,
-        )
+    pairs = _lsh_pairs(
+        emb, threshold_x100, n_planes, n_tables, vec_col, id_col, max_bucket,
+        q8_table,
+    )
     comps = connected_components_star(pairs).withColumnRenamed(
         "doc_id", id_col
     )
@@ -837,26 +768,6 @@ def quantize_at_ingest(
     return io.read()
 
 
-def _dot_q8(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two int8 vectors (long math —
-    64 dims x 127^2 is far inside int64)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm_q8(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("long") * x.cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    )
-
-
 def near_dup_pairs_q8(
     emb: DataFrame,
     threshold_x100: int = 44,
@@ -881,30 +792,7 @@ def near_dup_pairs_q8(
     baseline) or from lsh_near_dup_pairs buckets (the scale path).
     """
     q = quantize_embeddings(emb, vec_col=vec_col, id_col=id_col)
-    a = q.select(
-        F.col(id_col).alias("a"),
-        F.col("q8").alias("aq"),
-        _norm_q8(F.col("q8")).alias("na"),
-    )
-    b = q.select(
-        F.col(id_col).alias("b"),
-        F.col("q8").alias("bq"),
-        _norm_q8(F.col("q8")).alias("nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .filter((F.col("na") > 0.0) & (F.col("nb") > 0.0))
-        .filter(
-            F.round(
-                _dot_q8(F.col("aq"), F.col("bq")).cast("double")
-                / (F.col("na") * F.col("nb")),
-                6,
-            )
-            >= F.lit(threshold_x100) / 100.0
-        )
-        .select("a", "b")
-    )
+    return _verify(None, q, q, threshold_x100, vec_col, id_col, True)
 
 
 def lsh_near_dup_pairs_q8(
@@ -938,37 +826,9 @@ def lsh_near_dup_pairs_q8(
     (id, q8 array<tinyint>) table, written once at ingest the way
     FAISS quantizes at index build) to pay the quantization cost
     zero times per query instead of once per side per run."""
-    cand, dropped = _lsh_candidates(
-        emb, n_planes, n_tables, vec_col, id_col, max_bucket
+    if q8_table is None:
+        q8_table = quantize_embeddings(emb, vec_col=vec_col, id_col=id_col)
+    return _lsh_pairs(
+        emb, threshold_x100, n_planes, n_tables, vec_col, id_col, max_bucket,
+        q8_table,
     )
-    q = (
-        q8_table
-        if q8_table is not None
-        else quantize_embeddings(emb, vec_col=vec_col, id_col=id_col)
-    )
-    va = q.select(
-        F.col(id_col).alias("a"),
-        F.col("q8").alias("aq"),
-        _norm_q8(F.col("q8")).alias("na"),
-    )
-    vb = q.select(
-        F.col(id_col).alias("b"),
-        F.col("q8").alias("bq"),
-        _norm_q8(F.col("q8")).alias("nb"),
-    )
-    out = (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .filter((F.col("na") > 0.0) & (F.col("nb") > 0.0))
-        .filter(
-            F.round(
-                _dot_q8(F.col("aq"), F.col("bq")).cast("double")
-                / (F.col("na") * F.col("nb")),
-                6,
-            )
-            >= F.lit(threshold_x100) / 100.0
-        )
-        .select("a", "b")
-    )
-    out.lsh_dropped = dropped
-    return out

@@ -40,19 +40,12 @@ IN_KINDS = (
     "box",
 )
 
-# Output span vocabulary (consumer side, FIXTURES.md §2; mirrors the
-# reference's artifact taxonomy at accurate/service.py:173,189,207).
-OUT_KINDS = ("text", "heading", "list_item", "table", "image", "formula")
-
 # Kinds that merge into one tier-1 paragraph block (naive fast-tier
 # linearization: table cells are flattened into running text, the way a
 # text-only markdown converter treats tables it cannot model).
 T1_PARA_KINDS = frozenset({"text", "link_text", "table_cell"})
 # Kinds that are a block of their own and are always kept by tier 1.
 T1_EMIT_KINDS = frozenset({"heading", "list_item"})
-# Kinds tier 1 drops entirely (fast tier is text-only: reference
-# README.md:39-48 — no images/tables/formulas from the fast service).
-T1_DROP_KINDS = frozenset({"image", "formula", "box", "table_row_end"})
 
 # ---------------------------------------------------------------------------
 # Tier-1 boilerplate classifier (jusText/Readability-style heuristics:

@@ -3,7 +3,7 @@
 Every document is a pure function of (seed, doc_idx) via its own
 PCG64 stream — no RNG state crosses documents, so generation is
 embarrassingly parallel and identical whether produced on the driver
-(`synth_pandas`) or distributed (`synth_spark` via mapInPandas over
+(`synth_docs`) or distributed (`synth_spark` via mapInPandas over
 `spark.range`), at any partitioning (FIXTURES.md §1 requirements).
 
 Corpus shape (exercises every extraction path):
@@ -29,7 +29,7 @@ import pandas as pd
 
 from .spec import CHROME_WORDS, CONTENT_WORDS, LANGS, STOPWORDS
 
-PAGE_W, PAGE_H = 1000, 1400
+PAGE_H = 1400
 GIANT_MOD, GIANT_RESIDUE = 211, 7
 GIANT_PAGES = 200
 
@@ -214,10 +214,6 @@ def make_doc(doc_idx: int, seed: int = 42) -> dict:
 
 def synth_docs(start: int, n: int, seed: int = 42) -> list[dict]:
     return [make_doc(i, seed) for i in range(start, start + n)]
-
-
-def synth_pandas(start: int, n: int, seed: int = 42) -> pd.DataFrame:
-    return pd.DataFrame(synth_docs(start, n, seed))
 
 
 def synth_spark(spark, n_docs: int, seed: int = 42, partitions: int | None = None):
