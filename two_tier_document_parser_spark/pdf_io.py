@@ -1903,8 +1903,7 @@ def _lift_image(objs, d: dict, ref, media_ref: str) -> dict | None:
         elif bpc == 8 and cs == "DeviceRGB" and len(data) >= 3 * w * h:
             rgb = np.frombuffer(data[: 3 * w * h], dtype=np.uint8).reshape(
                 h, w, 3
-            )
-            rgb = rgb.astype(np.int32)
+            ).astype(np.int32)
             gray = luma_bt601(
                 rgb[..., 0], rgb[..., 1], rgb[..., 2]
             ).astype(np.uint8)
