@@ -5237,6 +5237,9 @@ WHERE a.event_type = '{left_type}' AND b.event_type = '{right_type}'
 
 
 def _knn_sql(k: int = 10) -> str:
+    """Exact top-k oracle. DuckDB divides a zero vector's cosine to
+    NULL, which would still rank last; the zero-norm guard keeps it out
+    of the ranking, as similarity._rank_topk does."""
     return f"""
 WITH dims AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS d,
@@ -5256,6 +5259,7 @@ sims AS (
   FROM dots d
   JOIN norms nq ON nq.vec_id = d.query
   JOIN norms nc ON nc.vec_id = d.candidate
+  WHERE nq.nrm > 0 AND nc.nrm > 0
 )
 SELECT query, candidate, CAST(rank AS INT) AS rank FROM (
   SELECT query, candidate,

@@ -1423,6 +1423,44 @@ def test_lsh_near_dup_cap_is_observable(spark):
     assert m2["dropped_buckets"] == 0 and m2["dropped_ids"] == 0
 
 
+def test_zero_embedding_never_pairs_or_ranks(spark):
+    """An all-zero embedding (an empty document embeds to one) has no
+    cosine: the float near-dup and top-k operators leave it out instead
+    of failing the query with an ANSI division by zero, and the DuckDB
+    oracles of the driver queries agree."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as e
+    from two_tier_document_parser_spark.similarity import (
+        brute_force_topk,
+        ivf_topk,
+        lsh_near_dup_pairs,
+        lsh_topk,
+        near_dup_pairs,
+    )
+
+    vecs = [[1.0, 0.5, 0.0, 0.25], [0.9, 0.6, 0.1, 0.2], [0.0] * 4]
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<float>")
+    queries = emb.select(F.col("vec_id").alias("query"),
+                         F.col("embedding").alias("qvec"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)",
+                    list(enumerate(vecs)))
+    pairs = {(0, 1)}
+    assert {tuple(r) for r in near_dup_pairs(emb).collect()} == pairs
+    assert {tuple(r) for r in lsh_near_dup_pairs(emb).collect()} == pairs
+    assert set(con.execute(e._emb_near_dups_sql()).fetchall()) == pairs
+    ranked = {(0, 1, 1), (1, 0, 1)}
+    for topk in (brute_force_topk(emb, queries),
+                 ivf_topk(emb, queries, n_cells=2, n_probe=2),
+                 lsh_topk(emb, queries)):
+        assert {tuple(r) for r in topk.collect()} == ranked
+    assert set(con.execute(e._knn_sql()).fetchall()) == ranked
+
+
 def test_minhash_kernel_equals_relational(spark):
     """The map-only mapInPandas MinHash kernel must be bit-identical
     to the relational (oracle-shaped) form — same ASCII whitespace

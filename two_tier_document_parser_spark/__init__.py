@@ -15,7 +15,7 @@ Layout:
   layout.py       box geometry + recursive XY-cut reading order
   markdown_ser.py span -> markdown rendering (shared with oracle/)
   synth.py        deterministic synthetic corpus generator
-  schemas.py      canonical Spark StructTypes
+  schemas.py      one Arrow declaration per table; Spark types derive
   adapter.py      driver `documents` table -> documents_raw adapter
   routing.py      the one tier/quarantine rule
   tier1.py        fast extractor: per-document core + Arrow adapter

@@ -35,12 +35,8 @@ container is self-describing per document, so a 100 TB table of
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 
-from .schemas import RAW_SCHEMA
 from .spec import IN_KINDS
 
 MAGIC = b"TTDP1"
@@ -89,7 +85,7 @@ def encode_doc(doc: dict) -> bytes:
     )
 
 
-def _utf8_array(lens: np.ndarray, data: bytes) -> pa.Array:
+def _utf8_array(lens: np.ndarray, data: bytes):
     """Zero-copy-ish utf-8 column from (byte lengths, concatenated
     bytes): one cumsum for the offsets, no per-value Python strings.
 
@@ -98,6 +94,8 @@ def _utf8_array(lens: np.ndarray, data: bytes) -> pa.Array:
     own Arrow int32 offsets already cap one batch below 2 GiB — but
     guard explicitly so a violated assumption fails loudly instead of
     producing wrapped offsets."""
+    import pyarrow as pa
+
     offs64 = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=offs64[1:])
     if offs64[-1] > 0x7FFFFFFF:
@@ -185,13 +183,13 @@ def decode_doc(buf: bytes) -> dict | None:
     return {"doc_class": IN_DOC_CLASSES[cls], "n_pages": np_d, "spans": spans}
 
 
-def decode_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def decode_batches(batches):
     """(doc_id, payload binary) -> documents_raw rows. Malformed
     payloads produce a quarantine-shaped row (doc_class='', n_pages=0,
     no spans) instead of raising — the router (routing.route, run by
     fused_batches) then sends them to the error channel."""
+    import pyarrow as pa
+
     kind_dict = pa.array(IN_KINDS, type=pa.string())
     for batch in batches:
         n_docs = batch.num_rows
@@ -265,12 +263,11 @@ def decode_batches(
         )
 
 
-def encode_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def encode_batches(batches):
     """documents_raw rows -> (doc_id, payload binary). The Spark-side
     writer: per-span work is numpy over the flattened Arrow child
     arrays; Python touches only per-document section boundaries."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     for batch in batches:
@@ -363,6 +360,8 @@ def encode_table(raw):
 
 def decode_table(bin_df):
     """(doc_id, payload binary) DataFrame -> documents_raw rows."""
+    from .schemas import spark_schema
+
     return bin_df.select("doc_id", "payload").mapInArrow(
-        decode_batches, RAW_SCHEMA
+        decode_batches, spark_schema("documents_raw")
     )

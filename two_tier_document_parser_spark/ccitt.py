@@ -53,6 +53,7 @@ import struct
 import numpy as np
 
 from .png import luma_bt601
+from .spec import MAX_PIXELS
 
 # ---------------------------------------------------------------------------
 # T.4 run-length code tables (ITU-T T.4 §4.1.3/§4.2.1.3, reproduced in
@@ -837,7 +838,7 @@ def decode_tiff_gray(data: bytes) -> np.ndarray | None:
     depth = bps[0]
     if (depth, spp) not in ((1, 1), (8, 1), (8, 3)):
         return None
-    if not w or not h or w * h > (1 << 26):  # bomb guard, as gif/webp
+    if not w or not h or w * h > MAX_PIXELS:
         return None
 
     def _unpredict(arr: np.ndarray, width: int) -> np.ndarray:

@@ -42,13 +42,9 @@ from typing import Iterator
 import numpy as np
 
 from .png import luma_bt601
+from .spec import MAX_PIXELS
 
 _SIGS = (b"GIF87a", b"GIF89a")
-
-# decompression-bomb guard: header dims are attacker-controlled and a
-# tiny LZW stream can legally expand to w*h pixels plus zero-padding —
-# bound the output buffer like the PDF stream caps (spec.py) do.
-MAX_PIXELS = 1 << 26
 
 # interlace pass layout: (first row, row step) per the GIF89a spec
 # appendix E — pass 1 rows 0,8,16..., pass 2 rows 4,12..., pass 3

@@ -67,11 +67,6 @@ from __future__ import annotations
 
 import html as _html
 import re
-from typing import Iterator
-
-import pyarrow as pa
-
-from .schemas import RAW_SCHEMA
 
 # one pass over the document: comments / doctypes / tags
 _TOKEN_RE = re.compile(r"<!--.*?-->|<![^>]*>|<[^>]*>", re.S)
@@ -524,9 +519,7 @@ def render_html(doc: dict) -> bytes:
     return "".join(out).encode("utf-8")
 
 
-def parse_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def parse_batches(batches):
     """(doc_id, payload binary) -> documents_raw rows; malformed
     payloads become quarantine-shaped rows (O19), never exceptions.
     Batch assembly is shared with pdf_io/ingest (schemas
@@ -536,9 +529,9 @@ def parse_batches(
     return decode_raw_batches(batches, parse_html)
 
 
-def render_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def render_batches(batches):
+    import pyarrow as pa
+
     for batch in batches:
         if batch.num_rows == 0:
             continue
@@ -563,6 +556,8 @@ def render_table(raw):
 
 def parse_table(bin_df):
     """(doc_id, payload binary) of HTML -> documents_raw rows."""
+    from .schemas import spark_schema
+
     return bin_df.select("doc_id", "payload").mapInArrow(
-        parse_batches, RAW_SCHEMA
+        parse_batches, spark_schema("documents_raw")
     )

@@ -8,17 +8,12 @@ DOM lift (html_io). Undecodable payloads become quarantine-shaped
 rows (doc_class='', no spans — error channel O19); the kernel never
 raises. Content wins over filename, matching api._decode_payload.
 
-Map-only: no shuffle, splits on parquet row groups, composes with
-the fused cascade in the same stage (the kernel is stateless).
+Map-only: no shuffle, splits on parquet row groups. The kernel is
+stateless, but `extract(sniff_decode_table(...))` still runs two Python
+workers per task: this mapInArrow, then the fused cascade's.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pyarrow as pa
-
-from .schemas import RAW_SCHEMA
 
 
 def sniff_decode_doc(payload: bytes) -> dict | None:
@@ -35,9 +30,7 @@ def sniff_decode_doc(payload: bytes) -> dict | None:
     return html_io.parse_html(p)
 
 
-def sniff_decode_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def sniff_decode_batches(batches):
     from .schemas import decode_raw_batches
 
     return decode_raw_batches(batches, sniff_decode_doc)
@@ -46,6 +39,8 @@ def sniff_decode_batches(
 def sniff_decode_table(bin_df):
     """(doc_id, payload binary) DataFrame -> documents_raw rows with
     per-document format sniffing."""
+    from .schemas import spark_schema
+
     return bin_df.select("doc_id", "payload").mapInArrow(
-        sniff_decode_batches, RAW_SCHEMA
+        sniff_decode_batches, spark_schema("documents_raw")
     )

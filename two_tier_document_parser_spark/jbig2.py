@@ -54,6 +54,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .spec import MAX_PIXELS
+
 # ---------------------------------------------------------------------------
 # MQ arithmetic decoder — T.88 Annex E (identical to the JPEG 2000
 # MQ coder). Qe table from Table E.1: (Qe, NMPS, NLPS, SWITCH).
@@ -538,7 +540,7 @@ def _decode_symbol_dict(payload: bytes, in_syms: list) -> list:
 def _decode_text_region(payload: bytes, syms: list) -> tuple:
     """Text region segment (§7.4.4) -> (bitmap, x, y, comb_op)."""
     w, h, x, y, comb, rest = _region_info(payload)
-    if w <= 0 or h <= 0 or w * h > 64_000_000:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         raise ValueError("region bounds unreasonable")
     if len(rest) < 6:
         raise ValueError("truncated text region header")
@@ -696,7 +698,7 @@ def _compose(page: np.ndarray, bmp: np.ndarray, x: int, y: int, comb: int) -> No
 
 
 def decode_jbig2(
-    data: bytes, globals_data: bytes = b"", max_pixels: int = 64_000_000
+    data: bytes, globals_data: bytes = b"", max_pixels: int = MAX_PIXELS
 ) -> np.ndarray | None:
     """Full-stream decode -> (h, w) uint8 bitmap (1 = black) or None
     when the stream uses segment types outside the generic-region
@@ -794,7 +796,7 @@ def decode_jbig2(
 
 
 def decode_jbig2_gray(
-    data: bytes, globals_data: bytes = b"", max_pixels: int = 64_000_000
+    data: bytes, globals_data: bytes = b"", max_pixels: int = MAX_PIXELS
 ) -> np.ndarray | None:
     """decode_jbig2 mapped to the repo grayscale convention
     (1=black -> 0, 0=white -> 255), like ccitt.decode_tiff_gray's

@@ -48,6 +48,7 @@ import numpy as np
 
 from .jbig2 import _MQDecoder
 from .png import luma_bt601
+from .spec import MAX_PIXELS
 
 # ---------------------------------------------------------------------------
 # context tables (T.800 Annex D)
@@ -526,7 +527,7 @@ _SKIP_MARKERS = frozenset((0x64, 0x55, 0x57, 0x58, 0x63))  # COM/TLM/PLM/PLT/CRG
 _REJECT_MARKERS = frozenset((0x53, 0x5D, 0x5E, 0x5F, 0x60, 0x61))
 
 
-def decode_jp2(data: bytes, max_pixels: int = 64_000_000) -> np.ndarray | None:
+def decode_jp2(data: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray | None:
     """JP2/J2K payload -> (h, w) int32 for 1 component or
     (h, w, ncomp) for several, in the component bit depth (unsigned
     offset already applied), or None outside the documented
@@ -860,7 +861,7 @@ def _decode_inner(data: bytes, max_pixels: int) -> tuple[np.ndarray, int]:
 
 
 def decode_jp2_gray(
-    data: bytes, max_pixels: int = 64_000_000
+    data: bytes, max_pixels: int = MAX_PIXELS
 ) -> np.ndarray | None:
     """decode_jp2 collapsed to one uint8 grayscale plane (BT.601
     luma for 3-component images, like jpeg.decode_jpeg_gray;

@@ -76,12 +76,9 @@ import binascii
 import hashlib
 import re
 import zlib
-from typing import Iterator
-
-import pyarrow as pa
 
 from . import pdf_fonts
-from .schemas import RAW_SCHEMA
+from .spec import MAX_PIXELS
 
 HEADING_PT = 16     # >= this text size -> heading
 BODY_PT = 12
@@ -1699,9 +1696,7 @@ def encrypt_pdf(
 # ---------------------------------------------------------------------------
 
 
-def parse_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def parse_batches(batches):
     """(doc_id, payload binary) -> documents_raw rows; malformed
     payloads become quarantine-shaped rows (O19), never exceptions.
     Batch assembly is shared with html_io/ingest (schemas
@@ -1711,9 +1706,9 @@ def parse_batches(
     return decode_raw_batches(batches, parse_pdf)
 
 
-def render_batches(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
+def render_batches(batches):
+    import pyarrow as pa
+
     for batch in batches:
         if batch.num_rows == 0:
             continue
@@ -1741,7 +1736,9 @@ def encrypt_table(bin_df, cipher: str = "rc4", nbits: int = 128):
         ("aes256", 256), ("aes256r5", 256),
     )
 
-    def _enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def _enc(batches):
+        import pyarrow as pa
+
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -1786,8 +1783,10 @@ def render_table(raw):
 
 def parse_table(bin_df):
     """(doc_id, payload binary) of PDFs -> documents_raw rows."""
+    from .schemas import spark_schema
+
     return bin_df.select("doc_id", "payload").mapInArrow(
-        parse_batches, RAW_SCHEMA
+        parse_batches, spark_schema("documents_raw")
     )
 
 
@@ -1840,7 +1839,7 @@ def _lift_image(objs, d: dict, ref, media_ref: str) -> dict | None:
     h = _resolve(objs, d.get("Height"))
     if not (isinstance(w, int) and isinstance(h, int)):
         return None
-    if w <= 0 or h <= 0 or w * h > 64_000_000:
+    if w <= 0 or h <= 0 or w * h > MAX_PIXELS:
         return None
     data = _stream_bytes(objs, ref)
     term, parms = _terminal_filter(objs, d)
@@ -1986,6 +1985,8 @@ def _pdf_media_inner(data: bytes) -> list[dict]:
 def media_batches(batches):
     """(doc_id, payload binary) -> MEDIA_TABLE_SCHEMA rows; malformed
     payloads lift zero rows (O19: never raise)."""
+    import pyarrow as pa
+
     for batch in batches:
         if batch.num_rows == 0:
             continue
@@ -2110,6 +2111,8 @@ def render_media_pdf(did: int) -> bytes:
 
 
 def render_media_batches(batches):
+    import pyarrow as pa
+
     for batch in batches:
         if batch.num_rows == 0:
             continue

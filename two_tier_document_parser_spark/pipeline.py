@@ -8,8 +8,9 @@
          -> one output table
 
 Design notes for 100 TB:
-- the only JVM->Python hop is the one fused mapInArrow (Arrow
-  batches); routing runs inside it on the batch it already holds, so
+- on a span table the only JVM->Python hop is the one fused
+  mapInArrow (Arrow batches; a `sniff_decode_table` input adds its
+  own); routing runs inside it on the batch it already holds, so
   there is no separate routing pass, no per-tier filter and no union;
 - `salt` folds pmod(xxhash64(doc_id), S) into the repartition so giant
   documents from one producer spread across tasks (SURVEY §4.3.1);
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import OUT_SCHEMA
+from .schemas import spark_schema
 
 ARROW_BATCH = 256
 
@@ -142,7 +143,7 @@ def fused_map(raw: DataFrame) -> DataFrame:
     upstream): the throughput path for the full cascade. n_pages is
     read (one int32 column) for the n_pages < 1 quarantine."""
     return raw.select("doc_id", "doc_class", "n_pages", "spans").mapInArrow(
-        fused_batches, OUT_SCHEMA
+        fused_batches, spark_schema("documents_out")
     )
 
 

@@ -1,45 +1,36 @@
-"""Canonical Spark schemas (FIXTURES.md §§1-3, SURVEY.md §1.2).
+"""documents_raw and documents_out, each declared once (FIXTURES.md
+§§1-3, SURVEY.md §1.2).
 
 The engine is schema-first end-to-end: the reference's schemaless
 middle_json dicts (accurate/service.py:119-123) are replaced by fixed
-StructTypes enforced at every mapInPandas boundary.
+schemas enforced at every mapInArrow boundary. `arrow_schema` is the
+one declaration, built on first use; the Spark edge derives its
+StructTypes from it (`spark_schema`). Neither pyspark nor pyarrow is
+imported until a batch path asks for a schema, so the per-request
+facade loads neither.
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+import functools
 
-SPAN_IN = StructType(
-    [
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("offset", IntegerType(), False),
-    ]
-)
 
-RAW_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("doc_class", StringType(), False),
-        StructField("n_pages", IntegerType(), False),
-        StructField("spans", ArrayType(SPAN_IN, False), False),
-    ]
-)
+@functools.cache
+def arrow_schema(table: str):
+    """The Arrow schema of "documents_raw" or "documents_out". No field
+    and no list element is nullable."""
+    import pyarrow as pa
 
-SPAN_OUT = StructType(
-    [
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("order", IntegerType(), False),
+    def struct(**types):
+        return pa.struct([pa.field(n, t, False) for n, t in types.items()])
+
+    def list_of(t):
+        return pa.list_(pa.field("item", t, False))
+
+    s, i32 = pa.string(), pa.int32()
+    span_in = struct(kind=s, text=s, media_ref=s, offset=i32)
+    span_out = struct(
+        kind=s, text=s, media_ref=s, order=i32,
         # [x0, y0, x1, y1] in integer layout-grid units, [] when the
         # span has no geometry (tier-1 output, regions without boxes).
         # Reference parity: every ImageData/TableData/FormulaData
@@ -47,25 +38,26 @@ SPAN_OUT = StructType(
         # accurate/service.py:177-216); ints (not floats) keep the
         # bbox OUT of the float-free equality invariant while still
         # being exact (SURVEY §7.7.4).
-        StructField("bbox", ArrayType(IntegerType(), False), False),
-    ]
-)
+        bbox=list_of(i32),
+    )
+    return pa.schema({
+        "documents_raw": struct(doc_id=s, doc_class=s, n_pages=i32,
+                                spans=list_of(span_in)),
+        "documents_out": struct(
+            doc_id=s, tier=s, pages=i32, spans=list_of(span_out),
+            markdown=s, n_images=i32, n_tables=i32, n_formulas=i32,
+            skipped_pages=list_of(i32), processing_time_ms=pa.int64(),
+            error=s,
+        ),
+    }[table])
 
-OUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("tier", StringType(), False),
-        StructField("pages", IntegerType(), False),
-        StructField("spans", ArrayType(SPAN_OUT, False), False),
-        StructField("markdown", StringType(), False),
-        StructField("n_images", IntegerType(), False),
-        StructField("n_tables", IntegerType(), False),
-        StructField("n_formulas", IntegerType(), False),
-        StructField("skipped_pages", ArrayType(IntegerType(), False), False),
-        StructField("processing_time_ms", LongType(), False),
-        StructField("error", StringType(), False),
-    ]
-)
+
+def spark_schema(table: str):
+    """The Spark StructType of `table`, derived from `arrow_schema`."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(arrow_schema(table))
+
 
 # ---------------------------------------------------------------------------
 # shared Arrow-side assembly for the raw-bytes decoders (html_io /
@@ -75,18 +67,12 @@ OUT_SCHEMA = StructType(
 
 
 def spans_arrow_type():
+    """documents_raw's `spans` type with every field nullable: the type
+    the decoders build their span column with."""
     import pyarrow as pa
 
-    return pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
+    span = arrow_schema("documents_raw").field("spans").type.value_type
+    return pa.list_(pa.struct([f.with_nullable(True) for f in span]))
 
 
 QUARANTINE_ROW = {"doc_class": "", "n_pages": 0, "spans": []}
@@ -214,7 +200,7 @@ def out_batch(doc_ids: list[str], docs: list[DocOut], ms: int):
             pa.array([ms] * len(docs), pa.int64()),
             pa.array([d.error for d in docs], s),
         ],
-        names=OUT_SCHEMA.names,
+        names=arrow_schema("documents_out").names,
     )
 
 

@@ -46,16 +46,11 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """cosine with the norms hoisted out: bit-identical to `cosine`
-    (same dot fold, same `na * nb` operand order) but lets the caller
-    compute each vector's norm ONCE per row instead of once per pair
-    side — in the verify joins below the per-pair HOF work drops from
-    three array folds to one."""
+    """cosine with the norms `na`, `nb` hoisted out: the caller
+    computes each vector's norm ONCE per row instead of once per pair
+    side, so the per-pair HOF work drops from three array folds to
+    one. Callers filter zero norms first (ANSI division by zero)."""
     return _dot(a, b) / (na * nb)
 
 
@@ -95,22 +90,23 @@ def brute_force_topk(
             _norm(F.col(vec_col)).alias("cn"),
         )
     ).filter(F.col("query") != F.col("candidate"))
-    return _rank_topk(
-        joined,
-        _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")),
-        k,
-    )
+    return _rank_topk(joined, k)
 
 
-def _rank_topk(joined: DataFrame, sim: Column, k: int) -> DataFrame:
-    """The top-k rank every *_topk shares: per query, the k candidates
-    of highest round(sim, 6), ties to the smaller candidate id ->
-    (query, candidate, rank)."""
+def _rank_topk(joined: DataFrame, k: int) -> DataFrame:
+    """The top-k rank every *_topk shares. `joined` holds (query, qvec,
+    qn, candidate, cvec, cn), qn and cn the vectors' norms. Per query,
+    the k candidates of highest round(cosine, 6), ties to the smaller
+    candidate id -> (query, candidate, rank). A zero vector on either
+    side has no cosine, so it never ranks."""
+    qn, cn = F.col("qn"), F.col("cn")
+    sim = _cosine_pre(F.col("qvec"), F.col("cvec"), qn, cn)
     w = Window.partitionBy("query").orderBy(
         F.desc("sim"), F.asc("candidate")
     )
     return (
-        joined.select("query", "candidate", F.round(sim, 6).alias("sim"))
+        joined.filter((qn > 0.0) & (cn > 0.0))
+        .select("query", "candidate", F.round(sim, 6).alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query", "candidate", "rank")
@@ -211,8 +207,8 @@ def _verify(
     candidates, cross-join under a < b. A pair stays when
     round(cosine, 6) >= threshold_x100 / 100. The payload is the float
     `vec_col` (the `_cosine_pre` fold), or with `q8` the sides'
-    `q8` array<tinyint> (exact integer dot / float norms), where zero
-    vectors are filtered out before the division."""
+    `q8` array<tinyint> (exact integer dot / float norms). Zero vectors
+    are filtered out before the division, on either payload."""
     col, norm = ("q8", _norm_q8) if q8 else (vec_col, _norm)
     va, vb = (
         side.select(
@@ -227,8 +223,8 @@ def _verify(
     else:
         pairs = cand.join(va, "a").join(vb, "b")
     av, bv, na, nb = F.col("av"), F.col("bv"), F.col("na"), F.col("nb")
+    pairs = pairs.filter((na > 0.0) & (nb > 0.0))
     if q8:
-        pairs = pairs.filter((na > 0.0) & (nb > 0.0))
         sim = _dot_q8(av, bv).cast("double") / (na * nb)
     else:
         sim = _cosine_pre(av, bv, na, nb)
@@ -513,17 +509,19 @@ def ivf_topk(
     cand = emb.select(
         F.col(id_col).alias("candidate"),
         F.col(vec_col).alias("cvec"),
+        _norm(F.col(vec_col)).alias("cn"),
         top1(F.col(vec_col)).alias("cell"),
     )
     q = queries.select(
-        "query", "qvec", F.explode(topp(F.col("qvec"))).alias("cell")
+        "query", "qvec", _norm(F.col("qvec")).alias("qn"),
+        F.explode(topp(F.col("qvec"))).alias("cell"),
     )
     joined = (
         q.join(cand, "cell")
         .filter(F.col("query") != F.col("candidate"))
         .dropDuplicates(["query", "candidate"])
     )
-    return _rank_topk(joined, cosine(F.col("qvec"), F.col("cvec")), k)
+    return _rank_topk(joined, k)
 
 
 def lsh_topk(
@@ -553,14 +551,17 @@ def lsh_topk(
         .distinct()
     )
     joined = pair_ids.join(
-        queries.select("query", "qvec"), "query"
+        queries.select("query", "qvec", _norm(F.col("qvec")).alias("qn")),
+        "query",
     ).join(
         emb.select(
-            F.col(id_col).alias("candidate"), F.col(vec_col).alias("cvec")
+            F.col(id_col).alias("candidate"),
+            F.col(vec_col).alias("cvec"),
+            _norm(F.col(vec_col)).alias("cn"),
         ),
         "candidate",
     )
-    return _rank_topk(joined, cosine(F.col("qvec"), F.col("cvec")), k)
+    return _rank_topk(joined, k)
 
 
 def incremental_semantic_dedup(

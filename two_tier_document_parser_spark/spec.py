@@ -107,6 +107,12 @@ def too_large_reason(tier: str) -> str:
     cap = T1_MAX_SPANS if tier == "fast" else T2_MAX_SPANS
     return f"document too large (max {cap} spans for {tier} tier)"
 
+
+# Decompression-bomb guard of every image decoder: header dimensions
+# are attacker-controlled, and a tiny compressed stream can legally
+# expand to w*h pixels, so no decoder allocates more than this.
+MAX_PIXELS = 64_000_000
+
 # ---------------------------------------------------------------------------
 # Stopwords (used by the tier-1 stop-density heuristic — union across
 # languages — and by the synthetic corpus generator / language-id op)

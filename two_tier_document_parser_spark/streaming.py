@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline import fused_map
-from .schemas import RAW_SCHEMA
+from .schemas import spark_schema
 
 
 def read_document_stream(spark: SparkSession, input_path: str) -> DataFrame:
@@ -24,7 +24,7 @@ def read_document_stream(spark: SparkSession, input_path: str) -> DataFrame:
     file appearing = one micro-batch unit). maxFilesPerTrigger bounds
     micro-batch size so a backlog burst cannot OOM executors."""
     return (
-        spark.readStream.schema(RAW_SCHEMA)
+        spark.readStream.schema(spark_schema("documents_raw"))
         .option("maxFilesPerTrigger", 64)
         .parquet(input_path)
     )

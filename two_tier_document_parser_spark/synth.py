@@ -220,7 +220,7 @@ def synth_spark(spark, n_docs: int, seed: int = 42, partitions: int | None = Non
     """Distributed generation: one row per doc id from spark.range, the
     heavy span payloads materialized executor-side in Arrow batches —
     at 10^12 scale the driver never holds the corpus."""
-    from .schemas import RAW_SCHEMA
+    from .schemas import spark_schema
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 1)
 
@@ -234,5 +234,5 @@ def synth_spark(spark, n_docs: int, seed: int = 42, partitions: int | None = Non
 
     return (
         spark.range(0, n_docs, numPartitions=parts)
-        .mapInPandas(gen, schema=RAW_SCHEMA)
+        .mapInPandas(gen, schema=spark_schema("documents_raw"))
     )

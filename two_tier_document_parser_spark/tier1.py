@@ -27,10 +27,6 @@ handled upstream by salting/repartition, and the span caps
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
-
 from .markdown_ser import join_page, join_pages, render_block
 from .schemas import DocOut, core_batches
 from .spec import (
@@ -125,5 +121,5 @@ def extract_fast(kinds: list[str], texts: list[str]) -> DocOut:
     return out
 
 
-def tier1_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def tier1_batches(batches):
     return core_batches(batches, extract_fast, ("kind", "text"))

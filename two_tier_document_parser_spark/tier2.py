@@ -21,9 +21,6 @@ document one call extracts is bounded.
 from __future__ import annotations
 
 import traceback
-from typing import Iterator
-
-import pyarrow as pa
 
 from .layout import xycut
 from .markdown_ser import join_page, join_pages, render_block, table_markdown
@@ -181,5 +178,5 @@ def extract_deep(kinds: list[str], texts: list[str], refs: list[str]) -> DocOut:
     return em
 
 
-def tier2_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def tier2_batches(batches):
     return core_batches(batches, extract_deep, ("kind", "text", "media_ref"))

@@ -48,6 +48,7 @@ from typing import Iterator
 import numpy as np
 
 from .png import luma_bt601
+from .spec import MAX_PIXELS
 
 # code-length-code read order (spec §"Decoding the Code Lengths")
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -457,7 +458,7 @@ def _decode_vp8l(body: bytes) -> np.ndarray | None:
     br.get(8)  # signature
     w = br.get(14) + 1
     h = br.get(14) + 1
-    if w * h > (1 << 26):  # decompression-bomb guard (cf. gif.MAX_PIXELS)
+    if w * h > MAX_PIXELS:
         return None
     br.bit()  # alpha hint
     if br.get(3) != 0:  # version
