@@ -408,8 +408,8 @@ def q_residual_outliers(spark, sf_dir):
 def q_kmeans_q8(spark, sf_dir):
     """Fixed-iteration integer Lloyd's over shifted-q8 embeddings
     (SemDeDup §3's clustering stage, made oracle-exact): map-only
-    assignment (centroid literals folded into the expression tree —
-    zero joins/shuffles per assign pass), k·dim-keyed integer update
+    assignment (the centroids ride into one mapInArrow kernel — zero
+    joins/shuffles per assign pass), k·dim-keyed integer update
     sums with bounded driver state. clustering.py docstring has the
     full scale + exactness contract."""
     from two_tier_document_parser_spark.clustering import kmeans_q8

@@ -94,19 +94,7 @@ def test_matches_reference_implementation(spark, emb):
     assert got[1][0] != got[4][0] != got[7][0]
 
 
-def test_arrow_and_expr_kernels_bit_identical(spark, emb):
-    a = {
-        r["vec_id"]: (r["cluster"], r["dist_q"])
-        for r in kmeans_q8(emb, k=3, iters=3, kernel="arrow").collect()
-    }
-    e = {
-        r["vec_id"]: (r["cluster"], r["dist_q"])
-        for r in kmeans_q8(emb, k=3, iters=3, kernel="expr").collect()
-    }
-    assert a == e
-
-
-def test_kernels_identical_on_real_table(spark):
+def test_matches_reference_on_real_table(spark):
     import os
 
     sf = os.environ.get("SPARK_GRAFT_SF_TEST", "/root/testdata/sf0.001")
@@ -114,13 +102,12 @@ def test_kernels_identical_on_real_table(spark):
     if not os.path.exists(p):
         pytest.skip("no testdata")
     emb = spark.read.parquet(p)
-    a = sorted(
-        map(tuple, kmeans_q8(emb, k=8, iters=2, kernel="arrow").collect())
-    )
-    e = sorted(
-        map(tuple, kmeans_q8(emb, k=8, iters=2, kernel="expr").collect())
-    )
-    assert a == e
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    got = {
+        r["vec_id"]: (r["cluster"], r["dist_q"])
+        for r in kmeans_q8(emb, k=8, iters=2).collect()
+    }
+    assert got == _ref_kmeans(vecs, k=8, iters=2)
 
 
 def test_assignment_is_map_only(spark, emb):
@@ -130,8 +117,8 @@ def test_assignment_is_map_only(spark, emb):
         .executedPlan()
         .toString()
     )
-    # centroids are literals folded into the expression tree: the
-    # returned assignment pass must contain NO Exchange of any kind
+    # the centroids ride into the kernel: the returned assignment
+    # pass must contain NO Exchange of any kind
     assert "Exchange" not in plan, plan
 
 
@@ -153,6 +140,20 @@ def test_empty_cluster_keeps_previous_centroid(spark):
     rows = kmeans_q8(emb, k=3, iters=2).collect()
     assert {r["cluster"] for r in rows} == {0}
     assert all(r["dist_q"] == 0 for r in rows)
+
+
+def test_empty_table_gives_zero_rows_with_the_usual_schema(spark, emb):
+    from two_tier_document_parser_spark.clustering import emb_moments
+
+    empty = emb.limit(0)
+    for op in (
+        lambda e: kmeans_q8(e, k=3, iters=2),
+        lambda e: cluster_profile(kmeans_q8(e, k=3, iters=2)),
+        emb_moments,
+    ):
+        got = op(empty)
+        assert got.collect() == []
+        assert got.schema == op(emb).schema
 
 
 def test_emb_moments_match_numpy(spark, emb):

@@ -14,6 +14,7 @@ import math
 import pytest
 
 from two_tier_document_parser_spark.pq import (
+    _pack,
     pq_encode,
     pq_recall,
     pq_topk,
@@ -193,24 +194,74 @@ def test_deterministic_across_runs_and_partitionings(spark, emb):
     assert a == b
 
 
+def _plan_nodes(node):
+    """Every node of an executed plan, through the AQE query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_nodes(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return [node] + _plan_nodes(node.plan())
+    kids = node.children()
+    return [node] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
 def test_scoring_pass_is_map_only_with_bounded_merge(spark, emb):
     """The scale contract: after training, the encode+ADC+top-k pass
     must be a single map-side kernel whose output is bounded at
     partitions * n_queries * topk rows — the only Exchange in the
     final plan ranks that bounded union (hashpartitioning on
     query_id), never the data-sized table."""
-    tk = pq_topk(emb, m=2, k=4, iters=1, n_queries=2, topk=3)
-    plan = tk._jdf.queryExecution().executedPlan().toString()
-    # exactly one exchange family: the bounded-union window rank
     import re
 
-    exchanges = re.findall(r"Exchange \w+", plan)
-    assert all("hashpartitioning" in e or "Exchange" in e for e in exchanges)
-    assert plan.count("Exchange") <= 2, plan  # window (+AQE read) only
-    rows = tk.collect()
-    assert len(rows) == 2 * 3
+    nq, topk = 2, 3
+    tk = pq_topk(emb, m=2, k=4, iters=1, n_queries=nq, topk=topk)
+    assert len(tk.collect()) == nq * topk
+    plan = tk._jdf.queryExecution().executedPlan()
+    exchanges = re.findall(r"Exchange (\w+)(?:\((\w+)#)?", plan.toString())
+    assert exchanges, plan.toString()
+    assert set(exchanges) == {("hashpartitioning", "query_id")}, exchanges
+    kernels = [n for n in _plan_nodes(plan) if n.nodeName() == "MapInArrow"]
+    assert len(kernels) == 1
     parts = emb.rdd.getNumPartitions()
-    assert parts >= 1  # partial union is <= parts * nq * topk by code
+    assert parts >= 3
+    emitted = kernels[0].metrics().apply("pythonNumRowsReceived").value()
+    assert 0 < emitted <= parts * nq * topk
+
+
+def test_codes_that_overflow_a_long_raise_before_any_job(spark):
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    # k**m = 2**64: sub-ids [255]*8 would pack to -1. The embeddings
+    # raise when scanned, so the error must come before any job.
+    unscannable = spark.range(300).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(F.raise_error("scanned").cast("float"), 8)
+        .alias("embedding"),
+    )
+    with pytest.raises(ValueError, match="64-bit"):
+        train_pq(unscannable, m=8, k=256, iters=1)
+    # k**m = 2**63 still fits: the largest code word is 2**63 - 1
+    assert _pack(np.full((1, 9), 127), 128)[0] == 2**63 - 1
+
+
+def test_empty_table_gives_zero_rows_with_the_usual_schema(spark, emb):
+    empty = emb.limit(0)
+    for op in (pq_encode, pq_topk, pq_recall):
+        got = op(empty, m=2, k=4, iters=2)
+        assert got.collect() == []
+        assert got.schema == op(emb, m=2, k=4, iters=1).schema
+
+
+def test_fewer_rows_than_k_trains_one_centroid_per_row(spark, emb):
+    # 24 rows: k=32 keeps the 24 smallest-id init rows, as the oracle's
+    # LIMIT k does, so it trains exactly like k=24
+    n = emb.count()
+    assert sorted(pq_topk(emb, m=2, k=n + 8, iters=2).collect()) == sorted(
+        pq_topk(emb, m=2, k=n, iters=2).collect()
+    )
 
 
 def test_dim_not_divisible_raises(spark):

@@ -10,25 +10,29 @@ explicit centroids + assignments usable for cluster-capped sampling,
 per-cluster dedup, and diversity audits.
 
 Spark shape (the classic scalable k-means plan, same topology as
-Spark MLlib's, but with the centroid broadcast folded ENTIRELY into
-the expression tree):
+Spark MLlib's, with the centroids shipped inside the kernel):
 
 - **Assignment is map-only.** The k centroids (k·dim ints, driver
-  state bounded at k·dim) are embedded as a nested array LITERAL in
-  the plan; per-point distances come from ``transform`` +
-  ``zip_with`` + ``aggregate`` higher-order functions and the argmin
-  from ``array_position(dists, array_min(dists))`` — first-occurrence
-  semantics give the deterministic lowest-cluster-id tie-break. No
-  join, no shuffle: a 10^12-point assignment pass is one scan.
-- **Update is one tiny shuffle.** posexplode to (cluster, dim) keys →
-  sum/count with map-side partial aggregation — only k·dim·partitions
-  partial rows ever move. The k·dim sums collect to the driver
-  (bounded, the repo's accepted iterative-op pattern — see
-  bpe_train's argmax collect and the memory note on lazy iterative
-  lineage), where the new centroids are exact integer floor-means.
+  state bounded at k·dim) ride into one mapInArrow kernel as a numpy
+  constant; each batch's exact int64 distances come from the
+  ||p||^2 + ||c||^2 - 2 p.c expansion (``_sqdist``) and the argmin
+  keeps the first minimum — the deterministic lowest-cluster-id
+  tie-break. No join, no shuffle: a 10^12-point assignment pass is
+  one scan.
+- **Update is one tiny shuffle.** The same kernel assigns in-batch
+  and emits per-(cluster, dim) integer partial sums → sum/count with
+  map-side partial aggregation — only k·dim·partitions partial rows
+  ever move. The k·dim sums collect to the driver (bounded, the
+  repo's accepted iterative-op pattern — see bpe_train's argmax
+  collect and the memory note on lazy iterative lineage), where the
+  new centroids are exact integer floor-means.
 - k iterations = k scans + k tiny shuffles; nothing in the loop grows
   with executor count or data size except the embarrassingly parallel
   scan itself.
+
+The trainer (``_lloyd``) runs over m subspaces at once: k-means is
+the m = 1 case, and pq.py's sub-codebooks are the same loop with
+m > 1.
 
 Exactness contract (what makes the unrolled DuckDB oracle hash-exact):
 points are the SAME symmetric int8 quantization as the q8 near-dup
@@ -37,14 +41,17 @@ family (round away-from-zero in both engines — see
 every sum, squared distance, and floor-divided centroid mean is
 non-negative int64 arithmetic — order-independent, no float folds,
 and Python ``//`` == SQL ``//``/``div`` on non-negative operands.
-Distances are invariant under the constant shift, so the clustering
-is exactly the clustering of the q8 vectors. Empty clusters keep
-their previous centroid (COALESCE in the oracle's LEFT JOIN — the
-deterministic convention, not a re-seed).
+Each term of the distance expansion is exact too: values <= 254, so
+a dim-64 dot product is <= 64*254^2 ~ 4.1e6. Distances are invariant
+under the constant shift, so the clustering is exactly the clustering
+of the q8 vectors. Empty clusters keep their previous centroid
+(COALESCE in the oracle's LEFT JOIN — the deterministic convention,
+not a re-seed).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,104 +70,113 @@ def _shifted_points(
     )
 
 
-def _dist_expr(cents: list[list[int]]):
-    """Map-only distance-to-each-centroid + argmin expressions from a
-    centroid LITERAL (k x dim nested array folded into the plan)."""
-    cent_lit = F.array(
-        *[
-            F.array(*[F.lit(int(v)).cast("long") for v in c])
-            for c in cents
-        ]
+def _points(b) -> np.ndarray:
+    """An Arrow batch's ``p`` column as an (n, dim) int64 matrix."""
+    return np.stack(b.column("p").to_numpy(zero_copy_only=False)).astype(
+        np.int64
     )
-    dists = F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("p"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    return dists
 
 
-def _assign_arrow(C, id_col: str):
-    """mapInArrow assignment kernel: exact int64 numpy distances via
-    the ||p||^2 - 2 p.C + ||c||^2 expansion (every term exact:
-    values <= 254, dim-64 dot <= 64*254^2 ~ 4.1e6 — no overflow, no
-    float), np.argmin first-occurrence = the same lowest-cluster-id
-    tie-break as array_position(first-min). Bit-identical to the
-    expression path (pytest-pinned), ~40x faster per pass."""
-    cc = (C * C).sum(axis=1)
+def _sqdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(len(A), len(B)) exact int64 squared distances."""
+    return (
+        (A * A).sum(axis=1)[:, None]
+        + (B * B).sum(axis=1)[None, :]
+        - 2 * (A @ B.T)
+    )
+
+
+def _sub_dists(P: np.ndarray, CB: np.ndarray) -> list[np.ndarray]:
+    """Per subspace j of the (m, k, sub) codebook CB, the (n, k)
+    squared distances from P's j-th subvectors to CB[j]."""
+    return [
+        _sqdist(S, C) for S, C in zip(np.split(P, len(CB), axis=1), CB)
+    ]
+
+
+def _nearest(P: np.ndarray, CB: np.ndarray):
+    """(codes, dists), both (n, m) int64: each point's nearest
+    centroid in each subspace (first minimum, so ties go to the
+    lowest cluster id) and its squared distance."""
+    D = _sub_dists(P, CB)
+    codes = np.stack([d.argmin(axis=1) for d in D], axis=1)
+    rows = np.arange(len(P))
+    dists = np.stack([d[rows, c] for d, c in zip(D, codes.T)], axis=1)
+    return codes, dists
+
+
+def _smallest(pts: DataFrame, n: int, id_col: str):
+    """(ids, (n', dim) int64 matrix) of the n smallest-id points, in
+    id order — a bounded driver collect; n' < n on a smaller table."""
+    rows = pts.orderBy(id_col).limit(n).collect()
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    return ids, np.array([r["p"] for r in rows] or np.zeros((0, 0)),
+                         dtype=np.int64)
+
+
+def _partial_sums(CB: np.ndarray):
+    """mapInArrow update kernel: assign in-batch, emit per-(subspace,
+    cluster, local-dim) integer partial sums — at most k*dim rows per
+    batch, so the downstream aggregate moves k*dim*partitions rows
+    regardless of corpus size."""
 
     def go(batches):
-        import numpy as np
         import pyarrow as pa
 
+        m, k, sub = CB.shape
         for b in batches:
             if b.num_rows == 0:
                 continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-            d = (
-                (P * P).sum(axis=1)[:, None]
-                + cc[None, :]
-                - 2 * (P @ C.T)
-            )
-            cl = np.argmin(d, axis=1)
+            P = _points(b)
+            codes, _ = _nearest(P, CB)
+            out = []
+            for j, S in enumerate(np.split(P, m, axis=1)):
+                n = np.bincount(codes[:, j], minlength=k)
+                sv = np.zeros((k, sub), dtype=np.int64)
+                np.add.at(sv, codes[:, j], S)
+                c = np.flatnonzero(n).astype(np.int32)
+                out.append((
+                    np.full(len(c) * sub, j, dtype=np.int32),
+                    np.repeat(c, sub),
+                    np.tile(np.arange(sub, dtype=np.int32), len(c)),
+                    sv[c].reshape(-1),
+                    np.repeat(n[c], sub),
+                ))
             yield pa.record_batch(
-                [
-                    b.column(id_col),
-                    pa.array(cl.astype(np.int32)),
-                    pa.array(d[np.arange(len(cl)), cl]),
-                ],
-                names=[id_col, "cluster", "dist_q"],
+                [pa.array(np.concatenate(x)) for x in zip(*out)],
+                names=["m", "cluster", "d", "sv", "n"],
             )
 
     return go
 
 
-def _update_partials_arrow(C):
-    """mapInArrow update kernel: assign in-batch (same exact argmin),
-    emit per-batch per-cluster integer partial sums — at most k*dim
-    rows per batch, so the downstream (cluster, d) aggregate moves
-    k*dim*partitions rows regardless of corpus size."""
-    cc = (C * C).sum(axis=1)
+def _lloyd(pts: DataFrame, k: int, iters: int, m: int, id_col: str):
+    """Fixed-iteration integer Lloyd's over m subspaces at once.
 
-    def go(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        dim = C.shape[1]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-            d = (
-                (P * P).sum(axis=1)[:, None]
-                + cc[None, :]
-                - 2 * (P @ C.T)
+    Returns the (m, k', dim/m) int64 codebook: init CB[j, c] = the
+    c-th smallest-id point's j-th subvector (k' = min(k, rows)), then
+    ``iters`` rounds of one corpus scan + the bounded partial-sum
+    aggregate, each centroid its members' floor-mean and an empty
+    cluster keeping its previous centroid. An empty table has no
+    centroids (k' = 0), so every pass over it yields no rows.
+    """
+    _, init = _smallest(pts, k, id_col)
+    n0, dim = init.shape
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    CB = init.reshape(n0, m, dim // m).swapaxes(0, 1).copy()
+    for _ in range(iters if n0 else 0):
+        sums = (
+            pts.mapInArrow(
+                _partial_sums(CB), "m int, cluster int, d int, sv long, n long"
             )
-            cl = np.argmin(d, axis=1)
-            present = np.unique(cl)
-            sv = np.stack([P[cl == c].sum(axis=0) for c in present])
-            n = np.array([(cl == c).sum() for c in present], dtype=np.int64)
-            yield pa.record_batch(
-                [
-                    pa.array(
-                        np.repeat(present.astype(np.int32), dim)
-                    ),
-                    pa.array(np.tile(np.arange(dim, dtype=np.int32),
-                                     len(present))),
-                    pa.array(sv.reshape(-1)),
-                    pa.array(np.repeat(n, dim)),
-                ],
-                names=["cluster", "d", "sv", "n"],
-            )
-
-    return go
+            .groupBy("m", "cluster", "d")
+            .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
+            .collect()
+        )
+        for r in sums:
+            CB[r["m"], r["cluster"], r["d"]] = r["sv"] // r["n"]
+    return CB
 
 
 def kmeans_q8(
@@ -169,7 +185,6 @@ def kmeans_q8(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Fixed-iteration integer Lloyd's over shifted-q8 embeddings.
 
@@ -178,74 +193,27 @@ def kmeans_q8(
     squared q8-space distance to the winning centroid. Deterministic
     end to end: smallest-k-ids init, first-min (lowest cluster id)
     tie-break, floor-mean updates, keep-previous empty-cluster rule.
-
-    ``kernel="arrow"`` (default) runs the vectorized numpy kernels;
-    ``kernel="expr"`` runs the pure-expression formulation whose plan
-    literally mirrors the DuckDB oracle. Both are exact int64 with
-    the same first-min tie-break — bit-identical outputs
-    (tests/test_clustering.py pins it), so the choice is purely a
-    throughput/plan-inspection trade.
     """
-    spark = emb.sparkSession
     pts = _shifted_points(emb, id_col, vec_col).localCheckpoint()
+    C = _lloyd(pts, k, iters, 1, id_col)
 
-    # init: the k smallest ids, cluster index in id order (bounded
-    # k-row collect)
-    init_rows = pts.orderBy(id_col).limit(k).collect()
-    cents = [list(r["p"]) for r in sorted(init_rows, key=lambda r: r[id_col])]
-    dim = len(cents[0])
+    def assign(batches):
+        import pyarrow as pa
 
-    import numpy as np
-
-    for _ in range(iters):
-        if kernel == "arrow":
-            C = np.asarray(cents, dtype=np.int64)
-            sums = (
-                pts.mapInArrow(
-                    _update_partials_arrow(C),
-                    "cluster int, d int, sv long, n long",
-                )
-                .groupBy("cluster", "d")
-                .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
-                .collect()
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            codes, dists = _nearest(_points(b), C)
+            yield pa.record_batch(
+                [
+                    b.column(id_col),
+                    pa.array(codes[:, 0].astype(np.int32)),
+                    pa.array(dists[:, 0]),
+                ],
+                names=[id_col, "cluster", "dist_q"],
             )
-        else:
-            dists = _dist_expr(cents)
-            assigned = pts.select(
-                "p",
-                (F.array_position(dists, F.array_min(dists)) - 1)
-                .cast("int")
-                .alias("cluster"),
-            )
-            # update: (cluster, dim)-keyed integer sums — k*dim keys,
-            # so partial aggregation completes map-side and the
-            # collect is bounded at k*dim rows
-            sums = (
-                assigned.select("cluster", F.posexplode("p").alias("d", "v"))
-                .groupBy("cluster", "d")
-                .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-        new = [list(c) for c in cents]  # empty clusters keep previous
-        for r in sums:
-            new[r["cluster"]][r["d"]] = r["sv"] // r["n"]
-        cents = new
-        assert all(len(c) == dim for c in cents)
 
-    if kernel == "arrow":
-        C = np.asarray(cents, dtype=np.int64)
-        return pts.mapInArrow(
-            _assign_arrow(C, id_col),
-            f"{id_col} long, cluster int, dist_q long",
-        )
-    dists = _dist_expr(cents)
-    return pts.select(
-        id_col,
-        (F.array_position(dists, F.array_min(dists)) - 1)
-        .cast("int")
-        .alias("cluster"),
-        F.array_min(dists).alias("dist_q"),
-    )
+    return pts.mapInArrow(assign, f"{id_col} long, cluster int, dist_q long")
 
 
 def emb_moments(
@@ -276,15 +244,12 @@ def emb_moments(
     )
 
     def partials(batches):
-        import numpy as np
         import pyarrow as pa
 
         for b in batches:
             if b.num_rows == 0:
                 continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
+            P = _points(b)
             dim = P.shape[1]
             gram = P.T @ P
             s1 = P.sum(axis=0)

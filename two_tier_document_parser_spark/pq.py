@@ -14,12 +14,12 @@ index that fits in cluster RAM and one that doesn't.
 
 Spark shape (every stage's scale term is bounded or map-only):
 
-- **Training** reuses the clustering.py integer-Lloyd's recipe, but
-  trains ALL m sub-codebooks in ONE corpus pass per iteration: the
-  mapInArrow update kernel emits per-(subspace, cluster, local-dim)
-  integer partials — at most dim*k rows per batch — so the update
-  aggregate moves dim*k*partitions rows no matter the corpus size,
-  and driver state is the m*k*subdim codebook (bounded).
+- **Training** is clustering.py's integer Lloyd's (``_lloyd``) run
+  with m subspaces: ALL m sub-codebooks train in ONE corpus pass per
+  iteration. The mapInArrow update kernel emits per-(subspace,
+  cluster, local-dim) integer partials — at most dim*k rows per batch
+  — so the update aggregate moves dim*k*partitions rows no matter the
+  corpus size, and driver state is the m*k*subdim codebook (bounded).
 - **Encode + ADC score + top-k is a single map-only pass.** The
   codebooks AND the per-query lookup tables (n_queries * m * k ints,
   queries are a bounded driver-collected set) ride into the kernel
@@ -49,17 +49,19 @@ pq_recall is the audit that says whether m/k are sized right).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .clustering import _shifted_points
-
-
-def _collect_init(pts: DataFrame, k: int, id_col: str):
-    """k smallest-id vectors as the initial codebook rows (cluster
-    index in id order) — clustering.py's deterministic init rule."""
-    rows = pts.orderBy(id_col).limit(k).collect()
-    return [list(r["p"]) for r in sorted(rows, key=lambda r: r[id_col])]
+from .clustering import (
+    _lloyd,
+    _nearest,
+    _points,
+    _shifted_points,
+    _smallest,
+    _sqdist,
+    _sub_dists,
+)
 
 
 def train_pq(
@@ -74,97 +76,26 @@ def train_pq(
     integer Lloyd's over shifted-q8 subvectors.
 
     Returns (codebooks, pts): a numpy int64 array of shape
-    (m, k, subdim) and the cached shifted-point DataFrame (so callers
-    encode the exact table that trained). One corpus scan per
-    iteration; the per-iteration shuffle is the dim*k-keyed partial
-    aggregate; driver state is the codebook itself.
+    (m, k, subdim) — fewer than k centroids per subspace on a smaller
+    table, none on an empty one — and the cached shifted-point
+    DataFrame (so callers encode the exact table that trained). This
+    is clustering's ``_lloyd`` with m subspaces: one corpus scan per
+    iteration, the dim*k-keyed partial aggregate as its only shuffle,
+    the codebook itself as driver state. Raises ValueError when the
+    packed code word (k**m values) would not fit a long.
     """
-    import numpy as np
-
+    if k**m > 2**63:
+        raise ValueError(f"k**m = {k}**{m} codes do not fit a 64-bit code")
     pts = _shifted_points(emb, id_col, vec_col).localCheckpoint()
-    init = _collect_init(pts, k, id_col)
-    dim = len(init[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    # CB[m][c] = the c-th smallest-id vector's m-th subvector
-    CB = np.asarray(
-        [[init[c][j * sub : (j + 1) * sub] for c in range(k)] for j in range(m)],
-        dtype=np.int64,
-    )
-
-    def partials(C):
-        def go(batches):
-            import numpy as np  # noqa: F811 (worker-side import)
-            import pyarrow as pa
-
-            mm, kk, ss = C.shape
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                P = np.stack(
-                    b.column("p").to_numpy(zero_copy_only=False)
-                ).astype(np.int64)
-                out_m, out_c, out_d, out_sv, out_n = [], [], [], [], []
-                for j in range(mm):
-                    S = P[:, j * ss : (j + 1) * ss]
-                    Cj = C[j]
-                    d = (
-                        (S * S).sum(axis=1)[:, None]
-                        + (Cj * Cj).sum(axis=1)[None, :]
-                        - 2 * (S @ Cj.T)
-                    )
-                    cl = np.argmin(d, axis=1)
-                    present = np.unique(cl)
-                    sv = np.stack([S[cl == c].sum(axis=0) for c in present])
-                    n = np.array(
-                        [(cl == c).sum() for c in present], dtype=np.int64
-                    )
-                    out_m.append(np.full(len(present) * ss, j, dtype=np.int32))
-                    out_c.append(np.repeat(present.astype(np.int32), ss))
-                    out_d.append(
-                        np.tile(np.arange(ss, dtype=np.int32), len(present))
-                    )
-                    out_sv.append(sv.reshape(-1))
-                    out_n.append(np.repeat(n, ss))
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_m)),
-                        pa.array(np.concatenate(out_c)),
-                        pa.array(np.concatenate(out_d)),
-                        pa.array(np.concatenate(out_sv)),
-                        pa.array(np.concatenate(out_n)),
-                    ],
-                    names=["m", "cluster", "d", "sv", "n"],
-                )
-
-        return go
-
-    for _ in range(iters):
-        sums = (
-            pts.mapInArrow(
-                partials(CB), "m int, cluster int, d int, sv long, n long"
-            )
-            .groupBy("m", "cluster", "d")
-            .agg(F.sum("sv").alias("sv"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new = CB.copy()  # empty clusters keep their previous centroid
-        for r in sums:
-            new[r["m"], r["cluster"], r["d"]] = r["sv"] // r["n"]
-        CB = new
-    return CB, pts
+    return _lloyd(pts, k, iters, m, id_col), pts
 
 
 def _pack(codes, k: int):
     """codes (n, m) int -> packed int64: sum_j codes[:, j] * k**j —
     the single-column code word the oracle reproduces with a tiny
     (m, k^m) power join."""
-    import numpy as np
-
-    n, m = codes.shape
-    pw = (k ** np.arange(m, dtype=np.int64))[None, :]
-    return (codes.astype(np.int64) * pw).sum(axis=1)
+    pw = k ** np.arange(codes.shape[1], dtype=np.int64)
+    return codes.astype(np.int64) @ pw
 
 
 def pq_encode(
@@ -178,32 +109,18 @@ def pq_encode(
     """(id, pq_code) — each vector replaced by its packed m-code word.
 
     Train (bounded, see train_pq) then one map-only encode pass: the
-    codebook literal rides into the kernel; argmin per subspace is
-    the same exact int64 first-occurrence argmin as clustering.py.
+    codebook rides into the kernel; argmin per subspace is clustering's
+    exact int64 first-occurrence argmin (``_nearest``).
     """
     CB, pts = train_pq(emb, m, k, iters, id_col, vec_col)
 
     def encode(batches):
-        import numpy as np
         import pyarrow as pa
 
-        mm, kk, ss = CB.shape
         for b in batches:
             if b.num_rows == 0:
                 continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-            codes = np.empty((len(P), mm), dtype=np.int64)
-            for j in range(mm):
-                S = P[:, j * ss : (j + 1) * ss]
-                Cj = CB[j]
-                d = (
-                    (S * S).sum(axis=1)[:, None]
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                    - 2 * (S @ Cj.T)
-                )
-                codes[:, j] = np.argmin(d, axis=1)
+            codes, _ = _nearest(_points(b), CB)
             yield pa.record_batch(
                 [b.column(id_col), pa.array(_pack(codes, k))],
                 names=[id_col, "pq_code"],
@@ -212,100 +129,69 @@ def pq_encode(
     return pts.mapInArrow(encode, f"{id_col} long, pq_code long")
 
 
-def _query_luts(pts: DataFrame, CB, n_queries: int, id_col: str):
-    """Driver-side ADC lookup tables for the n_queries smallest-id
-    vectors (bounded collect): LUT[q, j, c] = ||query_sub_j - CB[j,c]||^2."""
-    import numpy as np
+def _adc(CB, Q):
+    """ADC distance (paper §III.B) from the query rows Q: lookup
+    tables LUT_j[q, c] = ||Q_j[q] - CB[j, c]||^2 built once, then
+    adist[q, row] = sum_j LUT_j[q, code_j(row)] per batch."""
+    lut = _sub_dists(Q, CB)
 
-    rows = pts.orderBy(id_col).limit(n_queries).collect()
-    rows = sorted(rows, key=lambda r: r[id_col])
-    qids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    Q = np.asarray([list(r["p"]) for r in rows], dtype=np.int64)
-    mm, kk, ss = CB.shape
-    lut = np.empty((len(rows), mm, kk), dtype=np.int64)
-    for j in range(mm):
-        S = Q[:, j * ss : (j + 1) * ss]
-        diff = S[:, None, :] - CB[j][None, :, :]
-        lut[:, j, :] = (diff * diff).sum(axis=2)
-    return qids, Q, lut
+    def dist(P):
+        codes, _ = _nearest(P, CB)
+        return sum(L[:, c] for L, c in zip(lut, codes.T))
+
+    return dist
 
 
-def _adc_topk(pts: DataFrame, CB, qids, lut, topk: int, id_col: str) -> DataFrame:
-    """The fused encode + LUT-gather + partial-top-k scoring pass
-    over an already-trained codebook (shared by pq_topk/pq_recall so
-    the audit trains once)."""
+def _ranked_topk(
+    pts: DataFrame, qids, dist, topk: int, id_col: str, name: str
+) -> DataFrame:
+    """(query_id, rank, id, <name>): per query, the topk rows of pts
+    by (dist(P)[q, row], id), where dist maps a batch's (n, dim)
+    points to (n_queries, n) int64 distances.
 
-    def score(batches):
-        import numpy as np
+    One map-only kernel keeps a per-query running top-k per partition
+    and yields at most n_queries*topk rows per PARTITION; the window
+    rank then runs over that bounded union — exact by the monotone
+    top-k merge property."""
+
+    def go(batches):
         import pyarrow as pa
 
-        mm, kk, ss = CB.shape
-        nq = lut.shape[0]
-        # per-partition accumulators: (adist, vec_id) rows per query
-        best_d = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        best_i = [np.empty(0, dtype=np.int64) for _ in range(nq)]
+        best_d = [np.empty(0, dtype=np.int64)] * len(qids)
+        best_i = list(best_d)
         for b in batches:
             if b.num_rows == 0:
                 continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-            ids = b.column(id_col).to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            codes = np.empty((len(P), mm), dtype=np.int64)
-            for j in range(mm):
-                S = P[:, j * ss : (j + 1) * ss]
-                Cj = CB[j]
-                d = (
-                    (S * S).sum(axis=1)[:, None]
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                    - 2 * (S @ Cj.T)
-                )
-                codes[:, j] = np.argmin(d, axis=1)
-            # adist[q, row] = sum_j lut[q, j, codes[row, j]]
-            ad = np.zeros((nq, len(P)), dtype=np.int64)
-            for j in range(mm):
-                ad += lut[:, j, codes[:, j]]
-            for q in range(nq):
-                cd = np.concatenate([best_d[q], ad[q]])
+            d = dist(_points(b))
+            ids = b.column(id_col).to_numpy(zero_copy_only=False)
+            for q in range(len(qids)):
+                cd = np.concatenate([best_d[q], d[q]])
                 ci = np.concatenate([best_i[q], ids])
-                if len(cd) > topk:
-                    order = np.lexsort((ci, cd))[:topk]
-                    cd, ci = cd[order], ci[order]
-                best_d[q], best_i[q] = cd, ci
-        qcol = np.concatenate(
-            [np.full(len(best_i[q]), qids[q], dtype=np.int64) for q in range(nq)]
-        ) if nq else np.empty(0, dtype=np.int64)
+                order = np.lexsort((ci, cd))[:topk]
+                best_d[q], best_i[q] = cd[order], ci[order]
+        empty = [np.empty(0, dtype=np.int64)]
         yield pa.record_batch(
             [
-                pa.array(qcol),
-                pa.array(np.concatenate(best_i) if nq else qcol),
-                pa.array(np.concatenate(best_d) if nq else qcol),
+                pa.array(np.repeat(qids, [len(i) for i in best_i])),
+                pa.array(np.concatenate(empty + best_i).astype(np.int64)),
+                pa.array(np.concatenate(empty + best_d)),
             ],
-            names=["query_id", id_col, "adist"],
+            names=["query_id", id_col, name],
         )
 
-    partial = pts.mapInArrow(
-        score, f"query_id long, {id_col} long, adist long"
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", id_col)
+    w = Window.partitionBy("query_id").orderBy(name, id_col)
     return (
-        partial.withColumn("rank", F.row_number().over(w).cast("int"))
+        pts.mapInArrow(go, f"query_id long, {id_col} long, {name} long")
+        .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= topk)
-        .select("query_id", "rank", id_col, "adist")
+        .select("query_id", "rank", id_col, name)
     )
 
 
 def pq_topk(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    iters: int = 2,
-    n_queries: int = 4,
-    topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
+    n_queries: int = 4, topk: int = 10,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k (paper §III.B): (query_id, rank, vec_id, adist) —
     for each of the n_queries smallest-id vectors, the topk database
@@ -320,86 +206,33 @@ def pq_topk(
     audits).
     """
     CB, pts = train_pq(emb, m, k, iters, id_col, vec_col)
-    qids, _, lut = _query_luts(pts, CB, n_queries, id_col)
-    return _adc_topk(pts, CB, qids, lut, topk, id_col)
+    qids, Q = _smallest(pts, n_queries, id_col)
+    return _ranked_topk(pts, qids, _adc(CB, Q), topk, id_col, "adist")
 
 
 def pq_recall(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    iters: int = 2,
-    n_queries: int = 4,
-    topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, m: int = 4, k: int = 16, iters: int = 2,
+    n_queries: int = 4, topk: int = 10,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@topk audit: (query_id, hits, topk) — how many of each
     query's EXACT shifted-q8 top-k the ADC top-k recovered (paper
     §V's headline metric; the number that tells an operator whether
     m/k are sized right before committing a 10^12-vector index).
 
-    The exact side is the same fused map-only partial-top-k kernel
-    with literal query vectors instead of LUTs (a labeled
-    O(n_queries * n) audit scan — n_queries is bounded); both sides'
-    bounded top-k unions then join per (query_id, vec_id).
+    The exact side is the same map-only partial-top-k kernel with the
+    exact distance to the literal query vectors instead of LUTs (a
+    labeled O(n_queries * n) audit scan — n_queries is bounded); both
+    sides' bounded top-k unions then join per (query_id, vec_id).
     """
-    import numpy as np
-
     CB, pts = train_pq(emb, m, k, iters, id_col, vec_col)
-    qids, Q, lut = _query_luts(pts, CB, n_queries, id_col)
-
-    def exact(batches):
-        import numpy as np  # noqa: F811
-        import pyarrow as pa
-
-        nq = Q.shape[0]
-        qq = (Q * Q).sum(axis=1)
-        best_d = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        best_i = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            P = np.stack(
-                b.column("p").to_numpy(zero_copy_only=False)
-            ).astype(np.int64)
-            ids = b.column(id_col).to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            d = (
-                qq[:, None]
-                + (P * P).sum(axis=1)[None, :]
-                - 2 * (Q @ P.T)
-            )
-            for q in range(nq):
-                cd = np.concatenate([best_d[q], d[q]])
-                ci = np.concatenate([best_i[q], ids])
-                if len(cd) > topk:
-                    order = np.lexsort((ci, cd))[:topk]
-                    cd, ci = cd[order], ci[order]
-                best_d[q], best_i[q] = cd, ci
-        qcol = np.concatenate(
-            [np.full(len(best_i[q]), qids[q], dtype=np.int64) for q in range(nq)]
-        ) if nq else np.empty(0, dtype=np.int64)
-        yield pa.record_batch(
-            [
-                pa.array(qcol),
-                pa.array(np.concatenate(best_i) if nq else qcol),
-                pa.array(np.concatenate(best_d) if nq else qcol),
-            ],
-            names=["query_id", id_col, "dist"],
-        )
-
-    w = Window.partitionBy("query_id").orderBy("dist", id_col)
-    exact_top = (
-        pts.mapInArrow(exact, f"query_id long, {id_col} long, dist long")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", id_col)
-    )
-    adc_top = _adc_topk(pts, CB, qids, lut, topk, id_col).select(
-        "query_id", id_col
-    )
+    qids, Q = _smallest(pts, n_queries, id_col)
+    exact_top = _ranked_topk(
+        pts, qids, lambda P: _sqdist(Q, P), topk, id_col, "dist"
+    ).select("query_id", id_col)
+    adc_top = _ranked_topk(
+        pts, qids, _adc(CB, Q), topk, id_col, "adist"
+    ).select("query_id", id_col)
     hits = exact_top.join(adc_top, ["query_id", id_col]).groupBy(
         "query_id"
     ).agg(F.count(F.lit(1)).alias("hits"))
