@@ -198,3 +198,31 @@ def test_profile_sums(spark, emb):
         mine = [r["dist_q"] for r in rows if r["cluster"] == c]
         assert p["sum_dist_q"] == sum(mine)
         assert p["max_dist_q"] == max(mine)
+
+
+def test_sqdist_equals_the_int64_expansion():
+    """`_sqdist` runs its dot products in float64; the result equals
+    the all-int64 ||a||^2 + ||b||^2 - 2 a.b at the extremes of the
+    shifted q8 range and on random batches."""
+    import numpy as np
+
+    from two_tier_document_parser_spark.clustering import _sqdist
+
+    def int64_expansion(A, B):
+        return ((A * A).sum(axis=1)[:, None] + (B * B).sum(axis=1)[None, :]
+                - 2 * np.einsum("id,jd->ij", A, B))
+
+    dim = 4096
+    A = np.stack([np.full(dim, 254), np.zeros(dim, np.int64),
+                  np.arange(dim) % 255]).astype(np.int64)
+    got = _sqdist(A, A)
+    assert got.dtype == np.int64
+    assert (got == int64_expansion(A, A)).all()
+    assert got[0, 1] == got[1, 0] == dim * 254 ** 2
+    assert got[0, 0] == got[1, 1] == got[2, 2] == 0
+
+    rng = np.random.default_rng(14)
+    for n, k, d in ((1, 1, 1), (300, 64, 64), (97, 5, 8), (40, 256, 768)):
+        P = rng.integers(0, 255, (n, d), dtype=np.int64)
+        C = rng.integers(0, 255, (k, d), dtype=np.int64)
+        assert (_sqdist(P, C) == int64_expansion(P, C)).all()

@@ -1,9 +1,11 @@
 """The per-request engine core stands apart from the Spark edge.
 
-- No core module imports pyspark, pyarrow or pandas at module level
-  (a static check of each module's top-level statements).
-- The facade answers requests in an interpreter where pyspark and
-  pyarrow cannot be imported, with the same responses as here.
+- No core module imports pyspark, pyarrow or pandas at module level,
+  and no module a plain request reaches imports numpy there (a static
+  check of each module's top-level statements).
+- The facade answers requests in an interpreter where pyspark, pyarrow
+  and numpy cannot be imported, with the same responses as here; a
+  plain PDF request imports neither numpy nor the other decoders.
 - The Spark schemas derived from the one Arrow declaration equal the
   hand-written StructTypes they replaced, pinned as JSON.
 - One decompression-bomb pixel cap, `spec.MAX_PIXELS`.
@@ -38,10 +40,17 @@ CORE = [
     "png", "gif", "jpeg", "jpeg2000", "jbig2", "ccitt", "webp",
 ]
 BATCH_ONLY = ("pyspark", "pyarrow", "pandas")
+# what a plain PDF, HTML or TTDP1 request reaches; the image codecs and
+# pdfcrypt (encrypted PDFs only) keep numpy
+REQUEST_PATH = [
+    "api", "routing", "spec", "schemas", "tier1", "tier2", "markdown_ser",
+    "layout", "ingest", "pdf_io", "pdf_fonts", "html_io", "binary_io", "png",
+]
+NUMPY = ("numpy",)
 
 
-def batch_only_imports(src: str) -> list[str]:
-    """`module:line` of each import of a BATCH_ONLY package among the
+def batch_only_imports(src: str, packages=BATCH_ONLY) -> list[str]:
+    """`module:line` of each import of one of `packages` among the
     module's top-level statements, including those under a top-level
     `if` or `try`."""
     out = []
@@ -60,13 +69,20 @@ def batch_only_imports(src: str) -> list[str]:
                 stack += [n for h in node.handlers for n in h.body]
             continue
         out += [f"{n}:{node.lineno}" for n in names
-                if n.split(".")[0] in BATCH_ONLY]
+                if n.split(".")[0] in packages]
     return out
 
 
 def test_core_modules_import_no_batch_packages():
     found = {m: hits for m in CORE
              if (hits := batch_only_imports((PKG / f"{m}.py").read_text()))}
+    assert found == {}
+
+
+def test_request_path_modules_import_no_numpy():
+    found = {m: hits for m in REQUEST_PATH
+             if (hits := batch_only_imports((PKG / f"{m}.py").read_text(),
+                                            NUMPY))}
     assert found == {}
 
 
@@ -97,13 +113,14 @@ def _responses(paths: list[str]) -> list[dict]:
 
 
 def test_facade_runs_without_pyspark_or_pyarrow(tmp_path):
-    """A fresh interpreter in which importing pyspark or pyarrow fails
-    answers every format and tier, truncated payloads included, with
-    the responses this process computes."""
+    """A fresh interpreter in which importing pyspark, pyarrow or numpy
+    fails answers every format and tier, truncated payloads included,
+    with the responses this process computes."""
     paths = _payloads(tmp_path)
     code = (
         "import sys, json; sys.modules['pyspark'] = None; "
-        "sys.modules['pyarrow'] = None; sys.path.insert(0, sys.argv[1]); "
+        "sys.modules['pyarrow'] = None; sys.modules['numpy'] = None; "
+        "sys.path.insert(0, sys.argv[1]); "
         "from two_tier_document_parser_spark import api; "
         "from pathlib import Path; out = []\n"
         "for p in sys.argv[2:]:\n"
@@ -118,9 +135,31 @@ def test_facade_runs_without_pyspark_or_pyarrow(tmp_path):
     assert run.returncode == 0, run.stderr
     child = json.loads(run.stdout)
     assert child == json.loads(json.dumps(_responses(paths)))
-    # deep responses with artifacts and in-band errors are both covered
-    assert any("images" in r for r in child)
+    # deep responses with PNG artifacts and in-band errors are covered
+    assert any(r.get("images") for r in child)
     assert any("error" in r for r in child)
+
+
+def test_pdf_request_loads_only_its_decoder(tmp_path):
+    """A fresh interpreter that answers one plain PDF request (routed
+    deep, with images) has not imported numpy, html_io or binary_io."""
+    doc = next(d for d in synth_docs(0, 40, 7)
+               if any(s["kind"] == "image" for s in d["spans"]))
+    path = tmp_path / "deep.pdf"
+    path.write_bytes(pdf_io.render_pdf(doc))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); "
+        "from two_tier_document_parser_spark import api; "
+        "r = api.parse_bytes(open(sys.argv[2], 'rb').read(), 'deep.pdf'); "
+        "assert r.get('images'), r; "
+        "print(sorted(m for m in ('numpy', "
+        "'two_tier_document_parser_spark.html_io', "
+        "'two_tier_document_parser_spark.binary_io') if m in sys.modules))"
+    )
+    run = subprocess.run([sys.executable, "-c", code, str(ROOT), str(path)],
+                         capture_output=True, text=True, cwd=tmp_path)
+    assert run.returncode == 0, run.stderr
+    assert run.stdout.strip() == "[]"
 
 
 def test_spark_schemas_match_pinned_json():

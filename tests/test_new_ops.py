@@ -361,7 +361,8 @@ def test_png_dhash_and_frame_sample(spark):
 
     from two_tier_document_parser_spark.png import encode_png_gray, render_crop
 
-    src = render_crop("resize-me", 48, 24)  # (h=24, w=48)
+    src = np.frombuffer(b"".join(render_crop("resize-me", 48, 24)),
+                        np.uint8).reshape(24, 48)
     png_media = spark.createDataFrame(
         [("d9", "page_0_img_0", "image", encode_png_gray(src))],
         "doc_id string, media_ref string, kind string, payload binary",

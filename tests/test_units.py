@@ -299,7 +299,8 @@ def test_png_codec_and_artifact_payloads():
         render_crop,
     )
 
-    px = render_crop("asset_1", 5, 3)
+    px = np.frombuffer(b"".join(render_crop("asset_1", 5, 3)), np.uint8)
+    px = px.reshape(3, 5)
     data = encode_png_gray(px)
     assert png_dims(data) == (5, 3)
     # decode the IDAT back: filter-0 rows must reproduce the pixels

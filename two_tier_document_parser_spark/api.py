@@ -22,9 +22,15 @@ page pixels don't exist in the span model).
 Single-document calls run the engine's OWN tier cores
 (tier1.extract_fast / tier2.extract_deep, the functions the Arrow
 batch kernels call per document) on the document's span lists: no
-Spark session, no Arrow round trip, no external packages. So
-`parse_document` is bit-identical to the engine's batch output by
-construction and the facade deploys with engine.zip alone.
+Spark session, no Arrow round trip. So `parse_document` is
+bit-identical to the engine's batch output by construction and the
+facade deploys with engine.zip alone.
+
+What a request imports: a plain PDF, HTML or TTDP1 request needs only
+the standard library (the sniff imports just the decoder it picks,
+and the artifact PNGs are built from bytes). numpy is loaded only by
+an encrypted PDF, whose AES/RC4 decryption (pdfcrypt) pdf_io imports
+on demand. pyspark and pyarrow are never loaded.
 """
 
 from __future__ import annotations

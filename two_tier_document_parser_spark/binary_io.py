@@ -19,13 +19,17 @@ vector speed:
                            concatenated utf-8 ref bytes
 
 One parser (`_parse`) reads and validates the header and sections of
-a payload; two decoders share it. `decode_batches` (a table of
-payloads) is not a per-span loop: each section is one `np.frombuffer`
-view and string columns are assembled zero-copy via
-`pa.Array.from_buffers` from (cumsum(lens), concatenated bytes).
-`decode_doc` (one payload, the per-request and sniffing path) builds
-the row dict in plain Python with no Arrow batch. A malformed payload
-quarantines the document (error channel O19), it never throws.
+a payload, with the fixed-width sections as `memoryview.cast` views;
+two decoders share it. `decode_doc` (one payload, the per-request and
+sniffing path) builds the row dict in plain Python: no numpy, no
+Arrow. `decode_batches` (a table of payloads) is not a per-span loop:
+it wraps each section view with `np.frombuffer` and assembles string
+columns zero-copy via `pa.Array.from_buffers` from (cumsum(lens),
+concatenated bytes). A malformed payload quarantines the document
+(error channel O19), it never throws. The views are read in native
+byte order, so the module refuses to import on a big-endian host
+rather than decode byte-swapped counts. The encoders and
+`decode_batches` import numpy inside.
 
 Scale notes: the decode stage is map-only (no shuffle); payload bytes
 stream through Arrow buffers without per-row Python objects; the
@@ -35,14 +39,19 @@ container is self-describing per document, so a 100 TB table of
 
 from __future__ import annotations
 
-import numpy as np
+import sys
+from itertools import accumulate
 
-from .spec import IN_KINDS
+from .spec import IN_KINDS, TTDP1_MAGIC as MAGIC
 
-MAGIC = b"TTDP1"
+if sys.byteorder != "little":
+    raise ImportError("binary_io reads TTDP1's little-endian sections in "
+                      "native byte order; big-endian hosts are unsupported")
+
 IN_DOC_CLASSES = ("html", "pdfish")
 
 _HDR = len(MAGIC) + 1 + 4 + 4  # magic + class + n_pages + n_spans
+_WIDTH = {"B": 1, "i": 4, "I": 4, "H": 2}  # u8, i32, u32, u16
 _KIND_INDEX = {k: i for i, k in enumerate(IN_KINDS)}
 _CLASS_INDEX = {c: i for i, c in enumerate(IN_DOC_CLASSES)}
 
@@ -50,6 +59,8 @@ _CLASS_INDEX = {c: i for i, c in enumerate(IN_DOC_CLASSES)}
 def encode_doc(doc: dict) -> bytes:
     """Scalar encoder (oracle/test harness side): one documents_raw
     row -> container bytes."""
+    import numpy as np
+
     spans = doc["spans"]
     n = len(spans)
     kinds = np.fromiter(
@@ -94,6 +105,7 @@ def _utf8_array(lens: np.ndarray, data: bytes):
     own Arrow int32 offsets already cap one batch below 2 GiB — but
     guard explicitly so a violated assumption fails loudly instead of
     producing wrapped offsets."""
+    import numpy as np
     import pyarrow as pa
 
     offs64 = np.zeros(len(lens) + 1, dtype=np.int64)
@@ -111,37 +123,47 @@ def _utf8_array(lens: np.ndarray, data: bytes):
     )
 
 
+def _section(view: memoryview, pos: int, n: int, fmt: str) -> memoryview:
+    """`n` items of struct format `fmt` at byte `pos` of the payload,
+    as a cast view; ValueError when the payload ends first."""
+    size = n * _WIDTH[fmt]
+    part = view[pos : pos + size]
+    if len(part) != size:
+        raise ValueError("truncated container")
+    return part.cast(fmt)
+
+
 def _parse(buf: bytes):
     """The one TTDP1 header/section parser and validator: payload ->
     (class code, n_pages, kinds, offsets, text lengths, text bytes, ref
-    lengths, ref bytes), the fixed-width sections as numpy views.
-    Raises ValueError on a malformed payload: bad magic, truncated
-    sections, a kind or class code out of range, an n_pages that does
-    not fit the int32 output column, or a text/media_ref field that is
-    not valid UTF-8."""
+    lengths, ref bytes), the fixed-width sections as memoryviews
+    (formats B, i, I, H). Raises ValueError on a malformed payload: bad
+    magic, truncated sections, a kind or class code out of range, an
+    n_pages that does not fit the int32 output column, or a
+    text/media_ref field that is not valid UTF-8."""
     if buf[: len(MAGIC)] != MAGIC or len(buf) < _HDR:
         raise ValueError("bad magic")
     cls = buf[len(MAGIC)]
     np_d = int.from_bytes(buf[6:10], "little")
     n = int.from_bytes(buf[10:14], "little")
-    pos = _HDR
-    kinds = np.frombuffer(buf, np.uint8, n, pos)
-    pos += n
-    offs = np.frombuffer(buf, "<i4", n, pos)
+    view = memoryview(buf)
+    kinds = _section(view, _HDR, n, "B")
+    pos = _HDR + n
+    offs = _section(view, pos, n, "i")
     pos += 4 * n
-    tlen = np.frombuffer(buf, "<u4", n, pos)
+    tlen = _section(view, pos, n, "I")
     pos += 4 * n
-    t_total = int(tlen.sum())
+    t_total = sum(tlen)
     text_data = buf[pos : pos + t_total]
     pos += t_total
-    rlen = np.frombuffer(buf, "<u2", n, pos)
+    rlen = _section(view, pos, n, "H")
     pos += 2 * n
-    r_total = int(rlen.sum())
+    r_total = sum(rlen)
     ref_data = buf[pos : pos + r_total]
     if (
         len(text_data) != t_total
         or len(ref_data) != r_total
-        or kinds.size and kinds.max() >= len(IN_KINDS)
+        or n and max(kinds) >= len(IN_KINDS)
         or cls >= len(IN_DOC_CLASSES)
         or not 0 <= np_d <= 0x7FFFFFFF
     ):
@@ -151,17 +173,15 @@ def _parse(buf: bytes):
     return cls, np_d, kinds, offs, tlen, text_data, rlen, ref_data
 
 
-def _check_utf8(lens: np.ndarray, data: bytes) -> None:
+def _check_utf8(lens: memoryview, data: bytes) -> None:
     """Every field slice of `data` must be valid UTF-8: the whole
     section decodes (UnicodeDecodeError is a ValueError) and no field
     starts inside a multi-byte character."""
     data.decode("utf-8")
     if not data.isascii():
-        starts = np.cumsum(lens[:-1], dtype=np.int64)
-        starts = starts[starts < len(data)]
-        b = np.frombuffer(data, np.uint8)
-        if ((b[starts] & 0xC0) == 0x80).any():
-            raise ValueError("field splits a UTF-8 character")
+        for start in accumulate(lens[:-1]):
+            if start < len(data) and (data[start] & 0xC0) == 0x80:
+                raise ValueError("field splits a UTF-8 character")
 
 
 def decode_doc(buf: bytes) -> dict | None:
@@ -188,6 +208,7 @@ def decode_batches(batches):
     payloads produce a quarantine-shaped row (doc_class='', n_pages=0,
     no spans) instead of raising — the router (routing.route, run by
     fused_batches) then sends them to the error channel."""
+    import numpy as np
     import pyarrow as pa
 
     kind_dict = pa.array(IN_KINDS, type=pa.string())
@@ -217,11 +238,11 @@ def decode_batches(batches):
             doc_classes.append(IN_DOC_CLASSES[cls])
             n_pages[d] = np_d
             span_counts[d] = len(kinds)
-            kind_parts.append(kinds)
-            off_parts.append(offs)
-            tlen_parts.append(tlen.astype(np.int64))
+            kind_parts.append(np.frombuffer(kinds, np.uint8))
+            off_parts.append(np.frombuffer(offs, np.int32))
+            tlen_parts.append(np.frombuffer(tlen, np.uint32).astype(np.int64))
             text_parts.append(text_data)
-            rlen_parts.append(rlen.astype(np.int64))
+            rlen_parts.append(np.frombuffer(rlen, np.uint16).astype(np.int64))
             ref_parts.append(ref_data)
 
         total = int(span_counts.sum())
@@ -267,6 +288,7 @@ def encode_batches(batches):
     """documents_raw rows -> (doc_id, payload binary). The Spark-side
     writer: per-span work is numpy over the flattened Arrow child
     arrays; Python touches only per-document section boundaries."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -42,11 +42,12 @@ every sum, squared distance, and floor-divided centroid mean is
 non-negative int64 arithmetic — order-independent, no float folds,
 and Python ``//`` == SQL ``//``/``div`` on non-negative operands.
 Each term of the distance expansion is exact too: values <= 254, so
-a dim-64 dot product is <= 64*254^2 ~ 4.1e6. Distances are invariant
-under the constant shift, so the clustering is exactly the clustering
-of the q8 vectors. Empty clusters keep their previous centroid
-(COALESCE in the oracle's LEFT JOIN — the deterministic convention,
-not a re-seed).
+a dim-64 dot product is <= 64*254^2 ~ 4.1e6, which float64 holds
+exactly, so ``_sqdist`` runs the dot products through BLAS (see its
+docstring). Distances are invariant under the constant shift, so the
+clustering is exactly the clustering of the q8 vectors. Empty
+clusters keep their previous centroid (COALESCE in the oracle's LEFT
+JOIN — the deterministic convention, not a re-seed).
 """
 
 from __future__ import annotations
@@ -78,11 +79,17 @@ def _points(b) -> np.ndarray:
 
 
 def _sqdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(len(A), len(B)) exact int64 squared distances."""
+    """(len(A), len(B)) exact int64 squared distances between int64
+    points with values in [0, 254]. The dot products run as a float64
+    matrix product (numpy has no BLAS path for int64) and are cast
+    back: every product and partial sum is an integer at most
+    dim * 254**2, below 2**53 for any dim under 1.39e11, so float64
+    holds each one exactly whatever the summation order."""
+    dots = (A.astype(np.float64) @ B.T.astype(np.float64)).astype(np.int64)
     return (
         (A * A).sum(axis=1)[:, None]
         + (B * B).sum(axis=1)[None, :]
-        - 2 * (A @ B.T)
+        - 2 * dots
     )
 
 

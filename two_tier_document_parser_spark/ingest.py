@@ -15,19 +15,26 @@ workers per task: this mapInArrow, then the fused cascade's.
 
 from __future__ import annotations
 
+from .spec import TTDP1_MAGIC
+
 
 def sniff_decode_doc(payload: bytes) -> dict | None:
     """One payload -> documents_raw row dict (sans doc_id) or None
     (undecodable). Each format has a per-payload decoder, no Arrow
-    batch: pdf_io.parse_pdf, binary_io.decode_doc, html_io.parse_html."""
-    from . import binary_io, html_io, pdf_io
-
+    batch: pdf_io.parse_pdf, binary_io.decode_doc, html_io.parse_html.
+    Only the decoder the sniff picks is imported."""
     p = payload or b""
     if p.startswith(b"%PDF-"):
-        return pdf_io.parse_pdf(p)
-    if p.startswith(binary_io.MAGIC):
-        return binary_io.decode_doc(p)
-    return html_io.parse_html(p)
+        from .pdf_io import parse_pdf
+
+        return parse_pdf(p)
+    if p.startswith(TTDP1_MAGIC):
+        from .binary_io import decode_doc
+
+        return decode_doc(p)
+    from .html_io import parse_html
+
+    return parse_html(p)
 
 
 def sniff_decode_batches(batches):

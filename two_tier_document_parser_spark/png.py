@@ -1,4 +1,4 @@
-"""Minimal from-scratch PNG codec (pure stdlib: struct + zlib).
+"""Minimal from-scratch PNG codec (struct + zlib).
 
 The reference's most visible output is the base64 PNG crop on every
 ImageData (accurate/service.py:135-139,172-186, via PIL). No imaging
@@ -7,6 +7,12 @@ container — signature, IHDR, zlib IDAT, IEND, each chunk CRC32'd —
 so the engine writes REAL 8-bit grayscale PNGs for its artifact
 payloads and reads real dimensions back out of IHDR, replacing the
 round-1 hash stub for the image path.
+
+The artifact path a request runs (`artifact_png`: `render_crop` plus
+the writer) is standard library only; the raster decoders,
+`crop_from_raster` and `encode_png_gray` work on numpy arrays and
+import numpy where they use it. Both encoders share one chunk writer,
+`_png_gray`.
 
 Without rasterized page pixels (SURVEY §2.1 O9: box geometry replaces
 pixels by design), the "crop" content is a deterministic procedural
@@ -19,8 +25,6 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-
-import numpy as np
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 MAX_CROP_SIDE = 64
@@ -35,21 +39,26 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
     )
 
 
-def encode_png_gray(pixels: np.ndarray) -> bytes:
-    """(h, w) uint8 array -> 8-bit grayscale PNG bytes."""
-    h, w = pixels.shape
+def _png_gray(w: int, h: int, scanlines: bytes) -> bytes:
+    """The one PNG writer: `h` filter-0 scanlines (a 0 byte, then `w`
+    gray samples each) -> 8-bit grayscale PNG bytes."""
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    # raw scanlines, filter type 0 per row
-    raw = np.empty((h, w + 1), dtype=np.uint8)
-    raw[:, 0] = 0
-    raw[:, 1:] = pixels
-    idat = zlib.compress(raw.tobytes(), 6)
     return (
         PNG_SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", idat)
+        + _chunk(b"IDAT", zlib.compress(scanlines, 6))
         + _chunk(b"IEND", b"")
     )
+
+
+def encode_png_gray(pixels: np.ndarray) -> bytes:
+    """(h, w) uint8 numpy array -> 8-bit grayscale PNG bytes."""
+    import numpy as np
+
+    h, w = pixels.shape
+    raw = np.zeros((h, w + 1), dtype=np.uint8)
+    raw[:, 1:] = pixels
+    return _png_gray(w, h, raw.tobytes())
 
 
 def luma_bt601(r, g, b):
@@ -84,6 +93,8 @@ def _unfilter(raw: bytes, w: int, h: int, bpp: int) -> np.ndarray | None:
     """Unfilter `h` scanlines of `w*bpp` bytes each (PNG filter types
     0-4, spec §9), `bpp` = filter-unit bytes per pixel. Returns
     (h, w*bpp) uint8 or None when the buffer is short."""
+    import numpy as np
+
     rb = w * bpp
     stride = rb + 1
     if len(raw) < h * stride:
@@ -133,6 +144,8 @@ def _unfilter(raw: bytes, w: int, h: int, bpp: int) -> np.ndarray | None:
 def _unpack_bits(rows: np.ndarray, w: int, depth: int) -> np.ndarray:
     """(h, rowbytes) sub-byte samples -> (h, w) int32 sample values
     (MSB-first packing per PNG §7.2)."""
+    import numpy as np
+
     h = rows.shape[0]
     bits = np.unpackbits(rows, axis=1)
     per = bits.shape[1] // depth
@@ -153,6 +166,8 @@ def _samples_to_gray(
     integer BT.601; alpha composites over white; tRNS per spec
     §11.3.2 (palette alpha; for gray/RGB, pixels equal to the 16-bit
     transparent sample turn white); 16-bit uses the high byte."""
+    import numpy as np
+
     if ctype == 3:
         if palette is None or not len(palette):
             return None
@@ -196,6 +211,8 @@ def decode_png_gray(data: bytes) -> np.ndarray | None:
     white — the engine's document convention), scanline filters 0-4.
     Color converts to integer BT.601 luma, same as gif.py, so foreign web rasters decode — not
     just this module's own grayscale filter-0 output."""
+    import numpy as np
+
     if not isinstance(data, (bytes, bytearray)) or data[:8] != PNG_SIG:
         return None
     i, w, h = 8, None, None
@@ -296,6 +313,8 @@ def crop_from_raster(
     y-flip from PDF bottom-left origin to image top-left), re-encode
     as PNG. None when the raster doesn't decode or bbox is absent —
     the caller falls back to the procedural artifact_png."""
+    import numpy as np
+
     if not bbox or len(bbox) != 4:
         return None
     page = decode_png_gray(raster)
@@ -322,16 +341,24 @@ def crop_size(bbox: list[int] | None) -> tuple[int, int]:
     return w, h
 
 
-def render_crop(seed: str, w: int, h: int) -> np.ndarray:
-    """Deterministic (h, w) uint8 raster from a string seed: a
-    hash-seeded affine gradient — pure function of (seed, w, h)."""
+# _SHIFT[s] maps a gray value v < 251 to (v + s) mod 251 (bytes.translate
+# tables; values 251..255 never occur)
+_RING = bytes(range(251)) * 2
+_SHIFT = [_RING[s : s + 251] + bytes(5) for s in range(251)]
+
+
+def render_crop(seed: str, w: int, h: int) -> list[bytes]:
+    """Deterministic raster from a string seed: `h` rows of `w` gray
+    bytes, a hash-seeded affine gradient, pixel (x, y) =
+    (x·a + y·b + c) mod 251 — pure function of (seed, w, h). Row y is
+    row 0 shifted by (y·b) mod 251."""
     d = hashlib.sha256(seed.encode("utf-8")).digest()
     a, b, c = d[0] | 1, d[1] | 1, d[2]
-    y, x = np.mgrid[0:h, 0:w]
-    return ((x * a + y * b + c) % 251).astype(np.uint8)
+    row0 = bytes([(x * a + c) % 251 for x in range(w)])
+    return [row0.translate(_SHIFT[y * b % 251]) for y in range(h)]
 
 
 def artifact_png(seed: str, bbox: list[int] | None) -> bytes:
     """The engine's 'crop': deterministic PNG for an image artifact."""
     w, h = crop_size(bbox)
-    return encode_png_gray(render_crop(seed, w, h))
+    return _png_gray(w, h, b"\0" + b"\0".join(render_crop(seed, w, h)))

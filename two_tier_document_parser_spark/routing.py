@@ -26,8 +26,6 @@ from __future__ import annotations
 
 from operator import itemgetter
 
-import numpy as np
-
 from .spec import (
     MEDIA_KINDS,
     REASON_INVALID,
@@ -63,6 +61,7 @@ def route_batch(batch):
     empty) -> (tier, reason) numpy string arrays. The per-document
     counts come from Arrow C++ kernels over the flattened span kinds;
     only the rule runs per document."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 

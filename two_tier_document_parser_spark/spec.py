@@ -40,6 +40,10 @@ IN_KINDS = (
     "box",
 )
 
+# Leading bytes of a TTDP1 container (binary_io); the byte sniff
+# (ingest.sniff_decode_doc) tests for them before it loads a decoder.
+TTDP1_MAGIC = b"TTDP1"
+
 # Kinds that merge into one tier-1 paragraph block (naive fast-tier
 # linearization: table cells are flattened into running text, the way a
 # text-only markdown converter treats tables it cannot model).

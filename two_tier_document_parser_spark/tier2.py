@@ -20,8 +20,6 @@ document one call extracts is bounded.
 
 from __future__ import annotations
 
-import traceback
-
 from .layout import xycut
 from .markdown_ser import join_page, join_pages, render_block, table_markdown
 from .schemas import DocOut, core_batches
@@ -172,6 +170,8 @@ def extract_deep(kinds: list[str], texts: list[str], refs: list[str]) -> DocOut:
                 em.kinds[s0:], em.texts[s0:], em.refs[s0:])]))
             lo = hi + 1
     except Exception:
+        import traceback
+
         return DocOut("error", error=traceback.format_exc(limit=1))
     em.pages = len(parts)
     em.markdown = join_pages(parts)
