@@ -53,17 +53,21 @@ HERE = Path(__file__).resolve().parents[1]
 TIMING_DOCS = range(0, 3000, 3)
 
 
-def _load_other(root: Path):
-    """The `pdf_io` module of the checkout at `root`, imported as a
+OTHER = "ttdp_ab_other"
+
+
+def _load_other(root: Path, module: str):
+    """Module `module` of the checkout at `root`, imported from a
     package named `ttdp_ab_other` so it sits beside this one."""
-    pkg_dir = root / PKG
-    spec = importlib.util.spec_from_file_location(
-        "ttdp_ab_other", pkg_dir / "__init__.py",
-        submodule_search_locations=[str(pkg_dir)])
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["ttdp_ab_other"] = mod
-    spec.loader.exec_module(mod)
-    return importlib.import_module("ttdp_ab_other.pdf_io")
+    if OTHER not in sys.modules:
+        pkg_dir = root / PKG
+        spec = importlib.util.spec_from_file_location(
+            OTHER, pkg_dir / "__init__.py",
+            submodule_search_locations=[str(pkg_dir)])
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules[OTHER] = mod
+        spec.loader.exec_module(mod)
+    return importlib.import_module(f"{OTHER}.{module}")
 
 
 def _canon(v) -> tuple:
@@ -411,7 +415,7 @@ def main() -> int:
 
     sys.path.insert(0, str(HERE))
     this = importlib.import_module(f"{PKG}.pdf_io")
-    other = _load_other(Path(args.root).resolve())
+    other = _load_other(Path(args.root).resolve(), "pdf_io")
     out: dict = {"seed": args.seed}
     if not args.no_diff:
         tally = _Tally()

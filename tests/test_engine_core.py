@@ -37,14 +37,16 @@ CORE = [
     "api", "routing", "spec", "schemas", "tier1", "tier2", "markdown_ser",
     "layout",
     "ingest", "pdf_io", "pdf_fonts", "pdfcrypt", "html_io", "binary_io",
-    "png", "gif", "jpeg", "jpeg2000", "jbig2", "ccitt", "webp",
+    "png", "gif", "jpeg", "jpeg2000", "jbig2", "ccitt", "webp", "bitstream",
 ]
 BATCH_ONLY = ("pyspark", "pyarrow", "pandas")
-# what a plain PDF, HTML or TTDP1 request reaches; the image codecs and
-# pdfcrypt (encrypted PDFs only) keep numpy
+# what a plain PDF, HTML or TTDP1 request reaches (bitstream: a PDF with
+# LZWDecode streams); the image codecs and pdfcrypt (encrypted PDFs
+# only) keep numpy
 REQUEST_PATH = [
     "api", "routing", "spec", "schemas", "tier1", "tier2", "markdown_ser",
     "layout", "ingest", "pdf_io", "pdf_fonts", "html_io", "binary_io", "png",
+    "bitstream",
 ]
 NUMPY = ("numpy",)
 
@@ -160,6 +162,41 @@ def test_pdf_request_loads_only_its_decoder(tmp_path):
                          capture_output=True, text=True, cwd=tmp_path)
     assert run.returncode == 0, run.stderr
     assert run.stdout.strip() == "[]"
+
+
+def test_rc4_request_loads_no_numpy(tmp_path):
+    """A fresh interpreter answering an RC4-encrypted PDF request has
+    not imported numpy (RC4 is pure Python); an AES-encrypted one,
+    whose block decrypt is numpy, loads it. Both give the responses
+    this process computes."""
+    pdf = pdf_io.render_pdf(synth_docs(0, 1, 7)[0])
+    paths = []
+    for cipher in ("rc4", "aes"):
+        path = tmp_path / f"{cipher}.pdf"
+        path.write_bytes(pdf_io.encrypt_pdf(pdf, cipher))
+        paths.append(str(path))
+    code = (
+        "import sys, json; sys.path.insert(0, sys.argv[1]); "
+        "from two_tier_document_parser_spark import api; "
+        "from pathlib import Path; out = []\n"
+        "for p in sys.argv[2:]:\n"
+        "    r = api.parse_bytes(Path(p).read_bytes(), p)\n"
+        "    r.get('metadata', {}).pop('processing_time_ms', None)\n"
+        "    out.append([r, 'numpy' in sys.modules])\n"
+        "print(json.dumps(out))"
+    )
+    run = subprocess.run([sys.executable, "-c", code, str(ROOT), *paths],
+                         capture_output=True, text=True, cwd=tmp_path)
+    assert run.returncode == 0, run.stderr
+    child = json.loads(run.stdout)
+    assert [loaded for _r, loaded in child] == [False, True]
+    here = []
+    for p in paths:
+        r = api.parse_bytes(Path(p).read_bytes(), p)
+        r.get("metadata", {}).pop("processing_time_ms", None)
+        here.append(r)
+    assert [r for r, _loaded in child] == json.loads(json.dumps(here))
+    assert all("error" not in r and r["markdown"] for r in here)
 
 
 def test_spark_schemas_match_pinned_json():

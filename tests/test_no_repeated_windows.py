@@ -20,8 +20,6 @@ PKG = Path(__file__).resolve().parents[1] / "two_tier_document_parser_spark"
 WINDOW = 8
 
 ALLOWED = {
-    ("ccitt.py:encode_g3_1d", "ccitt.py:encode_g3_2d"):
-        "fixture encoders: each test encoder spells out its 1-D line coder",
     ("html_io.py:render_batches", "pdf_io.py:render_batches"):
         "one renderer per format; each module's batch edge reads alone",
     ("similarity.py:semantic_dedup", "similarity.py:semantic_rep_by_score"):

@@ -6,7 +6,8 @@ in the program: the package, `jobs/`, `oracle/`, `perfbench/`,
 `bench.py` or `__spark_entry__.py`. A use is a NAME token, or a word
 in a string literal that is not a docstring (`perfbench/trace.py`
 names layer functions as strings). Comments and docstrings are prose,
-not uses. Uses inside the definition of a dead name do not count, and
+not uses, and neither is a module-level `__all__` list: it only
+matters to a star import, and no module star-imports. Uses inside the definition of a dead name do not count, and
 the scan repeats until no new dead name appears, so a helper whose
 only users are dead is dead too. Code that only tests reach is deleted
 with its tests instead of being kept alive by them. Dunders (`__all__`
@@ -71,12 +72,20 @@ def _definitions(files: list[Path]) -> list[tuple[str, Path, int, int]]:
     return out
 
 
-def _docstring_lines(tree: ast.AST) -> set[int]:
+def _prose_lines(tree: ast.Module) -> set[int]:
     """Start lines of the string literals that are docstrings (or any
-    other bare string statement)."""
-    return {n.value.lineno for n in ast.walk(tree)
-            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
-            and isinstance(n.value.value, str)}
+    other bare string statement), and every line of a module-level
+    `__all__` assignment."""
+    lines = {n.value.lineno for n in ast.walk(tree)
+             if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+             and isinstance(n.value.value, str)}
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = getattr(node, "targets", None) or [node.target]
+            if any(isinstance(t, ast.Name) and t.id == "__all__"
+                   for t in targets):
+                lines.update(range(node.lineno, node.end_lineno + 1))
+    return lines
 
 
 # literal text; Python 3.12+ splits f-strings into FSTRING_* tokens
@@ -84,10 +93,10 @@ _STRINGS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", None)}
 
 
 def _uses(f: Path) -> list[tuple[str, int]]:
-    """(word, line) of every NAME token and every word of a
-    non-docstring string literal in `f`."""
+    """(word, line) of every NAME token and every word of a string
+    literal in `f` that is neither a docstring nor in `__all__`."""
     src = f.read_text()
-    docs = _docstring_lines(ast.parse(src))
+    docs = _prose_lines(ast.parse(src))
     out = []
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
         if tok.type == tokenize.NAME:
@@ -140,7 +149,10 @@ def test_scan_counts_code_not_prose(tmp_path):
         '"""Mentions only_in_doc."""\n'
         "LIMIT = 3\n"
         "UNUSED = 4\n"
-        "__all__ = []\n"
+        '__all__ = ["called", "only_in_all"]\n'
+        "__all__ += [\n"
+        '    "only_in_all",\n'
+        "]\n"
         "def called():\n"
         "    return LIMIT\n"
         "def only_in_doc():\n"
@@ -153,6 +165,8 @@ def test_scan_counts_code_not_prose(tmp_path):
         "    return only_dead_calls()\n"
         "def only_dead_calls():\n"
         "    pass\n"
+        "def only_in_all():\n"
+        "    pass\n"
     )
     user = tmp_path / "user.py"
     user.write_text(
@@ -163,6 +177,6 @@ def test_scan_counts_code_not_prose(tmp_path):
         "    return called()\n"
     )
     assert dead_names([mod], [mod, user]) == [
-        "UNUSED", "dead_caller", "only_dead_calls",
+        "UNUSED", "dead_caller", "only_dead_calls", "only_in_all",
         "only_in_comment", "only_in_doc",
     ]

@@ -437,44 +437,25 @@ def test_kcore_ignores_self_loops_and_dup_edges(spark):
     assert got == {1: 2, 2: 2, 3: 2}
 
 
-def test_kcore_fixpoint_beats_fixed_rounds_on_long_chain(spark):
-    """A 12-vertex path needs 6 peel rounds to empty at k=2 — the
-    fixed-round query (iters=4) is a strict over-approximation there,
-    the fixpoint caller reaches the true (empty) core."""
-    from two_tier_document_parser_spark.graph import kcore, kcore_fixpoint
+def test_kcore_long_chain_needs_six_rounds(spark):
+    """A 13-vertex path needs 6 peel rounds to empty at k=2: with
+    iters=4 the fixed-round query is a strict over-approximation,
+    with iters=6 it reaches the true (empty) core."""
+    from two_tier_document_parser_spark.graph import kcore
 
     e = _edges(spark, [(i, i + 1) for i in range(12)])
     assert kcore(e, k=2, iters=4).count() > 0
-    assert kcore_fixpoint(e, k=2).count() == 0
+    assert kcore(e, k=2, iters=6).count() == 0
 
 
-def test_kcore_fixpoint_equals_converged_fixed_rounds(spark):
-    """On graphs where fixed rounds already converge, both callers
-    return identical (doc_id, deg) sets."""
-    from two_tier_document_parser_spark.graph import kcore, kcore_fixpoint
+def test_kcore_converged_core_degrees(spark):
+    """K4 {1..4}, a triangle {4,5,6} and a pendant 7: the 2-core keeps
+    the K4 and the triangle with their degrees inside it, and more
+    rounds than the peel needs change nothing."""
+    from two_tier_document_parser_spark.graph import kcore
 
     k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     e = _edges(spark, k4 + [(4, 5), (5, 6), (4, 6), (6, 7)])
     fixed = {(r.doc_id, r.deg) for r in kcore(e, k=2, iters=8).collect()}
-    fp = {(r.doc_id, r.deg) for r in kcore_fixpoint(e, k=2).collect()}
-    assert fp == fixed and fp
-
-
-def test_kcore_fixpoint_frees_superseded_checkpoints(spark):
-    """The fixpoint loop checkpoints per round; superseded rounds'
-    blocks must be freed (components discipline) — a 60-round peel
-    may leave only the final frame behind."""
-    from two_tier_document_parser_spark.graph import kcore_fixpoint
-
-    sc = spark.sparkContext
-
-    def stored() -> int:
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
-    base = stored()
-    # a 60-vertex path peels one layer per round from each end:
-    # ~30 rounds of checkpoints
-    e = _edges(spark, [(i, i + 1) for i in range(60)])
-    assert kcore_fixpoint(e, k=2).count() == 0
-    grew = stored() - base
-    assert grew <= 2, f"kcore_fixpoint leaked {grew} checkpoints"
+    assert fixed == {(1, 3), (2, 3), (3, 3), (4, 5), (5, 2), (6, 2)}
+    assert {(r.doc_id, r.deg) for r in kcore(e, k=2, iters=2).collect()} == fixed

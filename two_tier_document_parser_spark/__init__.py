@@ -27,6 +27,7 @@ Layout:
   dedup.py        exact / minhash-LSH / simhash / ngram-jaccard dedup
   similarity.py   embedding ANN (brute-force cosine + LSH buckets)
   multimodal.py   binary media column plumbing (decode stubbed)
+  bitstream.py    the codecs' bit primitives: LZW, bit readers/writers
 """
 
 __version__ = "0.1.0"

@@ -38,6 +38,11 @@ ITU convention); decode_tiff_gray maps to the repo's grayscale
 convention (black=0, white=255) so it composes with
 png.encode_png_gray and the dhash media kernel.
 
+Bits go through `bitstream` (MSB reader and writer, prefix codes
+from the spec's bit-string tables, LZW for TIFF strips). `_packbits`
+stays apart from `pdf_io._runlength_decode`: byte 128 is a no-op in
+TIFF but end-of-data in PDF, and a TIFF strip is cut at its size.
+
 Shape of the work: the per-line mode decode is a Python loop (the
 coding is inherently sequential), but changing-element lookups
 against the reference line are numpy searchsorted over the previous
@@ -52,6 +57,7 @@ import struct
 
 import numpy as np
 
+from .bitstream import MSBReader, MSBWriter, PrefixCode, lzw_decode
 from .png import luma_bt601
 from .spec import MAX_PIXELS
 
@@ -134,59 +140,37 @@ _EXT_CODES = {
 }
 
 
-def _decode_table(codes: dict[int, str]) -> dict[str, int]:
-    t = {bits: run for run, bits in codes.items()}
-    for run, bits in _EXT_CODES.items():
-        t[bits] = run
-    return t
-
-_WHITE_DECODE = _decode_table(_WHITE_CODES)
-_BLACK_DECODE = _decode_table(_BLACK_CODES)
-_MAX_CODE_LEN = max(len(b) for b in list(_WHITE_DECODE) + list(_BLACK_DECODE))
-
-_EOL = "000000000001"
+def _codes(codes: dict[int, str]) -> dict[int, tuple[int, int]]:
+    """One color's run -> (code, length), extended makeup included."""
+    return {run: (int(bits, 2), len(bits))
+            for run, bits in {**codes, **_EXT_CODES}.items()}
 
 
-class _Bits:
-    """MSB-first bit reader over bytes."""
+_WHITE = _codes(_WHITE_CODES)
+_BLACK = _codes(_BLACK_CODES)
+# the longest T.4 run-length code is 13 bits (black makeup)
+_WHITE_RUNS = PrefixCode(_WHITE, 13)
+_BLACK_RUNS = PrefixCode(_BLACK, 13)
 
-    __slots__ = ("data", "pos", "n")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def read(self) -> int:
-        if self.pos >= self.n:
-            raise EOFError
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-    def peek_str(self, k: int) -> str:
-        out = []
-        p = self.pos
-        while p < self.n and len(out) < k:
-            out.append(str((self.data[p >> 3] >> (7 - (p & 7))) & 1))
-            p += 1
-        return "".join(out)
+_EOL = 1  # 000000000001, 12 bits
+_EOFB = (_EOL << 12) | _EOL  # two EOLs, 24 bits
+# 2-D mode codes (T.4 Table 4) -> (code, length): pass, horizontal,
+# and vertical by a1 - b1. "EOL" is the 000000 an EOL (or garbage)
+# starts with, an error inside a 2-D line; with it the code is
+# complete, so a mode read takes at most 7 bits.
+_MODES = {"P": (1, 4), "H": (1, 3), "EOL": (0, 6),
+          0: (1, 1), 1: (3, 3), 2: (3, 6), 3: (3, 7),
+          -1: (2, 3), -2: (2, 6), -3: (2, 7)}
+_MODE_CODE = PrefixCode(_MODES, 7)
 
 
-def _read_run(br: _Bits, white: bool) -> int:
+def _read_run(br: MSBReader, white: bool) -> int:
     """One run length: zero or more makeup codes (>=64) then a
     terminating code (<64)."""
-    table = _WHITE_DECODE if white else _BLACK_DECODE
+    code = _WHITE_RUNS if white else _BLACK_RUNS
     total = 0
     while True:
-        bits = ""
-        while len(bits) <= _MAX_CODE_LEN:
-            bits += str(br.read())
-            if bits in table:
-                run = table[bits]
-                break
-        else:
-            raise ValueError(f"bad {'white' if white else 'black'} code {bits!r}")
+        run = code.read(br)
         total += run
         if run < 64:
             return total
@@ -212,7 +196,7 @@ def _line_to_ref(line: np.ndarray, columns: int) -> np.ndarray:
 
 
 def _decode_2d_line(
-    br: "_Bits", ref_chg: np.ndarray, columns: int
+    br: MSBReader, ref_chg: np.ndarray, columns: int
 ) -> np.ndarray:
     """One T.6/T.4 two-dimensional coded line against the reference
     transitions. Raises _LineTruncated on stream end, ValueError on
@@ -240,23 +224,7 @@ def _decode_2d_line(
             idx = start + ((start & 1) ^ (0 if white else 1))
             b1 = int(ref_chg[idx]) if idx < len(ref_chg) else columns
             b2 = int(ref_chg[idx + 1]) if idx + 1 < len(ref_chg) else columns
-            # mode decision tree
-            if br.read():
-                mode = "V0"
-            else:
-                if br.read():  # 01x
-                    mode = "VR1" if br.read() else "VL1"
-                elif br.read():  # 001
-                    mode = "H"
-                elif br.read():  # 0001
-                    mode = "P"
-                else:  # 0000 0..
-                    if br.read():
-                        mode = "VR2" if br.read() else "VL2"
-                    elif br.read():
-                        mode = "VR3" if br.read() else "VL3"
-                    else:
-                        raise ValueError("EOL/garbage inside 2-D line")
+            mode = _MODE_CODE.read(br)
             if mode == "P":
                 if not white:
                     line[max(a0, 0) : b2] = 1
@@ -273,10 +241,10 @@ def _decode_2d_line(
                     line[a1:a2] = 1
                 cur.extend((a1, a2))
                 a0 = a2
-            else:
-                delta = {"V0": 0, "VR1": 1, "VR2": 2, "VR3": 3,
-                         "VL1": -1, "VL2": -2, "VL3": -3}[mode]
-                a1 = min(max(b1 + delta, 0), columns)
+            elif mode == "EOL":
+                raise ValueError("EOL/garbage inside 2-D line")
+            else:  # vertical: a1 sits `mode` pixels right of b1
+                a1 = min(max(b1 + mode, 0), columns)
                 if not white:
                     line[max(a0, 0) : a1] = 1
                 cur.append(a1)
@@ -287,6 +255,18 @@ def _decode_2d_line(
     return line
 
 
+def _stack(
+    out: list[np.ndarray], rows: int | None, columns: int, what: str
+) -> np.ndarray:
+    """The decoded lines as one (h, columns) array; ValueError when
+    `rows` was given and the `what` stream ended short of it."""
+    if rows is not None and len(out) != rows:
+        raise ValueError(f"{what} stream ended at {len(out)}/{rows} rows")
+    if not out:
+        return np.zeros((0, columns), dtype=np.uint8)
+    return np.stack(out)
+
+
 def decode_g4(
     data: bytes, columns: int, rows: int | None = None
 ) -> np.ndarray:
@@ -295,14 +275,14 @@ def decode_g4(
     ValueError on malformed codes (callers map to their fallback)."""
     if columns <= 0:
         raise ValueError("columns must be positive")
-    br = _Bits(data)
+    br = MSBReader(data)
     out: list[np.ndarray] = []
     # the imaginary line above the first is all white (no transitions)
     ref_chg = np.array([columns, columns], dtype=np.int64)
     while rows is None or len(out) < rows:
         if br.pos >= br.n:
             break
-        if br.peek_str(24) == _EOL + _EOL:
+        if br.peek(24) == _EOFB:
             break
         try:
             line = _decode_2d_line(br, ref_chg, columns)
@@ -312,50 +292,18 @@ def decode_g4(
             raise ValueError("truncated G4 data") from None
         out.append(line)
         ref_chg = _line_to_ref(line, columns)
-    if rows is not None and len(out) != rows:
-        raise ValueError(f"G4 stream ended at {len(out)}/{rows} rows")
-    if not out:
-        return np.zeros((0, columns), dtype=np.uint8)
-    return np.stack(out)
+    return _stack(out, rows, columns, "G4")
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "k")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.k = 0
-
-    def write(self, bits: str) -> None:
-        for c in bits:
-            self.acc = (self.acc << 1) | (c == "1")
-            self.k += 1
-            if self.k == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.k = 0
-
-    def done(self) -> bytes:
-        if self.k:
-            self.buf.append(self.acc << (8 - self.k))
-            self.acc = 0
-            self.k = 0
-        return bytes(self.buf)
-
-
-def _run_code(run: int, white: bool) -> str:
-    table = _WHITE_CODES if white else _BLACK_CODES
-    out = []
+def _write_run(bw: MSBWriter, run: int, white: bool) -> None:
+    codes = _WHITE if white else _BLACK
     while run >= 2624:  # 2560 makeup + up to 63 terminating
-        out.append(_EXT_CODES[2560])
+        bw.write(*codes[2560])
         run -= 2560
     if run >= 64:
-        mk = (run // 64) * 64
-        out.append(_EXT_CODES[mk] if mk >= 1792 else table[mk])
-        run -= mk
-    out.append(table[run])
-    return "".join(out)
+        bw.write(*codes[run // 64 * 64])
+        run %= 64
+    bw.write(*codes[run])
 
 
 def encode_g4(pix: np.ndarray, eofb: bool = True) -> bytes:
@@ -364,24 +312,32 @@ def encode_g4(pix: np.ndarray, eofb: bool = True) -> bytes:
     encode_png_gray play for their formats)."""
     pix = (np.asarray(pix) != 0).astype(np.uint8)
     h, w = pix.shape
-    bw = _BitWriter()
+    bw = MSBWriter()
     ref_chg = np.array([w, w], dtype=np.int64)
     for y in range(h):
         ref_chg = _encode_2d_line(bw, pix[y], ref_chg, w)
     if eofb:
-        bw.write(_EOL + _EOL)
-    return bw.done()
+        bw.write(_EOFB, 24)
+    return bw.getvalue()
+
+
+def _encode_1d_line(bw: MSBWriter, line: np.ndarray, w: int) -> np.ndarray:
+    """Emit one T.4 1-D line (alternating white-first runs); returns
+    its changing elements (the next line's reference)."""
+    chg = _line_to_ref(line, w)
+    prev, white = 0, True
+    for c in chg[:-1].tolist():
+        _write_run(bw, c - prev, white)
+        prev, white = c, not white
+    return chg
 
 
 def _encode_2d_line(
-    bw: "_BitWriter", line: np.ndarray, ref_chg: np.ndarray, w: int
+    bw: MSBWriter, line: np.ndarray, ref_chg: np.ndarray, w: int
 ) -> np.ndarray:
     """Emit one 2-D coded line against `ref_chg`; returns this line's
     changing elements (the next line's reference)."""
-    chg = np.flatnonzero(
-        np.diff(np.concatenate(([0], line))).astype(np.int8) != 0
-    )
-    cur_chg = np.concatenate((chg.astype(np.int64), [w, w]))
+    cur_chg = _line_to_ref(line, w)
     a0 = -1
     white = True
     ci = 0  # index of a1 in cur_chg
@@ -392,20 +348,19 @@ def _encode_2d_line(
         b2 = int(ref_chg[idx + 1]) if idx + 1 < len(ref_chg) else w
         a1 = int(cur_chg[ci]) if ci < len(cur_chg) else w
         if b2 < a1:
-            bw.write("0001")  # pass
+            bw.write(*_MODES["P"])
             a0 = b2
         elif abs(a1 - b1) <= 3:
-            bw.write({0: "1", 1: "011", 2: "000011", 3: "0000011",
-                      -1: "010", -2: "000010", -3: "0000010"}[a1 - b1])
+            bw.write(*_MODES[a1 - b1])
             a0 = a1
             ci += 1
             white = not white
         else:
             a2 = int(cur_chg[ci + 1]) if ci + 1 < len(cur_chg) else w
             s = max(a0, 0)
-            bw.write("001")
-            bw.write(_run_code(a1 - s, white))
-            bw.write(_run_code(a2 - a1, not white))
+            bw.write(*_MODES["H"])
+            _write_run(bw, a1 - s, white)
+            _write_run(bw, a2 - a1, not white)
             a0 = a2
             ci += 2
     return cur_chg
@@ -544,18 +499,14 @@ def decode_g3_1d(
     decode_g3_2d (K>0) above/below."""
     if columns <= 0:
         raise ValueError("columns must be positive")
-    br = _Bits(data)
+    br = MSBReader(data)
     out: list[np.ndarray] = []
     while rows is None or len(out) < rows:
         if byte_align and br.pos % 8:
             br.pos += 8 - br.pos % 8
         # skip fill + any EOLs before the line
-        while True:
-            look = br.peek_str(12)
-            if look == _EOL:
-                br.pos += 12
-                continue
-            break
+        while br.peek(12) == _EOL:
+            br.pos += 12
         if br.pos >= br.n:
             break
         try:
@@ -570,14 +521,10 @@ def decode_g3_1d(
                 break
             raise
         out.append(line)
-    if rows is not None and len(out) != rows:
-        raise ValueError(f"G3 stream ended at {len(out)}/{rows} rows")
-    if not out:
-        return np.zeros((0, columns), dtype=np.uint8)
-    return np.stack(out)
+    return _stack(out, rows, columns, "G3")
 
 
-def _decode_1d_line(br: "_Bits", columns: int) -> np.ndarray:
+def _decode_1d_line(br: MSBReader, columns: int) -> np.ndarray:
     """One T.4 one-dimensional (MH) line: alternating white-first
     run-length codes. Raises _LineTruncated on stream end; malformed
     codes raise ValueError with a .progress attribute."""
@@ -624,7 +571,7 @@ def decode_g3_2d(
     Raises ValueError on malformed codes, like decode_g4/_g3_1d."""
     if columns <= 0:
         raise ValueError("columns must be positive")
-    br = _Bits(data)
+    br = MSBReader(data)
     out: list[np.ndarray] = []
     ref_chg = np.array([columns, columns], dtype=np.int64)
     while rows is None or len(out) < rows:
@@ -632,15 +579,15 @@ def decode_g3_2d(
             br.pos += 8 - br.pos % 8
         # seek the mandatory EOL through zero fill bits
         try:
-            while br.peek_str(12) != _EOL:
-                if br.read() != 0:
+            while br.peek(12) != _EOL:
+                if br.bit() != 0:
                     raise ValueError("nonzero fill before 2-D G3 EOL")
         except EOFError:
             break
         if br.pos + 13 > br.n:
             break
         br.pos += 12
-        tag = br.read()
+        tag = br.bit()
         try:
             if tag:
                 line = _decode_1d_line(br, columns)
@@ -656,11 +603,7 @@ def decode_g3_2d(
             raise
         out.append(line)
         ref_chg = _line_to_ref(line, columns)
-    if rows is not None and len(out) != rows:
-        raise ValueError(f"2-D G3 stream ended at {len(out)}/{rows} rows")
-    if not out:
-        return np.zeros((0, columns), dtype=np.uint8)
-    return np.stack(out)
+    return _stack(out, rows, columns, "2-D G3")
 
 
 def encode_g3_2d(
@@ -671,31 +614,21 @@ def encode_g3_2d(
     fixture/producer inverse of decode_g3_2d."""
     pix = (np.asarray(pix) != 0).astype(np.uint8)
     h, w = pix.shape
-    bw = _BitWriter()
+    bw = MSBWriter()
     ref_chg = np.array([w, w], dtype=np.int64)
     for y in range(h):
-        if byte_align and bw.k:
-            bw.write("0" * (8 - bw.k))
+        if byte_align:
+            bw.align()
         one_d = (y % max(k, 1)) == 0
-        bw.write(_EOL + ("1" if one_d else "0"))
-        line = pix[y]
+        bw.write((_EOL << 1) | one_d, 13)  # EOL + the 1-D/2-D tag bit
         if one_d:
-            chg = np.flatnonzero(
-                np.diff(np.concatenate(([0], line))).astype(np.int8) != 0
-            ).tolist() + [w]
-            prev = 0
-            white = True
-            for c in chg:
-                bw.write(_run_code(c - prev, white))
-                prev = c
-                white = not white
-            ref_chg = _line_to_ref(line, w)
+            ref_chg = _encode_1d_line(bw, pix[y], w)
         else:
-            ref_chg = _encode_2d_line(bw, line, ref_chg, w)
+            ref_chg = _encode_2d_line(bw, pix[y], ref_chg, w)
     # RTC: six EOL+1
     for _ in range(6):
-        bw.write(_EOL + "1")
-    return bw.done()
+        bw.write((_EOL << 1) | 1, 13)
+    return bw.getvalue()
 
 
 def encode_g3_1d(
@@ -704,29 +637,14 @@ def encode_g3_1d(
     """(h, w) array (nonzero = black) -> T.4 1-D Modified Huffman
     bytes — the fixture/producer inverse of decode_g3_1d."""
     pix = (np.asarray(pix) != 0).astype(np.uint8)
-    h, w = pix.shape
-    bw = _BitWriter()
-    for y in range(h):
-        if byte_align and bw.k:
-            bw.write("0" * (8 - bw.k))
+    bw = MSBWriter()
+    for line in pix:
+        if byte_align:
+            bw.align()
         if eol:
-            bw.write(_EOL)
-        line = pix[y]
-        chg = np.flatnonzero(
-            np.diff(np.concatenate(([0], line))).astype(np.int8) != 0
-        ).tolist() + [w]
-        prev = 0
-        white = True
-        for c in chg:
-            bw.write(_run_code(c - prev, white))
-            prev = c
-            white = not white
-            if prev >= w:
-                break
-        # a line ending mid-color still needs the closing zero run of
-        # the opposite color ONLY when the transition list was empty
-        # (all white handled by the single full-width code above)
-    return bw.done()
+            bw.write(_EOL, 12)
+        _encode_1d_line(bw, line, pix.shape[1])
+    return bw.getvalue()
 
 
 # ---------------------------------------------------------------------------
@@ -792,10 +710,8 @@ def _tiff_decompress(strip: bytes, expect: int, comp: int) -> bytes | None:
     if comp == 1:
         return strip[:expect] if len(strip) >= expect else None
     if comp == 5:
-        from .pdf_io import _lzw_decode
-
         try:
-            out = _lzw_decode(strip, limit=expect)
+            out = lzw_decode(strip, limit=expect)
         except ValueError:
             return None
         return out[:expect] if len(out) >= expect else None

@@ -10,7 +10,8 @@ Scope (honest, like the other codecs):
 - GIF87a and GIF89a signatures; logical screen descriptor; global
   and local color tables (any 2..256 size).
 - Variable-code-size LZW decompression (the GIF flavor: clear/EOI
-  codes, code width grows 3..12 bits, deferred clear).
+  codes, code width grows 3..12 bits, deferred clear) through
+  `bitstream.lzw_decode`, the LZW that PDF and TIFF use too.
 - Row interlacing (the 4-pass 8/8-8/4-2 scheme).
 - Graphic Control Extension: transparency index — transparent pixels
   composite over white (255), matching the engine's document
@@ -41,6 +42,7 @@ from typing import Iterator
 
 import numpy as np
 
+from .bitstream import LSBWriter, lzw_decode
 from .png import luma_bt601
 from .spec import MAX_PIXELS
 
@@ -73,79 +75,6 @@ def _skip_subblocks(data: bytes, i: int) -> int:
         if ln == 0:
             return i
     return n
-
-
-def _lzw_decode(data: bytes, min_code: int, npix: int) -> bytearray | None:
-    """GIF-flavor LZW: variable width min_code+1..12 bits, LSB-first
-    bit packing, CLEAR resets the table, EOI ends. Returns exactly
-    `npix` indices (truncated streams pad with 0 — lenient, like
-    browser decoders) or None on a structurally broken stream."""
-    # GIF89a allows minimum code sizes 2..8: every root code is a
-    # palette index and must fit the byte it decodes to
-    if not 2 <= min_code <= 8:
-        return None
-    clear = 1 << min_code
-    eoi = clear + 1
-    out = bytearray()
-
-    # dictionary as (prefix_code, suffix_byte); roots are implicit
-    prefix = np.zeros(4096, np.int16)
-    suffix = np.zeros(4096, np.uint8)
-
-    def reset() -> tuple[int, int]:
-        return eoi + 1, min_code + 1
-
-    next_code, width = reset()
-    acc = 0
-    nbits = 0
-    prev = -1
-    i = 0
-    n = len(data)
-    while len(out) < npix:
-        while nbits < width:
-            if i >= n:
-                out.extend(b"\x00" * (npix - len(out)))
-                return out
-            acc |= data[i] << nbits
-            nbits += 8
-            i += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            next_code, width = reset()
-            prev = -1
-            continue
-        if code == eoi:
-            out.extend(b"\x00" * (npix - len(out)))
-            return out
-        if prev < 0:
-            if code >= clear:
-                return None  # first code must be a root
-            out.append(code)
-            prev = code
-            continue
-        if code > next_code or (code == next_code and next_code >= 4096):
-            return None
-        # expand `code` (or the KwK case when code == next_code)
-        probe = prev if code == next_code else code
-        stack = bytearray()
-        while probe >= clear + 2:
-            stack.append(suffix[probe])
-            probe = int(prefix[probe])
-        stack.append(probe)  # root
-        first = probe
-        if code == next_code:
-            stack.insert(0, first)
-        out.extend(reversed(stack))
-        if next_code < 4096:
-            prefix[next_code] = prev
-            suffix[next_code] = first
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-        prev = code
-    return out[:npix]
 
 
 def _frame_luma_and_alpha(
@@ -222,10 +151,18 @@ def _images(data: bytes) -> Iterator[tuple]:
                 break
             chunks.append(data[i : i + ln])
             i += ln
-        idx = _lzw_decode(b"".join(chunks), min_code, w * h)
-        if idx is None:
+        # GIF89a allows minimum code sizes 2..8: every root code is a
+        # palette index and must fit the byte it decodes to
+        if not 2 <= min_code <= 8:
             return
-        arr = np.frombuffer(bytes(idx), np.uint8).reshape(h, w)
+        try:
+            idx = lzw_decode(b"".join(chunks), min_code, lsb=True, early=0,
+                             limit=w * h)
+        except ValueError:
+            return
+        # a stream that ends early pads with index 0, as browsers do
+        idx = idx[: w * h].ljust(w * h, b"\0")
+        arr = np.frombuffer(idx, np.uint8).reshape(h, w)
         if flags & 0x40:  # interlaced: rows were emitted in pass order
             order = [y for f, s in _INTERLACE for y in range(f, h, s)]
             arr = arr[np.argsort(order)]
@@ -292,8 +229,9 @@ def decode_gif_gray(data: bytes) -> np.ndarray | None:
 # ---------------------------------------------------------------------------
 # minimal encoder — fixture generation + synth payloads (grayscale
 # palette, optional interlace). Independent of the decoder's tables:
-# it builds LZW codes from a dict keyed by byte strings, so
-# decode(encode(x)) == x is a real two-implementation check.
+# it builds LZW codes from a dict keyed by byte strings (packed by
+# `bitstream.LSBWriter`), so decode(encode(x)) == x is a real
+# two-implementation check.
 # ---------------------------------------------------------------------------
 
 
@@ -325,46 +263,31 @@ def encode_gif_gray(pixels: np.ndarray, interlace: bool = False) -> bytes:
     table: dict[bytes, int] = {bytes([v]): v for v in range(clear)}
     next_code = eoi + 1
     width = min_code + 1
-    bits = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
+    bw = LSBWriter()
+    bw.write(clear, width)
     run = b""
     for byte in src:
         cand = run + bytes([byte])
         if cand in table:
             run = cand
             continue
-        emit(table[run])
+        bw.write(table[run], width)
         table[cand] = next_code
         next_code += 1
         if next_code - 1 == (1 << width) and width < 12:
             width += 1
         if next_code >= 4096:
-            emit(clear)
+            bw.write(clear, width)
             table = {bytes([v]): v for v in range(clear)}
             next_code = eoi + 1
             width = min_code + 1
         run = bytes([byte])
     if run:
-        emit(table[run])
-    emit(eoi)
-    if nbits:
-        bits.append(acc & 0xFF)
-    i = 0
-    while i < len(bits):
+        bw.write(table[run], width)
+    bw.write(eoi, width)
+    bits = bw.getvalue()
+    for i in range(0, len(bits), 255):
         blk = bits[i : i + 255]
         out += bytes([len(blk)]) + blk
-        i += 255
     out += bytes([0, 0x3B])
     return bytes(out)

@@ -33,7 +33,6 @@ __all__ = [
     "triangle_count",
     "label_propagation",
     "kcore",
-    "kcore_fixpoint",
     "hits",
     "RANK_SCALE",
 ]
@@ -215,59 +214,6 @@ def kcore(edges: DataFrame, k: int = 2, iters: int = 4) -> DataFrame:
         )
         e = e.join(keep, "src", "left_semi").join(
             keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-        )
-    return (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .select(F.col("src").alias("doc_id"), "deg")
-    )
-
-
-def kcore_fixpoint(
-    edges: DataFrame, k: int = 2, max_rounds: int = 200
-) -> DataFrame:
-    """Peel to the TRUE k-core: iterate the kcore round until the
-    surviving edge count stabilizes. Removal-only monotonicity means
-    equal count <=> equal set, so the cheap count is a complete
-    convergence test (no exceptAll needed, unlike the star loop where
-    edges are REWIRED rather than only removed); it also bounds the
-    rounds by the vertex count, with O(sqrt(|E|)) typical on real
-    graphs. Per round the superseded checkpoint's blocks and shuffle
-    files are freed immediately (the connected-components discipline;
-    dedup._free_checkpoint docstring has the disk-full war story).
-
-    Same output contract as `kcore`: (doc_id, deg) for every vertex of
-    the k-core, deg = its degree inside the core. `kcore(e, k, iters)`
-    with fixed iters is the oracle-checkable over-approximation; this
-    is the production fixpoint caller.
-    """
-    from .dedup import _REAP_THRESHOLD_ROWS, _free_checkpoint, _reap_shuffles
-
-    spark = edges.sparkSession
-    e = _symmetric(edges).localCheckpoint(eager=True)
-    n = e.count()
-    for _ in range(max_rounds):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
-        )
-        e2 = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        n2 = e2.count()
-        _free_checkpoint(e)
-        _reap_shuffles(spark, _REAP_THRESHOLD_ROWS, n)
-        converged = n2 == n
-        e, n = e2, n2
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"kcore_fixpoint did not converge in {max_rounds} rounds"
         )
     return (
         e.groupBy("src")

@@ -11,7 +11,9 @@ specs. No external codec exists in this sandbox.
 
 Scope (honest, like the other codecs):
 - MQ arithmetic decoder (T.88 Annex E software conventions — the
-  same coder ISO/IEC 15444-1 JPEG 2000 uses), Qe table E.1.
+  same coder ISO/IEC 15444-1 JPEG 2000 uses), Qe table E.1. It reads
+  bytes into an interval coder, not bits, so it is not one of the
+  `bitstream` readers.
 - Generic region decoding (§6.2): arithmetic templates 0-3 with
   arbitrary AT pixel offsets, TPGDON typical-prediction rows, and
   the MMR=1 variant, which T.88 defines as T.6 two-dimensional

@@ -27,7 +27,8 @@ scope and return None (callers keep their documented fallback).
 
 Shape of the work: marker/header parse and the entropy decode are a
 per-symbol Python loop fed by a 16-bit-peek huffman lookup table
-(one dict build per DHT, O(1) per symbol); everything after entropy
+(one dict build per DHT, O(1) per symbol) over `bitstream.MSBReader`,
+the MSB-first reader the CCITT decoders share; everything after entropy
 decode — dequantization, dezigzag, the 2-D IDCT (orthonormal DCT-II
 basis, two einsums over ALL blocks at once), level shift, block-grid
 reassembly (one transpose+reshape), chroma upsample, YCbCr->RGB —
@@ -38,6 +39,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .bitstream import MSBReader
 from .png import luma_bt601
 
 # zigzag order (T.81 Figure A.6): zz[i] = raster index of the i-th
@@ -82,8 +84,8 @@ class _Huff:
                 k += 1
             code <<= 1
 
-    def decode(self, br: "_Bits") -> int:
-        peek = br.peek16()
+    def decode(self, br: MSBReader) -> int:
+        peek = br.peek(16)
         lut = self.lut
         for length in range(1, 17):
             mask = ~((1 << (16 - length)) - 1) & 0xFFFF
@@ -92,40 +94,6 @@ class _Huff:
                 br.skip(length)
                 return hit[0]
         raise ValueError("bad huffman code")
-
-
-class _Bits:
-    """MSB-first bit reader over the UNSTUFFED entropy segment."""
-
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def peek16(self) -> int:
-        while self.n < 16 and self.pos < len(self.data):
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        if self.n >= 16:
-            return (self.acc >> (self.n - 16)) & 0xFFFF
-        return (self.acc << (16 - self.n)) & 0xFFFF
-
-    def skip(self, k: int) -> None:
-        if self.n < k:  # force refill via peek
-            self.peek16()
-        self.n -= k
-        self.acc &= (1 << self.n) - 1
-
-    def get(self, k: int) -> int:
-        if k == 0:
-            return 0
-        v = self.peek16() >> (16 - k)
-        self.skip(k)
-        return v
 
 
 def _extend(v: int, s: int) -> int:
@@ -212,7 +180,7 @@ def _unstuff_scan(data: bytes, i: int) -> tuple[list[bytes], int]:
     return segments, i
 
 
-def _refine_nonzero(br: _Bits, row: np.ndarray, k: int, se: int, p1: int) -> None:
+def _refine_nonzero(br: MSBReader, row: np.ndarray, k: int, se: int, p1: int) -> None:
     """G.1.2.3 correction-bit sweep: for every already-nonzero coef
     in zigzag positions k..se, read one bit and, when set, move its
     magnitude one step away from zero in the new bit plane."""
@@ -225,7 +193,7 @@ def _refine_nonzero(br: _Bits, row: np.ndarray, k: int, se: int, p1: int) -> Non
 
 
 def _decode_block(
-    br: _Bits,
+    br: MSBReader,
     row: np.ndarray,
     hdc: _Huff | None,
     hac: _Huff | None,
@@ -244,6 +212,8 @@ def _decode_block(
     if ss == 0:  # DC portion
         if ah == 0:  # first DC scan (or sequential)
             s = hdc.decode(br)
+            if s > 16:
+                raise ValueError("DC magnitude category past 16 bits")
             pred[ci] += _extend(br.get(s), s)
             row[0] = pred[ci] << al
         else:  # DC refinement: one bit per block
@@ -504,7 +474,7 @@ def _decode_scan(
     component's TRUE block raster (its MCU is one block, so restart
     intervals count blocks). Predictors and the EOB run reset at every
     restart segment."""
-    br = _Bits(segments[0])
+    br = MSBReader(segments[0])
     seg_idx = 0
     pred = [0] * len(comps)
     eobrun = 0
@@ -515,7 +485,7 @@ def _decode_scan(
             seg_idx += 1
             if seg_idx >= len(segments):
                 raise ValueError("missing restart segment")
-            br = _Bits(segments[seg_idx])
+            br = MSBReader(segments[seg_idx])
             pred = [0] * len(comps)
             eobrun = 0
 

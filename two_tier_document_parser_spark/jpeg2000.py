@@ -32,6 +32,10 @@ documented header-dims fallback):
   quantization (style 1 — rare; encoders default to expounded),
   COC/QCC/RGN/POC/PPM/PPT overrides, non-default codeblock styles.
 
+Packet headers keep their own bit reader (`_HdrBits`), not the shared
+`bitstream.MSBReader`: after a 0xFF byte the next byte carries only 7
+bits behind a stuffed 0 (B.10.1).
+
 Shape of the work: tier-2 (packet headers, tag trees) and tier-1
 (per-coefficient MQ decisions) are inherently sequential, so the
 inner loops are Python — same acceptance as jbig2.py/ccitt.py; the

@@ -738,53 +738,6 @@ def _tiff_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(
-    data: bytes, early: int = 1, limit: int | None = None
-) -> bytes:
-    """LZWDecode (§7.4.4.2), also TIFF 6.0 Compression=5: MSB-first
-    codes, 9-bit start, Clear=256, EOD=257, code width grows at
-    511/1023/2047 (minus `early`), table capped at 4096 entries.
-    Decoding stops once `limit` bytes are out; a code past the table
-    raises ValueError."""
-    out = bytearray()
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    width = 9
-    prev: bytes | None = None
-    acc = nbits = 0
-    for byte in data:
-        acc = (acc << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == 256:
-                table = [bytes([i]) for i in range(256)] + [b"", b""]
-                width, prev = 9, None
-                continue
-            if code == 257:
-                return bytes(out)
-            if prev is None:
-                if code > 255:
-                    raise ValueError(f"LZW code {code} after Clear")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                if len(table) < 4096:
-                    table.append(prev + entry[:1])
-            elif code == len(table):
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError(f"LZW code {code} out of range")
-            out += entry
-            if limit is not None and len(out) >= limit:
-                return bytes(out)
-            prev = entry
-            if len(table) + early >= (1 << width) and width < 12:
-                width += 1
-    return bytes(out)
-
-
 def _runlength_decode(data: bytes) -> bytes:
     out = bytearray()
     i, n = 0, len(data)
@@ -818,7 +771,9 @@ def _apply_filters(data: bytes, d: dict, objs: _ObjMap) -> bytes:
         if f in ("FlateDecode", "Fl"):
             data = zlib.decompress(data)
         elif f in ("LZWDecode", "LZW"):
-            data = _lzw_decode(data, int(p.get("EarlyChange", 1)))
+            from .bitstream import lzw_decode
+
+            data = lzw_decode(data, early=int(p.get("EarlyChange", 1)))
         elif f in ("ASCIIHexDecode", "AHx"):
             h = re.sub(rb"[^0-9A-Fa-f]", b"", data.split(b">")[0])
             if len(h) % 2:

@@ -24,15 +24,15 @@ both key sizes (tests/test_pdf15_io.py).
 AES decryption is numpy-vectorized ACROSS blocks (CBC decryption is
 embarrassingly parallel: D(c_i) XOR c_{i-1}), so corpus-scale
 decrypt stays Arrow-batch friendly; CBC *encryption* (fixture/
-producer side only) is a sequential per-block loop.
+producer side only) is a sequential per-block loop. numpy and the
+AES tables load on the first AES call: RC4 files never pay for them.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
-
-import numpy as np
 
 # §7.6.3.3 Algorithm 2 padding string
 PAD = bytes(
@@ -68,7 +68,15 @@ def rc4(key: bytes, data: bytes) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def _build_tables():
+@functools.cache
+def _tables():
+    """(S-box, inverse S-box, GF(2^8) multiply-by-c tables, ShiftRows
+    and its inverse) as numpy arrays, built on the first AES call so an
+    RC4 file never loads numpy. The state is 16 bytes, column-major
+    (s[row + 4*col]), so a (nblocks, 16) uint8 matrix vectorizes every
+    step as fancy indexing."""
+    import numpy as np
+
     exp = [0] * 512
     log = [0] * 256
     x = 1
@@ -104,19 +112,16 @@ def _build_tables():
         c: np.array([gmul(a, c) for a in range(256)], dtype=np.uint8)
         for c in (2, 3, 9, 11, 13, 14)
     }
+    shift = np.array([0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11])
     return (
         np.array(sbox, dtype=np.uint8),
         np.array(inv_sbox, dtype=np.uint8),
         mul,
+        shift,
+        np.argsort(shift),
     )
 
 
-_SBOX, _INV_SBOX, _MUL = _build_tables()
-
-# state layout: flat 16 bytes, column-major (s[row + 4*col]), so a
-# (nblocks, 16) uint8 matrix vectorizes every step as fancy indexing
-_SHIFT = np.array([0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11])
-_INV_SHIFT = np.argsort(_SHIFT)
 _RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36]
 
 
@@ -125,12 +130,14 @@ def _expand_key(key: bytes) -> np.ndarray:
     keys. Nk=4 (AES-128, 10 rounds) or Nk=8 (AES-256, 14 rounds; the
     schedule's extra rule: at i % Nk == 4 apply SubWord without the
     rotate)."""
+    import numpy as np
+
     nk = len(key) // 4
     if nk not in (4, 8):
         raise ValueError("AES key must be 16 or 32 bytes")
     nr = nk + 6
     w = [list(key[i : i + 4]) for i in range(0, len(key), 4)]
-    sbox = _SBOX
+    sbox = _tables()[0]
     for i in range(nk, 4 * (nr + 1)):
         t = list(w[i - 1])
         if i % nk == 0:
@@ -145,9 +152,11 @@ def _expand_key(key: bytes) -> np.ndarray:
 
 
 def _mix_columns(st: np.ndarray, inv: bool) -> np.ndarray:
+    import numpy as np
+
     s = st.reshape(-1, 4, 4)  # (n, col, row)
     a0, a1, a2, a3 = s[:, :, 0], s[:, :, 1], s[:, :, 2], s[:, :, 3]
-    m = _MUL
+    m = _tables()[2]
     if not inv:
         b0 = m[2][a0] ^ m[3][a1] ^ a2 ^ a3
         b1 = a0 ^ m[2][a1] ^ m[3][a2] ^ a3
@@ -162,33 +171,31 @@ def _mix_columns(st: np.ndarray, inv: bool) -> np.ndarray:
 
 
 def _encrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
+    sbox, _inv_sbox, _mul, shift, _inv_shift = _tables()
     nr = rk.shape[0] - 1
     st = blocks ^ rk[0]
     for rnd in range(1, nr):
-        st = _SBOX[st][:, _SHIFT]
+        st = sbox[st][:, shift]
         st = _mix_columns(st, inv=False) ^ rk[rnd]
-    return _SBOX[st][:, _SHIFT] ^ rk[nr]
+    return sbox[st][:, shift] ^ rk[nr]
 
 
 def _decrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
+    _sbox, inv_sbox, _mul, _shift, inv_shift = _tables()
     nr = rk.shape[0] - 1
     st = blocks ^ rk[nr]
     for rnd in range(nr - 1, 0, -1):
-        st = _INV_SBOX[st[:, _INV_SHIFT]] ^ rk[rnd]
+        st = inv_sbox[st[:, inv_shift]] ^ rk[rnd]
         st = _mix_columns(st, inv=True)
-    return _INV_SBOX[st[:, _INV_SHIFT]] ^ rk[0]
+    return inv_sbox[st[:, inv_shift]] ^ rk[0]
 
 
 def aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
-    rk = _expand_key(key)
-    b = np.frombuffer(block, dtype=np.uint8).reshape(1, 16)
-    return _encrypt_blocks(b, rk).tobytes()
+    return _ecb_encrypt(key, block)
 
 
 def aes128_decrypt_block(key: bytes, block: bytes) -> bytes:
-    rk = _expand_key(key)
-    b = np.frombuffer(block, dtype=np.uint8).reshape(1, 16)
-    return _decrypt_blocks(b, rk).tobytes()
+    return _ecb_decrypt(key, block)
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -206,9 +213,7 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     P_i = D(C_i) xor C_{i-1}), then strip the padding byte count."""
     if len(data) < 32 or len(data) % 16:
         raise ValueError("bad AES-CBC payload")
-    buf = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16)
-    pt = _decrypt_blocks(buf[1:], _expand_key(key)) ^ buf[:-1]
-    raw = pt.tobytes()
+    raw = _cbc_decrypt_nopad(key, data[:16], data[16:])
     padlen = raw[-1]
     if not 1 <= padlen <= 16:
         raise ValueError("bad AES padding")
@@ -224,7 +229,7 @@ def _build_ttables():
     needs a fast scalar block. Tables derive from the same computed
     S-box; equality with the numpy engine is pinned by the FIPS-197
     vectors plus a randomized cross-check in tests."""
-    sbox = [int(b) for b in _SBOX]
+    sbox = [int(b) for b in _tables()[0]]
 
     def x2(v):
         return ((v << 1) ^ 0x1B) & 0xFF if v & 0x80 else v << 1
@@ -304,17 +309,23 @@ def _cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
 
 
 def _cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
+    import numpy as np
+
     buf = np.frombuffer(iv + data, dtype=np.uint8).reshape(-1, 16)
     pt = _decrypt_blocks(buf[1:], _expand_key(key)) ^ buf[:-1]
     return pt.tobytes()
 
 
 def _ecb_encrypt(key: bytes, data: bytes) -> bytes:
+    import numpy as np
+
     b = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16)
     return _encrypt_blocks(b, _expand_key(key)).tobytes()
 
 
 def _ecb_decrypt(key: bytes, data: bytes) -> bytes:
+    import numpy as np
+
     b = np.frombuffer(data, dtype=np.uint8).reshape(-1, 16)
     return _decrypt_blocks(b, _expand_key(key)).tobytes()
 

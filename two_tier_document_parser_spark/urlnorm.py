@@ -37,6 +37,8 @@ the engine-breadth mandate (training-data pipeline operators).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -124,11 +126,11 @@ def _canon_col(url: Column) -> Column:
     qs = F.regexp_extract(url, _QUERY_RE, 1)
     keep = F.filter(
         F.split(qs, r"&"),
-        lambda p: (p != F.lit(""))
-        & ~p.startswith("utm_")
-        & ~p.startswith("ref=")
-        & ~p.startswith("fbclid=")
-        & ~p.startswith("gclid="),
+        lambda p: functools.reduce(
+            lambda cond, prefix: cond & ~p.startswith(prefix),
+            TRACKING_PREFIXES,
+            p != F.lit(""),
+        ),
     )
     qs_c = F.array_join(F.sort_array(keep), "&")
     # regexp_extract returns '' (not NULL) on no match: a non-URL

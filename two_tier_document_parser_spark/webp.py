@@ -10,9 +10,11 @@ libwebp, Alakuijala 2012) — no external codec in this sandbox.
 
 Scope (honest, like the other codecs):
 - RIFF/WEBP container walk; VP8X containers decode their VP8L chunk.
-- VP8L: LSB-first bit reader; MSB-first canonical prefix codes in
-  both "simple" (1-2 symbol) and "normal" (code-length-coded,
-  with 16/17/18 repeats and the max_symbol early-out) forms.
+- VP8L: LSB-first bit reader and canonical prefix codes read first
+  bit first (`bitstream.LSBReader` and `bitstream.PrefixCode`, shared
+  with the other codecs) in both "simple" (1-2 symbol) and "normal"
+  (code-length-coded, with 16/17/18 repeats and the max_symbol
+  early-out) forms.
 - Pixel stream: green/length/cache + red + blue + alpha + distance
   prefix-code groups, optional meta-prefix (entropy image) block
   selection, LZ77 backward references with the 120-entry
@@ -47,6 +49,7 @@ from typing import Iterator
 
 import numpy as np
 
+from .bitstream import LSBReader, LSBWriter, PrefixCode
 from .png import luma_bt601
 from .spec import MAX_PIXELS
 
@@ -113,107 +116,50 @@ def webp_dims(data: bytes) -> tuple[int, int] | None:
     return None
 
 
-class _Bits:
-    """LSB-first bit reader over the VP8L payload."""
-
-    __slots__ = ("d", "pos", "n")
-
-    def __init__(self, data: bytes) -> None:
-        self.d = data
-        self.pos = 0
-        self.n = len(data) * 8
-
-    def get(self, k: int) -> int:
-        p = self.pos
-        if p + k > self.n:
-            raise EOFError
-        v = 0
-        for i in range(k):
-            v |= ((self.d[(p + i) >> 3] >> ((p + i) & 7)) & 1) << i
-        self.pos = p + k
-        return v
-
-    def bit(self) -> int:
-        p = self.pos
-        if p >= self.n:
-            raise EOFError
-        self.pos = p + 1
-        return (self.d[p >> 3] >> (p & 7)) & 1
+def _prefix(lengths: list[int]) -> PrefixCode:
+    """Canonical prefix code from code lengths: shorter lengths first,
+    symbol order within a length, at most 15 bits, complete (Kraft
+    sum exactly 1). A single-symbol code reads zero bits."""
+    used = [(ln, s) for s, ln in enumerate(lengths) if ln > 0]
+    if not used:
+        raise ValueError("empty prefix code")
+    if len(used) == 1:
+        return PrefixCode({used[0][1]: (0, 0)}, 15)
+    used.sort()
+    code = 0
+    prev_len = used[0][0]
+    codes: dict[int, tuple[int, int]] = {}
+    kraft = 0
+    for ln, sym in used:
+        code <<= ln - prev_len
+        prev_len = ln
+        codes[sym] = (code, ln)
+        kraft += 1 << (15 - ln) if ln <= 15 else 0
+        code += 1
+    if prev_len > 15 or kraft != 1 << 15:
+        raise ValueError("invalid prefix code")
+    return PrefixCode(codes, 15)
 
 
-class _Prefix:
-    """Canonical prefix code: shorter lengths first, symbol order
-    within a length; bits read MSB-of-code-first (one tree step per
-    bit). A single-symbol code reads zero bits."""
-
-    __slots__ = ("single", "table")
-
-    def __init__(self, lengths: list[int]) -> None:
-        used = [(ln, s) for s, ln in enumerate(lengths) if ln > 0]
-        if not used:
-            raise ValueError("empty prefix code")
-        if len(used) == 1:
-            self.single = used[0][1]
-            self.table = None
-            return
-        self.single = None
-        used.sort()
-        code = 0
-        prev_len = used[0][0]
-        table: dict[tuple[int, int], int] = {}
-        kraft = 0
-        for ln, sym in used:
-            code <<= ln - prev_len
-            prev_len = ln
-            table[(ln, code)] = sym
-            kraft += 1 << (15 - ln) if ln <= 15 else 0
-            code += 1
-        if prev_len > 15 or kraft != 1 << 15:
-            raise ValueError("invalid prefix code")
-        self.table = table
-
-    def read(self, br: _Bits) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        ln = 0
-        while True:
-            code = (code << 1) | br.bit()
-            ln += 1
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-            if ln > 15:
-                raise ValueError("bad prefix stream")
-
-
-def _read_prefix(br: _Bits, alphabet: int) -> _Prefix:
+def _read_prefix(br: LSBReader, alphabet: int) -> PrefixCode:
     """One prefix code: simple (1-2 symbols) or code-length coded."""
     if br.bit():  # simple
         num = br.bit() + 1
         first8 = br.bit()
         s0 = br.get(8 if first8 else 1)
-        lengths = [0] * alphabet
-        if num == 1:
-            lengths[s0] = 1
-            # single-symbol: _Prefix treats as zero-bit
-            p = object.__new__(_Prefix)
-            p.single = s0
-            p.table = None
-            return p
-        s1 = br.get(8)
-        if s0 == s1 or s0 >= alphabet or s1 >= alphabet:
+        s1 = br.get(8) if num == 2 else s0
+        if max(s0, s1) >= alphabet or (num == 2 and s0 == s1):
             raise ValueError("bad simple code")
-        lengths[s0] = lengths[s1] = 1
-        return _Prefix(lengths)
+        if num == 1:  # one symbol, read with zero bits
+            return PrefixCode({s0: (0, 0)}, 15)
+        # two 1-bit codes, canonical: the smaller symbol is 0
+        return PrefixCode({min(s0, s1): (0, 1), max(s0, s1): (1, 1)}, 15)
     # normal: code-length code
     num_cl = 4 + br.get(4)
     cl_lengths = [0] * 19
     for i in range(num_cl):
         cl_lengths[_CL_ORDER[i]] = br.get(3)
-    cl = _Prefix(cl_lengths) if any(cl_lengths) else None
-    if cl is None:
-        raise ValueError("empty code-length code")
+    cl = _prefix(cl_lengths)
     if br.bit():
         length_nbits = 2 + 2 * br.get(3)
         max_symbol = 2 + br.get(length_nbits)
@@ -222,9 +168,7 @@ def _read_prefix(br: _Bits, alphabet: int) -> _Prefix:
     lengths = [0] * alphabet
     symbol = 0
     prev_len = 8
-    while symbol < alphabet:
-        if max_symbol == 0:
-            break
+    while symbol < alphabet and max_symbol:
         max_symbol -= 1
         code_len = cl.read(br)
         if code_len < 16:
@@ -244,10 +188,10 @@ def _read_prefix(br: _Bits, alphabet: int) -> _Prefix:
             for _ in range(repeat):
                 lengths[symbol] = val
                 symbol += 1
-    return _Prefix(lengths)
+    return _prefix(lengths)
 
 
-def _prefix_value(code: int, br: _Bits) -> int:
+def _prefix_value(code: int, br: LSBReader) -> int:
     """LZ77 length/distance prefix decoding (spec §"LZ77 backward
     reference"): codes 0-3 are 1-4; beyond, (2 + (code&1)) scaled
     with extra bits."""
@@ -259,7 +203,7 @@ def _prefix_value(code: int, br: _Bits) -> int:
 
 
 def _decode_image(
-    br: _Bits, w: int, h: int, top_level: bool
+    br: LSBReader, w: int, h: int, top_level: bool
 ) -> np.ndarray:
     """Decode one spatially-coded VP8L image -> (h*w,) uint32 ARGB.
     top_level images may carry a meta-prefix (entropy) image;
@@ -300,16 +244,13 @@ def _decode_image(
     npix = w * h
     pos = 0
     g = groups[0]
-    mw = (w + (1 << meta_bits) - 1) >> meta_bits if meta is not None else 0
     last_meta_row = -1
-    row_groups = None
     while pos < npix:
         if meta is not None:
             y = pos // w
             if y != last_meta_row:
                 last_meta_row = y
-                row = group_idx[(y >> meta_bits) * mw : (y >> meta_bits) * mw + mw]
-                row_groups = row
+                row_groups = group_idx[(y >> meta_bits) * mw : (y >> meta_bits) * mw + mw]
             g = groups[int(row_groups[(pos % w) >> meta_bits])]
         sym = g[0].read(br)
         if sym < _NUM_LITERALS:  # literal
@@ -454,7 +395,7 @@ def _decode_vp8l(body: bytes) -> np.ndarray | None:
     """VP8L chunk payload -> (h, w) uint8 luma, or None."""
     if len(body) < 5 or body[0] != 0x2F:
         return None
-    br = _Bits(body)
+    br = LSBReader(body)
     br.get(8)  # signature
     w = br.get(14) + 1
     h = br.get(14) + 1
@@ -472,39 +413,23 @@ def _decode_vp8l(body: bytes) -> np.ndarray | None:
             if ttype in seen:
                 raise ValueError("repeated transform")
             seen.add(ttype)
-            if ttype == 0:  # predictor
+            if ttype in (0, 1):  # predictor / cross-color: a subimage
                 sb = 2 + br.get(3)
                 mw = (packed_w + (1 << sb) - 1) >> sb
                 mh = (h + (1 << sb) - 1) >> sb
                 data = _decode_image(br, mw, mh, False)
-                transforms.append((0, sb, (data >> 8) & 0xFF))
-            elif ttype == 1:  # cross-color
-                sb = 2 + br.get(3)
-                mw = (packed_w + (1 << sb) - 1) >> sb
-                mh = (h + (1 << sb) - 1) >> sb
-                data = _decode_image(br, mw, mh, False)
-                transforms.append((1, sb, data))
+                # the predictor keeps only its modes (the green byte)
+                transforms.append((ttype, sb, data if ttype else (data >> 8) & 0xFF))
             elif ttype == 2:  # subtract green
                 transforms.append((2, 0, None))
             else:  # color indexing
                 psize = br.get(8) + 1
                 pal = _decode_image(br, psize, 1, False)
-                # delta-coded: componentwise running sum
-                acc = np.zeros(4, np.uint32)
-                for k in range(psize):
-                    v = int(pal[k])
-                    acc = (
-                        acc
-                        + np.array(
-                            [(v >> 24) & 255, (v >> 16) & 255,
-                             (v >> 8) & 255, v & 255],
-                            np.uint32,
-                        )
-                    ) & 255
-                    pal[k] = (
-                        (int(acc[0]) << 24) | (int(acc[1]) << 16)
-                        | (int(acc[2]) << 8) | int(acc[3])
-                    )
+                # delta-coded: each channel byte is a running sum
+                # mod 256 (a uint8 cumsum wraps)
+                channels = pal.view(np.uint8).reshape(psize, 4)
+                pal = np.cumsum(channels, axis=0, dtype=np.uint8)
+                pal = pal.view(np.uint32).reshape(psize)
                 if psize <= 2:
                     wb = 3
                 elif psize <= 4:
@@ -520,21 +445,13 @@ def _decode_vp8l(body: bytes) -> np.ndarray | None:
         for ttype, p1, p2 in reversed(transforms):
             if ttype == 3:  # color indexing: unpack + palette lookup
                 wb, pal = p1, p2
-                if wb:
-                    idx = (px >> 8) & 0xFF
-                    per = 1 << wb
-                    bits = 8 >> wb
-                    mask = (1 << bits) - 1
-                    full = np.zeros(w * h, np.uint32)
-                    for y in range(h):
-                        row = idx[y * cur_w : (y + 1) * cur_w]
-                        for x in range(w):
-                            packed = int(row[x >> wb])
-                            v = (packed >> ((x & (per - 1)) * bits)) & mask
-                            full[y * w + x] = v
-                    idx_full = full
-                else:
-                    idx_full = (px >> 8) & 0xFF
+                idx_full = (px >> 8) & 0xFF
+                if wb:  # 2**wb indices of 8 >> wb bits per green byte
+                    x = np.arange(w)
+                    packed = idx_full.reshape(h, cur_w)[:, x >> wb]
+                    shift = (x & ((1 << wb) - 1)) * (8 >> wb)
+                    idx_full = (packed >> shift) & ((1 << (8 >> wb)) - 1)
+                    idx_full = idx_full.reshape(w * h)
                 safe = np.minimum(idx_full, len(pal) - 1)
                 oob = idx_full >= len(pal)
                 px = pal[safe.astype(np.int64)]
@@ -583,55 +500,35 @@ def decode_webp_gray(data: bytes) -> np.ndarray | None:
 # ---------------------------------------------------------------------------
 
 
-class _BitW:
-    __slots__ = ("bits",)
-
-    def __init__(self) -> None:
-        self.bits: list[int] = []
-
-    def b(self, v: int, n: int) -> None:  # LSB-first field
-        for i in range(n):
-            self.bits.append((v >> i) & 1)
-
-    def mb(self, code: int, n: int) -> None:  # MSB-first prefix code
-        for i in range(n - 1, -1, -1):
-            self.bits.append((code >> i) & 1)
-
-    def tobytes(self) -> bytes:
-        out = bytearray()
-        bs = self.bits
-        for i in range(0, len(bs), 8):
-            v = 0
-            for j, bit in enumerate(bs[i : i + 8]):
-                v |= bit << j
-            out.append(v)
-        return bytes(out)
+# a byte with its bit order reversed: an 8-bit prefix code written
+# into the LSB-first stream first bit first
+_REVERSED = bytes(int(f"{i:08b}"[::-1], 2) for i in range(256))
 
 
-def _w_simple1(w: _BitW, sym: int) -> None:
-    w.b(1, 1)
-    w.b(0, 1)
+def _w_simple1(w: LSBWriter, sym: int) -> None:
+    w.write(1, 1)
+    w.write(0, 1)
     if sym <= 1:
-        w.b(0, 1)
-        w.b(sym, 1)
+        w.write(0, 1)
+        w.write(sym, 1)
     else:
-        w.b(1, 1)
-        w.b(sym, 8)
+        w.write(1, 1)
+        w.write(sym, 8)
 
 
-def _w_uniform256(w: _BitW, trailing_zeros: int = 0) -> None:
+def _w_uniform256(w: LSBWriter, trailing_zeros: int = 0) -> None:
     """Code-length-coded tree: 256 symbols of length 8 (canonical
     code == symbol value), then `trailing_zeros` unused symbols."""
-    w.b(0, 1)  # not simple
-    w.b(15, 4)  # num_code_lengths = 19
+    w.write(0, 1)  # not simple
+    w.write(15, 4)  # num_code_lengths = 19
     for s in _CL_ORDER:
-        w.b(1 if s in (0, 8) else 0, 3)
-    w.b(0, 1)  # no max_symbol
+        w.write(1 if s in (0, 8) else 0, 3)
+    w.write(0, 1)  # no max_symbol
     # CL canonical: symbol 0 -> bit 0, symbol 8 -> bit 1
     for _ in range(256):
-        w.b(1, 1)
+        w.write(1, 1)
     for _ in range(trailing_zeros):
-        w.b(0, 1)
+        w.write(0, 1)
 
 
 def encode_webp_gray(pixels: np.ndarray) -> bytes:
@@ -639,26 +536,25 @@ def encode_webp_gray(pixels: np.ndarray) -> bytes:
     stream, r=g=b, opaque alpha)."""
     pixels = np.asarray(pixels, np.uint8)
     h, wd = pixels.shape
-    w = _BitW()
-    w.b(0x2F, 8)
-    w.b(wd - 1, 14)
-    w.b(h - 1, 14)
-    w.b(0, 1)  # alpha hint
-    w.b(0, 3)  # version
-    w.b(0, 1)  # no transforms
-    w.b(0, 1)  # no color cache
-    w.b(0, 1)  # no meta-prefix
+    w = LSBWriter()
+    w.write(0x2F, 8)
+    w.write(wd - 1, 14)
+    w.write(h - 1, 14)
+    w.write(0, 1)  # alpha hint
+    w.write(0, 3)  # version
+    w.write(0, 1)  # no transforms
+    w.write(0, 1)  # no color cache
+    w.write(0, 1)  # no meta-prefix
     _w_uniform256(w, trailing_zeros=_NUM_LENGTH_CODES)  # green
     _w_uniform256(w)  # red
     _w_uniform256(w)  # blue
     _w_simple1(w, 255)  # alpha
     _w_simple1(w, 0)  # distance (unused)
-    for v in pixels.reshape(-1):
-        iv = int(v)
-        w.mb(iv, 8)  # green
-        w.mb(iv, 8)  # red
-        w.mb(iv, 8)  # blue
-    body = w.tobytes()
+    # green, red and blue as their 8-bit codes, each code's first bit
+    # (its most significant) first: the byte bit-reversed, LSB-first
+    for v in pixels.tobytes().translate(_REVERSED):
+        w.write(v * 0x10101, 24)
+    body = w.getvalue()
     if len(body) % 2:
         body += b"\x00"
     chunk = b"VP8L" + len(body).to_bytes(4, "little") + body
